@@ -3,68 +3,33 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",
-  * "queries":{...},"sf":...}.
+/** Benchmark main: times the battery (the two BASELINE.md macros, then
+  * every registry query flagged `bench`, in registry order) on
+  * SPARK_GRAFT_SF_DIR. Prints the full JSON record
+  * {"metric":"total","value":N,"unit":"sec","queries":{...},...}, writes
+  * it to SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL.json), then prints
+  * one compact summary line.
   *
-  * Queries are materialized through the noop sink (count() lets Catalyst
-  * prune the very work being measured). Each query runs one warm-up
-  * (whole-stage codegen compiles a fresh class per novel plan and C2 JIT
-  * needs one pass — at this data size that would dominate a cold
-  * measurement) plus SPARK_GRAFT_ITERS measured iterations (default 3),
-  * reporting the per-query MEDIAN: a single steady-state run cannot
-  * distinguish a plan regression from GC/session noise (round-2 lesson —
-  * q01/q24 swung +39%/+78% on identical plans). Per-query min/max go to
-  * the `spread` field for noise diagnosis.
+  * Each row runs through [[Runtime.runNoop]]: one warm-up (whole-stage
+  * codegen compiles a fresh class per novel plan and C2 JIT needs one
+  * pass; at this data size that would dominate a cold measurement), one
+  * discarded run, then SPARK_GRAFT_ITERS measured runs (default 5),
+  * reporting the MEDIAN: a single steady-state run cannot tell a plan
+  * regression from GC/session noise. Per-query min/max go to `spread`.
+  * A shared-session median can still mislead across commits
+  * (co-resident queries shift GC and codegen-cache state): attribute a
+  * per-query delta only with [[tools.QBench]] / `scripts/ab_bench.sh`.
   *
-  * Even the shared-session median can mislead across rounds: q24's
-  * apparent 0.87→1.01 s round-3→4 "regression" (non-overlapping spreads,
-  * unchanged code) dissolved under fresh-session [[tools.QBench]] A/B —
-  * the round-3 commit measures 1.02 s and current code 0.97 s in
-  * isolation; the 0.87 s was favorable co-resident-query state (codegen
-  * cache / GC phase). Attribute cross-round per-query deltas ONLY with
-  * QBench on both commits.
-  *
-  * Round-6 A/B (QBench, 7 iters, sf0.1, fresh session per commit) on the
-  * three r05 shared-session "regressions" — all dissolved, current code
-  * equal or FASTER in isolation:
-  *   q44_ngram_jaccard    r04 commit 2.04 s [1.74,2.26] vs HEAD 1.95 s [1.74,2.13]
-  *   q48_embedding_neardup r04 commit 1.31 s [1.14,1.42] vs HEAD 1.25 s [1.14,1.52]
-  *   q74_tpch_q5          r04 commit 0.98 s [0.81,1.32] vs HEAD 0.84 s [0.76,1.83]
-  * Root cause of the shared-session spread: the dedup queries
-  * localCheckpoint their shingle/signature frames; in a co-resident run
-  * those blocks (and each iteration's NEW blocks) squat on executor
-  * storage for every later query. Fix: [[releaseCheckpoints]] after every
-  * measured run — each run builds its own checkpoint, so carrying a prior
-  * run's blocks is pure contamination, never reuse.
-  *
-  * Round-8 sf1-equivalent soak ([[tools.Soak]]: sf0.1 documents
-  * replicated with per-copy near-dup markers — every doc in a
-  * copies-sized J≈0.9 clique, the hostile shape for posting lists and
-  * band buckets):
-  *   10×  (50 000 docs):  exact 1.7 s | ngramJaccard(dfCap)  4.3 s /
-  *        551 k pairs | minhashLsh(maxBucket) 7.6 s / 247 k pairs |
-  *        simhash 2.1 s / 213 k pairs — heap 2.2 GB
-  *   40× (200 000 docs): exact 2.5 s | ngramJaccard 25.0 s / 7.7 M
-  *        pairs | minhashLsh 26.5 s / 4.2 M pairs | simhash 3.4 s /
-  *        3.6 M pairs — heap 8.1 GB, no OOM
-  * 4× the docs with 4× the clique size (≈16× the pair work) costs ~6×
-  * wall — the dfCap/maxBucket guards keep the quadratics bounded, the
-  * memory cliff the sf0.1 bench cannot see does not materialize.
-  *
-  * Round-8 continuation extended the soak to the corpus-prep surface
-  * (same 10×/40× replication; full record in SOAK_LOCAL.json):
-  * dup-spans 0.9→2.0 s, bigram-LM 1.2→1.6 s, SemDeDup over
-  * identical-copy embedding cliques 2.9→7.3 s, packing 1.3→1.5 s,
-  * BPE fit+encode 1.8→2.5 s, Misra-Gries 0.4→0.5 s, quantile filter
-  * 0.5→0.7 s — all sublinear in wall-time at 4× docs, 12.3 GB peak
-  * heap, no OOM; the 40× run pushes MG into its eviction regime.
+  * A row that throws is printed to stderr, reported as -1 in `queries`,
+  * named in `failed`, and left out of `value`.
   */
 object Bench {
 
-  /** BASELINE.md macro-benchmarks ported to the driver tables, plus one
-    * representative query per engine area. */
-  def headline: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+  type Query = (SparkSession, String) => DataFrame
+
+  /** BASELINE.md macro-benchmarks ported to the driver tables; they have
+    * no oracle, so they are not registry queries. */
+  val baselines: Seq[(String, Query)] = Seq(
     // reference benchmark/Main.hs:41-79 groupBy+min/max, on lineitem
     "bench_groupby_minmax" -> ((s: SparkSession, d: String) =>
       Tables.lineitem(s, d).groupBy("l_returnflag", "l_linestatus")
@@ -73,356 +38,114 @@ object Bench {
     // reference examples/OneBillionRowChallenge.hs:21-43 min/mean/max, on events
     "bench_1brc" -> ((s: SparkSession, d: String) =>
       Tables.events(s, d).groupBy("event_type")
-        .agg(min("value").as("min_v"), avg("value").as("mean_v"), max("value").as("max_v"))),
-    "q01_groupby_agg" -> SparkEntry.queries("q01_groupby_agg"),
-    "q04_derive" -> SparkEntry.queries("q04_derive"),
-    "q12_join_star" -> SparkEntry.queries("q12_join_star"),
-    "q20_window" -> SparkEntry.queries("q20_window"),
-    "q21_zscore" -> SparkEntry.queries("q21_zscore"),
-    "q24_stats_moments" -> SparkEntry.queries("q24_stats_moments"),
-    "q44_ngram_jaccard" -> SparkEntry.queries("q44_ngram_jaccard"),
-    "q45_minhash_lsh" -> SparkEntry.queries("q45_minhash_lsh"),
-    // round-5: codegen SimHashSignature kernel (was 31 interpreted HOF folds)
-    "q46_simhash" -> SparkEntry.queries("q46_simhash"),
-    "q47_ann_topk" -> SparkEntry.queries("q47_ann_topk"),
-    "q48_embedding_neardup" -> SparkEntry.queries("q48_embedding_neardup"),
-    "q50_events_hourly" -> SparkEntry.queries("q50_events_hourly"),
-    "q51_sessions" -> SparkEntry.queries("q51_sessions"),
-    // round-3 net-new operators
-    "q59_repetition" -> SparkEntry.queries("q59_repetition"),
-    "q61_asof_join" -> SparkEntry.queries("q61_asof_join"),
-    "q62_range_join" -> SparkEntry.queries("q62_range_join"),
-    // round-4: embedding kernels + multi-join composition
-    "q72_embed_normalize" -> SparkEntry.queries("q72_embed_normalize"),
-    "q73_tpch_q3" -> SparkEntry.queries("q73_tpch_q3"),
-    "q74_tpch_q5" -> SparkEntry.queries("q74_tpch_q5"),
-    "q108_tpch_q18" -> SparkEntry.queries("q108_tpch_q18"),
-    "q109_tpch_q21" -> SparkEntry.queries("q109_tpch_q21"),
-    "q114_tpch_q10" -> SparkEntry.queries("q114_tpch_q10"),
-    "q115_tpch_q7" -> SparkEntry.queries("q115_tpch_q7"),
-    "q116_tpch_q14" -> SparkEntry.queries("q116_tpch_q14"),
-    "q117_tpch_q19" -> SparkEntry.queries("q117_tpch_q19"),
-    // round-8: composed corpus-prep pipeline, tf-idf, single-pass covariance
-    "q94_pipeline_e2e" -> SparkEntry.queries("q94_pipeline_e2e"),
-    "q95_tfidf" -> SparkEntry.queries("q95_tfidf"),
-    "q96_embed_covariance" -> SparkEntry.queries("q96_embed_covariance"),
-    // round-8: SemDeDup, substring-dedup signal, bigram-LM quality
-    "q97_semantic_dedup" -> SparkEntry.queries("q97_semantic_dedup"),
-    "q98_dup_spans" -> SparkEntry.queries("q98_dup_spans"),
-    "q99_bigram_lm" -> SparkEntry.queries("q99_bigram_lm"),
-    // round-8: sequence packing, MG heavy hitters, quantile pruning, BPE
-    "q101_pack_sequences" -> SparkEntry.queries("q101_pack_sequences"),
-    "q103_heavy_hitters" -> SparkEntry.queries("q103_heavy_hitters"),
-    "q104_quantile_filter" -> SparkEntry.queries("q104_quantile_filter"),
-    "q105_bpe_pair_counts" -> SparkEntry.queries("q105_bpe_pair_counts"),
-    "q106_bpe_encode" -> SparkEntry.queries("q106_bpe_encode"),
-    "q110_minhash_incremental" -> SparkEntry.queries("q110_minhash_incremental"),
-    "q112_negative_samples" -> SparkEntry.queries("q112_negative_samples"),
-    "q113_pipeline_v2" -> SparkEntry.queries("q113_pipeline_v2"),
-    "q118_pq_encode" -> SparkEntry.queries("q118_pq_encode"),
-    // round-9: codegen PqEncode kernel + two-stage ADC → exact re-rank
-    "q120_pq_rerank" -> SparkEntry.queries("q120_pq_rerank"),
-    // round-9: TPC-H Q4/Q6/Q13/Q15/Q17/Q22, IVFPQ, BPE e2e replay,
-    // incremental SimHash, per-domain cap
-    "q119_bpe_encode1" -> SparkEntry.queries("q119_bpe_encode1"),
-    "q121_tpch_q4" -> SparkEntry.queries("q121_tpch_q4"),
-    "q122_tpch_q6" -> SparkEntry.queries("q122_tpch_q6"),
-    "q123_tpch_q13" -> SparkEntry.queries("q123_tpch_q13"),
-    "q124_tpch_q17" -> SparkEntry.queries("q124_tpch_q17"),
-    "q125_tpch_q22" -> SparkEntry.queries("q125_tpch_q22"),
-    "q126_ivfpq_topk" -> SparkEntry.queries("q126_ivfpq_topk"),
-    "q127_tpch_q15" -> SparkEntry.queries("q127_tpch_q15"),
-    "q128_simhash_incremental" -> SparkEntry.queries("q128_simhash_incremental"),
-    "q129_domain_cap" -> SparkEntry.queries("q129_domain_cap"),
-    // round-9: battery-completing TPC-H macros (Q2/Q8/Q9/Q11/Q12/Q16/Q20)
-    // + the full Q1 pricing summary
-    "q130_tpch_q2" -> SparkEntry.queries("q130_tpch_q2"),
-    "q131_tpch_q8" -> SparkEntry.queries("q131_tpch_q8"),
-    "q132_tpch_q9" -> SparkEntry.queries("q132_tpch_q9"),
-    "q133_tpch_q11" -> SparkEntry.queries("q133_tpch_q11"),
-    "q134_tpch_q12" -> SparkEntry.queries("q134_tpch_q12"),
-    "q135_tpch_q16" -> SparkEntry.queries("q135_tpch_q16"),
-    "q136_tpch_q20" -> SparkEntry.queries("q136_tpch_q20"),
-    "q137_tpch_q1" -> SparkEntry.queries("q137_tpch_q1"),
-    // round-9: explicit Bloom runtime-filter handles
-    "q138_decontam_bloom" -> SparkEntry.queries("q138_decontam_bloom"),
-    "q139_bloom_join" -> SparkEntry.queries("q139_bloom_join"),
-    // round-9: q-gram-blocked edit-distance fuzzy dedup + heap top-k
-    // + A-Res weighted sampling
-    "q140_edit_distance" -> SparkEntry.queries("q140_edit_distance"),
-    "q141_topk_per_group" -> SparkEntry.queries("q141_topk_per_group"),
-    "q142_weighted_sample" -> SparkEntry.queries("q142_weighted_sample"),
-    "q143_html_strip" -> SparkEntry.queries("q143_html_strip"),
-    // round-9 late adds: scan-stage JSON payload parse (from_json is
-    // CodegenFallback — worth tracking its per-row cost; its r9
-    // shared-session max-spread outlier (14.5 s vs 0.65 median) is
-    // co-resident noise — QBench 8-iter fresh-session band is
-    // [0.65, 0.95], no outlier) + the Expand-fed single-pass
-    // GROUPING SETS aggregation
-    "q146_json_extract" -> SparkEntry.queries("q146_json_extract"),
-    "q147_grouping_sets" -> SparkEntry.queries("q147_grouping_sets"),
-    // round-10: exact-substring-dedup cut step (Lee et al. span removal)
-    "q148_remove_dup_spans" -> SparkEntry.queries("q148_remove_dup_spans"),
-    // round-10: surgical decontamination (broadcast benchmark vocabulary,
-    // scan-stage window filter) + the incremental-pipeline snapshot diff
-    "q150_remove_contam_spans" -> SparkEntry.queries("q150_remove_contam_spans"),
-    "q151_snapshot_diff" -> SparkEntry.queries("q151_snapshot_diff"),
-    // round-10: json_tuple single-parse fast path (vs q146's from_json)
-    "q152_json_fast" -> SparkEntry.queries("q152_json_fast"),
-    // round-10: Unicode normalization chain (UnicodeNormalize codegen +
-    // regexp/translate — the pre-hash canonicalization pass), CDC merge,
-    // count-min over the token stream, z-order bucket stats, group holdout
-    "q153_normalize_text" -> SparkEntry.queries("q153_normalize_text"),
-    "q154_cdc_apply" -> SparkEntry.queries("q154_cdc_apply"),
-    "q156_count_min" -> SparkEntry.queries("q156_count_min"),
-    "q157_zorder" -> SparkEntry.queries("q157_zorder"),
-    "q158_group_holdout" -> SparkEntry.queries("q158_group_holdout"),
-    "q159_ivfpq_residual" -> SparkEntry.queries("q159_ivfpq_residual"),
-    // round-10: corpus-prep v3 composing the round's cleaning ops
-    // (stripHtml → normalizeText → tokenCount → per-source quantile
-    // keep → leakage-safe group holdout)
-    "q160_pipeline_v3" -> SparkEntry.queries("q160_pipeline_v3"),
-    // round-10: DSIR importance weights (hashed-ngram target/raw
-    // log-ratio), BM25 ranked retrieval, BM25⊕ANN RRF hybrid fusion
-    "q161_dsir_weights" -> SparkEntry.queries("q161_dsir_weights"),
-    "q162_bm25" -> SparkEntry.queries("q162_bm25"),
-    "q163_hybrid_rrf" -> SparkEntry.queries("q163_hybrid_rrf"),
-    // round-10: token-budget mixture selection (per-group distributed
-    // prefix sum) and the sharded-export integrity manifest
-    "q164_token_budget" -> SparkEntry.queries("q164_token_budget"),
-    "q165_shard_manifest" -> SparkEntry.queries("q165_shard_manifest"),
-    // round-10 late adds: embedding-space decontamination, per-source
-    // token-KL drift, token-weighted percentiles, median/MAD outliers,
-    // 3-iteration PageRank (exact decimal mass sums), perceptual
-    // hashes, blocked span corruption, sentence boilerplate stats
-    "q166_semantic_decontam" -> SparkEntry.queries("q166_semantic_decontam"),
-    "q167_token_kl" -> SparkEntry.queries("q167_token_kl"),
-    "q168_weighted_pct" -> SparkEntry.queries("q168_weighted_pct"),
-    "q169_robust_outliers" -> SparkEntry.queries("q169_robust_outliers"),
-    "q170_pagerank" -> SparkEntry.queries("q170_pagerank"),
-    "q171_phash" -> SparkEntry.queries("q171_phash"),
-    "q172_span_corruption" -> SparkEntry.queries("q172_span_corruption"),
-    "q173_sentence_dups" -> SparkEntry.queries("q173_sentence_dups"),
-    // round-10 late adds: script profile, readability, sentence chunking
-    "q174_script_profile" -> SparkEntry.queries("q174_script_profile"),
-    "q175_readability" -> SparkEntry.queries("q175_readability"),
-    "q176_sentence_chunks" -> SparkEntry.queries("q176_sentence_chunks"),
-    // round-10 late adds: MMR diversified re-rank, bucketed
-    // interval-overlap join, per-group winsorization
-    "q177_mmr_rerank" -> SparkEntry.queries("q177_mmr_rerank"),
-    "q178_interval_overlap" -> SparkEntry.queries("q178_interval_overlap"),
-    "q179_winsorize" -> SparkEntry.queries("q179_winsorize"),
-    // round-10 late adds: incremental SemDeDup, c-TF-IDF labeling
-    "q180_semantic_incremental" -> SparkEntry.queries("q180_semantic_incremental"),
-    "q181_ctfidf_terms" -> SparkEntry.queries("q181_ctfidf_terms"),
-    // round-10 late add: cross-source n-gram overlap matrix
-    "q182_source_overlap" -> SparkEntry.queries("q182_source_overlap"),
-    // round-11: trained char-trigram language ID (fit + NB argmax),
-    // unigram-LM tokenizer (seed ranking; fit + Viterbi encode e2e),
-    // corpus-prep v4 (domain PageRank prior → gates → winsorize → MMR)
-    "q183_langid_trained" -> SparkEntry.queries("q183_langid_trained"),
-    "q184_unigram_seed" -> SparkEntry.queries("q184_unigram_seed"),
-    "q185_unigram_encode" -> SparkEntry.queries("q185_unigram_encode"),
-    "q186_pipeline_v4" -> SparkEntry.queries("q186_pipeline_v4"),
-    // round-11 late adds: Hilbert layout, hard negatives, langid margin
-    "q187_hilbert" -> SparkEntry.queries("q187_hilbert"),
-    "q188_hard_negatives" -> SparkEntry.queries("q188_hard_negatives"),
-    "q189_langid_margin" -> SparkEntry.queries("q189_langid_margin"),
-    // round-11 late add: stratified per-group weighted sampling
-    "q190_weighted_sample_group" -> SparkEntry.queries("q190_weighted_sample_group"),
-    // round-11 late adds: temperature mixture + epoched realization,
-    // canonical near-dup dedup, KN bigram LM, PMI collocations
-    "q191_temperature_mixture" -> SparkEntry.queries("q191_temperature_mixture"),
-    "q192_temperature_epochs" -> SparkEntry.queries("q192_temperature_epochs"),
-    "q193_canonical_dedup" -> SparkEntry.queries("q193_canonical_dedup"),
-    "q194_kn_bigram_lm" -> SparkEntry.queries("q194_kn_bigram_lm"),
-    "q195_pmi_collocations" -> SparkEntry.queries("q195_pmi_collocations"),
-    // round-12: CCNet ppl buckets, WordPiece encode (+1-merge replay),
-    // 3-D Hilbert, UniMax mixture + realization, containment dedup
-    "q196_ccnet_ppl_buckets" -> SparkEntry.queries("q196_ccnet_ppl_buckets"),
-    "q197_wordpiece_encode" -> SparkEntry.queries("q197_wordpiece_encode"),
-    "q198_wordpiece_encode1" -> SparkEntry.queries("q198_wordpiece_encode1"),
-    "q199_hilbert_3d" -> SparkEntry.queries("q199_hilbert_3d"),
-    "q200_unimax_mixture" -> SparkEntry.queries("q200_unimax_mixture"),
-    "q201_unimax_epochs" -> SparkEntry.queries("q201_unimax_epochs"),
-    "q202_ngram_containment" -> SparkEntry.queries("q202_ngram_containment"),
-    "q203_dedup_contained" -> SparkEntry.queries("q203_dedup_contained"),
-    "q204_dup_cluster_sizes" -> SparkEntry.queries("q204_dup_cluster_sizes"),
-    "q205_lsh_tune" -> SparkEntry.queries("q205_lsh_tune"),
-    "q206_corpus_report" -> SparkEntry.queries("q206_corpus_report"),
-    "q207_bytebpe_encode1" -> SparkEntry.queries("q207_bytebpe_encode1"),
-    "q208_bytebpe_roundtrip" -> SparkEntry.queries("q208_bytebpe_roundtrip"),
-    "q209_kn_lm_heldout" -> SparkEntry.queries("q209_kn_lm_heldout"),
-    "q210_threshold_apply" -> SparkEntry.queries("q210_threshold_apply"),
-    "q211_pipeline_v5" -> SparkEntry.queries("q211_pipeline_v5"),
-    "q212_quality_logreg" -> SparkEntry.queries("q212_quality_logreg"),
-    "q213_tokenizer_fertility" -> SparkEntry.queries("q213_tokenizer_fertility"),
-    // round-15: the DISTRIBUTED batched tokenizer-fit paths get bench
-    // rows so a regression in the batched merge loop (per-round
-    // limit+collect, vocab UDF rewrite, pin cadence) surfaces
-    // round-over-round, not only in ad-hoc SoakBpeFit runs
-    "q214_bytebpe_distfit" -> SparkEntry.queries("q214_bytebpe_distfit"),
-    "q215_wordpiece_batchfit" -> SparkEntry.queries("q215_wordpiece_batchfit"),
-    // round-15: the Bloom-prefiltered standing-ingestion dedup — tracks
-    // the scalar-subquery bloom build + double scan-stage prune
-    "q217_dedup_incr_bloom" -> SparkEntry.queries("q217_dedup_incr_bloom"),
-    // round-16: per-source repeated-word boilerplate over the real
-    // documents (explode + distinct-count + anti-join at data scale)
-    // and the zlib compression-ratio report (codegen deflate kernel in
-    // a scan-stage aggregate) — both new paths regression-tracked
-    "q219_repeated_words_src" -> SparkEntry.queries("q219_repeated_words_src"),
-    "q221_compress_report" -> SparkEntry.queries("q221_compress_report"),
-    // round-17: corpus-prep v6 — strip/normalize/deflate scan stage,
-    // zlib degenerate-text gate, per-source quantile keep, packing
-    // prefix sum; tracks the full composed cleaning chain per round
-    "q223_pipeline_v6" -> SparkEntry.queries("q223_pipeline_v6"),
-    // round-18: corpus-prep v7 — the incremental-ingest composition
-    // (snapshot diff → delta-only clean/gate → incremental LSH vs seen
-    // → seeded pack-append); tracks the standing-ingestion plumbing
-    "q225_pipeline_v7" -> SparkEntry.queries("q225_pipeline_v7"),
-    // round-19: tombstone-consuming pack compaction (narrow per-pack
-    // stats + threshold split + seeded fragment rewrite) and the
-    // persisted-state ingest (diff vs parquet keys, LSH over persisted
-    // shingle arrays, manifest-seeded pack-append) — the state-READ
-    // path regression-tracked against q225's recompute path
-    "q227_v7_pack_compaction" -> SparkEntry.queries("q227_v7_pack_compaction"),
-    "q231_v8_ingest_state" -> SparkEntry.queries("q231_v8_ingest_state"))
+        .agg(min("value").as("min_v"), avg("value").as("mean_v"), max("value").as("max_v"))))
+
+  /** The timed rows: the baselines, then every registry query flagged
+    * `bench`, in registry order. */
+  def battery: Seq[(String, Query)] =
+    baselines ++ SparkEntry.registry.collect { case (n, q) if q.bench => n -> q.fn }
+
+  /** (median, min, max) seconds per row, or None for a row that threw. */
+  type Results = Seq[(String, Option[(Double, Double, Double)])]
+
+  /** Times each row (warm-up, discard-first, then `iters` runs); a row
+    * stops at its first failure, which goes to stderr. */
+  def runBattery(spark: SparkSession, sfDir: String, iters: Int,
+                 rows: Seq[(String, Query)]): Results =
+    rows.map { case (name, fn) =>
+      def runs(n: Int, acc: List[Double]): Either[Throwable, List[Double]] =
+        if (n == 0) Right(acc)
+        else Runtime.runNoop(spark)(fn(spark, sfDir)).flatMap(t => runs(n - 1, t :: acc))
+      // the warm-up and discard-first runs are the last two of the
+      // reversed list. Discard-first: after the codegen/JIT warm-up the
+      // first measured run of the composed pipelines was still up to
+      // 2.7x their median (shuffle-file/page-cache warm-up the noop
+      // re-run does not share).
+      val r = runs(iters + 2, Nil).map { ts =>
+        val s = ts.dropRight(2).sorted
+        (s(s.length / 2), s.head, s.last)
+      }
+      r.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      // Full GC between queries: Spark's ContextCleaner reclaims
+      // broadcast/shuffle/accumulator state only when driver GC runs,
+      // and with a large heap GC is rare, so a long battery otherwise
+      // accumulates earlier queries' state and inflates later medians.
+      // GC time sits between queries, never inside a measured run.
+      System.gc()
+      name -> r.toOption
+    }
+
+  /** The full JSON record and the compact final line (value, counts,
+    * failed names, output file), kept well under 2,000 chars for
+    * consumers that keep only the tail of stdout. */
+  def report(results: Results, host: String, iters: Int, sfDir: String,
+             out: String): (String, String) = {
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val timed = results.collect { case (k, Some(r)) => k -> r }
+    val failed = results.collect { case (k, None) => k }
+    val qs = obj(results.map { case (k, r) => k -> r.fold(-1.0)(_._1).toString })
+    val spread = obj(results.map { case (k, r) =>
+      k -> r.fold("[-1.0,-1.0]") { case (_, lo, hi) => s"[$lo,$hi]" } })
+    // Outlier flag (an adjudication aid, not a gate): a >3x min-to-max
+    // spread that moves >0.3 s means at least one run absorbed external
+    // load (GC storm, co-resident process). The 0.3 s floor keeps
+    // sub-second queries from tripping the ratio on scheduler jitter.
+    val outliers = obj(timed.collect {
+      case (k, (_, lo, hi)) if hi > 3 * lo && hi - lo > 0.3 => k -> s"[$lo,$hi]" })
+    val total = timed.map(_._2._1).sum
+    val json =
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"outliers":$outliers,"host":$host,"iters":$iters,"sf":"$sfDir","failed":${names(failed)}}"""
+    // at most 20 names, so the line stays short when the whole battery
+    // fails; n_failed is exact and the file names every failure
+    val compact =
+      s"""{"metric":"total","value":$total,"n":${timed.size},"n_failed":${failed.size},"failed":${names(failed.take(20))},"out":"$out"}"""
+    (json, compact)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // 5 (was 3): BENCH_r07 showed 2-of-3 iterations of q44/q46 absorbing
-    // external machine load (medians 2-7× the r06/isolated numbers on
-    // UNCHANGED code — round 7 touched only SNIPPETS.md). A median of 5
-    // tolerates two contaminated runs; a median of 3 tolerates one.
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // A median of 5 tolerates two runs contaminated by external machine
+    // load; a median of 3 tolerates one.
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "5").toInt
 
-    // Drop every persisted/localCheckpointed RDD the last run pinned.
-    // Blocking: the next measurement must not overlap the release. The
-    // blocks are per-plan-instantiation (each run re-checkpoints), so
-    // nothing here is reusable state — only storage-pressure carryover.
-    def releaseCheckpoints(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    def once(fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9 // release is NOT measured
-      releaseCheckpoints()
-      if (ok) dt else -1.0
-    }
-    /** warm-up + discard-first + `iters` measured runs → (median, min,
-      * max). The codegen/JIT warm-up alone left the FIRST measured
-      * iteration of the composed pipelines (q94/q113) up to 2.7× their
-      * median in BENCH_r08 — shuffle-file/page-cache warmup the noop
-      * re-run does not share — so one more untimed run absorbs it and
-      * the reported spread measures steady-state noise only. */
-    def run(fn: (SparkSession, String) => DataFrame): (Double, Double, Double) = {
-      if (once(fn) < 0) return (-1.0, -1.0, -1.0) // warm-up (codegen + JIT)
-      if (once(fn) < 0) return (-1.0, -1.0, -1.0) // discard-first (shuffle warmup)
-      val ts = Seq.fill(iters)(once(fn))
-      if (ts.exists(_ < 0)) return (-1.0, -1.0, -1.0)
-      val s = ts.sorted
-      (s(s.length / 2), s.head, s.last)
-    }
-
     // SPARK_GRAFT_BENCH_ONLY=q186_...,q211_... restricts the run (the
-    // sf1 lane: the full battery at 6M rows would take hours; the lane
-    // runs the most expensive queries only). Driver runs leave it
-    // unset → full battery, unchanged.
+    // sf1 lane runs only the most expensive queries). Unknown names fail
+    // fast: a typo would otherwise run zero queries and overwrite
+    // BENCH_LOCAL.json with an empty battery.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on unknown names: a typo would otherwise silently run
-    // zero queries and overwrite BENCH_LOCAL.json with an empty battery
     only.foreach { names =>
-      val known = headline.map(_._1).toSet
-      val unknown = names.diff(known)
+      val unknown = names.diff(battery.map(_._1).toSet)
       require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in the headline list: " +
+        s"SPARK_GRAFT_BENCH_ONLY names not in the bench battery: " +
           unknown.toSeq.sorted.mkString(", "))
       require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY is set but empty")
     }
-    val selected = headline.filter { case (n, _) => only.forall(_(n)) }
-    // /proc/stat steal (field 8, whole-machine jiffies at USER_HZ=100)
-    // + 1-min loadavg — the QBench per-iteration attribution, at
-    // battery granularity. Non-Linux / unreadable: steal 0 with
-    // loadavg -1.0 (the sentinel distinguishes "couldn't read" from a
-    // genuinely idle Linux host), fields still emitted. readString
-    // (not scala.io.Source) so no file handles leak per call.
-    def hostState(): (Long, Double) = try {
-      val cpu = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/stat")).linesIterator
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      val steal = if (cpu.length > 8) cpu(8).toLong else 0L
-      val load = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      (steal, load)
-    } catch { case _: Throwable => (0L, -1.0) }
-    val hostStart = hostState()
+    val selected = battery.filter { case (n, _) => only.forall(_(n)) }
+
+    val hostStart = Runtime.hostState()
     val wallStart = System.nanoTime()
-    val results = selected.map { case (name, fn) =>
-      val r = run(fn)
-      // Full GC between queries: Spark's ContextCleaner reclaims
-      // broadcast/shuffle/accumulator state only when driver GC runs,
-      // and with a large heap GC is rare — so a 60+-query run otherwise
-      // accumulates earlier queries' state and inflates later medians
-      // (observed broadly at 63 queries: untouched scan-aggs 1.3-2×
-      // their fresh-session QBench numbers). GC time sits between
-      // queries, never inside a measured iteration.
-      System.gc()
-      name -> r
-    }
-    val hostEnd = hostState()
-    val qs = results.map { case (k, (med, _, _)) => "\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    val spread = results.map { case (k, (_, lo, hi)) =>
-      "\"" + k + "\":[" + lo + "," + hi + "]" }.mkString("{", ",", "}")
-    // Outlier flag (adjudication aid, not a gate): a >3× min-to-max
-    // spread that moves >0.3 s means at least one iteration absorbed
-    // external load (GC storm, co-resident process) — the median still
-    // publishes, but the JSON now SAYS the session was noisy instead
-    // of leaving a 32-s q211 iteration to be discovered by diffing
-    // spreads by hand (round-15 driver run). The 0.3 s floor keeps
-    // sub-second queries from tripping the ratio on scheduler jitter.
-    val outliers = results.collect {
-      case (k, (_, lo, hi)) if lo > 0 && hi > 3 * lo && hi - lo > 0.3 =>
-        "\"" + k + "\":[" + lo + "," + hi + "]"
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    // Machine-state bracket (r16 lesson: the sf1 adjudication — 333 s
-    // of measured hypervisor steal killing an attempt — was done by
-    // hand and survived only in a commit message; the artifact should
-    // self-describe its session). steal_sec is guest-visible CPU the
-    // hypervisor withheld ACROSS THE WHOLE BATTERY (jiffies at
-    // USER_HZ=100, whole-machine): tens of seconds ≈ idle host,
-    // hundreds+ means medians are contaminated — discard and re-run.
-    // loadavg start/end bounds co-resident pressure the same way.
+    val results = runBattery(spark, sfDir, iters, selected)
+    val hostEnd = Runtime.hostState()
+    // The artifact describes its own session. steal_sec is CPU the
+    // hypervisor withheld across the whole battery (whole-machine):
+    // tens of seconds is an idle host, hundreds+ means the medians are
+    // contaminated (discard and re-run). loadavg start/end bounds
+    // co-resident pressure the same way.
     val host =
       f"""{"steal_sec":${(hostEnd._1 - hostStart._1) / 100.0}%.1f,""" +
         f""""loadavg_start":${hostStart._2}%.2f,"loadavg_end":${hostEnd._2}%.2f,""" +
         f""""wall_sec":${(System.nanoTime() - wallStart) / 1e9}%.1f}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"outliers":$outliers,"host":$host,"iters":$iters,"sf":"$sfDir"}"""
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    val (json, compact) = report(results, host, iters, sfDir, out)
     // stdout AND a file: sbt prefixes stdout with [info], which breaks
-    // line-oriented JSON parsing downstream — the file copy is canonical.
+    // line-oriented JSON parsing downstream; the file copy is canonical.
     println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")),
-      json + "\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
+    println(compact)
     spark.stop()
   }
 }

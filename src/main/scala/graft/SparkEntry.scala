@@ -11,7 +11,8 @@ import graft.queries.{Io, Macro, Pipeline, Q, Relational}
   */
 object SparkEntry {
 
-  private val registry: Seq[(String, Q)] =
+  /** Every query in declaration order; [[queries]] is its unordered view. */
+  private[graft] val registry: Seq[(String, Q)] =
     Relational.registry ++ Pipeline.registry ++ Io.registry ++ Macro.registry
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -149,8 +149,8 @@ object functions {
     * flat-schema fast path: `from_json` is CodegenFallback and each
     * extra [[jsonGet]] re-parses the payload, while `json_tuple`
     * streams the document once for all requested fields. Measured on
-    * the q146 shape (1 M events, 2 fields, sf0.1, tools.JsonAb fresh
-    * session, 7 iters): from_json+get_json_object 0.69 s median,
+    * the q146 shape (1 M events, 2 fields, sf0.1, one-off fresh-session
+    * A/B, 7 iters): from_json+get_json_object 0.69 s median,
     * get_json_object×2 0.59 s, json_tuple 0.40 s — identical results.
     * Generator expression: use directly inside `select`, then alias
     * via `.toDF`/`as`. Cast typed fields at the call site. */

@@ -9,11 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * them too (the Column API path via [[VectorExpressions]] needs no
   * registration).
   *
-  * Enable with:
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-  * }}}
+  * Enabled by `spark.sql.extensions=graft.expr.GraftExtensions`, which
+  * [[graft.Runtime.session]] sets.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -97,21 +97,23 @@ object Materialize {
     * labelled with the first graft call site outside this object so
     * per-job profiles ([[graft.tools.Profile]]) attribute pin cost to
     * the operator that requested it instead of an anonymous job. */
-  private[graft] def pin(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    val site = Thread.currentThread.getStackTrace
-      .find(e => e.getClassName.startsWith("graft.") &&
-        !e.getClassName.contains("Materialize"))
-      .map(e => s"${e.getClassName.stripPrefix("graft.")}.${e.getMethodName}:${e.getLineNumber}")
-      .getOrElse("?")
-    sc.setJobDescription(s"pin @ $site")
-    val pinned =
-      try strategy.pinFrame(df)
-      finally sc.setJobDescription(prev)
-    val reg = batchPins.get()
-    if (reg != null && (pinned ne df)) pinnedRdds(pinned).foreach(reg.add)
-    pinned
+  private[graft] def pin(df: DataFrame): DataFrame = strategy match {
+    case Off => df
+    case s =>
+      val sc = df.sparkSession.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      val site = Thread.currentThread.getStackTrace
+        .find(e => e.getClassName.startsWith("graft.") &&
+          !e.getClassName.startsWith("graft.ops.Materialize"))
+        .map(e => s"${e.getClassName.stripPrefix("graft.")}.${e.getMethodName}:${e.getLineNumber}")
+        .getOrElse("?")
+      sc.setJobDescription(s"pin @ $site")
+      val pinned =
+        try s.pinFrame(df)
+        finally sc.setJobDescription(prev)
+      val reg = batchPins.get()
+      if (reg != null && (pinned ne df)) pinnedRdds(pinned).foreach(reg.add)
+      pinned
   }
 
   /** Pin `df` per the current strategy iff `enabled` (the operators'

@@ -56,7 +56,7 @@ object Macro {
           AND o_orderdate < TIMESTAMP '1995-03-15'
           AND l_shipdate > TIMESTAMP '1995-03-15'
         GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderkey LIMIT 10""")),
+        ORDER BY revenue DESC, o_orderkey LIMIT 10"""), bench = true),
 
     // --- Q5 shape: 6-table star (region → nation → supplier/customer →
     // orders → lineitem), revenue by nation. The c_nationkey =
@@ -95,7 +95,7 @@ object Macro {
         JOIN nation ON s_nationkey = n_nationkey
         JOIN region ON n_regionkey = r_regionkey
         WHERE r_name = 'ASIA'
-        GROUP BY n_name ORDER BY revenue DESC, n_name""")),
+        GROUP BY n_name ORDER BY revenue DESC, n_name"""), bench = true),
 
     // --- Q18 shape: large-volume customers — a HAVING subquery over the
     // fact table drives everything. The hot-order keyset (sum_qty > 300,
@@ -131,7 +131,7 @@ object Macro {
               HAVING SUM(l_quantity) > 300) h
         JOIN orders ON o_orderkey = l_orderkey
         JOIN customer ON c_custkey = o_custkey
-        ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100""")),
+        ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100"""), bench = true),
 
     // --- Q21 shape: the lone late supplier in multi-supplier orders.
     // The textbook formulation is a 4-way self-join with correlated
@@ -224,7 +224,7 @@ object Macro {
               AND l3.l_suppkey <> l1.l_suppkey
               AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
         GROUP BY s_name, s_suppkey
-        ORDER BY numwait DESC, s_suppkey LIMIT 20""")),
+        ORDER BY numwait DESC, s_suppkey LIMIT 20"""), bench = true),
 
     // --- Q10 shape: returned-item revenue top-20. The Spark-first plan
     // aggregates EARLY and joins attributes LATE: revenue per custkey
@@ -268,7 +268,7 @@ object Macro {
           AND o_orderdate < TIMESTAMP '1996-04-01'
           AND l_returnflag = 'R'
         GROUP BY c_custkey, c_name, c_acctbal, n_name
-        ORDER BY revenue DESC, c_custkey LIMIT 20""")),
+        ORDER BY revenue DESC, c_custkey LIMIT 20"""), bench = true),
 
     // --- Q7 shape: volume shipping between two nations. Both nation
     // dims broadcast; the disjunctive nation-pair predicate sits on the
@@ -317,7 +317,7 @@ object Macro {
           AND l_shipdate < TIMESTAMP '1998-01-01'
           AND ((n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
             OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18'))
-        GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""")),
+        GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""), bench = true),
 
     // --- Q14 shape: promoted-part revenue share over one ship window.
     // lineitem date-pruned at the scan, part rides a broadcast, ONE
@@ -347,7 +347,7 @@ object Macro {
             / ${dsum("l_extendedprice * (1 - l_discount)")}, 9) AS promo_pct
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate < TIMESTAMP '1996-07-01'""")),
+          AND l_shipdate < TIMESTAMP '1996-07-01'"""), bench = true),
 
     // --- Q19 shape: disjunctive bracket revenue — the classic
     // partial-pushdown predicate: each OR arm constrains BOTH join
@@ -382,7 +382,7 @@ object Macro {
           OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
             AND l_quantity BETWEEN 10 AND 35)
           OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
-            AND l_quantity BETWEEN 20 AND 50)""")),
+            AND l_quantity BETWEEN 20 AND 50)"""), bench = true),
 
     // --- distributed decision-stump fit, oracle-checked ------------------
     // One depth-1 CART fit (exact-percentile candidates, gini, the
@@ -571,7 +571,7 @@ object Macro {
           AND o_orderdate < TIMESTAMP '1996-04-01'
           AND EXISTS (SELECT 1 FROM lineitem
             WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
+        GROUP BY o_orderpriority ORDER BY o_orderpriority"""), bench = true),
 
     // --- Q6 shape: forecasting revenue change — the pure scan-and-
     // aggregate query: every predicate (date year, discount band,
@@ -589,7 +589,7 @@ object Macro {
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
           AND l_shipdate < TIMESTAMP '1997-01-01'
-          AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""")),
+          AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"""), bench = true),
 
     // --- Q13 shape: customer order-count distribution — LEFT join with
     // a predicate ON THE JOIN (not a WHERE: customers with no matching
@@ -615,7 +615,7 @@ object Macro {
             AND o_orderpriority <> '1-URGENT'
           GROUP BY c_custkey)
         SELECT c_count, COUNT(*) AS custdist FROM co
-        GROUP BY c_count ORDER BY custdist DESC, c_count DESC""")),
+        GROUP BY c_count ORDER BY custdist DESC, c_count DESC"""), bench = true),
 
     // --- Q17 shape: small-quantity-order revenue — the correlated
     // per-part average as an AGG-BROADCAST (one hash aggregate over the
@@ -651,7 +651,7 @@ object Macro {
           FROM li GROUP BY l_partkey)
         SELECT round(${dsum("l_extendedprice")} / 7.0, 2) AS avg_yearly
         FROM li JOIN thr USING (l_partkey)
-        WHERE l_quantity < qty_thr""")),
+        WHERE l_quantity < qty_thr"""), bench = true),
 
     // --- Q22 shape: global sales opportunity — rich-but-inactive
     // customers: the positive-balance average is ONE 1-row aggregate
@@ -688,7 +688,7 @@ object Macro {
           AND NOT EXISTS (SELECT 1 FROM orders
             WHERE o_custkey = c_custkey
               AND o_orderdate >= TIMESTAMP '2000-01-01')
-        GROUP BY c_nationkey ORDER BY c_nationkey""")),
+        GROUP BY c_nationkey ORDER BY c_nationkey"""), bench = true),
 
     // --- Q15 shape: top revenue supplier — the classic view + MAX
     // subquery. ONE fact aggregate builds the per-supplier quarterly
@@ -733,7 +733,7 @@ object Macro {
         FROM rev CROSS JOIN mx
         JOIN supplier ON l_suppkey = s_suppkey
         WHERE total_revenue = mx
-        ORDER BY s_suppkey""")),
+        ORDER BY s_suppkey"""), bench = true),
 
     // --- Q2 shape: min-cost supplier per part. The fixture has no
     // partsupp, so the part-supplier cost relation is DERIVED from
@@ -791,7 +791,7 @@ object Macro {
           FROM cand GROUP BY 1)
         SELECT s_acctbal, s_name, n_name, l_partkey AS p_partkey, unit_cost
         FROM cand JOIN mc ON l_partkey = mc_partkey AND unit_cost = min_cost
-        ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""")),
+        ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100"""), bench = true),
 
     // --- Q8 shape: national market share — the deepest join graph in
     // the battery (lineitem ⋈ part ⋈ orders ⋈ customer ⋈ nation ⋈
@@ -852,7 +852,7 @@ object Macro {
         WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
           AND o_orderdate BETWEEN TIMESTAMP '1995-01-01'
             AND TIMESTAMP '1996-12-31'
-        GROUP BY 1 ORDER BY 1""")),
+        GROUP BY 1 ORDER BY 1"""), bench = true),
 
     // --- Q9 shape: product-type profit by nation and year. The fixture
     // has no ps_supplycost, so cost is the retail-derived proxy
@@ -919,7 +919,7 @@ object Macro {
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation ON s_nationkey = n_nationkey
         WHERE p_name LIKE '%bolt'
-        GROUP BY 1, 2 ORDER BY nation, o_year DESC""")),
+        GROUP BY 1, 2 ORDER BY nation, o_year DESC"""), bench = true),
 
     // --- Q11 shape: important part values — per-part revenue from one
     // nation group's suppliers, kept only when it exceeds a fraction of
@@ -973,7 +973,7 @@ object Macro {
         t AS (SELECT ${dsum("value")} * 0.001 AS thr FROM v)
         SELECT l_partkey, round(value, 2) AS value
         FROM v CROSS JOIN t WHERE value > thr
-        ORDER BY value DESC, l_partkey""")),
+        ORDER BY value DESC, l_partkey"""), bench = true),
 
     // --- Q12 shape: late-shipment priority split. The fixture has no
     // l_shipmode/commitdate, so the mode analog is l_returnflag and
@@ -1011,7 +1011,7 @@ object Macro {
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'
           AND l_shipdate > o_orderdate
-        GROUP BY l_returnflag ORDER BY l_returnflag""")),
+        GROUP BY l_returnflag ORDER BY l_returnflag"""), bench = true),
 
     // --- Q16 shape: supplier count by part attribute. The part-supplier
     // relation is again lineitem-derived (DISTINCT pair projection — one
@@ -1054,7 +1054,7 @@ object Macro {
           AND p_brand <> 'Brand#1' AND p_type <> 'PROMO'
           AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
         GROUP BY p_brand, p_type, p_size
-        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")),
+        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""), bench = true),
 
     // --- Q20 shape: dominant suppliers of a part family. Without
     // ps_availqty the "excess stock" test becomes share-of-part-volume:
@@ -1112,7 +1112,7 @@ object Macro {
         JOIN region ON n_regionkey = r_regionkey
         WHERE r_name = 'EUROPE'
           AND s_suppkey IN (SELECT l_suppkey FROM dom)
-        ORDER BY s_name""")),
+        ORDER BY s_name"""), bench = true),
 
     // --- Q1 proper: the pricing-summary report — the canonical
     // scan-heavy single-pass aggregate (q01 is the reference's own
@@ -1165,7 +1165,7 @@ object Macro {
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '2001-08-06'
         GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus""")),
+        ORDER BY l_returnflag, l_linestatus"""), bench = true),
 
     // --- Bloom-pruned fact-fact join (Skew.bloomPrunedJoin, the
     // explicit runtime-filter handle): revenue of line items belonging
@@ -1196,6 +1196,6 @@ object Macro {
           COUNT(*) AS n_items
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         WHERE o_totalprice > 450000.0
-        GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
+        GROUP BY o_orderpriority ORDER BY o_orderpriority"""), bench = true)
   )
 }

@@ -479,7 +479,7 @@ object Pipeline {
         SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
         FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
         WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-        ORDER BY d1, d2""")),
+        ORDER BY d1, d2"""), bench = true),
 
     // --- MinHash + LSH near-dup (verified: oracle = exact Jaccard >= 0.8) --------
     // r14 band: fresh-session QBench, 7 iters, sf0.1 — 1.55 s
@@ -504,7 +504,7 @@ object Pipeline {
         SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
         FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
         WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-        ORDER BY d1, d2""")),
+        ORDER BY d1, d2"""), bench = true),
 
     // --- incremental MinHash+LSH: new batch (odd ids) vs seen corpus
     // (even ids) — candidates form only ACROSS the ingest boundary
@@ -533,7 +533,7 @@ object Pipeline {
         FROM inter JOIN sizes sa ON d1 = sa.doc_id
           JOIN sizes sb ON d2 = sb.doc_id
         WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-        ORDER BY d1, d2""")),
+        ORDER BY d1, d2"""), bench = true),
 
     // --- skew-capped dedup variants: the paths a 100×-scale corpus should
     // run. q44b drops shingles with document frequency > 5 before the
@@ -607,7 +607,7 @@ object Pipeline {
           FROM sims a JOIN sims b ON a.doc_id < b.doc_id
           WHERE bit_count(xor(a.sim, b.sim)) <= 3
           ORDER BY d1, d2"""
-      }),
+      }, bench = true),
 
     // --- brute-force cosine top-k similarity search --------------------------------
     "q47_ann_topk" -> Q(
@@ -631,7 +631,7 @@ object Pipeline {
           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rank
           FROM scored)
         SELECT qid, rank, nid, round(cos, 6) AS cos FROM ranked
-        WHERE rank <= 5 ORDER BY qid, rank""")),
+        WHERE rank <= 5 ORDER BY qid, rank"""), bench = true),
 
     // --- embedding near-dup pairs (cosine threshold join) ---------------------------
     // EXACT, via the blocked pair equi-join (work spread over block-pair
@@ -656,7 +656,7 @@ object Pipeline {
             i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
          * sqrt(list_sum(list_transform(range(1, len(b.embedding) + 1),
             i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) >= 0.45
-        ORDER BY d1, d2""")),
+        ORDER BY d1, d2"""), bench = true),
 
     // --- IVF ANN top-k (deterministic centroids → DuckDB-replicable) ------------------
     // centroids = every 100th vector; corpus assigned to nearest cell;
@@ -747,7 +747,7 @@ object Pipeline {
         .orderBy("window_start", "event_type"),
       Some(s"""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
         event_type, COUNT(*) AS n, ${dsum("value")} AS total_value
-        FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""")),
+        FROM events GROUP BY 1, 2 ORDER BY window_start, event_type"""), bench = true),
 
     // --- sessionization (gaps-and-islands, 30-min inactivity) -------------------------
     "q51_sessions" -> Q(
@@ -772,7 +772,7 @@ object Pipeline {
                       > 1800000000 THEN 1
                  ELSE 0 END AS new_session
           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        GROUP BY user_id ORDER BY user_id""")),
+        GROUP BY user_id ORDER BY user_id"""), bench = true),
 
     // --- pivot (event_type → columns) ---------------------------------------------------
     "q52_pivot" -> Q(
@@ -983,7 +983,7 @@ object Pipeline {
         l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
         SELECT l.event_id, l.user_id, CAST(l.ts AS TIMESTAMP) AS ts, r.last_purchase
         FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        ORDER BY event_id""")),
+        ORDER BY event_id"""), bench = true),
 
     // --- benchmark decontamination: flag corpus docs sharing distinct
     // 8-grams with a held-out benchmark slice (doc_id % 20 == 5). Only
@@ -1121,7 +1121,7 @@ object Pipeline {
           CAST(p.p_start AS TIMESTAMP) AS p_start, p.p_value
         FROM c JOIN p ON c.user_id = p.user_id
           AND c.ts >= p.p_start AND c.ts <= p.p_end
-        ORDER BY event_id, p_start""")),
+        ORDER BY event_id, p_start"""), bench = true),
 
     // --- repetition quality signals (Gopher-style): top-bigram/-trigram
     // token coverage and duplicate-word fraction per doc, each replicated
@@ -1151,7 +1151,7 @@ object Pipeline {
             list_transform(range(1, greatest(len(w) - 1, 1)), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS g3
           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
         ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- partition-aware parquet write → partition-pruned read-back.
     // The write lays out event_type=X/ directories; the read filters one
@@ -1205,7 +1205,7 @@ object Pipeline {
         SELECT vec_id, round(u[1], 9) AS x1,
           round(list_sum(list_transform(range(1, len(u) + 1),
             i -> u[i] * u[i])), 9) AS n2
-        FROM u ORDER BY vec_id""")),
+        FROM u ORDER BY vec_id"""), bench = true),
 
     // --- Gopher quality rule battery (scan-stage corpus filter) ----------
     // Each published rule as a boolean column; the oracle recomputes
@@ -1411,7 +1411,7 @@ object Pipeline {
             ${isum("len(string_split(text, ' '))")} AS total_tokens,
             ${davg("q")} AS avg_quality
           FROM clean GROUP BY source ORDER BY source"""
-      }),
+      }, bench = true),
 
     // --- TF-IDF keyword extraction: top-3 terms per document ----------------
     // (TextAnalysis.tfIdfTopK — smoothed sklearn idf, 9/6-dp rounding
@@ -1431,7 +1431,7 @@ object Pipeline {
         SELECT doc_id, word, tf, dfreq, tfidf, CAST(rk AS INTEGER) AS rk FROM (
           SELECT *, row_number() OVER (PARTITION BY doc_id
             ORDER BY tfidf DESC, word) AS rk FROM scored)
-        WHERE rk <= 3 ORDER BY doc_id, rk""")),
+        WHERE rk <= 3 ORDER BY doc_id, rk"""), bench = true),
 
     // --- SemDeDup: embedding-cluster semantic dedup keep-list ---------------
     // (Similarity.semanticDedup — Abbas et al. 2023. Cells from the
@@ -1461,7 +1461,7 @@ object Pipeline {
             WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.45)
           SELECT vec_id, cell FROM cass ANTI JOIN drops USING (vec_id)
           ORDER BY vec_id"""
-      }),
+      }, bench = true),
 
     // --- duplicate-span coverage (substring-dedup signal) -------------------
     // (Dedup.duplicateSpanStats — Lee et al. 2021. Spark hashes the
@@ -1485,7 +1485,7 @@ object Pipeline {
               / COUNT(*), 6) AS dup_frac
           FROM g LEFT JOIN dup ON g.g = dup.g
           GROUP BY doc_id ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- corpus-prep v2: the modern pipeline as ONE hash-checked query -------
     // duplicate-span filter (Lee et al. signal, keep dup_frac ≤ 0.5;
@@ -1558,7 +1558,7 @@ object Pipeline {
               - greatest(pack_id * 1000, cb)) AS BIGINT) AS n_toks,
             MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
           FROM e GROUP BY pack_id ORDER BY pack_id"""
-      }),
+      }, bench = true),
 
     // --- corpus-fit bigram LM quality scoring --------------------------------
     // (TextAnalysis.bigramLmScore — the CCNet/KenLM perplexity-filter
@@ -1580,7 +1580,7 @@ object Pipeline {
             round(ln(CAST(c12.c12 + 1 AS DOUBLE) / (c1.c1 + vv.v)), 9) AS lnp
           FROM bgf JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vv)
         SELECT doc_id, COUNT(*) AS n_bigrams, ${davg("lnp")} AS avg_logp
-        FROM scored GROUP BY doc_id ORDER BY doc_id""")),
+        FROM scored GROUP BY doc_id ORDER BY doc_id"""), bench = true),
 
     // --- domain-mixture rebalance: data-driven rates + portable subsample ---
     // (Mixture.tokenMixture/rebalance — per-source token shares vs a
@@ -1641,7 +1641,7 @@ object Pipeline {
           round(p.pij / nn.n - (sa.sx / nn.n) * (sb.sx / nn.n), 9) AS cov
         FROM prods p CROSS JOIN nn
           JOIN sums sa ON p.i = sa.i JOIN sums sb ON p.j = sb.i
-        ORDER BY i, j""")),
+        ORDER BY i, j"""), bench = true),
 
     // --- product quantization: encode the embedding corpus -------------------
     // (Embeddings.pqEncode over pqInitCodebooks — 64 doubles compress
@@ -1686,7 +1686,7 @@ object Pipeline {
             ${(0 until 8).map(i => s"CAST(b$i.cid AS INTEGER) AS c$i").mkString(", ")}
           FROM e ${(0 until 8).map(i => s"JOIN b$i ON e.vec_id = b$i.vec_id").mkString(" ")}
           ORDER BY e.vec_id"""
-      }),
+      }, bench = true),
 
     // --- PQ two-stage search: ADC shortlist → exact re-rank ------------------
     // (Embeddings.pqTopKRerank — the codes-only ADC scan shortlists
@@ -1763,7 +1763,7 @@ object Pipeline {
                 AS rank FROM ex)
           SELECT qid, rank, vec_id, round(dist, 9) AS dist FROM ranked
           WHERE rank <= 5 ORDER BY qid, rank"""
-      }),
+      }, bench = true),
 
     // --- IVF+PQ composed search (the FAISS-style IVFPQ shape) ----------------
     // (Embeddings.pqIvfTopK — corpus rows assigned to their nearest
@@ -1853,7 +1853,7 @@ object Pipeline {
                 AS rank FROM sd)
           SELECT qid, rank, vec_id, round(adist, 9) AS adist FROM ranked
           WHERE rank <= 5 ORDER BY qid, rank"""
-      }),
+      }, bench = true),
 
     // --- sequence packing (concat-and-chunk training batches) ----------------
     // (Packing.packConcat — distributed prefix sum over the NARROW
@@ -1880,7 +1880,7 @@ object Pipeline {
         SELECT doc_id, CAST(pack_id AS BIGINT) AS pack_id,
           CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
           CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT) AS tok_end
-        FROM e ORDER BY doc_id, pack_id""")),
+        FROM e ORDER BY doc_id, pack_id"""), bench = true),
 
     // --- repeated-line boilerplate removal (Falcon/CCNet filter) -------------
     // (Dedup.removeRepeatedLines — planted multi-line VALUES docs: the
@@ -1948,7 +1948,7 @@ object Pipeline {
         SELECT sc.source, COUNT(*) AS n_kept, round(MIN(sr), 9) AS min_sr
         FROM sc JOIN thr ON sc.source = thr.source
         WHERE sc.sr >= thr.t
-        GROUP BY sc.source ORDER BY sc.source""")),
+        GROUP BY sc.source ORDER BY sc.source"""), bench = true),
 
     // --- negative sampling: k portable non-self partners per doc -------------
     // (Mixture.negativeSamples — ordinal zipWithIndex + portable-mix
@@ -1972,7 +1972,7 @@ object Pipeline {
           FROM pairs CROSS JOIN nn)
         SELECT c.doc_id, c.j, i.doc_id AS neg_doc_id
         FROM cand c JOIN idx i ON c.nord = i.ord
-        ORDER BY c.doc_id, c.j""")),
+        ORDER BY c.doc_id, c.j"""), bench = true),
 
     // --- curriculum buckets: per-source score quartiles ----------------------
     // (TextAnalysis.bucketByQuantiles — exact per-group quantile vector
@@ -2026,7 +2026,7 @@ object Pipeline {
         .orderBy(col("cnt").desc, col("token")),
       Some("""SELECT w AS token, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        GROUP BY w ORDER BY cnt DESC, token""")),
+        GROUP BY w ORDER BY cnt DESC, token"""), bench = true),
 
     // --- BPE tokenizer training: round-1 pair frequencies --------------------
     // (Bpe.pairCounts over Bpe.wordCounts — the corpus-scale pass of
@@ -2046,7 +2046,7 @@ object Pipeline {
         p AS (SELECT c, unnest(list_transform(range(1, len(syms)),
             i -> {'p1': syms[i], 'p2': syms[i + 1]})) AS pr FROM s)
         SELECT pr.p1 AS p1, pr.p2 AS p2, CAST(SUM(c) AS BIGINT) AS cnt
-        FROM p GROUP BY 1, 2 ORDER BY cnt DESC, p1, p2""")),
+        FROM p GROUP BY 1, 2 ORDER BY cnt DESC, p1, p2"""), bench = true),
 
     // --- pack contents: the materialized training examples -------------------
     // (Packing.packTexts — q101's interval map joined back to the
@@ -2102,7 +2102,7 @@ object Pipeline {
             w -> w <> ''), ' ') AS recon_text
         FROM documents
         WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- BPE 1-merge encode: the token-count path, fully replayed ------------
     // (With exactly ONE trained merge, greedy encode degenerates to a
@@ -2138,7 +2138,7 @@ object Pipeline {
           FROM s LEFT JOIN top1 t ON 1 = 1)
         SELECT wds.doc_id, CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
         FROM wds JOIN enc ON wds.w = enc.w
-        GROUP BY wds.doc_id ORDER BY wds.doc_id""")),
+        GROUP BY wds.doc_id ORDER BY wds.doc_id"""), bench = true),
 
     // --- incremental SimHash near-dup (standing ingestion) -------------------
     // (Dedup.simhashPairsIncrementalPortable — candidate pairs form
@@ -2173,7 +2173,7 @@ object Pipeline {
             ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
           WHERE bit_count(xor(a.sim, b.sim)) <= 3
           ORDER BY d1, d2"""
-      }),
+      }, bench = true),
 
     // --- per-domain document cap ----------------------------------------------
     // (Mixture.capPerGroup — each source keeps its n=20 rows with the
@@ -2195,7 +2195,7 @@ object Pipeline {
         SELECT source, COUNT(*) AS n_kept,
           CAST(SUM(doc_id) AS BIGINT) AS id_sum
         FROM ranked WHERE rn <= 20
-        GROUP BY source ORDER BY source""")),
+        GROUP BY source ORDER BY source"""), bench = true),
 
     // --- Bloom-prefiltered decontamination: same contract as q69 (the
     // benchmark here is the doc_id % 20 == 7 slice) but the corpus
@@ -2229,7 +2229,7 @@ object Pipeline {
           SELECT doc_id, COUNT(*) AS n_shared
           FROM cg SEMI JOIN bg USING (g)
           GROUP BY doc_id ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- edit-distance fuzzy dedup ------------------------------------------
     // (Dedup.editDistancePairs — q-gram blocking with length filter,
@@ -2255,7 +2255,7 @@ object Pipeline {
           CAST(levenshtein(a.name, b.name) AS INTEGER) AS dist
         FROM names a JOIN names b ON a.nid < b.nid
         WHERE levenshtein(a.name, b.name) <= 2
-        ORDER BY d1, d2""")),
+        ORDER BY d1, d2"""), bench = true),
 
     // --- bounded-heap per-group top-k ---------------------------------------
     // (Mixture.topKPerGroup / expr.TopKAgg — k-entry heap per group per
@@ -2275,7 +2275,7 @@ object Pipeline {
                 row_number() OVER (PARTITION BY source
                   ORDER BY n_chars DESC, doc_id) AS rn
               FROM documents)
-        WHERE rn <= 3 ORDER BY source, rank""")),
+        WHERE rn <= 3 ORDER BY source, rank"""), bench = true),
 
     // --- deterministic weighted sampling (A-Res) ----------------------------
     // (Mixture.weightedSample — Efraimidis-Spirakis exp-key scheme on
@@ -2294,7 +2294,7 @@ object Pipeline {
         FROM (SELECT doc_id, skey,
                 row_number() OVER (ORDER BY skey DESC, doc_id) AS rn
               FROM keyed)
-        WHERE rn <= 50 ORDER BY rank""")),
+        WHERE rn <= 50 ORDER BY rank"""), bench = true),
 
     // --- stratified weighted sampling (A-Res per group) ---------------------
     // (Mixture.weightedSamplePerGroup — q142's exp-key scheme with the
@@ -2316,7 +2316,7 @@ object Pipeline {
                 row_number() OVER (PARTITION BY source
                   ORDER BY skey DESC, doc_id) AS rn
               FROM keyed)
-        WHERE rn <= 10 ORDER BY source, rank""")),
+        WHERE rn <= 10 ORDER BY source, rank"""), bench = true),
 
     // --- HTML stripping ------------------------------------------------------
     // (TextAnalysis.stripHtml — the web-crawl cleaning pass; the corpus
@@ -2340,7 +2340,7 @@ object Pipeline {
           "<p>tail&nbsp;&amp;&#39;s &lt;ok&gt;</p></body></html>"
         val expr = TA.stripHtmlSql(s"'$pre' || text || '$post'")
         s"SELECT doc_id, $expr AS clean FROM documents ORDER BY doc_id"
-      }),
+      }, bench = true),
 
     // --- semi-structured JSON payload extraction (schema-on-read) -----------
     // Event logs carry JSON-string payloads (events.props = {"k": N});
@@ -2359,7 +2359,7 @@ object Pipeline {
     // field materializes.
     //
     // r10 flat-schema fast-path adjudication (VERDICT r9 item 6,
-    // tools.JsonAb, fresh session, 7 iters, sf0.1, identical results
+    // one-off fresh-session A/B, 7 iters, sf0.1, identical results
     // verified): this from_json+get_json_object shape 0.69 s median /
     // get_json_object-only chain 0.59 s / json_tuple single-parse
     // 0.40 s. Kept as-is — this row gates the schema-on-read API
@@ -2389,7 +2389,7 @@ object Pipeline {
         ${isum(s"CASE WHEN ($jk) IS NULL THEN 1 ELSE 0 END")} AS n_bad,
         COUNT(CASE WHEN json_valid(props) THEN props->>'missing' END) AS n_miss
         FROM events GROUP BY event_type ORDER BY event_type"""
-      }),
+      }, bench = true),
 
     // --- duplicate-span REMOVAL (exact substring dedup, cut step) -----------
     // (Dedup.removeDuplicateSpans — Lee et al. 2022. The oracle replays
@@ -2428,7 +2428,7 @@ object Pipeline {
             FROM kept GROUP BY doc_id)
           SELECT d.doc_id, COALESCE(r.text, '') AS text
           FROM documents d LEFT JOIN r USING (doc_id) ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- URL canonicalization + registrable domain (crawl join key) ----------
     // (ops.Urls — RFC 3986 syntax-based normalization as a pure codegen
@@ -2560,7 +2560,7 @@ object Pipeline {
           SELECT c.doc_id, COALESCE(r.text, '') AS text
           FROM (SELECT doc_id FROM documents WHERE doc_id % 20 <> 5) c
           LEFT JOIN r USING (doc_id) ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- corpus snapshot diff (incremental-pipeline primitive) --------------
     // (Dedup.snapshotDiff — planted old/new snapshots from documents:
@@ -2595,11 +2595,11 @@ object Pipeline {
             key_old, key_new
           FROM old FULL OUTER JOIN nw ON old.doc_id = nw.doc_id)
         SELECT doc_id, status, key_old, key_new FROM j
-        WHERE status <> 'unchanged' ORDER BY doc_id""")),
+        WHERE status <> 'unchanged' ORDER BY doc_id"""), bench = true),
 
     // --- flat-schema JSON extraction fast path (json_tuple) -----------------
     // (functions.jsonGetMany — SAME result as q146 (verified identical
-    // by tools.JsonAb before registration) with ONE streaming parse per
+    // by a one-off A/B before registration) with ONE streaming parse per
     // row for all requested fields instead of from_json's
     // CodegenFallback struct + a second get_json_object parse:
     // 0.40 s vs 0.69 s median at sf0.1. The oracle is q146's verbatim —
@@ -2630,7 +2630,7 @@ object Pipeline {
         ${isum(s"CASE WHEN ($jk) IS NULL THEN 1 ELSE 0 END")} AS n_bad,
         COUNT(CASE WHEN json_valid(props) THEN props->>'missing' END) AS n_miss
         FROM events GROUP BY event_type ORDER BY event_type"""
-      }),
+      }, bench = true),
 
     // --- Unicode text normalization ------------------------------------------
     // (TextAnalysis.normalizeText — the canonicalization pass that runs
@@ -2660,7 +2660,7 @@ object Pipeline {
           s"text || '${Hostile.suffix.replace("'", "''")}'")
         s"""SELECT doc_id, $e AS clean, length($e) AS n_clean
         FROM documents ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- CDC apply (lakehouse MERGE between crawls) --------------------------
     // (Dedup.applySnapshotChanges — latest change per id wins by
@@ -2716,7 +2716,7 @@ object Pipeline {
         UNION ALL
         SELECT o_orderkey, o_totalprice, o_orderstatus FROM winners
         WHERE op = 'upsert'
-        ORDER BY o_orderkey"""))
+        ORDER BY o_orderkey"""), bench = true)
   ,
 
     // --- data-quality expectations audit -------------------------------------
@@ -2816,7 +2816,7 @@ object Pipeline {
         truth AS (SELECT w, count(*) AS true_cnt FROM toks GROUP BY w)
         SELECT est.w, est, COALESCE(true_cnt, 0) AS true_cnt,
           est - COALESCE(true_cnt, 0) AS overshoot
-        FROM est LEFT JOIN truth ON est.w = truth.w ORDER BY est.w"""))
+        FROM est LEFT JOIN truth ON est.w = truth.w ORDER BY est.w"""), bench = true)
   ,
 
     // --- Z-order (Morton) clustering -----------------------------------------
@@ -2862,7 +2862,7 @@ object Pipeline {
             min(a) AS a_min, max(a) AS a_max,
             min(b) AS b_min, max(b) AS b_max
           FROM zed GROUP BY 1 ORDER BY 1"""
-      }),
+      }, bench = true),
 
     // --- leakage-safe group holdout ------------------------------------------
     // (Mixture.groupHoldout — whole GROUPS land in train or eval, the
@@ -2893,7 +2893,7 @@ object Pipeline {
           FROM assigned GROUP BY 1)
         SELECT per.source, split, n, chars, n_splits
         FROM per JOIN atomic ON per.source = atomic.source
-        ORDER BY per.source, split"""))
+        ORDER BY per.source, split"""), bench = true)
   ,
 
     // --- residual IVF+PQ (the full FAISS IVFPQ shape) ------------------------
@@ -3008,7 +3008,7 @@ object Pipeline {
                 AS rank FROM sd)
           SELECT qid, rank, vec_id, round(adist, 9) AS adist FROM ranked
           WHERE rank <= 5 ORDER BY qid, rank"""
-      }),
+      }, bench = true),
 
     // --- corpus-prep v3: the round-10 operators composed ---------------------
     // (stripHtml → normalizeText → token count → per-source quantile
@@ -3063,7 +3063,7 @@ object Pipeline {
             ${Sql.isum("CAST(nt AS BIGINT)")} AS tokens,
             ${Sql.isum("length(ct)")} AS chars
           FROM sp GROUP BY 1, 2 ORDER BY 1, 2"""
-      }),
+      }, bench = true),
 
     // --- DSIR importance weights (Xie et al. 2023) --------------------------
     // (Mixture.dsirLogWeights: hashed unigram+bigram bag-of-ngrams
@@ -3106,7 +3106,7 @@ object Pipeline {
           SELECT doc_id, COUNT(*) AS n_feats, ${Sql.dsum("lam")} AS logw
           FROM rawf JOIN lam ON rawf.b = lam.b
           GROUP BY 1 ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- BM25 ranked retrieval (Robertson/Okapi, Lucene idf) ----------------
     // (TextAnalysis.bm25TopK: the literal query-term filter runs inside
@@ -3120,7 +3120,7 @@ object Pipeline {
           Seq("spark", "window", "merge", "scan"), k = 15)
         .orderBy("rank"),
       Some(Bm25Sql.topK("documents", Seq("spark", "window", "merge", "scan"),
-        15) + " ORDER BY rank"),
+        15) + " ORDER BY rank"), bench = true,
     ),
 
     // --- hybrid retrieval: BM25 ⊕ ANN via reciprocal-rank fusion ------------
@@ -3170,7 +3170,7 @@ object Pipeline {
             (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id) AS rank
              FROM fused)
           WHERE rank <= 10 ORDER BY rank"""
-      }),
+      }, bench = true),
 
     // --- token-budget mixture selection -------------------------------------
     // (Mixture.tokenBudgetSelect: per-source greedy fill in portable-
@@ -3203,7 +3203,7 @@ object Pipeline {
         SELECT source, doc_id, ntok AS n_tokens, cb AS tokens_before FROM c
         WHERE cb < CASE source WHEN 'src0' THEN 20000
                                WHEN 'src1' THEN 1000000000 ELSE 0 END
-        ORDER BY source, tokens_before, doc_id""")),
+        ORDER BY source, tokens_before, doc_id"""), bench = true),
 
     // --- deterministic sharded export: integrity manifest -------------------
     // (Shard.shardManifest: shard = mix(id) mod n is a scan-stage
@@ -3226,7 +3226,7 @@ object Pipeline {
             ${Sql.isum("len(string_split(text, ' '))")} AS n_tokens,
             CAST(SUM($docHash) % 2147483647 AS BIGINT) AS fingerprint
           FROM documents GROUP BY 1 ORDER BY shard"""
-      }),
+      }, bench = true),
 
     // --- semantic decontamination (embedding-space eval overlap) ------------
     // (Similarity.semanticDecontaminate — the embedding analog of
@@ -3257,7 +3257,7 @@ object Pipeline {
             WHERE ${cosSql("c.embedding", "e.embedding")} >= 0.4)
           SELECT vec_id, cell FROM cass ANTI JOIN contam USING (vec_id)
           ORDER BY vec_id"""
-      }),
+      }, bench = true),
 
     // --- per-source token-distribution drift (smoothed KL vs corpus) --------
     // (Mixture.tokenKlDivergence — the mixture diagnostic: how far each
@@ -3295,7 +3295,7 @@ object Pipeline {
             * ((bigV - vg) * round(ln(1.0 / (ng + 1.0 * bigV)), 9)
                - (sq - sqp)), 6) AS kl
         FROM pg JOIN ng ON pg.g = ng.g CROSS JOIN tot CROSS JOIN sq
-        ORDER BY source""")),
+        ORDER BY source"""), bench = true),
 
     // --- exact token-weighted percentiles per source ------------------------
     // (Stats.weightedPercentiles — Type-1 weighted quantile: the value
@@ -3330,7 +3330,7 @@ object Pipeline {
           CROSS JOIN (VALUES (0.25, 250000::HUGEINT), (0.5, 500000::HUGEINT),
             (0.9, 900000::HUGEINT)) AS ps(p, pm)
           WHERE cw * 1000000 >= pm * tw GROUP BY 1, 2)
-        SELECT g AS source, p, wpct FROM hits ORDER BY source, p""")),
+        SELECT g AS source, p, wpct FROM hits ORDER BY source, p"""), bench = true),
 
     // --- robust outlier flags (median/MAD modified z-score) -----------------
     // (Stats.robustZOutliers — Iglewicz & Hoaglin: rz = 0.6745(x−med)/MAD
@@ -3363,7 +3363,7 @@ object Pipeline {
           FROM documents JOIN med USING (lang) JOIN mad USING (lang))
         SELECT doc_id, lang, n_chars, rz,
           COALESCE(abs(rz) > 3.5, FALSE) AS is_outlier
-        FROM sc ORDER BY doc_id""")),
+        FROM sc ORDER BY doc_id"""), bench = true),
 
     // --- PageRank over the customer→supplier trade graph --------------------
     // (Graph.pageRank — Brin & Page 1998; the link-centrality quality
@@ -3415,7 +3415,7 @@ object Pipeline {
             FROM nodes CROSS JOIN nn),
           ${(1 to 3).map(iter).mkString(",")}
           SELECT node, round(r, 12) AS pr FROM r3 ORDER BY node"""
-      }),
+      }, bench = true),
 
     // --- perceptual image hashes (aHash / dHash) ----------------------------
     // (Multimodal.aHash/dHash over a luma grid — here the embeddings
@@ -3445,7 +3445,7 @@ object Pipeline {
             CASE WHEN CAST(embedding[(k // 8) * 9 + (k % 8) + 1] AS DOUBLE) <
                       CAST(embedding[(k // 8) * 9 + (k % 8) + 2] AS DOUBLE)
             THEN (1::BIGINT << k) ELSE 0::BIGINT END)) AS BIGINT) AS dhash
-        FROM embeddings ORDER BY vec_id""")),
+        FROM embeddings ORDER BY vec_id"""), bench = true),
 
     // --- T5 span corruption (blocked, deterministic) ------------------------
     // (Masking.spanCorruption — Raffel et al. 2020: mask token spans,
@@ -3487,7 +3487,7 @@ object Pipeline {
                         WHEN $inSpan THEN ws[p]
                         ELSE NULL END), t -> t IS NOT NULL), ' '), '') AS target
           FROM base ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- repeated-sentence boilerplate signal -------------------------------
     // (TA.sentenceDupStats over TA.splitSentences — the sentence-granular
@@ -3513,7 +3513,7 @@ object Pipeline {
             round(CAST(SUM(CASE WHEN dup.s IS NOT NULL THEN 1 ELSE 0 END)
               AS DOUBLE) / COUNT(*), 6) AS dup_frac
           FROM sent LEFT JOIN dup ON sent.s = dup.s
-          GROUP BY doc_id ORDER BY doc_id""")),
+          GROUP BY doc_id ORDER BY doc_id"""), bench = true),
 
     // --- Unicode-script character profile -----------------------------------
     // (TA.scriptProfile — multilingual-crawl triage: mixed-script /
@@ -3548,7 +3548,7 @@ object Pipeline {
             '[A-Za-z0-9 \\t\\n\\r!-/:-@\\[-`{-~\\x{0400}-\\x{04FF}\\x{4E00}-\\x{9FFF}\\x{0600}-\\x{06FF}]',
             '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE), 6) AS other
         FROM documents WHERE length(text) > 0 ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- Flesch reading ease -------------------------------------------------
     // (TA.fleschReadingEase — Flesch 1948 with the vowel-group syllable
@@ -3573,7 +3573,7 @@ object Pipeline {
           CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE)
             AS syll
           FROM documents)
-        WHERE words > 0 ORDER BY doc_id""")),
+        WHERE words > 0 ORDER BY doc_id"""), bench = true),
 
     // --- sentence-aligned chunking (RAG complement of q68's chunkTokens) ----
     // (TA.chunkBySentences — each sentence lands in chunk
@@ -3603,7 +3603,7 @@ object Pipeline {
         SELECT doc_id, CAST(c AS INTEGER) AS chunk_ix,
           COUNT(*) AS n_sent, CAST(SUM(t) AS BIGINT) AS n_tokens,
           string_agg(s, ' ' ORDER BY si) AS chunk_text
-        FROM ex GROUP BY 1, 2 ORDER BY doc_id, chunk_ix""")),
+        FROM ex GROUP BY 1, 2 ORDER BY doc_id, chunk_ix"""), bench = true),
 
     // --- MMR diversified re-ranking (retrieval-family completion) -----------
     // (Similarity.mmrDiversify — Carbonell & Goldstein 1998: greedy
@@ -3658,7 +3658,7 @@ object Pipeline {
               s"UNION ALL SELECT $t AS rank, nid, round(sc, 6) AS score FROM pick$t")
               .mkString(" ")})
           ORDER BY rank"""
-      }),
+      }, bench = true),
 
     // --- keyed interval-overlap join ----------------------------------------
     // (RangeJoin.intervalOverlap — the interval×interval completion of
@@ -3691,7 +3691,7 @@ object Pipeline {
         JOIN (SELECT user_id, event_id, ts AS s, ts + INTERVAL 30 MINUTE AS e
               FROM events WHERE event_type = 'click') c
           ON v.user_id = c.user_id AND v.s <= c.e AND c.s <= v.e
-        ORDER BY l_id, r_id""")),
+        ORDER BY l_id, r_id"""), bench = true),
 
     // --- per-group winsorization (tail clamp) -------------------------------
     // (Stats.winsorize — exact per-lang [p05, p95] percentile band via
@@ -3710,7 +3710,7 @@ object Pipeline {
           FROM documents GROUP BY 1)
         SELECT doc_id, lang, n_chars,
           least(greatest(CAST(n_chars AS DOUBLE), lo), hi) AS w_chars
-        FROM documents JOIN qs USING (lang) ORDER BY doc_id""")),
+        FROM documents JOIN qs USING (lang) ORDER BY doc_id"""), bench = true),
 
     // --- incremental SemDeDup (new batch vs seen corpus) --------------------
     // (Similarity.semanticDedupIncremental — the embedding member of
@@ -3737,7 +3737,7 @@ object Pipeline {
             WHERE ${cosSql("n.embedding", "s.embedding")} >= 0.4)
           SELECT vec_id, cell FROM nass ANTI JOIN dup USING (vec_id)
           ORDER BY vec_id"""
-      }),
+      }, bench = true),
 
     // --- c-TF-IDF top terms per source (BERTopic labeling pass) -------------
     // (TA.cTfIdfTopTerms — Grootendorst 2022: each source is one
@@ -3762,7 +3762,7 @@ object Pipeline {
           s AS score, tf FROM
           (SELECT *, row_number() OVER (PARTITION BY c
             ORDER BY s DESC, w ASC) AS rank FROM sc)
-        WHERE rank <= 8 ORDER BY source, rank""")),
+        WHERE rank <= 8 ORDER BY source, rank"""), bench = true),
 
     // --- cross-source n-gram overlap matrix ---------------------------------
     // (Dedup.groupOverlapMatrix — "which crawls duplicate each other":
@@ -3790,7 +3790,7 @@ object Pipeline {
               AS jaccard
           FROM inter
           JOIN sizes s1 ON s1.g = g1 JOIN sizes s2 ON s2.g = g2
-          ORDER BY g1, g2""")),
+          ORDER BY g1, g2"""), bench = true),
 
     // --- trained char-trigram language ID (Cavnar & Trenkle / langid NB) ----
     // (TA.fitLangProfiles + predictLangTrained: fit per-language hashed
@@ -3820,7 +3820,7 @@ object Pipeline {
             GROUP BY 1)
           SELECT d.doc_id AS doc_id, COALESCE(pick.lang, 'unk') AS lang
           FROM documents d LEFT JOIN pick ON d.doc_id = pick.doc_id
-          ORDER BY d.doc_id""")),
+          ORDER BY d.doc_id"""), bench = true),
 
     // --- language-ID confidence margin (crawl-filter signal) ---------------
     // (TA.langIdMargin — q183's fit/score chain plus margin = best −
@@ -3848,7 +3848,7 @@ object Pipeline {
           SELECT pick.doc_id AS doc_id, pick.lang AS lang,
             bs - COALESCE(ss, bs) AS margin
           FROM pick LEFT JOIN second ON pick.doc_id = second.doc_id
-          ORDER BY pick.doc_id""")),
+          ORDER BY pick.doc_id"""), bench = true),
 
     // --- unigram-LM (SentencePiece) tokenizer: seed vocabulary --------------
     // (Unigram.seedVocab — Kudo 2018: occurrence counts of all 1..4-char
@@ -3875,7 +3875,7 @@ object Pipeline {
             UNION ALL
             SELECT * FROM (SELECT * FROM cnt WHERE len(piece) > 1
               ORDER BY cnt DESC, piece LIMIT 200))
-          SELECT piece, cnt FROM sel ORDER BY cnt DESC, piece""")),
+          SELECT piece, cnt FROM sel ORDER BY cnt DESC, piece"""), bench = true),
 
     // --- unigram-LM end-to-end: fit (seed + 2 Viterbi-EM rounds), encode ----
     // (The EM rounds are data-derived iterative DP — no SQL replays the
@@ -3903,7 +3903,7 @@ object Pipeline {
             w -> w <> ''), ' ') AS recon_text
         FROM documents
         WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- corpus-prep v4: domain prior → gates → robust quality → MMR --------
     // (The round-10/11 ops composed end-to-end, the q94/q113/q160
@@ -4046,7 +4046,7 @@ object Pipeline {
               s"UNION ALL SELECT $t AS rank, nid, round(sc, 6) AS score FROM pick$t")
               .mkString(" ")})
           ORDER BY rank"""
-      }),
+      }, bench = true),
 
     // --- Hilbert-curve layout (q157's locality-optimal twin) ----------------
     // (ZOrder.hilbertValue2D — the canonical xy2d reflect/rotate walk
@@ -4089,7 +4089,7 @@ object Pipeline {
             min(a) AS a_min, max(a) AS a_max,
             min(b) AS b_min, max(b) AS b_max
           FROM h0 GROUP BY 1 ORDER BY 1"""
-      }),
+      }, bench = true),
 
     // --- hard-negative mining for contrastive training ----------------------
     // (Similarity.hardNegatives — the DPR/ANCE negatives recipe: per
@@ -4117,7 +4117,7 @@ object Pipeline {
         rk AS (SELECT qid, nid, cos, row_number() OVER
             (PARTITION BY qid ORDER BY cos DESC, nid) AS r FROM sc)
         SELECT qid, CAST(r - 2 AS INTEGER) AS rank, nid, cos
-        FROM rk WHERE r > 2 AND r <= 7 ORDER BY qid, rank""")),
+        FROM rk WHERE r > 2 AND r <= 7 ORDER BY qid, rank"""), bench = true),
 
     // --- temperature-scaled mixture accounting ------------------------------
     // (Mixture.temperatureMixture — XLM-R §3.1 α-sampling: targets
@@ -4149,7 +4149,7 @@ object Pipeline {
           FROM t)
         SELECT lang, n_docs, tokens, share, target, "repeat",
           least(1.0, "repeat") AS rate
-        FROM r ORDER BY lang""")),
+        FROM r ORDER BY lang"""), bench = true),
 
     // --- epoched temperature rebalance (upsampling realization) -------------
     // (Mixture.temperatureRebalance — the realization that UPSAMPLES
@@ -4191,7 +4191,7 @@ object Pipeline {
         SELECT lang, ${isum("nc")} AS n_rows,
           ${isum("nc * dtok")} AS tokens_emitted,
           MAX(nc) - 1 AS max_epoch
-        FROM nc WHERE nc >= 1 GROUP BY lang ORDER BY lang""")),
+        FROM nc WHERE nc >= 1 GROUP BY lang ORDER BY lang"""), bench = true),
 
     // --- canonical near-dup dedup (best-quality representative) -------------
     // (Dedup.dedupNearCanonical — q64's LSH pairs → components, but the
@@ -4234,7 +4234,7 @@ object Pipeline {
           WHERE node NOT IN (SELECT node FROM keepn))
         SELECT doc_id, source, n_chars FROM documents
         WHERE doc_id NOT IN (SELECT node FROM dropn)
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- interpolated Kneser-Ney bigram LM scoring --------------------------
     // (TextAnalysis.knBigramLmScore — the smoothing KenLM actually
@@ -4269,7 +4269,7 @@ object Pipeline {
           FROM c12 JOIN lft USING (w1) JOIN rgt USING (w2) CROSS JOIN nn),
         scored AS (SELECT doc_id, lnp FROM bgf JOIN types USING (w1, w2))
         SELECT doc_id, COUNT(*) AS n_bigrams, ${davg("lnp")} AS avg_logp
-        FROM scored GROUP BY doc_id ORDER BY doc_id""")),
+        FROM scored GROUP BY doc_id ORDER BY doc_id"""), bench = true),
 
     // --- PMI collocation mining ---------------------------------------------
     // (TextAnalysis.pmiCollocations — Church & Hanks PMI over adjacent
@@ -4299,7 +4299,7 @@ object Pipeline {
           CROSS JOIN nt CROSS JOIN nb
           WHERE c12 >= 20)
         SELECT w1, w2, c12, pmi FROM sc
-        ORDER BY pmi DESC, w1, w2 LIMIT 50""")),
+        ORDER BY pmi DESC, w1, w2 LIMIT 50"""), bench = true),
 
     // --- CCNet perplexity head/middle/tail buckets --------------------------
     // (TextAnalysis.ccnetPerplexityBuckets — Wenzek et al. 2020: per-
@@ -4358,7 +4358,7 @@ object Pipeline {
           CASE WHEN ppl >= t2 THEN 'tail' WHEN ppl >= t1 THEN 'middle'
             ELSE 'head' END AS bucket
         FROM scored s JOIN thr ON s.lang = thr.lang
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- WordPiece encode: losslessness of the greedy longest match ---------
     // (WordPiece.fit + encodeTokens — BERT-convention ## continuations.
@@ -4383,7 +4383,7 @@ object Pipeline {
             w -> w <> ''), ' ') AS recon_text
         FROM documents
         WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- WordPiece 1-merge encode: the token-count path, fully replayed -----
     // (With exactly ONE trained merge, greedy longest-prefix encode is
@@ -4436,7 +4436,7 @@ object Pipeline {
           FROM wc CROSS JOIN best)
         SELECT doc_id, CAST(SUM(nt) AS BIGINT) AS n_wp_tokens
         FROM wds JOIN wn USING (w)
-        GROUP BY doc_id ORDER BY doc_id""")),
+        GROUP BY doc_id ORDER BY doc_id"""), bench = true),
 
     // --- 3-D Hilbert layout (Skilling transpose walk, CTE-replayed) ---------
     // (ZOrder.hilbertValueND — the general-dimension Hilbert distance
@@ -4483,7 +4483,7 @@ object Pipeline {
             min(b) AS b_min, max(b) AS b_max,
             min(c) AS c_min, max(c) AS c_max
           FROM hd GROUP BY 1 ORDER BY 1"""
-      }),
+      }, bench = true),
 
     // --- UniMax budget allocation -------------------------------------------
     // (Mixture.uniMaxMixture — Chung et al. 2023 Algorithm 1: visit
@@ -4527,7 +4527,7 @@ object Pipeline {
         SELECT lang, n_docs, tokens, quota,
           CASE WHEN tokens = 0 THEN 0.0
             ELSE round(quota / CAST(tokens AS DOUBLE), 6) END AS epochs
-        FROM alloc ORDER BY lang""")),
+        FROM alloc ORDER BY lang"""), bench = true),
 
     // --- UniMax epoched realization -----------------------------------------
     // (Mixture.uniMaxRebalance — temperatureRebalance's emission
@@ -4582,7 +4582,7 @@ object Pipeline {
         SELECT lang, ${isum("nc")} AS n_rows,
           ${isum("nc * dtok")} AS tokens_emitted,
           MAX(nc) - 1 AS max_epoch
-        FROM nc WHERE nc >= 1 GROUP BY lang ORDER BY lang""")),
+        FROM nc WHERE nc >= 1 GROUP BY lang ORDER BY lang"""), bench = true),
 
     // --- exact n-gram containment pairs -------------------------------------
     // (Dedup.ngramContainment — Broder's containment vs resemblance:
@@ -4605,7 +4605,7 @@ object Pipeline {
         SELECT d1, d2, CAST(i AS DOUBLE) / least(sa.n, sb.n) AS cont
         FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
         WHERE CAST(i AS DOUBLE) / least(sa.n, sb.n) >= 0.6
-        ORDER BY d1, d2""")),
+        ORDER BY d1, d2"""), bench = true),
 
     // --- containment dedup (drop the contained smaller doc) -----------------
     // (Dedup.dedupContained — per pair with cont >= 0.8 drop the doc
@@ -4633,7 +4633,7 @@ object Pipeline {
           FROM pairs)
         SELECT doc_id, source, n_chars FROM documents
         WHERE doc_id NOT IN (SELECT doc_id FROM victims)
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- duplicate-cluster size histogram -----------------------------------
     // (Dedup.dupClusterSizes — the dedup audit report: components over
@@ -4665,7 +4665,7 @@ object Pipeline {
         comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
         cs AS (SELECT component, COUNT(*) AS size FROM comp GROUP BY 1)
         SELECT size, COUNT(*) AS n_clusters FROM cs
-        GROUP BY size ORDER BY size""")),
+        GROUP BY size ORDER BY size"""), bench = true),
 
     // --- LSH parameter planner (MMDS S-curve / datasketch optimal_param) ----
     // (Dedup.lshTune — the sizing call before a corpus dedup: score
@@ -4692,7 +4692,7 @@ object Pipeline {
             round(fp * 0.5 + fn * 0.5, 9) AS cost FROM areas),
         mc AS (SELECT MIN(cost) AS m FROM sc)
         SELECT bands, rows_per_band, fp, fn, cost, cost = m AS chosen
-        FROM sc CROSS JOIN mc ORDER BY bands""")),
+        FROM sc CROSS JOIN mc ORDER BY bands"""), bench = true),
 
     // --- per-source corpus report (the "data card" audit table) -------------
     // (Report.corpusReport — ONE groupBy over one scan: volume, token
@@ -4715,7 +4715,7 @@ object Pipeline {
           COUNT(DISTINCT lang) AS n_langs,
           round(1 - CAST(COUNT(DISTINCT text) AS DOUBLE) / COUNT(*), 9)
             AS dup_rate
-        FROM documents GROUP BY source ORDER BY source""")),
+        FROM documents GROUP BY source ORDER BY source"""), bench = true),
 
     // --- byte-level BPE, 1-merge token count ---------------------------------
     // (ByteBpe — the GPT-2 byte alphabet. The corpus is printable
@@ -4749,7 +4749,7 @@ object Pipeline {
           FROM s LEFT JOIN top1 t ON 1 = 1)
         SELECT wds.doc_id, CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
         FROM wds JOIN enc ON wds.w = enc.w
-        GROUP BY wds.doc_id ORDER BY wds.doc_id""")),
+        GROUP BY wds.doc_id ORDER BY wds.doc_id"""), bench = true),
 
     // --- byte-level BPE, end-to-end lossless round trip ----------------------
     // (fit 20 byte merges → relational encode → decodeTokens' exact
@@ -4772,7 +4772,7 @@ object Pipeline {
             w -> w <> ''), ' ') AS recon_text
         FROM documents
         WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- byte-BPE via the DISTRIBUTED BATCHED fit path -----------------------
     // (r14: q208's lossless round trip with localVocabCap = 0, forcing
@@ -4799,7 +4799,7 @@ object Pipeline {
             w -> w <> ''), ' ') AS recon_text
         FROM documents
         WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- WordPiece via the BATCHED distributed fit variant -------------------
     // (r15: q197's losslessness contract through fit(batchCap = 64) —
@@ -4830,7 +4830,7 @@ object Pipeline {
             w -> w <> ''), ' ') AS recon_text
         FROM documents
         WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- exact-first near-dup dedup (the standard pipeline order) -----------
     // (r15: Dedup.dedupNearMinhash(exactFirst = true) — exact min-id
@@ -4904,7 +4904,7 @@ object Pipeline {
                         WHERE d2.text = dn.text)
           AND NOT EXISTS (SELECT 1 FROM documents ds
                           WHERE ds.doc_id % 4 = 1 AND ds.text = dn.text)
-        ORDER BY doc_id""")),
+        ORDER BY doc_id"""), bench = true),
 
     // --- per-group (per-domain) repeated-line boilerplate removal -----------
     // (r15: Dedup.removeRepeatedLinesPerGroup — the CCNet/RefinedWeb
@@ -5013,7 +5013,7 @@ object Pipeline {
         SELECT doc_id, COUNT(lnp) AS n_bigrams,
           CAST(COUNT(*) - COUNT(lnp) AS BIGINT) AS n_oov,
           ${davg("lnp")} AS avg_logp
-        FROM scored GROUP BY doc_id ORDER BY doc_id""")),
+        FROM scored GROUP BY doc_id ORDER BY doc_id"""), bench = true),
 
     // --- train/apply threshold bucketing --------------------------------------
     // (TextAnalysis.quantileThresholds + bucketByThresholds — the
@@ -5050,7 +5050,7 @@ object Pipeline {
           FROM sc JOIN thr ON sc.source = thr.source)
         SELECT source, bucket, COUNT(*) AS n,
           round(MIN(ntok), 9) AS min_ntok, round(MAX(ntok), 9) AS max_ntok
-        FROM b GROUP BY source, bucket ORDER BY source, bucket""")),
+        FROM b GROUP BY source, bucket ORDER BY source, bucket"""), bench = true),
 
     // --- e2e corpus-prep v5: the train-once/score-many pipeline --------------
     // (The round-13 surface composed: fitCcnetLm on the reference
@@ -5162,7 +5162,7 @@ object Pipeline {
           FROM wds JOIN kept USING (doc_id) JOIN enc ON wds.w = enc.w
           GROUP BY 1)
         SELECT k.doc_id, k.lang, k.ppl, k.bucket, tok.n_bpe_tokens
-        FROM kept k JOIN tok USING (doc_id) ORDER BY k.doc_id""")),
+        FROM kept k JOIN tok USING (doc_id) ORDER BY k.doc_id"""), bench = true),
 
     // --- GPT-3-style quality classifier --------------------------------------
     // (QualityClassifier.fitLogReg — Brown et al. 2020 §A's recipe:
@@ -5221,7 +5221,7 @@ object Pipeline {
           $iterCtes
           SELECT doc_id, y AS label, $sig AS score
           FROM feats CROSS JOIN w3 ORDER BY doc_id"""
-      }),
+      }, bench = true),
 
     // --- tokenizer fertility per language ------------------------------------
     // (The standard tokenizer-evaluation metric: BPE tokens per word,
@@ -5273,7 +5273,7 @@ object Pipeline {
           round(CAST(SUM(n_bpe_tokens) AS DOUBLE) / SUM(nw), 9)
             AS fertility
         FROM perdoc JOIN documents USING (doc_id)
-        GROUP BY lang ORDER BY lang""")),
+        GROUP BY lang ORDER BY lang"""), bench = true),
 
     // --- per-group repeated-line boilerplate at corpus scale -----------------
     // (r16: q218 gates removeRepeatedLinesPerGroup on planted VALUES
@@ -5310,7 +5310,7 @@ object Pipeline {
         SELECT d.doc_id, d.source, COALESCE(r.text, '') AS text
         FROM documents d LEFT JOIN r ON d.doc_id = r.doc_id
           AND d.source IS NOT DISTINCT FROM r.source
-        ORDER BY d.doc_id""")),
+        ORDER BY d.doc_id"""), bench = true),
 
     // --- zlib compression-ratio quality signal, materialized -----------------
     // (r16: the CompressionRatio codegen kernel wired into the gate.
@@ -5399,7 +5399,7 @@ object Pipeline {
           COUNT(CASE WHEN cratio < 0.35 THEN 1 END) AS n_low,
           COUNT(CASE WHEN cratio > 0.9 THEN 1 END) AS n_high,
           MIN(cratio) AS min_ratio, MAX(cratio) AS max_ratio
-        FROM m GROUP BY source ORDER BY source""")),
+        FROM m GROUP BY source ORDER BY source"""), bench = true),
 
     // --- corpus-prep v6: the compression gate composed -----------------------
     // (r17, VERDICT item 7: now that compressionRatio is oracle-gated,
@@ -5507,7 +5507,7 @@ object Pipeline {
           CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
           CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
             AS tok_end
-        FROM e ORDER BY doc_id, pack_id""")),
+        FROM e ORDER BY doc_id, pack_id"""), bench = true),
 
     // --- corpus-prep v7: the incremental-ingest composition -------------------
     // (r18, VERDICT item 5: the standing 100-TB operating mode end to
@@ -5668,7 +5668,7 @@ object Pipeline {
           CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
           CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
             AS tok_end
-        FROM e ORDER BY doc_id, pack_id""")),
+        FROM e ORDER BY doc_id, pack_id"""), bench = true),
 
     // --- v7 tombstones: the delete-side half of incremental ingest ----------
     // (q225 handles the ADD side (added/changed docs pack-append);
@@ -5836,7 +5836,7 @@ object Pipeline {
           FROM fe)
         SELECT doc_id, pack_id, tok_start, tok_end, live, status
         FROM (SELECT * FROM kept UNION ALL SELECT * FROM rw)
-        ORDER BY doc_id, pack_id, tok_start""")),
+        ORDER BY doc_id, pack_id, tok_start"""), bench = true),
 
     // --- v7 deletion request: list-driven tombstone + compact + manifest ----
     // (the composition the v7 family was built for: a deletion /
@@ -6066,7 +6066,7 @@ object Pipeline {
           CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
           CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
             AS tok_end
-        FROM e ORDER BY doc_id, pack_id"""))
+        FROM e ORDER BY doc_id, pack_id"""), bench = true)
   )
 
   /** DuckDB replay of [[graft.ops.TextAnalysis.bm25TopK]] (shared by

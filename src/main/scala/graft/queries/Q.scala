@@ -2,8 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** A named engine query plus (when SQL-expressible) its DuckDB oracle. */
-case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
+/** A named engine query plus (when SQL-expressible) its DuckDB oracle.
+  * `bench` puts the query in the timed battery of [[graft.Bench]]. */
+case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String],
+             bench: Boolean = false)
 
 /** SQL fragments for the DuckDB oracles. Floating-point policy: every
   * reorderable aggregate goes through DECIMAL (exact, associative) and is

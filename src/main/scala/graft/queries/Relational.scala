@@ -46,7 +46,7 @@ object Relational {
         COUNT(*) AS count_order
         FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-02'
         GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus""")),
+        ORDER BY l_returnflag, l_linestatus"""), bench = true),
 
     // --- projection -------------------------------------------------------
     // Order-sensitive compare + (l_orderkey, l_linenumber) is NOT unique
@@ -88,7 +88,7 @@ object Relational {
         l_extendedprice * (1.0 - l_discount) AS revenue,
         l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS charge
         FROM lineitem
-        ORDER BY l_orderkey, l_linenumber, revenue, charge""")),
+        ORDER BY l_orderkey, l_linenumber, revenue, charge"""), bench = true),
 
     // --- conditional: ifThenElse ------------------------------------------
     "q05_ifelse" -> Q(
@@ -197,7 +197,7 @@ object Relational {
         FROM orders JOIN customer ON o_custkey = c_custkey
         JOIN nation ON c_nationkey = n_nationkey
         JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name, n_name ORDER BY r_name, n_name""")),
+        GROUP BY r_name, n_name ORDER BY r_name, n_name"""), bench = true),
 
     // --- left join with null-producing side --------------------------------
     "q13_join_left" -> Q(
@@ -365,7 +365,7 @@ object Relational {
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_total
           FROM orders
           WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey))
-        WHERE rnk <= 3 ORDER BY o_custkey, rnk""")),
+        WHERE rnk <= 3 ORDER BY o_custkey, rnk"""), bench = true),
 
     // --- zScore: whole-frame aggregate broadcast back to rows ---------------
     // Scalar stats as a 1-row aggregate crossJoin'd back (broadcast) — the
@@ -407,7 +407,7 @@ object Relational {
              - CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER () AS VARCHAR) AS DOUBLE)
                * CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER () AS VARCHAR) AS DOUBLE) / (COUNT(*) OVER ()))
            / (COUNT(*) OVER () - 1)) AS z
-        FROM orders ORDER BY o_orderkey""")),
+        FROM orders ORDER BY o_orderkey"""), bench = true),
 
     // --- explicit GROUPING SETS (general form; cube/rollup are sugar) --------
     // One aggregation pass: Catalyst Expand replicates each input row
@@ -443,7 +443,7 @@ object Relational {
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
           (o_orderstatus), ())
-        ORDER BY g_status, g_prio, status, prio""")),
+        ORDER BY g_status, g_prio, status, prio"""), bench = true),
 
     // --- CUBE grouping sets ---------------------------------------------------
     "q22_cube" -> Q(
@@ -516,7 +516,7 @@ object Relational {
           round((($sxy - $sx * $sy / $n) /
             sqrt(($sxx - $sx * $sx / $n) * ($syy - $sy * $sy / $n))), 12) AS corr_qty_price
           FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
-      })),
+      }), bench = true),
 
     // --- exact median / percentile ----------------------------------------------
     "q25_percentiles" -> Q(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Runtime
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan dumper: `runMain graft.tools.Plan <outDir> <query1> [query2 ...]`.
@@ -18,16 +18,7 @@ object Plan {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     args.drop(1).foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
@@ -35,8 +26,7 @@ object Plan {
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(outDir.resolve(name + ".txt"), txt)
       // checkpoint hygiene (some queries pin frames while BUILDING the plan)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Runtime.release(spark)
       println(s"[plan] wrote $name (${txt.length} chars)")
     }
     spark.stop()

@@ -1,18 +1,16 @@
 package graft.tools
 
+import graft.Runtime
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job attribution for ONE registry query:
   * `runMain graft.tools.Profile q170_pagerank [runs=2]`.
   *
-  * Runs the query under the [[graft.Bench]] session config and prints,
-  * for the LAST run (steady state — earlier runs absorb codegen/JIT),
-  * one line per Spark job: wall ms, task-time ms, shuffle bytes, and
-  * the job group/description. This answers "where do the seconds go"
-  * at job granularity — pin jobs, AQE stage jobs and the final action
-  * all show up separately, which the single noop-sink wall number
-  * cannot attribute.
+  * Runs the query as [[graft.Bench]] does and prints, for the LAST run
+  * (steady state: earlier runs absorb codegen/JIT), one line per Spark
+  * job: wall ms, task-time ms, shuffle bytes, and the job description.
+  * Pin jobs, AQE stage jobs and the final action show up separately,
+  * which the single noop-sink wall number cannot attribute.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -22,16 +20,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     final case class Job(id: Int, var t0: Long = 0L, var t1: Long = 0L,
                          var desc: String = "", var stages: Int = 0,
@@ -65,12 +54,7 @@ object Profile {
 
     def once(record: Boolean): Double = {
       if (record) { jobs.clear(); stageToJob.clear() }
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      dt
+      Runtime.runNoop(spark)(fn(spark, sfDir)).toTry.get
     }
     (1 until runs).foreach(_ => once(record = false)) // warm-ups
     spark.sparkContext.addSparkListener(listener)

@@ -1,14 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Runtime
 
 /** Single-query A/B bench: `runMain graft.tools.QBench q46_simhash [iters]`.
   *
-  * Same session config and noop-sink methodology as [[graft.Bench]], but
-  * ONE query in a fresh session — the shared-session Bench run cannot
-  * attribute a per-query delta (co-resident queries shift GC and codegen
-  * cache state; the round-3 lesson). Use this before calling any
-  * per-query number a regression or an improvement.
+  * Same session and noop-sink run as [[graft.Bench]], but ONE query in a
+  * fresh session: in the shared-session battery, co-resident queries
+  * shift GC and codegen-cache state, so a per-query delta there cannot
+  * be attributed. Use this before calling any per-query number a
+  * regression or an improvement. Prints one `QBENCH {...}` line, which
+  * `scripts/ab_bench.sh` greps for its median.
   */
 object QBench {
   def main(args: Array[String]): Unit = {
@@ -18,42 +19,16 @@ object QBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // per-iteration attribution: an outlier whose extra wall time ≈ its
-    // extra collector time is heap pressure; one whose guest-visible
-    // steal jiffies spike is the HYPERVISOR throttling the VM (measured
-    // round 9: /proc/stat steal bursts of 200-390 jiffies/s while guest
-    // user collapsed, in exact sync with 3-6x slow iterations of an
-    // unchanged plan with <0.2 s GC). The three causes need different
-    // responses — plan fix / heap fix / discard-the-sample — so QBench
-    // reports wall, GC, and steal per iteration.
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def stealJiffies(): Long = try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      if (cpu.length > 8) cpu(8).toLong else 0L   // field 8 = steal
-    } catch { case _: Throwable => 0L }           // non-Linux: report 0
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // Per-run wall, GC and steal: an outlier whose extra wall time is
+    // its extra collector time is heap pressure; one whose steal
+    // jiffies spike is the hypervisor throttling the VM; neither is a
+    // plan cost. The three need different responses (plan fix / heap
+    // fix / discard the sample).
     def once(): (Double, Double, Long) = {
-      val g0 = gcMillis(); val s0 = stealJiffies()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // same hygiene as Bench: each run re-checkpoints, so a prior
-      // iteration's localCheckpoint blocks are pure storage carryover
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      (dt, (gcMillis() - g0) / 1e3, stealJiffies() - s0)
+      val g0 = Runtime.gcMillis(); val s0 = Runtime.hostState()._1
+      val dt = Runtime.runNoop(spark)(fn(spark, sfDir)).toTry.get
+      (dt, (Runtime.gcMillis() - g0) / 1e3, Runtime.hostState()._1 - s0)
     }
     once() // warm-up: codegen + JIT
     val raw = Seq.fill(iters)(once())

@@ -1,10 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.Runtime
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-/** Dedup-path soak at sf1-equivalent scale (VERDICT r5 item 6): the
-  * sf* fixtures stop at 0.1 (5 000 documents), so this main replicates
+/** Dedup-path soak at sf1-equivalent scale: the sf* fixtures stop at
+  * 0.1 (5 000 documents), so this main replicates
   * the sf0.1 documents table `SPARK_GRAFT_SOAK_COPIES`× (default 10 →
   * 50 000 docs ≈ sf1) with a per-copy marker token prepended to the
   * text. The marker keeps copies NEAR-duplicates (3-gram Jaccard ≈ 0.9
@@ -18,32 +19,22 @@ import org.apache.spark.sql.functions._
   *
   * Run: SPARK_GRAFT_SOAK_COPIES=10 sbt "runMain graft.tools.Soak"
   *
-  * Adjudication mode (the SoakTpch protocol, round-10): a
-  * comma-separated `SPARK_GRAFT_SOAK_OPS` runs only those ops, and
+  * Adjudication mode (as in SoakTpch): a comma-separated
+  * `SPARK_GRAFT_SOAK_OPS` runs only those ops, and
   * `SPARK_GRAFT_SOAK_ITERS` > 1 switches from single-shot timing
   * (cliff/OOM bounding) to median-of-N with min/max spread plus
   * inter-iteration GC — the mode that separates a real per-op
   * regression from ambient host pressure. Every persisted /
   * localCheckpointed block is released between ops AND between
-  * iterations (the Bench.releaseCheckpoints rationale: each run
-  * re-checkpoints its own frames, so carried blocks are pure storage
-  * contamination); ops that internally share a checkpoint (the PQ
-  * family) build their own inside the timed thunk.
+  * iterations ([[graft.Runtime.release]]); ops that internally share a
+  * checkpoint (the PQ family) build their own inside the timed thunk.
   */
 object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/soak")
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // ---- build the expanded table once per run ---------------------------
     // (SPARK_GRAFT_SOAK_REUSE=1 skips the rewrite when the scaled dir
@@ -76,8 +67,7 @@ object Soak {
     val nDocs = big.count()
 
     def release(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Runtime.release(spark)
       // broadcasts (tokenizer vocabs, keep-sets) are cleaned by the
       // ContextCleaner only after driver GC notices they're
       // unreachable; without a forced GC between ops their torrent
@@ -540,25 +530,17 @@ object Soak {
     val iters = sys.env.getOrElse("SPARK_GRAFT_SOAK_ITERS", "1").toInt
     val selected = ops.filter { case (n, _) => only.forall(_(n)) }
 
-    // per-iteration attribution (the QBench protocol): wall + GC time +
+    // per-iteration attribution (as in QBench): wall + GC time +
     // hypervisor steal per run, so an adjudication can tell heap
     // pressure (wall ≈ GC delta) from host steal (wall tracks steal
     // jiffies) from a real plan/op cost
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def stealJiffies(): Long = try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      if (cpu.length > 8) cpu(8).toLong else 0L
-    } catch { case _: Throwable => 0L }
     def timeOnce(f: () => Long): (Long, Double, Double, Long) = {
-      val g0 = gcMillis(); val s0 = stealJiffies()
+      val g0 = Runtime.gcMillis(); val s0 = Runtime.hostState()._1
       val t0 = System.nanoTime()
       val r = f()
       val dt = (System.nanoTime() - t0) / 1e9
       release() // blocks are per-run; carrying them is contamination
-      (r, dt, (gcMillis() - g0) / 1e3, stealJiffies() - s0)
+      (r, dt, (Runtime.gcMillis() - g0) / 1e3, Runtime.hostState()._1 - s0)
     }
     // per-op: single-shot by default; median-of-N + spread with GC
     // between iterations in adjudication mode (the SoakTpch protocol)
@@ -574,18 +556,16 @@ object Soak {
       (name, runs.head._1, ts(ts.length / 2), ts.head, ts.last)
     }
 
-    val rt = Runtime.getRuntime
+    val rt = java.lang.Runtime.getRuntime
     val heapUsedMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
     val spread =
       if (iters > 1)
         results.map { case (n, _, _, lo, hi) => f""""$n":[$lo%.2f,$hi%.2f]""" }
           .mkString(""","iters":""" + iters + ""","spread":{""", ",", "}")
       else ""
-    // Provenance labels (r16 lesson: two 67-73 s experiment lines from
-    // an unpinned-variant A/B sat next to the 41 s pinned record with
-    // identical params and nothing to tell them apart — a future
-    // reader diffing soak history couldn't distinguish experiment from
-    // regression). `head` is the commit the binary was built from;
+    // Provenance labels, so an experiment line in SOAK_LOCAL.json is
+    // never mistaken for a regression of the default record with the
+    // same params. `head` is the commit the binary was built from;
     // `variant` names the experiment lane (default "default";
     // adjudication runs set SPARK_GRAFT_SOAK_VARIANT).
     val head = sys.env.get("SPARK_GRAFT_HEAD").orElse(

@@ -2,8 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.Runtime
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-fit soak at crawl-vocabulary scale (VERDICT r13 item 1):
@@ -45,15 +45,7 @@ object SoakBpeFit {
   def main(args: Array[String]): Unit = {
     val nWords = sys.env.getOrElse("SPARK_GRAFT_FIT_WORDS", "1300000").toLong
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_FIT_MERGES", "100").toInt
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val alphabet =
       "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"

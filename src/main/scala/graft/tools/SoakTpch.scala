@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.Runtime
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Relational-macro soak at sf1-equivalent scale: the sf fixtures stop
@@ -26,15 +27,7 @@ object SoakTpch {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/soak_tpch")
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val K = 1_000_000_000L
     def replicate(df: DataFrame, keys: String*): DataFrame =
@@ -69,13 +62,8 @@ object SoakTpch {
     // band across identical 40-copy runs was GC/load noise, which only
     // repeated same-session runs can demonstrate).
     val iters = sys.env.getOrElse("SPARK_GRAFT_SOAK_ITERS", "1").toInt
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      // noop write, as Bench does — count() would let Catalyst prune
-      graft.SparkEntry.queries(name)(spark, out)
-        .write.mode(SaveMode.Overwrite).format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(name: String): Double =
+      Runtime.runNoop(spark)(graft.SparkEntry.queries(name)(spark, out)).toTry.get
     def time(name: String): (String, Double, Double, Double) = {
       // Adjudication mode only: GC between iterations (the Bench
       // inter-query protocol) so a previous iteration's garbage can't
@@ -102,7 +90,7 @@ object SoakTpch {
       .getOrElse(defaultMacros)
     val results = macros.map(time)
 
-    val rt = Runtime.getRuntime
+    val rt = java.lang.Runtime.getRuntime
     val heapUsedMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
     val spread =
       if (iters > 1)

@@ -6,7 +6,6 @@ import graft.ops.Bpe
 
 class BpeSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   // Sennrich et al. 2016 §3.2's worked example: low x5, lower x2,
   // newest x6, widest x3. First-round pair counts peak at 9 shared by

@@ -9,8 +9,6 @@ import graft.sources._
 /** CSV surface semantics, mirroring the reference's inference cases
   * (tests/Main.hs:59-120, tests/Operations/ReadCsv.hs). */
 class CsvSpec extends SparkSpec {
-  initLogs()
-
   private def writeFixture(name: String, content: String): String = {
     val dir = Files.createTempDirectory("graft_csv_fix")
     val p = dir.resolve(name)

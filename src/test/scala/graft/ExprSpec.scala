@@ -8,7 +8,6 @@ import graft.api.{functions => gf}
   * path (partial/final merge, grouped, nulls, negatives, empty). */
 class ExprSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   private def decimalSum(c: org.apache.spark.sql.Column) =
     sum(c.cast("decimal(18,6)")).cast("double")

@@ -7,7 +7,6 @@ import graft.api._
   * unit suites (tests/Operations — FIXTURES.md §1). */
 class FrameSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   // reference tests/Main.hs:37-42: ints 1..26 × letters a..z
   lazy val main26 = Frame((1 to 26).map(i => (i, ('a' + i - 1).toChar.toString))

@@ -6,7 +6,6 @@ import graft.expr.HeavyHitters.misraGries
 
 class HeavyHittersSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   private def summary(items: Seq[String], k: Int, parts: Int): Map[String, Long] =
     items.toDF("w").repartition(parts)

@@ -9,7 +9,6 @@ import graft.ops.{Bpe, ModelStore, TextAnalysis => TA, Unigram}
   * pipeline train a tokenizer once and score corpora for months. */
 class ModelStoreSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString + "/m"

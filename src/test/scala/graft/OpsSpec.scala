@@ -6,7 +6,6 @@ import graft.ops.{Dedup, Multimodal, Similarity, Skew, TextAnalysis => TA}
 /** dedup / similarity / text-analysis semantics on small controlled data. */
 class OpsSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   val doc0Text = "the quick brown fox jumps over the lazy dog again and again"
 
@@ -2864,6 +2863,26 @@ class OpsSpec extends SparkSpec {
     } finally Materialize.strategy = Materialize.Local
   }
 
+  test("Materialize.pin labels its job with the calling frame, even when " +
+    "the caller's class name contains \"Materialize\"") {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("spark.job.description"))
+          .foreach(descs.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (pinned, line) = new MaterializeLabelProbe().pinHere(spark.range(100).toDF())
+      val want = s"pin @ MaterializeLabelProbe.pinHere:$line"
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!descs.contains(want) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(descs.contains(want), s"job descriptions seen: $descs")
+      assert(pinned.count() == 100)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("perceptual hashes: real decode→grid path; near-identical images " +
     "pair at small hamming distance, unrelated don't; corrupt → null") {
     import java.awt.image.BufferedImage
@@ -3485,4 +3504,12 @@ class OpsSpec extends SparkSpec {
       assert(got == Set(1L))
     } finally spark.conf.unset(Skew.MaxFilterBytesConf)
   }
+}
+
+/** A pin call site whose class name contains "Materialize" (see the
+  * Materialize.pin label test). Returns the pinned frame and the source
+  * line of the pin call. */
+class MaterializeLabelProbe {
+  def pinHere(df: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Int) =
+    (graft.ops.Materialize.pin(df), new Throwable().getStackTrace.head.getLineNumber)
 }

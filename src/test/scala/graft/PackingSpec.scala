@@ -6,7 +6,6 @@ import graft.ops.Packing
 
 class PackingSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   /** brute-force expectation: lay token counts end-to-end by id, cut at
     * multiples of L. */

@@ -10,8 +10,6 @@ import org.apache.spark.sql.types._
   * int96-era timestamps, physical-type decimals, nested lists, and
   * all-null structs must decode with the expected schema and values. */
 class ParquetConformanceSpec extends SparkSpec {
-  initLogs()
-
   private def res(name: String): String =
     getClass.getResource(s"/parquet/$name").toString
 

@@ -10,8 +10,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
   *  - broadcast hints survive to the optimized plan where we placed them.
   */
 class PlanSpec extends SparkSpec {
-  initLogs()
-
   test("no registry query plans a global (empty-partition) Window") {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan = fn(spark, sfSmoke).queryExecution.optimizedPlan

@@ -7,7 +7,6 @@ import graft.api.Plots
   * there is Granite's, so goldens pin OUR renderers' exact output). */
 class PlotsSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   test("groupWithOther folds the tail, reference semantics") {
     val items = Seq("a" -> 5.0, "b" -> 4.0, "c" -> 3.0, "d" -> 2.0, "e" -> 1.0)

@@ -6,7 +6,6 @@ import graft.ops.Embeddings
 
 class PqSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   private val dim = 8
   private val m = 4 // subvectors of 2 dims

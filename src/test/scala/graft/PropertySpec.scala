@@ -12,7 +12,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * property (one job, not one per case). */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   private def checkProp(p: Prop, cases: Int = 200): Unit = {
     val r = SCTest.check(

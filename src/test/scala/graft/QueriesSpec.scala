@@ -1,13 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.api.Stats
 import org.apache.spark.sql.functions._
 
 /** registry smoke: every declared query runs and returns rows at sf0.001
   * (the DuckDB hash gate runs via scripts/check.py — see the verify skill). */
 class QueriesSpec extends SparkSpec {
-  initLogs()
-
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -17,6 +18,40 @@ class QueriesSpec extends SparkSpec {
     SparkEntry.oracleSql.keys.foreach { k =>
       assert(SparkEntry.queries.contains(k), s"oracleSql for unknown query $k")
     }
+  }
+
+  test("Runtime.session(n): n shuffle partitions, UTC, graft functions resolve") {
+    try {
+      val s = Runtime.session(3)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "3")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.sql("SELECT graft_dot(array(1.0D), array(1.0D))").head().getDouble(0) == 1.0)
+    } finally Runtime.session(4)
+  }
+
+  test("bench battery is exactly the rows of the committed BENCH_LOCAL.json") {
+    val committed = new ObjectMapper().readTree(new java.io.File("BENCH_LOCAL.json"))
+      .get("queries").fieldNames.asScala.toSeq
+    val battery = Bench.battery.map(_._1)
+    assert(committed.size == 142 && battery.size == 142)
+    assert(battery.toSet == committed.toSet)
+  }
+
+  test("bench battery: a throwing row is named in failed and left out of value") {
+    val good: Bench.Query = (s, _) => s.range(10).toDF()
+    val bad: Bench.Query = (s, _) => s.range(10).select(raise_error(lit("boom")))
+    val results = Bench.runBattery(spark, sfSmoke, 1, Seq("good" -> good, "bad" -> bad))
+    val (json, compact) = Bench.report(results, "{}", 1, sfSmoke, "out.json")
+    val full = new ObjectMapper().readTree(json)
+    val line = new ObjectMapper().readTree(compact)
+    val goodMedian = full.get("queries").get("good").asDouble
+    assert(goodMedian > 0 && full.get("queries").get("bad").asDouble == -1.0)
+    for (j <- Seq(full, line)) {
+      assert(j.get("failed").elements.asScala.map(_.asText).toSeq == Seq("bad"))
+      assert(j.get("value").asDouble == goodMedian)
+    }
+    assert(line.get("n").asInt == 1 && line.get("n_failed").asInt == 1)
+    assert(line.get("out").asText == "out.json" && compact.length < 2000)
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

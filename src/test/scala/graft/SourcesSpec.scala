@@ -10,7 +10,6 @@ import graft.sources.{Jdbc, Json}
   * dataframe-persistent/IO/Persistent.hs). */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   test("readJSON: top-level array of objects, key union, numbers as double") {
     val dir = Files.createTempDirectory("graft_json")

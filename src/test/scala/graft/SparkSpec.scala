@@ -5,16 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** shared local session (one per suite — lazy, 4 threads, AQE on). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  def initLogs(): Unit = spark.sparkContext.setLogLevel("WARN")
+  lazy val spark: SparkSession = Runtime.session(4)
 
   val sfSmoke = "/root/testdata/sf0.001"
 }

@@ -9,7 +9,6 @@ import graft.streaming.Events
 @nowarn("cat=deprecation") // batch-differential intentionally uses sessionize
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   // --- r16 flake instrumentation (VERDICT r15 #1) --------------------------
   // One transient failure at the r15 218-row head never reproduced and was

@@ -7,7 +7,6 @@ import graft.api.Udf
   * (reference Functions.hs:63-105, 237-240). */
 class UdfSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   test("lift applies a unary Scala function; nulls pass through") {
     val df = Seq(Some("abc"), None, Some("xy")).toDF("s")

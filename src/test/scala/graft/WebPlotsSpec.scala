@@ -7,7 +7,6 @@ import graft.api.WebPlots
   * truly self-contained). */
 class WebPlotsSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   private def wellFormed(html: String): Unit = {
     assert(html.startsWith("<!DOCTYPE html>"))

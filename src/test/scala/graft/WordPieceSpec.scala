@@ -6,7 +6,6 @@ import graft.ops.{ModelStore, WordPiece}
 
 class WordPieceSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   // the HF-course worked example: hug x3, pug x2, hugs x1.
   // Round 1: counts h=4 p=2 ##u=6 ##g=6 ##s=1; scorable pairs
