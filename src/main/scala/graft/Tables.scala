@@ -49,11 +49,8 @@ object Tables {
     * §1.2 step 1). Non-file-backed frames (e.g. over a checkpoint)
     * report no input files and pass through untouched. */
   private val splitBytesCap = 1L << 30
-  def splitForCompute(df: DataFrame,
-                      key: org.apache.spark.sql.Column*): DataFrame = {
-    // r20 (ADVICE): an empty key would silently fall back to round-robin
-    // repartition(p), losing the deterministic hash-placement guarantee
-    require(key.nonEmpty, "splitForCompute: pass an explicit hash key")
+  def splitForCompute(df: DataFrame, key: org.apache.spark.sql.Column,
+                      rest: org.apache.spark.sql.Column*): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val p = sc.defaultParallelism
     val files = df.inputFiles
@@ -64,7 +61,7 @@ object Tables {
         val path = new org.apache.hadoop.fs.Path(f)
         path.getFileSystem(conf).getFileStatus(path).getLen
       }.sum
-      if (total > splitBytesCap) df else df.repartition(p, key: _*)
+      if (total > splitBytesCap) df else df.repartition(p, key +: rest: _*)
     }
   }
 

@@ -3,7 +3,8 @@ package graft.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -95,13 +96,15 @@ object TextHash {
   * mixer pmod(pmod(pmod(p,M)·P1+P2,M)·P2,M) and mod `buckets`; the
   * identical long arithmetic as the Column chain it replaces
   * ([[graft.ops.TextAnalysis.charTrigramBuckets]]), one tight loop
-  * instead of an interpreted per-trigram lambda. Arrays shorter than
-  * 3 yield an empty result (the `when` guard's `otherwise` branch). */
+  * instead of an interpreted per-trigram lambda. NULL and arrays
+  * shorter than 3 yield an empty result (the `when` guard's
+  * `otherwise` branch), so the result is never NULL. */
 case class CharTrigramBucketHashes(child: Expression, buckets: Int)
     extends UnaryExpression {
   require(buckets >= 1, "graft_char_trigram_buckets: buckets must be >= 1")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
   override def prettyName: String = "graft_char_trigram_buckets"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -110,12 +113,16 @@ case class CharTrigramBucketHashes(child: Expression, buckets: Int)
       s"graft_char_trigram_buckets needs array<bigint>, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    CharTrigramBucketHashes.compute(input.asInstanceOf[ArrayData], buckets)
+  override def eval(input: InternalRow): Any =
+    CharTrigramBucketHashes.compute(child.eval(input).asInstanceOf[ArrayData], buckets)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.CharTrigramBucketHashes.compute($c, $buckets);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.expr.CharTrigramBucketHashes.compute(
+        ${c.isNull} ? null : ${c.value}, $buckets);""", isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(
       newChild: Expression): CharTrigramBucketHashes = copy(child = newChild)
@@ -128,7 +135,7 @@ object CharTrigramBucketHashes {
 
   /** shared by interpreted eval and generated code. */
   def compute(cps: ArrayData, buckets: Int): ArrayData = {
-    val len = cps.numElements()
+    val len = if (cps == null) 0 else cps.numElements()
     if (len < 3) return new GenericArrayData(Array.emptyLongArray)
     val m = len - 2
     val out = new Array[Long](m)

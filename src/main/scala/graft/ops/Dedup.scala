@@ -273,13 +273,12 @@ object Dedup {
                             id: String, key: String,
                             expectedSeen: Long = 1L << 22,
                             expectedBatch: Long = 1L << 20,
-                            fpp: Double = 0.01,
-                            materialize: Boolean = true): DataFrame = {
+                            fpp: Double = 0.01): DataFrame = {
     require(expectedSeen > 0 && expectedBatch > 0 && fpp > 0 && fpp < 1,
       "exactIncrementalBloom: need expected counts > 0, 0 < fpp < 1")
     // pinned: consumed by the definite filter, the candidate filter,
     // and (via candidates) the candidate-side Bloom build.
-    val uniq = Materialize.pin(exact(newBatch, id, key), materialize)
+    val uniq = Materialize.pin(exact(newBatch, id, key))
     val seenKeys = seen.select(col(key))
     val seenMight = bloomMight(bloomOver(seenKeys, col(key),
       expectedSeen, fpp), col(key))
@@ -338,17 +337,15 @@ object Dedup {
     * default stays exact; production corpora should set it.
     */
   def ngramJaccard(df: DataFrame, id: String, text: String,
-                   threshold: Double, dfCap: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame = {
+                   threshold: Double, dfCap: Option[Int] = None): DataFrame = {
     // Both sides of the shingle self-join rebuild the interpreted
     // shingle transform (the projections differ, so the exchanges don't
     // reuse) — localCheckpoint of the compact array frame computes it
     // ONCE (measured 1.5× whole-query at sf0.1; same executor-local
-    // trade as minhashLsh's note). `materialize = false` restores the
-    // pure-lazy plan.
+    // trade as minhashLsh's note).
     def shingles() = {
       val a = shingleHashArrays(df, id, text)
-      Materialize.pin(a, materialize)
+      Materialize.pin(a)
     }
     // join on the 64-bit shingle hash, not the string: same counts modulo
     // hash collisions (~n²/2^65 — negligible), and the wide self-join
@@ -397,9 +394,8 @@ object Dedup {
     * larger one covers. Returns (d1, d2, na, nb, cont ≥ threshold). */
   private def containmentPairs(df: DataFrame, id: String, text: String,
                                threshold: Double, n: Int,
-                               dfCap: Option[Int],
-                               materialize: Boolean): DataFrame = {
-    val arrays = Materialize.pin(ngramHashArrays(df, id, text, n), materialize)
+                               dfCap: Option[Int]): DataFrame = {
+    val arrays = Materialize.pin(ngramHashArrays(df, id, text, n))
     val withN = dfCap match {
       case None =>
         arrays.select(col(id), col("hs"), explode_outer(col("hs")).as("s"))
@@ -434,9 +430,8 @@ object Dedup {
     * have no grams and never pair. Returns (d1, d2, cont). */
   def ngramContainment(df: DataFrame, id: String, text: String,
                        threshold: Double, n: Int = 3,
-                       dfCap: Option[Int] = None,
-                       materialize: Boolean = true): DataFrame =
-    containmentPairs(df, id, text, threshold, n, dfCap, materialize)
+                       dfCap: Option[Int] = None): DataFrame =
+    containmentPairs(df, id, text, threshold, n, dfCap)
       .select(col("d1"), col("d2"), col("cont"))
 
   /** Containment DEDUP: drop the smaller (fewer distinct n-grams)
@@ -452,10 +447,8 @@ object Dedup {
     * equi-join. */
   def dedupContained(df: DataFrame, id: String, text: String,
                      threshold: Double, n: Int = 3,
-                     dfCap: Option[Int] = None,
-                     materialize: Boolean = true): DataFrame = {
-    val victims = containmentPairs(df, id, text, threshold, n, dfCap,
-        materialize)
+                     dfCap: Option[Int] = None): DataFrame = {
+    val victims = containmentPairs(df, id, text, threshold, n, dfCap)
       .select(when(col("na") < col("nb"), col("d1"))
         .when(col("nb") < col("na"), col("d2"))
         .otherwise(greatest(col("d1"), col("d2"))).as(id))
@@ -485,12 +478,10 @@ object Dedup {
     * hot spans); the per-doc rollup is one aggregate keyed by id. The
     * compact per-doc hash-array frame is localCheckpointed once and
     * feeds both the vocabulary and the join side (the q45 multi-branch
-    * lesson; `materialize = false` restores pure-lazy). Documents with
-    * fewer than n tokens have no windows and are absent from the
-    * output. Returns (id, n_windows, n_dup, dup_frac). */
+    * lesson). Documents with fewer than n tokens have no windows and
+    * are absent from the output. Returns (id, n_windows, n_dup, dup_frac). */
   def duplicateSpanStats(df: DataFrame, id: String, text: String,
-                         n: Int = 5, minDocs: Int = 2,
-                         materialize: Boolean = true): DataFrame = {
+                         n: Int = 5, minDocs: Int = 2): DataFrame = {
     require(n >= 1, "duplicateSpanStats: n must be >= 1")
     require(minDocs >= 2, "duplicateSpanStats: minDocs must be >= 2")
     val w = split(col(text), " ")
@@ -499,7 +490,7 @@ object Dedup {
       .filter(size(col("w")) >= n)
       .select(col(id),
         graft.expr.TextHashExpressions.ngramHashesAll(col("w"), n).as("gs"))
-    val arrays = Materialize.pin(arrays0, materialize)
+    val arrays = Materialize.pin(arrays0)
     val g = arrays.select(col(id), explode_outer(col("gs")).as("g"))
     val dup = g.select(col(id), col("g")).distinct()
       .groupBy("g").agg(count(lit(1)).as("ndocs"))
@@ -540,7 +531,7 @@ object Dedup {
     * (multi-arg xxhash64, the q44/q98 convention — content equality
     * modulo ~n²/2⁶⁵ collisions) and the compact (id, pos, hash) frame
     * is localCheckpointed once, feeding the vocabulary aggregate and
-    * the occurrence joins (`materialize = false` restores pure-lazy).
+    * the occurrence joins.
     * The duplicated vocabulary is a distinct + hash aggregate on
     * 8-byte keys; canonical picking is one min(struct) aggregate per
     * content; coverage explodes each REMOVED occurrence into its n
@@ -557,8 +548,7 @@ object Dedup {
     * Returns (id, text) with the same column names as the input. */
   def removeDuplicateSpans(df: DataFrame, id: String, text: String,
                            n: Int = 5, minDocs: Int = 2,
-                           keepEmpty: Boolean = false,
-                           materialize: Boolean = true): DataFrame = {
+                           keepEmpty: Boolean = false): DataFrame = {
     require(n >= 1, "removeDuplicateSpans: n must be >= 1")
     require(minDocs >= 2, "removeDuplicateSpans: minDocs must be >= 2")
     val w = split(col(text), " ")
@@ -568,7 +558,7 @@ object Dedup {
       .select(col(id), posexplode(
         graft.expr.TextHashExpressions.ngramHashesAll(col("w"), n)))
       .withColumnRenamed("pos", "pos").withColumnRenamed("col", "h")
-    val wins = Materialize.pin(wins0, materialize)
+    val wins = Materialize.pin(wins0)
     val dup = wins.select(col(id), col("h")).distinct()
       .groupBy("h").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= minDocs).select("h")
@@ -971,8 +961,7 @@ object Dedup {
   def minhashLsh(df: DataFrame, id: String, text: String,
                  threshold: Double, numPerms: Int = 64,
                  bands: Int = 32,
-                 maxBucket: Option[Int] = Some(DefaultMaxBucket),
-                 materialize: Boolean = true): DataFrame = {
+                 maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
     require(bands >= 1 && bands <= numPerms && numPerms % bands == 0,
       s"minhashLsh: bands=$bands must divide numPerms=$numPerms " +
         "(bands > numPerms collapses every doc into one bucket per band; " +
@@ -985,9 +974,9 @@ object Dedup {
     // COMPACT derived frame (id + hash array — KBs/doc vs the raw
     // text), which is the standard multi-consumer reuse move at corpus
     // scale; the trade is executor-local blocks (executor loss → job
-    // retry). `materialize = false` keeps the plan fully lazy/pure.
+    // retry).
     val arrays0 = shingleHashArrays(df, id, text)
-    val arrays = Materialize.pin(arrays0, materialize)
+    val arrays = Materialize.pin(arrays0)
     val sig = arrays.select(col(id),
       graft.expr.VectorExpressions.minhashSig(col("hs"), numPerms).as("sig"))
     val banded0 = sig.select(col(id),
@@ -1000,8 +989,7 @@ object Dedup {
         // (bucket-size aggregate + both join sides); pin the compact
         // (id, band, bucket) rows so the signature expression runs
         // once, not per branch
-        cappedBuckets(Materialize.pin(banded0, materialize), cap,
-          "minhashLsh")
+        cappedBuckets(Materialize.pin(banded0), cap, "minhashLsh")
       case None => banded0
     }
     val cand = banded.as("x").join(banded.as("y"),
@@ -1041,11 +1029,10 @@ object Dedup {
   def minhashLshIncremental(newDf: DataFrame, seenDf: DataFrame,
                             id: String, text: String, threshold: Double,
                             numPerms: Int = 64, bands: Int = 32,
-                            maxSeenBucket: Option[Int] = Some(DefaultMaxBucket),
-                            materialize: Boolean = true): DataFrame = {
+                            maxSeenBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
     def prep(df: DataFrame) = {
       val a0 = shingleHashArrays(df, id, text)
-      Materialize.pin(a0, materialize)
+      Materialize.pin(a0)
     }
     minhashLshIncrementalArrays(prep(newDf), prep(seenDf), id, threshold,
       numPerms, bands, maxSeenBucket)
@@ -1308,18 +1295,14 @@ object Dedup {
     * 5-6 bits (narrower chunks = more candidates — the recall/cost
     * trade-off is explicit in the parameter, never silent). */
   def simhashPairs(df: DataFrame, id: String, text: String,
-                   maxDist: Int = 3,
-                   materialize: Boolean = true): DataFrame =
-    simhashPairsImpl(df, id, simhash(col(text)), maxDist, bits = 64,
-      materialize)
+                   maxDist: Int = 3): DataFrame =
+    simhashPairsImpl(df, id, simhash(col(text)), maxDist, bits = 64)
 
   /** [[simhashPairs]] on the portable 31-bit simhash — same pigeonhole
     * blocking over 31 bits. */
   def simhashPairsPortable(df: DataFrame, id: String, text: String,
-                           maxDist: Int = 3,
-                           materialize: Boolean = true): DataFrame =
-    simhashPairsImpl(df, id, simhashPortable(col(text)), maxDist, bits = 31,
-      materialize)
+                           maxDist: Int = 3): DataFrame =
+    simhashPairsImpl(df, id, simhashPortable(col(text)), maxDist, bits = 31)
 
   /** Corpus-slice overlap matrix: pairwise n-gram-vocabulary Jaccard
     * between GROUPS (sources/crawls/snapshots) — the corpus-analytics
@@ -1337,8 +1320,7 @@ object Dedup {
     * intersections are hash aggregates with map-side combine.
     * Returns (g1, g2, n1, n2, n_common, jaccard) for g1 < g2. */
   def groupOverlapMatrix(df: DataFrame, group: String, text: String,
-                         n: Int = 3,
-                         materialize: Boolean = true): DataFrame = {
+                         n: Int = 3): DataFrame = {
     require(n >= 1, "groupOverlapMatrix: n must be >= 1")
     val w = split(col(text), " ")
     val gh0 = df.select(col(group).as("__g"), w.as("w"))
@@ -1349,7 +1331,7 @@ object Dedup {
     // the compact (group, hash) vocabulary feeds three branches
     // (sizes + both sides of the intersection join) — the q44/q45
     // multi-branch checkpoint lesson
-    val gh = Materialize.pin(gh0, materialize)
+    val gh = Materialize.pin(gh0)
     val sizes = gh.groupBy("__g").agg(count(lit(1)).as("nv"))
     val inter = gh.as("x").join(gh.as("y"),
         col("x.h") === col("y.h") && col("x.__g") < col("y.__g"))
@@ -1370,13 +1352,11 @@ object Dedup {
     * [[simhashPairs]], FULL recall by construction, exact hamming
     * verify. Returns (d1, d2, dist). */
   def hammingNearDupPairs(df: DataFrame, id: String, sig: Column,
-                          maxDist: Int, bits: Int = 63,
-                          materialize: Boolean = true): DataFrame =
-    simhashPairsImpl(df, id, sig, maxDist, bits, materialize)
+                          maxDist: Int, bits: Int = 63): DataFrame =
+    simhashPairsImpl(df, id, sig, maxDist, bits)
 
   private def simhashPairsImpl(df: DataFrame, id: String, sim: Column,
-                               maxDist: Int, bits: Int,
-                               materialize: Boolean): DataFrame = {
+                               maxDist: Int, bits: Int): DataFrame = {
     require(maxDist >= 0 && maxDist < bits, s"maxDist must be in [0, ${bits - 1}]")
     val numChunks = maxDist + 1
     val base = bits / numChunks; val rem = bits % numChunks
@@ -1385,12 +1365,12 @@ object Dedup {
     // both sides of the chunk self-join would otherwise re-scan the
     // corpus and recompute the signature (the exchanges don't unify —
     // the q44/q45 lesson); the materialized frame is (id, 8-byte sh),
-    // KBs per million docs. `materialize = false` restores pure-lazy.
+    // KBs per million docs.
     // splitIn: the signature fold is the heavy per-row work — compute
     // it above the compute split so a single-file local scan uses
     // every core (identity on real layouts).
     val withSim0 = splitIn(df, id).select(col(id), sim.as("sh"))
-    val withSim = Materialize.pin(withSim0, materialize)
+    val withSim = Materialize.pin(withSim0)
     val chunkCols = offsets.zip(widths).map { case (off, w) =>
       shiftright(col("sh"), off).bitwiseAND((1L << w) - 1L)
     }
@@ -1418,24 +1398,20 @@ object Dedup {
     * ids must be disjoint across the frames. Returns (d1 ∈ new,
     * d2 ∈ seen, dist ≤ maxDist). */
   def simhashPairsIncremental(newDf: DataFrame, seenDf: DataFrame,
-                              id: String, text: String, maxDist: Int = 3,
-                              materialize: Boolean = true): DataFrame =
-    simhashIncImpl(newDf, seenDf, id, simhash(col(text)), maxDist,
-      bits = 64, materialize)
+                              id: String, text: String, maxDist: Int = 3): DataFrame =
+    simhashIncImpl(newDf, seenDf, id, simhash(col(text)), maxDist, bits = 64)
 
   /** [[simhashPairsIncremental]] on the portable 31-bit simhash —
     * DuckDB-replicable (the q46 convention), so the cross-boundary
     * pair set is oracle-checkable. */
   def simhashPairsIncrementalPortable(newDf: DataFrame, seenDf: DataFrame,
                                       id: String, text: String,
-                                      maxDist: Int = 3,
-                                      materialize: Boolean = true): DataFrame =
-    simhashIncImpl(newDf, seenDf, id, simhashPortable(col(text)), maxDist,
-      bits = 31, materialize)
+                                      maxDist: Int = 3): DataFrame =
+    simhashIncImpl(newDf, seenDf, id, simhashPortable(col(text)), maxDist, bits = 31)
 
   private def simhashIncImpl(newDf: DataFrame, seenDf: DataFrame,
                              id: String, sim: Column, maxDist: Int,
-                             bits: Int, materialize: Boolean): DataFrame = {
+                             bits: Int): DataFrame = {
     require(maxDist >= 0 && maxDist < bits, s"maxDist must be in [0, ${bits - 1}]")
     val numChunks = maxDist + 1
     val base = bits / numChunks; val rem = bits % numChunks
@@ -1446,7 +1422,7 @@ object Dedup {
     }
     def chunked(df: DataFrame) = {
       val withSim0 = splitIn(df, id).select(col(id), sim.as("sh"))
-      val withSim = Materialize.pin(withSim0, materialize)
+      val withSim = Materialize.pin(withSim0)
       withSim.select(col(id), col("sh"), posexplode(array(chunkCols: _*)))
         .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ck")
     }

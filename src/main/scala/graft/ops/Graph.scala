@@ -61,16 +61,15 @@ object Graph {
     *
     * Returns (node, pr) with pr rounded 12 dp; Σ pr ≈ 1. */
   def pageRank(edges: DataFrame, src: String, dst: String,
-               iterations: Int = 4, damping: Double = 0.85,
-               materialize: Boolean = true): DataFrame = {
+               iterations: Int = 4, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "pageRank: iterations must be >= 1")
     require(damping > 0.0 && damping < 1.0,
       "pageRank: damping must be in (0, 1)")
     val e0 = simpleEdges(edges, src, dst)
-    val e = Materialize.pin(e0, materialize)
+    val e = Materialize.pin(e0)
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val nodes = Materialize.pin(nodes0, materialize)
+    val nodes = Materialize.pin(nodes0)
     // bounded driver scalar (node count — the agg-to-scalar convention)
     val n = nodes.count()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
@@ -78,10 +77,8 @@ object Graph {
     // set never change — pin both once instead of re-deriving them
     // from e every iteration (the old loop ran e ⋈ ranks ⋈ outdeg plus
     // a nodes-vs-outdeg anti-join per round).
-    val odP = Materialize.pin(
-      outdeg.withColumnRenamed("src", "node"), materialize)
-    val dangNodes = Materialize.pin(
-      nodes.join(odP, Seq("node"), "left_anti"), materialize)
+    val odP = Materialize.pin(outdeg.withColumnRenamed("src", "node"))
+    val dangNodes = Materialize.pin(nodes.join(odP, Seq("node"), "left_anti"))
     val nD = lit(n.toDouble)
     var ranks = nodes.select(col("node"), (lit(1.0) / nD).as("r"))
     for (_ <- 1 to iterations) {
@@ -108,7 +105,7 @@ object Graph {
           ((lit(1.0) - lit(damping)) / nD +
             lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dm") / nD))
             .as("r"))
-      ranks = Materialize.pin(next, materialize)
+      ranks = Materialize.pin(next)
     }
     ranks.select(col("node"), round(col("r"), 12).as("pr"))
   }

@@ -22,16 +22,18 @@ import org.apache.spark.sql.DataFrame
   *    a write+read of the frame, but a 1000-executor, hours-long run
   *    survives individual executor loss. Set this once at job start
   *    for 100 TB-scale runs.
-  *  - [[Off]] — no pinning: pure lineage. Only sensible for tiny
+  *  - [[Off]] — no cost pins: pure lineage. Only sensible for tiny
   *    inputs or plans the caller pins themselves; iterative lineage
-  *    grows per round.
+  *    grows per round. [[pinGate]] still pins (lazily).
   *
-  * Operators keep their `materialize: Boolean` parameter — it answers
-  * "pin here at all?" (some callers compose the op into a larger plan
-  * they pin once); the strategy answers "pin HOW". The knob is a
-  * process-wide `@volatile var` deliberately: it is set once during
-  * job bootstrap (like `SparkContext.setCheckpointDir` itself), not
-  * flipped mid-query.
+  * The strategy is the only pin switch, and operators choose between
+  * two kinds of pin. [[pin]] is a COST pin: it saves recomputation,
+  * so the strategy decides whether and how it happens. [[pinGate]] is
+  * a pin that CORRECTNESS depends on (a lineage barrier, or a frame
+  * whose partition ids several branches must agree on), so it exists
+  * under every strategy. The knob is a process-wide `@volatile var`
+  * deliberately: it is set once during job bootstrap (like
+  * `SparkContext.setCheckpointDir` itself), not flipped mid-query.
   */
 object Materialize {
 
@@ -63,7 +65,7 @@ object Materialize {
     }
   }
 
-  /** No pinning — lineage grows with iterations; caller's problem. */
+  /** No cost pins — lineage grows with iterations; caller's problem. */
   case object Off extends Strategy {
     private[graft] def pinFrame(df: DataFrame): DataFrame = df
   }
@@ -116,20 +118,17 @@ object Materialize {
       pinned
   }
 
-  /** Pin `df` per the current strategy iff `enabled` (the operators'
-    * `materialize` flag). */
-  private[graft] def pin(df: DataFrame, enabled: Boolean): DataFrame =
-    if (enabled) pin(df) else df
-
-  /** Pin for a LINEAGE GATE that must exist even under [[Off]]
-    * (ZOrder.hilbertGate's pushdown barrier: an un-pinned gate is not
-    * a gate). Off gets a LAZY local checkpoint — truncates the logical
-    * plan at LogicalRDD without materializing until the first action —
-    * and, unlike a direct `localCheckpoint(false)` at the call site,
-    * the gate's blocks REGISTER with any active [[withBatchRelease]]
-    * scope exactly like a normal pin: a standing query whose batch
-    * body routes through a gate would otherwise leak one block set per
-    * micro-batch (the release sweeps only registered pins). */
+  /** Pin that correctness depends on, so it must exist even under
+    * [[Off]] (ZOrder.hilbertGate's pushdown barrier: an un-pinned gate
+    * is not a gate; Packing's range-partitioned frame, whose partition
+    * ids two branches must agree on). Off gets a LAZY local checkpoint
+    * — truncates the logical plan at LogicalRDD without materializing
+    * until the first action — and, unlike a direct
+    * `localCheckpoint(false)` at the call site, the gate's blocks
+    * REGISTER with any active [[withBatchRelease]] scope exactly like
+    * a normal pin: a standing query whose batch body routes through a
+    * gate would otherwise leak one block set per micro-batch (the
+    * release sweeps only registered pins). */
   private[graft] def pinGate(df: DataFrame): DataFrame = strategy match {
     case Off =>
       val pinned = df.localCheckpoint(false)
@@ -143,11 +142,8 @@ object Materialize {
     * made by other threads, and broadcast model tables — which are not
     * persistent RDDs — are untouched). Registration is thread-local in
     * [[pin]], so concurrent foreachBatch bodies of distinct standing
-    * queries are safe without serializing them. `spark` is unused but
-    * kept so call sites read as "scoped to this session's batch". */
-  private[graft] def withBatchRelease[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val _ = spark
+    * queries are safe without serializing them. */
+  private[graft] def withBatchRelease[T](body: => T): T = {
     val reg = new java.util.ArrayList[org.apache.spark.rdd.RDD[_]]()
     val outer = batchPins.get()
     batchPins.set(reg)

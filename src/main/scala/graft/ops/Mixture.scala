@@ -488,10 +488,10 @@ object Mixture {
     * running sum is a window over ONE (partition, group) cell, never a
     * whole group on one task (contrast a naive
     * `Window.partitionBy(group)` — one task per SOURCE dies at 100 TB
-    * where a source is terabytes). The ranged frame is pinned
-    * (`localCheckpoint`, unconditional) because the subtotal branch
-    * and the window branch must agree on partition boundaries — the
-    * Packing correctness lesson, not a perf knob.
+    * where a source is terabytes). The ranged frame is pinned through
+    * [[Materialize.pinGate]] (under every strategy) because the
+    * subtotal branch and the window branch must agree on partition
+    * boundaries — the Packing correctness lesson, not a cost pin.
     *
     * Returns the SELECTION frame (group, id, n_tokens, tokens_before)
     * — join it back to the corpus by id for payloads (the packTexts
@@ -512,7 +512,7 @@ object Mixture {
         nTokens.cast("long").as("__ntok"), pri.cast("double").as("__pri"))
       .filter(col(id).isNotNull && col("__pri").isNotNull &&
         col("__ntok").isNotNull && col("__ntok") >= 0)
-    val ranged = Materialize.pin(narrow
+    val ranged = Materialize.pinGate(narrow
       .repartitionByRange(col("__grp"), col("__pri"), col(id))
       .sortWithinPartitions(col("__grp"), col("__pri"), col(id))
       .withColumn("__pid", spark_partition_id()))
@@ -604,8 +604,7 @@ object Mixture {
     * n_g = N only if other groups exist). Returns
     * (group, n_tokens, vocab_g, kl). */
   def tokenKlDivergence(df: DataFrame, group: String, text: String,
-                        alpha: Double = 1.0,
-                        materialize: Boolean = true): DataFrame = {
+                        alpha: Double = 1.0): DataFrame = {
     require(alpha > 0, "tokenKlDivergence: alpha must be > 0")
     val toks = df.select(col(group).as("__g"),
         explode(filter(TA.tokens(col(text)), w => length(w) > 0)).as("__w"))
@@ -614,9 +613,9 @@ object Mixture {
     // groups), and the compact collapsed frame is localCheckpointed
     // because it feeds four plan branches (corpus counts → qtab/sq,
     // group totals, the present-word join) — the q44/q45 multi-branch
-    // lesson; `materialize = false` restores pure-lazy
+    // lesson
     val cg0 = toks.groupBy("__g", "__w").agg(count(lit(1)).as("cg"))
-    val cg = Materialize.pin(cg0, materialize)
+    val cg = Materialize.pin(cg0)
     val cw = cg.groupBy("__w").agg(sum(col("cg")).as("c"))
     val tot = cw.agg(sum(col("c")).as("bigN"), count(lit(1)).as("bigV"))
     // lnq9 per corpus word + the corpus-level scalar S_q = Σ_V lnq9

@@ -28,14 +28,14 @@ import org.apache.spark.sql.functions._
   *      physical partition id — group size = one data partition, never
   *      the corpus.
   *
-  * The ranged frame is pinned once (`localCheckpoint`) because the
-  * subtotal branch and the window branch must see the SAME partition
-  * boundaries — RangePartitioner re-samples per execution, so an
-  * unmaterialized plan could give the two branches different pids and
-  * join mismatched (pid, offset) rows (the q45 multi-branch lesson).
-  * Unlike the other ops' materialize flags (pure recompute cost), a
-  * lazy mode here would trade CORRECTNESS — so there is no flag: the
-  * checkpoint is unconditional. Results do not depend on where the
+  * The ranged frame is pinned once because the subtotal branch and the
+  * window branch must see the SAME partition boundaries —
+  * RangePartitioner re-samples per execution, so an unmaterialized plan
+  * could give the two branches different pids and join mismatched
+  * (pid, offset) rows (the q45 multi-branch lesson). Unlike the other
+  * ops' pins (pure recompute cost), this one is a correctness gate, so
+  * it goes through [[Materialize.pinGate]] and exists under every
+  * strategy, `Off` included. Results do not depend on where the
   * boundaries fall, only on both branches agreeing.
   *
   * Output: one row per (document, pack) overlap —
@@ -60,7 +60,7 @@ object Packing {
     require(maxLen >= 1, "packConcat: maxLen must be >= 1")
     require(startOffset >= 0, "packConcat: startOffset must be >= 0")
     val L = lit(maxLen)
-    val ranged = Materialize.pin(
+    val ranged = Materialize.pinGate(
       df.select(col(id), nTokens.cast("long").as("ntok"))
         .filter(col("ntok") > 0)
         .repartitionByRange(col(id))

@@ -383,15 +383,14 @@ object Similarity {
     * at output. */
   def mmrDiversify(candidates: DataFrame, qid: String, id: String,
                    rel: String, vec: String, k: Int,
-                   lambda: Double = 0.7,
-                   materialize: Boolean = true): DataFrame = {
+                   lambda: Double = 0.7): DataFrame = {
     require(k >= 1, "mmrDiversify: k must be >= 1")
     require(lambda >= 0.0 && lambda <= 1.0,
       "mmrDiversify: lambda must be in [0, 1]")
     val base0 = candidates.select(col(qid).as("__q"), col(id).as("__c"),
       col(rel).cast("double").as("__rel"),
       col(vec).cast("array<double>").as("__v"))
-    val base = Materialize.pin(base0, materialize)
+    val base = Materialize.pin(base0)
     var remaining = base
     var picked: DataFrame = null
     for (t <- 1 to k) {
@@ -418,7 +417,7 @@ object Similarity {
         .withColumn("rank", lit(t))
         .join(base.select(col("__q"), col("__c"), col("__v")),
           Seq("__q", "__c"))
-      val pick = Materialize.pin(pick0, materialize)
+      val pick = Materialize.pin(pick0)
       picked = if (t == 1) pick else picked.unionByName(pick)
       // remaining_t = base ∖ picked_{1..t}, rebuilt from the PINNED base
       // and the PINNED picks each round (one anti-join, lineage depth 2)

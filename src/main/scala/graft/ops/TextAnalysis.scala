@@ -594,18 +594,16 @@ object TextAnalysis {
     * have no bigrams and are absent. Returns
     * (id, n_bigrams, avg_logp). */
   def bigramLmScore(df: DataFrame, id: String, text: String,
-                    fitOn: Option[DataFrame] = None,
-                    materialize: Boolean = true): DataFrame = fitOn match {
+                    fitOn: Option[DataFrame] = None): DataFrame = fitOn match {
     // cross-fit routes through the persistable-model path — the fit
     // table IS the model, so fit-then-score and fit-then-save-then-
     // load-then-score are the same plan by construction
     case Some(c) =>
-      bigramLmScoreWith(df, id, text, fitBigramLm(c, text), materialize)
-    case None => bigramLmScoreSelf(df, id, text, materialize)
+      bigramLmScoreWith(df, id, text, fitBigramLm(c, text))
+    case None => bigramLmScoreSelf(df, id, text)
   }
 
-  private def bigramLmScoreSelf(df: DataFrame, id: String, text: String,
-                                materialize: Boolean): DataFrame = {
+  private def bigramLmScoreSelf(df: DataFrame, id: String, text: String): DataFrame = {
     // Bigrams are keyed by 64-bit hashes (h12 = xxhash64(w1,w2),
     // h1 = xxhash64(w1)) — the count and score joins shuffle 8-byte
     // keys instead of word pairs, the term that dominates at corpus
@@ -614,7 +612,7 @@ object TextAnalysis {
     // oracle hash-matches through it). The compact per-doc hash-array
     // frame feeds BOTH the count branch and the score branch in the
     // self-fit case; localCheckpoint pins it once (the q45
-    // multi-branch lesson; `materialize = false` restores pure-lazy).
+    // multi-branch lesson).
     def bigramArrays(d: DataFrame) = {
       val w = tokens(col(text))
       d.select(col(id), w.as("w")).filter(size(col("w")) >= 2)
@@ -623,7 +621,7 @@ object TextAnalysis {
     def expand(arrays: DataFrame) = arrays
       .select(col(id), explode_outer(col("bs")).as("b"))
       .select(col(id), col("b.h12").as("h12"), col("b.h1").as("h1"))
-    val scoreArrays = Materialize.pin(bigramArrays(df), materialize)
+    val scoreArrays = Materialize.pin(bigramArrays(df))
     val corpusBigrams = expand(scoreArrays)
     val c12 = corpusBigrams.groupBy("h12")
       .agg(count(lit(1)).as("c12"), first(col("h1")).as("h1c"))
@@ -689,12 +687,11 @@ object TextAnalysis {
     * reducer for the h1 join at corpus scale. Returns
     * (id, n_bigrams, avg_logp); documents with < 2 tokens are absent. */
   def bigramLmScoreWith(df: DataFrame, id: String, text: String,
-                        model: DataFrame,
-                        materialize: Boolean = true): DataFrame = {
+                        model: DataFrame): DataFrame = {
     val w = tokens(col(text))
     val scoreArrays = Materialize.pin(
       df.select(col(id), w.as("w")).filter(size(col("w")) >= 2)
-        .select(col(id), graft.expr.TextHashExpressions.bigramHashPairs(col("w")).as("bs")), materialize)
+        .select(col(id), graft.expr.TextHashExpressions.bigramHashPairs(col("w")).as("bs")))
     val occ = scoreArrays
       .select(col(id), explode_outer(col("bs")).as("b"))
       .select(col(id), col("b.h12").as("h12"), col("b.h1").as("h1"))
@@ -702,7 +699,7 @@ object TextAnalysis {
     // INLINE fit plan (the [[bigramLmScore]] delegation) is computed
     // once, not re-aggregated per consumer; a ModelStore-loaded table
     // pins to a trivial scan
-    val m = Materialize.pin(model, materialize)
+    val m = Materialize.pin(model)
     val seen = m.filter(col("h12").isNotNull)
     val c12 = seen.select(col("h12"), col("c12"))
     val c1 = seen.groupBy(col("h1")).agg(sum(col("c12")).as("c1"))
@@ -754,8 +751,7 @@ object TextAnalysis {
     * Documents with < 2 tokens have no bigrams and are absent.
     * Returns (id, n_bigrams, avg_logp). */
   def knBigramLmScore(df: DataFrame, id: String, text: String,
-                      discount: Double = 0.75,
-                      materialize: Boolean = true): DataFrame = {
+                      discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       "knBigramLmScore: discount must be in (0,1)")
     val w = tokens(col(text))
@@ -765,7 +761,7 @@ object TextAnalysis {
           xxhash64(get(col("w"), i), get(col("w"), i + 1)).as("h12"),
           xxhash64(get(col("w"), i)).as("h1"),
           xxhash64(get(col("w"), i + 1)).as("h2"))).as("bs"))
-    val arrays = Materialize.pin(arrays0, materialize)
+    val arrays = Materialize.pin(arrays0)
     val expanded = arrays.select(col(id), explode(col("bs")).as("b"))
       .select(col(id), col("b.h12").as("h12"), col("b.h1").as("h1"),
         col("b.h2").as("h2"))
@@ -774,8 +770,7 @@ object TextAnalysis {
     // rescans the corpus-sized occurrence stream
     val c12 = Materialize.pin(
       expanded.groupBy("h12").agg(count(lit(1)).as("c12"),
-        first(col("h1")).as("h1c"), first(col("h2")).as("h2c")),
-      materialize)
+        first(col("h1")).as("h1c"), first(col("h2")).as("h2c")))
     val left = c12.groupBy(col("h1c").as("h1")).agg(
       sum(col("c12")).as("c1"), count(lit(1)).as("fanout"))
     val right = c12.groupBy(col("h2c").as("h2"))
@@ -849,8 +844,7 @@ object TextAnalysis {
     * ONE h12 equi-join touches the occurrence stream. Returns
     * (id, n_bigrams, n_oov, avg_logp). */
   def knBigramLmScoreWith(df: DataFrame, id: String, text: String,
-                          model: DataFrame, discount: Double = 0.75,
-                          materialize: Boolean = true): DataFrame = {
+                          model: DataFrame, discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       "knBigramLmScoreWith: discount must be in (0,1)")
     val w = tokens(col(text))
@@ -860,14 +854,13 @@ object TextAnalysis {
           i => struct(
             xxhash64(get(col("w"), i), get(col("w"), i + 1)).as("h12"),
             xxhash64(get(col("w"), i)).as("h1"),
-            xxhash64(get(col("w"), i + 1)).as("h2"))).as("bs")),
-      materialize)
+            xxhash64(get(col("w"), i + 1)).as("h2"))).as("bs")))
     val expanded = arrays.select(col(id), explode(col("bs")).as("b"))
       .select(col(id), col("b.h12").as("h12"), col("b.h1").as("h1"),
         col("b.h2").as("h2"))
     // four reads of the model (c12, left, right, n11) — pinned so an
     // inline [[fitKnBigramLm]] plan aggregates the fit corpus once
-    val m = Materialize.pin(model, materialize)
+    val m = Materialize.pin(model)
     val left = m.groupBy(col("h1")).agg(
       sum(col("c12")).as("c1"), count(lit(1)).as("fanout"))
     val right = m.groupBy(col("h2")).agg(count(lit(1)).as("fanin"))
@@ -913,11 +906,10 @@ object TextAnalysis {
     * the ln rounds to 9 dp; ties break (w1, w2) lexicographic.
     * Returns (w1, w2, c12, pmi), k rows best-first. */
   def pmiCollocations(df: DataFrame, text: String, minCount: Long,
-                      k: Int, materialize: Boolean = true): DataFrame = {
+                      k: Int): DataFrame = {
     require(minCount >= 1, "pmiCollocations: minCount must be >= 1")
     require(k >= 1, "pmiCollocations: k must be >= 1")
-    val toks = Materialize.pin(
-      df.select(tokens(col(text)).as("w")), materialize)
+    val toks = Materialize.pin(df.select(tokens(col(text)).as("w")))
     val uni = toks.select(explode(col("w")).as("wd"))
       .groupBy("wd").agg(count(lit(1)).as("cw"))
     val nt = uni.agg(sum(col("cw")).as("nt"))
@@ -927,8 +919,7 @@ object TextAnalysis {
           i => struct(get(col("w"), i).as("w1"),
             get(col("w"), i + 1).as("w2")))).as("b"))
         .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
-        .agg(count(lit(1)).as("c12")),
-      materialize)
+        .agg(count(lit(1)).as("c12")))
     val nb = c12all.agg(sum(col("c12")).as("nb"))
     val pmi = round(log((col("c12").cast("double") / col("nb")) /
       ((col("cw1").cast("double") / col("nt")) *
@@ -1081,15 +1072,13 @@ object TextAnalysis {
   def ccnetPerplexityBuckets(df: DataFrame, id: String, text: String,
                              lang: String, fitOn: DataFrame,
                              headQ: Double = 1.0 / 3,
-                             midQ: Double = 2.0 / 3,
-                             materialize: Boolean = true): DataFrame = {
+                             midQ: Double = 2.0 / 3): DataFrame = {
     require(headQ > 0 && headQ < midQ && midQ < 1,
       "ccnetPerplexityBuckets: need 0 < headQ < midQ < 1")
     // bucketByQuantiles reads its input twice (threshold aggregate +
     // row stamp); pin the scored frame so the whole LM pipeline runs
     // ONCE, not once per consumer — the q45 multi-branch lesson.
-    val scoredP = Materialize.pin(
-      ccnetPerplexity(df, id, text, lang, fitOn, materialize), materialize)
+    val scoredP = Materialize.pin(ccnetPerplexity(df, id, text, lang, fitOn))
     bucketByQuantiles(scoredP, lang, col("ppl"), Seq(headQ, midQ))
       .withColumn("bucket", element_at(
         array(lit("head"), lit("middle"), lit("tail")), col("bucket") + 1))
@@ -1099,13 +1088,11 @@ object TextAnalysis {
     * cross-fit add-one bigram-LM perplexity, one pass for all
     * languages. Returns (id, lang, n_bigrams, ppl). */
   def ccnetPerplexity(df: DataFrame, id: String, text: String,
-                      lang: String, fitOn: DataFrame,
-                      materialize: Boolean = true): DataFrame =
+                      lang: String, fitOn: DataFrame): DataFrame =
     // fit routes through the persistable per-language model table —
     // fit-then-score and fit-then-save-then-load-then-score are the
     // same plan by construction ([[fitCcnetLm]]/[[ccnetPerplexityWith]])
-    ccnetPerplexityWith(df, id, text, lang,
-      fitCcnetLm(fitOn, text, lang), materialize)
+    ccnetPerplexityWith(df, id, text, lang, fitCcnetLm(fitOn, text, lang))
 
   /** the compact per-doc hash-array frame shared by the ccnet fit and
     * score sides (the q99 shape): one struct array per document, never
@@ -1160,13 +1147,12 @@ object TextAnalysis {
     * per covered language). Returns (id, lang, n_bigrams, ppl);
     * documents with < 2 tokens are absent. */
   def ccnetPerplexityWith(df: DataFrame, id: String, text: String,
-                          lang: String, model: DataFrame,
-                          materialize: Boolean = true): DataFrame = {
+                          lang: String, model: DataFrame): DataFrame = {
     val w = tokens(col(text))
     // three reads of the model (c12, c1, per-lang V) — pinned so an
     // inline [[fitCcnetLm]] plan (the [[ccnetPerplexity]] delegation)
     // aggregates the fit corpus once, not three times per score
-    val m = Materialize.pin(model, materialize)
+    val m = Materialize.pin(model)
     val seen = m.filter(col("h12").isNotNull)
     val c12 = seen.select(col(lang).as("__lg"), col("h12"), col("c12"))
     val c1 = seen.groupBy(col(lang).as("__lg"), col("h1").as("h1s"))
@@ -1174,7 +1160,7 @@ object TextAnalysis {
     val vocabL = m.groupBy(col(lang).as("__lg"))
       .agg(max(col("v")).as("v"))
     val scoreOcc = ccnetExpand(Materialize.pin(ccnetBigramArrays(
-      df.select(col(id), col(lang).as("__lg"), w.as("w"))), materialize))
+      df.select(col(id), col(lang).as("__lg"), w.as("w")))))
     val stypes = scoreOcc.groupBy("__lg", "h12")
       .agg(first(col("h1")).as("h1s"))
     val lnp = round(log((coalesce(col("c12"), lit(0L)) + 1).cast("double") /
@@ -1297,15 +1283,15 @@ object TextAnalysis {
     * (score desc, term asc). Returns (cluster, rank, term, score,
     * tf). */
   def cTfIdfTopTerms(df: DataFrame, cluster: String, text: String,
-                     k: Int = 10, materialize: Boolean = true): DataFrame = {
+                     k: Int = 10): DataFrame = {
     require(k >= 1, "cTfIdfTopTerms: k must be >= 1")
     val toks = df.select(col(cluster).as("__c"),
       explode(filter(tokens(col(text)), w => length(w) > 0)).as("__w"))
     // the collapsed tf frame feeds three branches (f_w, A, the scored
     // join) — checkpoint it so the corpus tokenizes ONCE (the q44/q45
-    // multi-branch lesson); `materialize = false` restores pure-lazy
+    // multi-branch lesson)
     val tf0 = toks.groupBy("__c", "__w").agg(count(lit(1)).as("tf"))
-    val tf = Materialize.pin(tf0, materialize)
+    val tf = Materialize.pin(tf0)
     val fw = tf.groupBy("__w").agg(sum(col("tf")).as("fw"))
     val a = tf.groupBy("__c").agg(sum(col("tf")).as("cn"))
       .agg(avg(col("cn")).as("bigA"))
@@ -1423,13 +1409,12 @@ object TextAnalysis {
     * count aggregate on 8-byte keys; the flag join is a hash
     * equi-join. Returns (id, n_sent, n_dup_sent, dup_frac). */
   def sentenceDupStats(df: DataFrame, id: String, text: String,
-                       minDocs: Int = 2,
-                       materialize: Boolean = true): DataFrame = {
+                       minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2, "sentenceDupStats: minDocs must be >= 2")
     val arrays0 = df.select(col(id),
       transform(splitSentences(col(text)), s => xxhash64(s)).as("gs"))
       .filter(size(col("gs")) > 0)
-    val arrays = Materialize.pin(arrays0, materialize)
+    val arrays = Materialize.pin(arrays0)
     val g = arrays.select(col(id), explode(col("gs")).as("g"))
     val dup = g.select(col(id), col("g")).distinct()
       .groupBy("g").agg(count(lit(1)).as("ndocs"))

@@ -176,7 +176,7 @@ object DedupStream {
     // thread-local pin registry, so concurrent recipes (other standing
     // queries' foreachBatch threads, or the driver pinning a model
     // table mid-batch) are never swept.
-    Materialize.withBatchRelease(spark) {
+    Materialize.withBatchRelease {
       val b = Materialize.pin(batch.select(cols.map(col): _*))
       val intra = intraDrop(b)
       val cross = readTable(spark, stateDir, b.schema, excludeBatch = batchId) match {
@@ -263,7 +263,7 @@ object DedupStream {
                     threshold: Double,
                     maxCell: Option[Int] = None): Unit = {
     val spark = batch.sparkSession
-    Materialize.withBatchRelease(spark) {
+    Materialize.withBatchRelease {
       val b = Materialize.pin(batch.select(col(id), col(vec)))
       val intraKept = Similarity.semanticDedup(b, centroids, id, vec,
         threshold, maxCell).select(col(id))

@@ -52,7 +52,7 @@ object EnrichStream {
     * can never be released by someone else's batch. */
   def enrichBatch(batch: DataFrame, batchId: Long, outDir: String)
                  (f: DataFrame => DataFrame): Unit =
-    Materialize.withBatchRelease(batch.sparkSession) {
+    Materialize.withBatchRelease {
       f(batch).write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
     }
 

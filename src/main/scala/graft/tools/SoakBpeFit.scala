@@ -71,7 +71,7 @@ object SoakBpeFit {
       // NOT the shared wc checkpoint both runs read (sweeping the
       // whole persistent-RDD map here killed the second run with
       // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-      val merges = graft.ops.Materialize.withBatchRelease(spark) {
+      val merges = graft.ops.Materialize.withBatchRelease {
         graft.ops.Bpe.fitDistributed(wc, nMerges,
           batchCap = cap, pinEvery = pinEvery)
       }
@@ -97,7 +97,7 @@ object SoakBpeFit {
       val counter = new JobCounter
       spark.sparkContext.addSparkListener(counter)
       val t0 = System.nanoTime()
-      val merged = graft.ops.Materialize.withBatchRelease(spark) {
+      val merged = graft.ops.Materialize.withBatchRelease {
         graft.ops.WordPiece.fitDistributed(wc, nMerges, batchCap = cap)
       }
       val dt = (System.nanoTime() - t0) / 1e9

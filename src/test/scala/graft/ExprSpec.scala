@@ -390,13 +390,18 @@ class ExprSpec extends SparkSpec {
   }
 
   test("charTrigramBuckets kernel matches the interpreted charpoly chain") {
+    import graft.expr.CharTrigramBucketHashes
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
     val M = 2147483647L
     val rnd = new scala.util.Random(29)
     // code points across the plane incl. 0 and max BMP/astral values
     val rows = Seq.tabulate(200) { i =>
-      (i.toLong, Seq.fill(rnd.nextInt(40))(
-        Seq(0L, 65L, 122L, 0x7fL, 0x80L, 0x4e2dL, 0x1f600L)(rnd.nextInt(7))))
-    } ++ Seq((200L, Seq.empty[Long]), (201L, Seq(65L, 66L)))
+      (i.toLong, Option(Seq.fill(rnd.nextInt(40))(
+        Seq(0L, 65L, 122L, 0x7fL, 0x80L, 0x4e2dL, 0x1f600L)(rnd.nextInt(7)))))
+    } ++ Seq((200L, Some(Seq.empty[Long])), (201L, Some(Seq(65L, 66L))),
+      (202L, None), (203L, Some(Seq(0x1f600L))),
+      (204L, Some(Seq(0x1f600L, 0x10ffffL))))
     val df = rows.toDF("id", "cp").repartition(4)
     val ref = when(size($"cp") >= 3,
       transform(sequence(lit(0), size($"cp") - 3), i => {
@@ -410,5 +415,15 @@ class ExprSpec extends SparkSpec {
         ref.as("r")).collect()
     got.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2),
       s"id=${r.getLong(0)}"))
+    // the interpreted eval path agrees with the codegen path above
+    val byId = got.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    rows.foreach { case (id, cp) =>
+      val interp = CharTrigramBucketHashes(
+          Literal.create(cp.orNull, ArrayType(LongType)), 512).eval(null)
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq
+      assert(interp == byId(id), s"interpreted id=$id")
+    }
+    assert(byId(202L).isEmpty, "NULL input must yield the empty array")
   }
 }

@@ -2310,8 +2310,7 @@ class OpsSpec extends SparkSpec {
     // suite session registers it).
     val d = Seq((1L, doc0Text), (2L, doc0Text + " extra"))
       .toDF("doc_id", "text")
-    assert(Dedup.minhashLsh(d, "doc_id", "text", 0.8,
-      materialize = false).count() == 1L)
+    assert(Dedup.minhashLsh(d, "doc_id", "text", 0.8).count() == 1L)
     def hidden(o: AnyRef, name: String): AnyRef = {
       var c: Class[_] = o.getClass
       var f: java.lang.reflect.Field = null
@@ -2830,13 +2829,30 @@ class OpsSpec extends SparkSpec {
 
   test("Materialize.Reliable: iterative ops survive the reliable-" +
     "checkpoint strategy with identical results (the cluster posture)") {
-    import graft.ops.{Graph, Materialize}
+    import graft.ops.{Graph, Materialize, Mixture, Packing}
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 2L), (4L, 3L)).toDF("s", "t")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("d1", "d2")
     val local = Graph.pageRank(edges, "s", "t", iterations = 6)
       .as[(Long, Double)].collect().toMap
     val ccLocal = graft.ops.Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
+    // MMR (cost pins per round) and the two range-partitioned prefix
+    // sums (pinGate: their partition ids must agree across branches)
+    // return the same rows under every strategy
+    val cands = (0L until 12L).map { i =>
+      (i % 2, i, 1.0 / (1 + i), Seq(math.sin(i.toDouble), math.cos(i.toDouble), i % 3 / 3.0))
+    }.toDF("qid", "nid", "rel", "vec")
+    val docs = (0L until 60L).map(i => (i, if (i % 3 == 0) "a" else "b", i % 11 + 1))
+      .toDF("id", "g", "nt").repartition(4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(df.columns.map(col): _*).collect().toSeq
+    def strategyOps() = Seq(
+      rows(Similarity.mmrDiversify(cands, "qid", "nid", "rel", "vec", k = 4)),
+      rows(Packing.packConcat(docs, "id", col("nt"), maxLen = 16)),
+      rows(Mixture.tokenBudgetSelect(docs, "id", "g", col("nt"),
+        Map("a" -> 40L, "b" -> 90L))))
+    val opsLocal = strategyOps()
+    assert(opsLocal.forall(_.nonEmpty))
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
       .toString
     Materialize.strategy = Materialize.Reliable(dir)
@@ -2847,6 +2863,7 @@ class OpsSpec extends SparkSpec {
       val ccRel = graft.ops.Dedup.connectedComponents(pairs)
         .as[(Long, Long)].collect().toMap
       assert(ccRel == ccLocal, "reliable connectedComponents identical")
+      assert(strategyOps() == opsLocal, "reliable mmr/pack/budget identical")
       // checkpoint files actually landed in the reliable dir
       def countFiles(p: java.nio.file.Path): Long = {
         val s = java.nio.file.Files.walk(p)
@@ -2860,6 +2877,7 @@ class OpsSpec extends SparkSpec {
       val off = Graph.pageRank(edges, "s", "t", iterations = 3)
         .as[(Long, Double)].collect().toMap
       assert(math.abs(off.values.sum - 1.0) < 1e-9)
+      assert(strategyOps() == opsLocal, "Off mmr/pack/budget identical")
     } finally Materialize.strategy = Materialize.Local
   }
 

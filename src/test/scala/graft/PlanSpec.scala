@@ -639,10 +639,14 @@ class PlanSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, sfSmoke)
     val fit = d.filter(org.apache.spark.sql.functions.col("source")
       .isin("src0", "src1"))
-    val sc = graft.ops.TextAnalysis.ccnetPerplexity(
-      d, "doc_id", "text", "lang", fit, materialize = false)
-    val n = occurrenceStreamJoins(sc.queryExecution.optimizedPlan)
-    assert(n == 1, s"expected 1 occurrence-stream join, got $n")
+    val saved = graft.ops.Materialize.strategy
+    try {
+      graft.ops.Materialize.strategy = graft.ops.Materialize.Off
+      val sc = graft.ops.TextAnalysis.ccnetPerplexity(
+        d, "doc_id", "text", "lang", fit)
+      val n = occurrenceStreamJoins(sc.queryExecution.optimizedPlan)
+      assert(n == 1, s"expected 1 occurrence-stream join, got $n")
+    } finally graft.ops.Materialize.strategy = saved
     val qe = SparkEntry.queries("q196_ccnet_ppl_buckets")(spark, sfSmoke)
       .queryExecution
     val plan = qe.executedPlan.toString
