@@ -39,31 +39,27 @@ case class DotProduct(left: Expression, right: Expression)
         s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.DotProduct.fold($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** The dot product's one loop, shared by the generated code and
+    * [[MmrSelect]]: a sequential double fold over the common prefix. */
+  def fold(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0; var i = 0
     while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $s = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += $a.getDouble($i) * $b.getDouble($i);
-        }
-        ${ev.value} = $s;
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 /** MinHash signature over a document's shingle-hash array: for each of

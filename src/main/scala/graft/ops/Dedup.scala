@@ -1214,12 +1214,12 @@ object Dedup {
     * no argmax weight (SQL max skips it); a component that is ALL-null
     * falls back to min-id keep rather than vanishing.
     *
-    * The argmax is the type-generic two-aggregate form (the
-    * mmrDiversify convention — max the quality per component, join
-    * back for the achievers, min(id) among them) rather than a
-    * max_by struct, so id and quality keep their exact types and the
-    * tie-break is explicit. Component tables are cluster-sized (tiny
-    * vs the corpus); the final keep is one left_anti join.
+    * The argmax is the type-generic two-aggregate form (max the
+    * quality per component, join back for the achievers, min(id)
+    * among them) rather than a max_by struct, so id and quality keep
+    * their exact types and the tie-break is explicit. Component tables
+    * are cluster-sized (tiny vs the corpus); the final keep is one
+    * left_anti join.
     *
     * Inherits [[minhashLsh]]'s DEFAULT bucket cap
     * ([[DefaultMaxBucket]]) — see [[dedupNearMinhash]] for the

@@ -368,67 +368,32 @@ object Similarity {
     *
     * Input: (qid, id, rel, vec) shortlists — ALREADY top-N per query
     * (the expensive retrieval happened upstream; N is tens, the
-    * [[rrfFuse]] posture). Scale shape: every iteration is one
-    * remaining⋈selected equi-join on qid (shortlist-sized), one
-    * (qid, candidate) max aggregate, and one per-qid argmax via a
-    * max_by struct aggregate (the [[assignCells]] trick — never a rank
-    * window); thousands of queries diversify in the same k passes,
-    * each group independent. Iterations localCheckpoint so lineage
-    * stays k-flat.
+    * [[rrfFuse]] posture); NULL-qid rows are dropped. Scale shape: one
+    * `groupBy(qid)` collects each query's candidates into one task, and
+    * [[graft.expr.MmrSelect]] runs the k greedy rounds there, carrying
+    * the running max-sim across rounds — O(k·N·dim) per query, with all
+    * N candidates of a qid held in one task at once. One shuffle, no
+    * join, no pin, however large k is.
     *
-    * Determinism: cosines are the sequential-fold [[dot]] kernel
-    * (identical across engines), the MMR score is per-row double
-    * arithmetic, ties break (score desc, id asc) via the negated-id
-    * struct. Returns (qid, rank, id, score) with score rounded 6 dp
-    * at output. */
+    * Determinism: cosines use the sequential-fold [[dot]] kernel's loop
+    * and `Divide`'s zero-divisor rule (DIVIDE_BY_ZERO under ANSI, else
+    * a NULL cosine); a candidate with a NULL score is never picked;
+    * ties break (score desc, id asc) under the id type's own ordering,
+    * so string ids work. Returns (qid, rank, id, score) with score
+    * rounded 6 dp at output. */
   def mmrDiversify(candidates: DataFrame, qid: String, id: String,
                    rel: String, vec: String, k: Int,
                    lambda: Double = 0.7): DataFrame = {
     require(k >= 1, "mmrDiversify: k must be >= 1")
     require(lambda >= 0.0 && lambda <= 1.0,
       "mmrDiversify: lambda must be in [0, 1]")
-    val base0 = candidates.select(col(qid).as("__q"), col(id).as("__c"),
-      col(rel).cast("double").as("__rel"),
-      col(vec).cast("array<double>").as("__v"))
-    val base = Materialize.pin(base0)
-    var remaining = base
-    var picked: DataFrame = null
-    for (t <- 1 to k) {
-      val maxSim =
-        if (t == 1) remaining.withColumn("__ms", lit(0.0))
-        else {
-          val sel = picked.select(col("__q"), col("__v").as("__sv"))
-          remaining.join(sel, Seq("__q"))
-            .groupBy(col("__q"), col("__c"))
-            .agg(first(col("__rel")).as("__rel"), first(col("__v")).as("__v"),
-              max(cosine(col("__v"), col("__sv"))).as("__ms"))
-        }
-      val scored = maxSim.withColumn("__s",
-        lit(lambda) * col("__rel") - lit(1.0 - lambda) * col("__ms"))
-      // argmax in two aggregates rather than a negated-id max_by struct:
-      // unary minus on a STRING id silently casts to null and empties
-      // the result — min(id) at the max score keeps ids type-generic
-      // (ties: score desc then id asc, exact-double equality join)
-      val best = scored.groupBy(col("__q")).agg(max(col("__s")).as("__bs"))
-      val pick0 = scored.join(best, Seq("__q"))
-        .filter(col("__s") === col("__bs"))
-        .groupBy(col("__q"))
-        .agg(min(col("__c")).as("__c"), first(col("__bs")).as("__score"))
-        .withColumn("rank", lit(t))
-        .join(base.select(col("__q"), col("__c"), col("__v")),
-          Seq("__q", "__c"))
-      val pick = Materialize.pin(pick0)
-      picked = if (t == 1) pick else picked.unionByName(pick)
-      // remaining_t = base ∖ picked_{1..t}, rebuilt from the PINNED base
-      // and the PINNED picks each round (one anti-join, lineage depth 2)
-      // instead of pinning a chained remaining frame per round — same
-      // set either way, k fewer checkpoint jobs per call (r19; the
-      // chained form re-pinned a frame that is derivable in one hop).
-      remaining = base.join(
-        picked.select(col("__q"), col("__c")), Seq("__q", "__c"), "left_anti")
-    }
-    picked.select(col("__q").as(qid), col("rank"), col("__c").as(id),
-      round(col("__score"), 6).as("score"))
+    candidates.filter(col(qid).isNotNull)
+      .groupBy(col(qid).as("__q"))
+      .agg(collect_list(struct(col(id), col(rel).cast("double"),
+        col(vec).cast("array<double>"))).as("__cands"))
+      .select(col("__q"), inline(graft.expr.Mmr.select(col("__cands"), k, lambda)))
+      .select(col("__q").as(qid), col("rank"), col("__c").as(id),
+        round(col("__score"), 6).as("score"))
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009 —

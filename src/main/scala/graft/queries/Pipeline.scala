@@ -3608,14 +3608,12 @@ object Pipeline {
     // --- MMR diversified re-ranking (retrieval-family completion) -----------
     // (Similarity.mmrDiversify — Carbonell & Goldstein 1998: greedy
     // λ·rel − (1−λ)·max-sim-to-selected over the q47 brute-force
-    // top-20 shortlist. Each of the 5 rounds is a shortlist-sized
-    // equi-join + a max aggregate + a type-generic two-aggregate argmax
-    // (max score, then min(id) at that score — Similarity.scala
-    // documents why a negated-id max_by struct breaks on string ids;
-    // no rank window either way). The oracle unrolls all 5
-    // greedy rounds as CTEs; λ and (1−λ) interpolate as Scala doubles
-    // (shortest-round-trip repr) so both engines score with identical
-    // IEEE constants — the argmax sequence must match exactly.)
+    // top-20 shortlist. The shortlist is collected per qid and all 5
+    // rounds run in one task (graft.expr.MmrSelect): ties go to the
+    // smaller id, no join, no pin, no rank window. The oracle unrolls
+    // all 5 greedy rounds as CTEs; λ and (1−λ) interpolate as Scala
+    // doubles (shortest-round-trip repr) so both engines score with
+    // identical IEEE constants — the argmax sequence must match exactly.)
     "q177_mmr_rerank" -> Q(
       (s, d) => {
         val e = emb(s, d)
@@ -3917,13 +3915,7 @@ object Pipeline {
     // score, the q141 bounded-heap top-20 shortlist, and an
     // MMR-DIVERSIFIED final 5 over the shortlist's embeddings (q177's
     // unrolled greedy rounds). Every stage is an already-oracled
-    // operator; this row proves they interoperate.
-    // r12 band: fresh-session QBench, quiet host — 8.29 s [6.58, 10.06]
-    // (7 iters, sf0.1). Fresh-session pays the full JIT/codegen warmup
-    // for TEN composed operators plus 7 checkpoint rounds, so this
-    // band sits well above the 5.18 s shared-session bench median —
-    // compare future QBench runs against THIS band, bench medians
-    // against BENCH_LOCAL.)
+    // operator; this row proves they interoperate.)
     "q186_pipeline_v4" -> Q(
       (s, d) => {
         val dd = docs(s, d)

@@ -23,4 +23,9 @@ object InternalBridge {
   def scalarSubquery(df: DataFrame): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
       df.queryExecution.analyzed)
+
+  /** Spark's own DIVIDE_BY_ZERO error (`QueryExecutionErrors` is
+    * `private[sql]`), for kernels that follow `Divide`'s ANSI rule. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

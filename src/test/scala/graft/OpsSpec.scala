@@ -2836,9 +2836,9 @@ class OpsSpec extends SparkSpec {
       .as[(Long, Double)].collect().toMap
     val ccLocal = graft.ops.Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
-    // MMR (cost pins per round) and the two range-partitioned prefix
-    // sums (pinGate: their partition ids must agree across branches)
-    // return the same rows under every strategy
+    // MMR (no pins) and the two range-partitioned prefix sums
+    // (pinGate: their partition ids must agree across branches) return
+    // the same rows under every strategy
     val cands = (0L until 12L).map { i =>
       (i % 2, i, 1.0 / (1 + i), Seq(math.sin(i.toDouble), math.cos(i.toDouble), i % 3 / 3.0))
     }.toDF("qid", "nid", "rel", "vec")
@@ -3171,13 +3171,64 @@ class OpsSpec extends SparkSpec {
         "nid", "rel", "vec", k = 3, lambda = 1.0)
       .orderBy("rank").as[(Long, Int, Long, Double)].collect().map(_._3).toSeq
     assert(pure == Seq(1L, 2L, 3L))
-    // STRING ids rank identically (the negated-id max_by would null them)
+    // STRING ids rank identically
     val sCands = cands.withColumn("nid", concat(lit("doc-"), $"nid"))
     val sGot = Similarity.mmrDiversify(sCands, "qid", "nid", "rel", "vec",
         k = 3, lambda = 0.3)
       .filter($"qid" === 7).orderBy("rank")
       .as[(Long, Int, String, Double)].collect().map(_._3).toSeq
     assert(sGot == Seq("doc-1", "doc-3", "doc-2"))
+    // edge inputs, expected rows as the k-round distributed loop gave
+    // them: an exact round-1 tie, broken toward the smaller id under
+    // each id type's own order (9 < 10, but "doc-10" < "doc-9"); k above
+    // every group's candidate count; a NULL-rel candidate (never picked)
+    // and a NULL-vec one (NULL max-sim after round 1, never picked);
+    // each qid spread over several input partitions
+    val edge = Seq(
+      (20L, 10L, Some(0.5), Seq(1.0, 0.0)), (20L, 9L, Some(0.5), Seq(0.0, 1.0)),
+      (20L, 11L, Some(0.4), Seq(1.0, 1.0)),
+      (21L, 1L, None, Seq(1.0, 0.0, 0.0)), (21L, 2L, Some(0.8), Seq(0.0, 1.0, 0.0)),
+      (21L, 3L, Some(0.6), Seq(0.6, 0.0, 0.8)),
+      (22L, 4L, Some(0.9), Seq(1.0, 0.0)), (22L, 5L, Some(0.5), null),
+      (22L, 6L, Some(0.3), Seq(0.5, 0.5))
+    ).toDF("qid", "nid", "rel", "vec").repartition(3)
+    val sEdge = edge.withColumn("nid", concat(lit("doc-"), $"nid"))
+    def mmr(df: org.apache.spark.sql.DataFrame, k: Int) =
+      Similarity.mmrDiversify(df, "qid", "nid", "rel", "vec", k = k)
+        .orderBy("qid", "rank")
+    def longRows(df: org.apache.spark.sql.DataFrame, k: Int) =
+      mmr(df, k).as[(Long, Int, Long, Double)].collect().toSeq
+    def stringRows(df: org.apache.spark.sql.DataFrame, k: Int) =
+      mmr(df, k).as[(Long, Int, String, Double)].collect().toSeq
+    val edgeWant = Seq((20L, 1, 9L, 0.35), (20L, 2, 10L, 0.35),
+      (20L, 3, 11L, 0.067868), (21L, 1, 2L, 0.56), (21L, 2, 3L, 0.42),
+      (22L, 1, 4L, 0.63), (22L, 2, 6L, -0.002132))
+    val sEdgeWant = Seq((20L, 1, "doc-10", 0.35), (20L, 2, "doc-9", 0.35),
+      (20L, 3, "doc-11", 0.067868), (21L, 1, "doc-2", 0.56),
+      (21L, 2, "doc-3", 0.42), (22L, 1, "doc-4", 0.63),
+      (22L, 2, "doc-6", -0.002132))
+    val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    for (p <- Seq(1, 7)) {
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      try {
+        assert(longRows(edge, 5) == edgeWant, s"$p shuffle partitions")
+        assert(stringRows(sEdge, 5) == sEdgeWant, s"$p shuffle partitions")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", shuffleWidth)
+    }
+    // a zero-norm vector divides by zero in round 2: DIVIDE_BY_ZERO
+    // under ANSI (the session default); without ANSI its cosine is NULL,
+    // nothing is left to pick, and the group ends after round 1
+    val zero = Seq((23L, 7L, 0.9, Seq(1.0, 0.0)), (23L, 8L, 0.5, Seq(0.0, 0.0)))
+      .toDF("qid", "nid", "rel", "vec")
+    val err = intercept[Exception](longRows(zero, 2))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("DIVIDE_BY_ZERO")), err)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      assert(longRows(zero, 2) == Seq((23L, 1, 7L, 0.63)))
+      assert(longRows(edge, 5) == edgeWant)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("intervalOverlap: bucketed equi-join is lossless vs the direct " +

@@ -672,6 +672,24 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), "joins stay equi/broadcast")
   }
 
+  test("q177 MMR: building pins nothing; the re-rank plans one qid " +
+    "aggregate and no join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import spark.implicits._
+    Runtime.release(spark)
+    SparkEntry.queries("q177_mmr_rerank")(spark, sfSmoke)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "building the q177 frame pinned an RDD")
+    val cands = Seq((1L, 1L, 0.9, Seq(1.0, 0.0)), (1L, 2L, 0.8, Seq(0.0, 1.0)))
+      .toDF("qid", "nid", "rel", "vec")
+    val plan = graft.ops.Similarity.mmrDiversify(cands, "qid", "nid", "rel",
+      "vec", k = 5).queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, plan.treeString)
+    val keys = plan.collect { case a: Aggregate =>
+      a.groupingExpressions.flatMap(_.references.map(_.name)) }
+    assert(keys == Seq(Seq("qid")), plan.treeString)
+  }
+
   test("q197/q198 WordPiece encode: per-distinct-word stamp by equi-join " +
     "— no cartesian, no corpus window (the q185 unigram convention)") {
     for (q <- Seq("q197_wordpiece_encode", "q198_wordpiece_encode1")) {
