@@ -5,9 +5,11 @@ one-off full-gate run at a 10x step beyond the driver's largest fixture
 (VERDICT r9 item 4). Replication keeps the data shape ORGANIC rather than
 clique-hostile (that regime is tools.Soak's job):
 
-- TPC-H tables follow tools.SoakTpch's key-offset scheme (orderkey /
-  custkey / suppkey shift by copy*10^9; nation/region/part stay
-  single-copy) so join cardinalities scale linearly;
+- TPC-H tables use key offsets: copy k adds k*10^9 to every orderkey,
+  custkey and suppkey column (lineitem, orders, customer, supplier), so
+  keys never collide across copies and join cardinalities scale
+  linearly; nation/region/part stay single-copy (small enough to
+  broadcast, as in a real scale-up);
 - documents get per-copy word suffixes (every token of copy k>0 becomes
   `tok_k`), so NO cross-copy n-gram/shingle overlap exists and the
   pair-quadratic queries (q44/q45/q98/q148...) scale linearly instead of
@@ -18,7 +20,9 @@ clique-hostile (that regime is tools.Soak's job):
 - events shift event_id/user_id (sessions/funnels scale linearly).
 
 Correctness is unaffected by any of this: the gate compares Spark vs
-DuckDB on the SAME generated parquet. Usage:
+DuckDB on the SAME generated parquet. The sf1 TPC-H bench lane is
+graft.Bench over these tables (SPARK_GRAFT_SF_DIR=outDir,
+SPARK_GRAFT_BENCH_ONLY=<rows>). Usage:
   python3 scripts/make_sf.py [outDir] [copies]
 """
 import sys

@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
   * it to SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL.json), then prints
   * one compact summary line.
   *
-  * Each row runs through [[Runtime.runNoop]]: one warm-up (whole-stage
-  * codegen compiles a fresh class per novel plan and C2 JIT needs one
-  * pass; at this data size that would dominate a cold measurement), one
-  * discarded run, then SPARK_GRAFT_ITERS measured runs (default 5),
-  * reporting the MEDIAN: a single steady-state run cannot tell a plan
-  * regression from GC/session noise. Per-query min/max go to `spread`.
+  * Each row runs into the noop sink through [[Runtime.repeat]]: one
+  * warm-up (whole-stage codegen compiles a fresh class per novel plan
+  * and C2 JIT needs one pass; at this data size that would dominate a
+  * cold measurement), one discarded run, then SPARK_GRAFT_ITERS
+  * measured runs (default 5), reporting the MEDIAN: a single
+  * steady-state run cannot tell a plan regression from GC/session
+  * noise. Per-query min/max go to `spread`.
   * A shared-session median can still mislead across commits
   * (co-resident queries shift GC and codegen-cache state): attribute a
   * per-query delta only with [[tools.QBench]] / `scripts/ab_bench.sh`.
@@ -53,18 +54,12 @@ object Bench {
   def runBattery(spark: SparkSession, sfDir: String, iters: Int,
                  rows: Seq[(String, Query)]): Results =
     rows.map { case (name, fn) =>
-      def runs(n: Int, acc: List[Double]): Either[Throwable, List[Double]] =
-        if (n == 0) Right(acc)
-        else Runtime.runNoop(spark)(fn(spark, sfDir)).flatMap(t => runs(n - 1, t :: acc))
-      // the warm-up and discard-first runs are the last two of the
-      // reversed list. Discard-first: after the codegen/JIT warm-up the
-      // first measured run of the composed pipelines was still up to
-      // 2.7x their median (shuffle-file/page-cache warm-up the noop
-      // re-run does not share).
-      val r = runs(iters + 2, Nil).map { ts =>
-        val s = ts.dropRight(2).sorted
-        (s(s.length / 2), s.head, s.last)
-      }
+      // warm-ups: the codegen/JIT one, then discard-first. After the
+      // codegen/JIT warm-up the first measured run of the composed
+      // pipelines was still up to 2.7x their median (shuffle-file/
+      // page-cache warm-up the noop re-run does not share).
+      val r = Runtime.repeat(spark, warmups = 2, iters)(Runtime.noop(fn(spark, sfDir)))
+        .map(runs => Runtime.medianMinMax(runs.map(_.sec)))
       r.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
       // Full GC between queries: Spark's ContextCleaner reclaims
       // broadcast/shuffle/accumulator state only when driver GC runs,
@@ -105,8 +100,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val sfDir = Runtime.sfDir
+    val spark = Runtime.session(Runtime.cpus)
     // A median of 5 tolerates two runs contaminated by external machine
     // load; a median of 3 tolerates one.
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "5").toInt

@@ -17,12 +17,10 @@ object Plan {
     require(args.length >= 2, "usage: Plan <outDir> <query...>")
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val sfDir = Runtime.sfDir
+    val spark = Runtime.session(Runtime.cpus)
     args.drop(1).foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
-      val df = fn(spark, sfDir)
+      val df = Runtime.query(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(outDir.resolve(name + ".txt"), txt)
       // checkpoint hygiene (some queries pin frames while BUILDING the plan)

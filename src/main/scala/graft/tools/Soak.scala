@@ -19,22 +19,21 @@ import org.apache.spark.sql.functions._
   *
   * Run: SPARK_GRAFT_SOAK_COPIES=10 sbt "runMain graft.tools.Soak"
   *
-  * Adjudication mode (as in SoakTpch): a comma-separated
-  * `SPARK_GRAFT_SOAK_OPS` runs only those ops, and
-  * `SPARK_GRAFT_SOAK_ITERS` > 1 switches from single-shot timing
-  * (cliff/OOM bounding) to median-of-N with min/max spread plus
-  * inter-iteration GC — the mode that separates a real per-op
-  * regression from ambient host pressure. Every persisted /
-  * localCheckpointed block is released between ops AND between
-  * iterations ([[graft.Runtime.release]]); ops that internally share a
-  * checkpoint (the PQ family) build their own inside the timed thunk.
+  * Adjudication mode: a comma-separated `SPARK_GRAFT_SOAK_OPS` runs
+  * only those ops, and `SPARK_GRAFT_SOAK_ITERS` > 1 switches from
+  * single-shot timing (cliff/OOM bounding) to median-of-N with min/max
+  * spread — the mode that separates a real per-op regression from
+  * ambient host pressure. Every run goes through [[graft.Runtime.repeat]],
+  * so every persisted / localCheckpointed block is released after each
+  * run, followed by a GC; ops that internally share a checkpoint (the
+  * PQ family) build their own inside the timed thunk.
   */
 object Soak {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Runtime.sfDir
     val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/soak")
-    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = Runtime.session(Runtime.cpus)
 
     // ---- build the expanded table once per run ---------------------------
     // (SPARK_GRAFT_SOAK_REUSE=1 skips the rewrite when the scaled dir
@@ -66,18 +65,14 @@ object Soak {
     val big = spark.read.parquet(s"$out/documents.parquet")
     val nDocs = big.count()
 
-    def release(): Unit = {
-      Runtime.release(spark)
-      // broadcasts (tokenizer vocabs, keep-sets) are cleaned by the
-      // ContextCleaner only after driver GC notices they're
-      // unreachable; without a forced GC between ops their torrent
-      // blocks accumulate across the run and a later op's peak lands
-      // on a heap the earlier ops still pin (observed: each round-12
-      // op green ALONE at 40 copies, the 4-op sequence OOM — classic
-      // cross-op retention, not an op cost)
-      System.gc()
-      Thread.sleep(500)
-    }
+    // Runs after every run's pin release. Broadcasts (tokenizer vocabs,
+    // keep-sets) are cleaned by the ContextCleaner only after driver GC
+    // notices they're unreachable; without a forced GC between ops their
+    // torrent blocks accumulate across the run and a later op's peak
+    // lands on a heap the earlier ops still pin (observed: each round-12
+    // op green ALONE at 40 copies, the 4-op sequence OOM — classic
+    // cross-op retention, not an op cost)
+    def settle(): Unit = { System.gc(); Thread.sleep(500) }
 
     // ---- shared lazy state (built on first use by an op that needs it) ---
     val emb = graft.Tables.embeddings(spark, sfDir)
@@ -99,6 +94,15 @@ object Soak {
       graft.ops.Embeddings.pqEncode(col("embedding"), cbs).as("codes"))
       .localCheckpoint()
     lazy val bench = docs.filter(col("doc_id") % 20 === 7)
+    // planted mega-bucket: 10k IDENTICAL docs to union with the organic
+    // corpus. Uncapped this is a 10k-clique → 5·10⁷ pairs × 32 bands in
+    // one bucket
+    lazy val planted = spark.range(10_000).select(
+      (col("id") + lit(900_000_000L)).as("doc_id"),
+      lit("planted mega bucket boilerplate page body shared by " +
+        "the whole mirror farm with identical words throughout").as("text"),
+      lit("en").as("lang"), lit("planted").as("source"),
+      lit(100L).cast(big.schema("n_chars").dataType).as("n_chars"))
 
     // ---- op registry (name → thunk returning the row count) --------------
     val ops: Seq[(String, () => Long)] = Seq(
@@ -114,21 +118,13 @@ object Soak {
       "minhash_lsh" -> (() =>
         graft.ops.Dedup.minhashLsh(big, "doc_id", "text", 0.8,
           maxBucket = Some(2 * copies)).count()),
-      // planted mega-bucket under the DEFAULT cap (r13 item 2): 10k
-      // IDENTICAL docs alongside the organic corpus. Uncapped this is
-      // a 10k-clique → 5·10⁷ pairs × 32 bands in one bucket; the
+      // planted mega-bucket under the DEFAULT cap (r13 item 2): the
       // DefaultMaxBucket guard must drop the clique's buckets (warn
       // log) and finish flat at organic cost
-      "minhash_megabucket" -> (() => {
-        val planted = spark.range(10_000).select(
-          (col("id") + lit(900_000_000L)).as("doc_id"),
-          lit("planted mega bucket boilerplate page body shared by " +
-            "the whole mirror farm with identical words throughout")
-            .as("text"))
+      "minhash_megabucket" -> (() =>
         graft.ops.Dedup.minhashLsh(
-          big.select("doc_id", "text").unionByName(planted),
-          "doc_id", "text", 0.8).count()
-      }),
+          big.select("doc_id", "text").unionByName(planted.select("doc_id", "text")),
+          "doc_id", "text", 0.8).count()),
       // r15: the megabucket guard THROUGH the end-to-end wrapper —
       // the r14 soak capped minhashLsh only; dedupNearCanonical now
       // inherits the default cap, so the planted 10k identical-text
@@ -137,17 +133,9 @@ object Soak {
       // dedup first is the documented mitigation) while the organic
       // copies-cliques still dedup to their argmax-n_chars
       // representative. Runtime must stay flat at organic cost.
-      "dedup_near_canonical" -> (() => {
-        val planted = spark.range(10_000).select(
-          (col("id") + lit(900_000_000L)).as("doc_id"),
-          lit("planted mega bucket boilerplate page body shared by " +
-            "the whole mirror farm with identical words throughout")
-            .as("text"),
-          lit("en").as("lang"), lit("planted").as("source"),
-          lit(100L).cast(big.schema("n_chars").dataType).as("n_chars"))
+      "dedup_near_canonical" -> (() =>
         graft.ops.Dedup.dedupNearCanonical(big.unionByName(planted),
-          "doc_id", "text", col("n_chars"), threshold = 0.8).count()
-      }),
+          "doc_id", "text", col("n_chars"), threshold = 0.8).count()),
       // r15: the documented mitigation for identical-text mega-cliques,
       // at scale — exactFirst collapses the planted 10k clique to ONE
       // doc BEFORE banding, so the cap never fires for it and the keep
@@ -155,18 +143,10 @@ object Soak {
       // lone survivor may still near-dup-match organic copies of its
       // family). Runtime must stay flat: the exact pre-stage is one
       // hash aggregate + achiever join.
-      "dedup_near_canonical_exactfirst" -> (() => {
-        val planted = spark.range(10_000).select(
-          (col("id") + lit(900_000_000L)).as("doc_id"),
-          lit("planted mega bucket boilerplate page body shared by " +
-            "the whole mirror farm with identical words throughout")
-            .as("text"),
-          lit("en").as("lang"), lit("planted").as("source"),
-          lit(100L).cast(big.schema("n_chars").dataType).as("n_chars"))
+      "dedup_near_canonical_exactfirst" -> (() =>
         graft.ops.Dedup.dedupNearCanonical(big.unionByName(planted),
           "doc_id", "text", col("n_chars"), threshold = 0.8,
-          exactFirst = true).count()
-      }),
+          exactFirst = true).count()),
       // r15: one at-scale record of the RELIABLE materialization
       // strategy (DFS checkpoint per pin instead of executor-local
       // blocks — the executor-loss-tolerant 100-TB posture). Same op
@@ -530,30 +510,16 @@ object Soak {
     val iters = sys.env.getOrElse("SPARK_GRAFT_SOAK_ITERS", "1").toInt
     val selected = ops.filter { case (n, _) => only.forall(_(n)) }
 
-    // per-iteration attribution (as in QBench): wall + GC time +
-    // hypervisor steal per run, so an adjudication can tell heap
-    // pressure (wall ≈ GC delta) from host steal (wall tracks steal
-    // jiffies) from a real plan/op cost
-    def timeOnce(f: () => Long): (Long, Double, Double, Long) = {
-      val g0 = Runtime.gcMillis(); val s0 = Runtime.hostState()._1
-      val t0 = System.nanoTime()
-      val r = f()
-      val dt = (System.nanoTime() - t0) / 1e9
-      release() // blocks are per-run; carrying them is contamination
-      (r, dt, (Runtime.gcMillis() - g0) / 1e3, Runtime.hostState()._1 - s0)
-    }
-    // per-op: single-shot by default; median-of-N + spread with GC
-    // between iterations in adjudication mode (the SoakTpch protocol)
+    // per-op: single-shot by default, median-of-N + spread in
+    // adjudication mode, where each run's wall, GC time and steal
+    // jiffies tell heap pressure and host steal from a real op cost
     val results = selected.map { case (name, f) =>
-      val runs = Seq.fill(iters) {
-        if (iters > 1) { System.gc(); Thread.sleep(200) }
-        timeOnce(f)
-      }
+      val runs = Runtime.repeat(spark, warmups = 0, iters, after = settle())(f()).toTry.get
       if (iters > 1)
-        println(s"SOAK_ITERS $name " + runs.map { case (_, t, g, st) =>
-          f"[$t%.2f,$g%.2f,$st%d]" }.mkString(","))
-      val ts = runs.map(_._2).sorted
-      (name, runs.head._1, ts(ts.length / 2), ts.head, ts.last)
+        println(s"SOAK_ITERS $name " + runs.map(r =>
+          f"[${r.sec}%.2f,${r.gcSec}%.2f,${r.steal}%d]").mkString(","))
+      val (med, lo, hi) = Runtime.medianMinMax(runs.map(_.sec))
+      (name, runs.head.value, med, lo, hi)
     }
 
     val rt = java.lang.Runtime.getRuntime
@@ -579,11 +545,7 @@ object Soak {
         results.map { case (n, rows, med, _, _) =>
           f""""$n":{"rows":$rows,"sec":$med%.2f}""" }.mkString(",") +
         spread + s""","heap_used_mb":$heapUsedMb}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("SOAK_LOCAL.json"), json + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Runtime.appendSoakRecord(json)
     spark.stop()
   }
 }

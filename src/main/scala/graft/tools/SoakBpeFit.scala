@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.Runtime
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-fit soak at crawl-vocabulary scale (VERDICT r13 item 1):
@@ -36,16 +33,10 @@ import org.apache.spark.sql.functions._
   */
 object SoakBpeFit {
 
-  private final class JobCounter extends SparkListener {
-    val n = new AtomicInteger(0)
-    override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-      n.incrementAndGet()
-  }
-
   def main(args: Array[String]): Unit = {
     val nWords = sys.env.getOrElse("SPARK_GRAFT_FIT_WORDS", "1300000").toLong
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_FIT_MERGES", "100").toInt
-    val spark = Runtime.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = Runtime.session(Runtime.cpus)
 
     val alphabet =
       "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
@@ -63,22 +54,20 @@ object SoakBpeFit {
     val distinct = wc.count()
     require(distinct == nWords, s"vocab not distinct: $distinct != $nWords")
 
-    def run(cap: Int, pinEvery: Int): (Seq[(String, String)], Int, Double) = {
-      val counter = new JobCounter
-      spark.sparkContext.addSparkListener(counter)
-      val t0 = System.nanoTime()
-      // withBatchRelease: drop exactly this run's pins afterwards —
-      // NOT the shared wc checkpoint both runs read (sweeping the
-      // whole persistent-RDD map here killed the second run with
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-      val merges = graft.ops.Materialize.withBatchRelease {
-        graft.ops.Bpe.fitDistributed(wc, nMerges,
-          batchCap = cap, pinEvery = pinEvery)
+    // (result, Spark jobs, wall seconds) of one fit. withBatchRelease
+    // drops exactly this fit's pins afterwards — NOT the shared wc
+    // checkpoint every fit reads (sweeping the whole persistent-RDD map
+    // here killed the second fit with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    def fit[A](body: => A): (A, Int, Double) = {
+      val ((r, dt), jobs) = Runtime.JobLog.during(spark) {
+        val t0 = System.nanoTime()
+        val r = graft.ops.Materialize.withBatchRelease(body)
+        (r, (System.nanoTime() - t0) / 1e9)
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(counter)
-      (merges, counter.n.get(), dt)
+      (r, jobs.size, dt)
     }
+    def run(cap: Int, pinEvery: Int) =
+      fit(graft.ops.Bpe.fitDistributed(wc, nMerges, batchCap = cap, pinEvery = pinEvery))
 
     // batched first so the sequential run cannot inherit a warm cache
     // advantage it then "loses"; both run against the same pinned wc
@@ -93,17 +82,8 @@ object SoakBpeFit {
     // sequential pick order; WordPiece.fitDistributed scaladoc). The
     // soak measures the job economics and pins determinism across
     // runs; merge-list identity is deliberately not asserted.
-    def runWp(cap: Int): (Seq[String], Int, Double) = {
-      val counter = new JobCounter
-      spark.sparkContext.addSparkListener(counter)
-      val t0 = System.nanoTime()
-      val merged = graft.ops.Materialize.withBatchRelease {
-        graft.ops.WordPiece.fitDistributed(wc, nMerges, batchCap = cap)
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(counter)
-      (merged, counter.n.get(), dt)
-    }
+    def runWp(cap: Int) =
+      fit(graft.ops.WordPiece.fitDistributed(wc, nMerges, batchCap = cap))
     val (wB, wjB, wtB) = runWp(cap = 64)
     val (wB2, _, _) = runWp(cap = 64)
     require(wB == wB2, "batched WordPiece fit is not deterministic")
@@ -119,11 +99,7 @@ object SoakBpeFit {
         f""""wp_job_ratio":${wjS.toDouble / wjB}%.1f,""" +
         f""""wp_seq_sec":$wtS%.1f,"wp_batched_sec":$wtB%.1f,""" +
         s""""wp_batched_tokens":${wB.size},"wp_deterministic":true}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("SOAK_LOCAL.json"), json + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Runtime.appendSoakRecord(json)
     spark.stop()
   }
 }

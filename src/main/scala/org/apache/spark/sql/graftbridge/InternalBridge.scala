@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
@@ -28,4 +29,9 @@ object InternalBridge {
     * `private[sql]`), for kernels that follow `Divide`'s ANSI rule. */
   def divideByZeroError(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
+  /** Block until Spark's asynchronous listener bus has delivered every
+    * queued event (`listenerBus` is `private[spark]`), so a listener
+    * read afterwards has seen every job that already ran. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -29,6 +29,36 @@ class QueriesSpec extends SparkSpec {
     } finally Runtime.session(4)
   }
 
+  test("Runtime.repeat: warm-ups are run and dropped; the first failure stops it") {
+    var calls = 0
+    val runs = Runtime.repeat(spark, warmups = 2, iters = 3) { calls += 1; calls }
+    assert(calls == 5 && runs.toOption.get.map(_.value) == Seq(3, 4, 5))
+    calls = 0
+    val failed = Runtime.repeat(spark, warmups = 1, iters = 3) {
+      calls += 1; throw new IllegalStateException("boom")
+    }
+    assert(calls == 1 && failed.left.toOption.get.getMessage == "boom")
+  }
+
+  test("Runtime.run releases a frame pinned inside the run") {
+    val r = Runtime.run(spark)(spark.range(100).localCheckpoint().count())
+    assert(r.toOption.get.value == 100)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("Runtime.JobLog: one job per RDD count(), each with the description set") {
+    val sc = spark.sparkContext
+    val (_, jobs) = Runtime.JobLog.during(spark) {
+      (1 to 3).foreach { i =>
+        sc.setJobDescription(s"count $i")
+        sc.parallelize(1 to 10, 2).count()
+      }
+      sc.setJobDescription(null)
+    }
+    assert(jobs.map(_.desc) == Seq("count 1", "count 2", "count 3"))
+    assert(jobs.forall(j => j.wallMs >= 0 && j.stages == 1 && j.tasks == 2))
+  }
+
   test("bench battery is exactly the rows of the committed BENCH_LOCAL.json") {
     val committed = new ObjectMapper().readTree(new java.io.File("BENCH_LOCAL.json"))
       .get("queries").fieldNames.asScala.toSeq
