@@ -1,13 +1,21 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish tables (TESTDATA.md).
   *
-  * Each table is a single parquet file under `sfDir`. Reads are plain
-  * `spark.read.parquet` — predicate pushdown / column pruning reach the
-  * scan automatically, which is the scale posture: at 100 TB these would
-  * be partitioned directories and the same call sites still apply.
+  * Each table is a single parquet file under `sfDir`; pushdown and
+  * pruning reach the scan, and the same call sites apply to partitioned
+  * directories. Every parquet read goes through [[readParquet]], which
+  * memoises the inferred schema. The key is the files under the path as
+  * (absolute path, length, mtime), listed through the Hadoop
+  * `FileSystem`, plus the session's values of `inferenceConfs`, the
+  * parquet confs that change inference. A hit reads with that schema and
+  * launches no Spark job. Rewriting, adding or removing a file changes
+  * the key, so the next load re-infers. A miss returns the frame that did
+  * the inference: a cold first load still pays the footer job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +23,32 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")
+
+  private val inferenceConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (Seq[(String, Long, Long)], Seq[Option[String]]), StructType]()
+
+  /** `spark.read.parquet(path)` through the memo; `path` may be a glob. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { m =>
+      val it = fs.listFiles(m.getPath, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    }.sorted
+    val key = (files, inferenceConfs.map(spark.conf.getOption))
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        if (files.nonEmpty) schemas.put(key, df.schema)
+        df
+    }
+  }
 
   /** Scale-adaptive compute split (optimization guide §2.5, "input
     * skew: one huge unsplittable file"). The local testdata ships each
@@ -24,10 +57,9 @@ object Tables {
     * scan-stage (regex/trigram/deflate text battery, decimal
     * arithmetic, vector folds) — runs as a SINGLE task no matter how
     * many cores the session has (a row group is parquet's atomic
-    * split; measured r19: q186's gated text scan was one 1.7 s task on
-    * a 32-core session). When, and only when, the input provides fewer
-    * file splits than the session's parallelism AND is small enough
-    * that one extra shuffle is trivially cheap (< 1 GB total),
+    * split). When, and only when, the input provides fewer file splits
+    * than the session's parallelism AND is small enough that one extra
+    * shuffle is trivially cheap (< 1 GB total),
     * hash-repartition by the table's key so downstream per-row work
     * uses every core. On a real many-file 100 TB layout this is the
     * identity — no shuffle is ever added; the sub-GB bound keeps it
@@ -38,16 +70,13 @@ object Tables {
     * pinned by its own final sort, which the full oracle gate
     * (row-order-preserving diff) re-proves end to end.
     *
-    * APPLIED AT CALL SITES, not inside the loaders (r19, measured): a
-    * blanket loader-level split inserts the shuffle below REDUCING
-    * operations too — a 600k-row exchange under a 6-row aggregate —
-    * and a same-boot battery A/B read geomean 1.13 AGAINST it (cheap
-    * agg-first rows regressed 2-5× while per-row-kernel rows improved
-    * 2×). The split is only correct where the caller stacks heavy
-    * per-row compute ABOVE it before any reduction, which is
-    * call-site knowledge (guide §2.3 "aggregate before you shuffle" /
-    * §1.2 step 1). Non-file-backed frames (e.g. over a checkpoint)
-    * report no input files and pass through untouched. */
+    * Apply it at call sites, not inside the loaders: a loader-level
+    * split puts the shuffle below REDUCING operations too (a 600k-row
+    * exchange under a 6-row aggregate). The split only pays where the
+    * caller stacks heavy per-row compute ABOVE it before any reduction,
+    * which is call-site knowledge (guide §2.3 "aggregate before you
+    * shuffle" / §1.2 step 1). Non-file-backed frames (e.g. over a
+    * checkpoint) report no input files and pass through untouched. */
   private val splitBytesCap = 1L << 30
   def splitForCompute(df: DataFrame, key: org.apache.spark.sql.Column,
                       rest: org.apache.spark.sql.Column*): DataFrame = {

@@ -613,7 +613,7 @@ object Frame {
   def readCsvWithOpts(spark: SparkSession, path: String, opts: CsvOptions): Frame =
     Frame(Csv.read(spark, path, opts))
   def readParquet(spark: SparkSession, path: String): Frame =
-    Frame(spark.read.parquet(path))
+    Frame(graft.Tables.readParquet(spark, path))
   def readOrc(spark: SparkSession, path: String): Frame =
     Frame(graft.sources.Orc.readOrc(spark, path))
   /** reference top-level-array JSON (IO/JSON.hs:23-133). */

@@ -690,6 +690,18 @@ class PlanSpec extends SparkSpec {
     assert(keys == Seq(Seq("qid")), plan.treeString)
   }
 
+  test("TPC-H rows and q147: rebuilding the frame launches no job " +
+    "(Tables.load reuses the memoised schemas)") {
+    val rows = SparkEntry.queries.keys.filter(_.contains("_tpch_")).toSeq.sorted :+
+      "q147_grouping_sets"
+    assert(rows.size == 23)
+    rows.foreach(q => SparkEntry.queries(q)(spark, sfSmoke))
+    val jobs = rows.map { q =>
+      q -> Runtime.JobLog.during(spark)(SparkEntry.queries(q)(spark, sfSmoke))._2.size
+    }.filter(_._2 > 0)
+    assert(jobs.isEmpty, s"build jobs per row: $jobs")
+  }
+
   test("q197/q198 WordPiece encode: per-distinct-word stamp by equi-join " +
     "— no cartesian, no corpus window (the q185 unigram convention)") {
     for (q <- Seq("q197_wordpiece_encode", "q198_wordpiece_encode1")) {

@@ -59,6 +59,56 @@ class QueriesSpec extends SparkSpec {
     assert(jobs.forall(j => j.wallMs >= 0 && j.stages == 1 && j.tasks == 2))
   }
 
+  test("Tables.readParquet memoises the schema by file identity and inference confs") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.types.LongType
+    Tables.lineitem(spark, sfSmoke)
+    val (again, jobs) = Runtime.JobLog.during(spark)(Tables.lineitem(spark, sfSmoke))
+    assert(jobs.isEmpty, s"a memoised load launched $jobs")
+    assert(again.schema == spark.read.parquet(s"$sfSmoke/lineitem.parquet").schema)
+
+    val dir = Files.createTempDirectory("graft_schema_memo")
+    // one table file overwritten in place by another table's parquet
+    val file = dir.resolve("t.parquet")
+    Files.copy(Paths.get(s"$sfSmoke/nation.parquet"), file)
+    assert(Tables.readParquet(spark, file.toString).columns.contains("n_name"))
+    val mtime = file.toFile.lastModified
+    Files.copy(Paths.get(s"$sfSmoke/region.parquet"), file,
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(file.toFile.setLastModified(mtime + 10000))
+    assert(Tables.readParquet(spark, file.toString).columns.toSeq ==
+      spark.read.parquet(s"$sfSmoke/region.parquet").columns.toSeq)
+
+    // a Spark-written directory overwritten with another schema
+    val out = dir.resolve("d").toString
+    spark.range(3).toDF("a").write.parquet(out)
+    assert(Tables.readParquet(spark, out).columns.toSeq == Seq("a"))
+    spark.range(3).selectExpr("id AS b", "'x' AS c").write.mode("overwrite").parquet(out)
+    assert(Tables.readParquet(spark, out).columns.toSeq == Seq("b", "c"))
+
+    // TIMESTAMP(NANOS) infers as long only under nanosAsLong; Spark
+    // refuses it otherwise, so a reused schema would hide the refusal
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val nanosType = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val nanos = dir.resolve("nanos.parquet").toString
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(nanos))
+      .withType(nanosType).build()
+    w.write(new SimpleGroupFactory(nanosType).newGroup().append("ts", 1L))
+    w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(Tables.readParquet(spark, nanos).schema("ts").dataType == LongType)
+      spark.conf.set(key, "false")
+      intercept[AnalysisException](Tables.readParquet(spark, nanos))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("bench battery is exactly the rows of the committed BENCH_LOCAL.json") {
     val committed = new ObjectMapper().readTree(new java.io.File("BENCH_LOCAL.json"))
       .get("queries").fieldNames.asScala.toSeq

@@ -39,6 +39,16 @@ class SourcesSpec extends SparkSpec {
       src.orderBy("id").collect().toSeq)
   }
 
+  test("Frame.readParquet sees a writeParquet overwrite with another schema") {
+    import graft.api.Frame
+    val dir = Files.createTempDirectory("graft_parquet").resolve("out").toString
+    Frame(Seq((1L, "a")).toDF("id", "s")).writeParquet(dir)
+    assert(Frame.readParquet(spark, dir).df.columns.toSeq == Seq("id", "s"))
+    Frame(Seq((2.5, true)).toDF("v", "flag")).writeParquet(dir)
+    val back = Frame.readParquet(spark, dir).df
+    assert(back.columns.toSeq == Seq("v", "flag") && back.count() == 1)
+  }
+
   test("ORC round trip preserves values, types, and nulls") {
     val dir = Files.createTempDirectory("graft_orc").resolve("out").toString
     val src = Seq(
