@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    argmax row (the KMeans bounded-driver-collect pattern), and one
   *    rewrite projection. The vocabulary frame is re-pinned
   *    (localCheckpoint) each round to keep the plan flat across the
-  *    iteration — the KMeans/connectedComponents lineage-cut pattern;
+  *    iteration — the KMeans lineage-cut pattern;
   *  - encoding is RELATIONAL at corpus scale: each distinct word is
   *    encoded once (the merge-loop scan is a per-word JVM function —
   *    inherently iterative, no Catalyst expression expresses it — but

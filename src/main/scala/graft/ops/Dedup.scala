@@ -1105,55 +1105,25 @@ object Dedup {
     graft.expr.VectorExpressions.simhashSig(hs, bits)
   }
 
-  /** Connected components over an undirected pair list (d1, d2) —
-    * iterative min-label propagation: every node starts as its own
-    * label; each round takes the min of its own and its neighbors'
-    * labels; at convergence label = the component's minimum id. Each
-    * round is one shuffle join + aggregate; rounds needed = graph
-    * diameter (near-dup clusters are shallow — a handful). Lineage is
-    * cut per round with localCheckpoint so the plan doesn't grow
-    * unboundedly; convergence is a count of changed labels.
-    * Returns (node, component). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = Materialize.pin(
-      pairs.select(col("d1").as("a"), col("d2").as("b"))
-        .union(pairs.select(col("d2").as("a"), col("d1").as("b")))
-        .distinct())
-    var labels = Materialize.pin(
-      edges.select(col("a").as("node")).distinct()
-        .withColumn("label", col("node")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = edges.join(labels, edges("b") === labels("node"))
-        .groupBy(col("a")).agg(min(col("label")).as("nbr_min"))
-      val updated = Materialize.pin(
-        labels.join(nbrMin, labels("node") === nbrMin("a"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("new_label"),
-            col("label")))
-      converged = updated.filter(col("new_label") < col("label")).isEmpty
-      labels = updated.select(col("node"), col("new_label").as("label"))
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: labels still changing after maxIter=$maxIter " +
-          "rounds (graph diameter exceeds maxIter); returning would split " +
-          "components and silently under-dedup. Raise maxIter.")
-    labels.withColumnRenamed("label", "component")
-  }
+  /** Connected components over an undirected pair list (d1, d2): one
+    * aggregate collects the pairs into a single group, then
+    * [[graft.expr.ComponentLabels]] runs union-find inside that one task
+    * (which holds the whole pair list) and labels each node with its
+    * component's minimum id, then `inline`. No join, no pin, no driver
+    * action, no round cap. Returns (node, component). */
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    pairs.agg(collect_list(array(col("d1"), col("d2"))).as("__e"))
+      .select(inline(graft.expr.GraphKernels.components(col("__e"))))
 
   /** Duplicate-cluster size report — the standard dedup audit table
     * (how many 2-clusters, 3-clusters, ...; mirror-heavy crawls show a
     * long tail of large clusters): [[connectedComponents]] over the
     * near-dup pairs, then the size histogram. Docs with no pair are
-    * singletons, not clusters — they never enter the pair table and
-    * are excluded by construction (their count is n_docs − Σ
-    * size·n_clusters). Both aggregates are pair-bounded (nodes ≤
-    * 2·pairs), far below corpus scale. Returns (size, n_clusters). */
-  def dupClusterSizes(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponents(pairs, maxIter)
+    * singletons, not clusters — they never enter the pair table and are
+    * excluded by construction (their count is n_docs − Σ
+    * size·n_clusters). Returns (size, n_clusters). */
+  def dupClusterSizes(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs)
       .groupBy("component").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_clusters"))
 

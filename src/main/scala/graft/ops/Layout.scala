@@ -100,7 +100,7 @@ object Layout {
       "(in-place rewrite would destroy the source on job failure)")
     val (bytes, before) = parquetFootprint(spark, src)
     val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.parquet(src)
+    val df = graft.Tables.readParquet(spark, src)
     val out =
       if (partitionBy.nonEmpty)
         df.repartition(want, partitionBy.map(org.apache.spark.sql.functions.col): _*)

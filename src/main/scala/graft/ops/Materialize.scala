@@ -3,12 +3,13 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 
 /** Process-wide materialization strategy for the engine's iterative
-  * and multi-consumer operators (pageRank, connectedComponents, BPE
-  * rounds, the incremental dedup family, packing prefix sums, ...).
-  * Each of those pins an intermediate frame once per round so (a)
-  * lineage stays round-deep-1 instead of re-deriving exponentially,
-  * and (b) frames consumed by several downstream branches compute
-  * once.
+  * and multi-consumer operators (BPE rounds, the incremental dedup
+  * family, packing prefix sums, ...). Each of those pins an
+  * intermediate frame once per round so (a) lineage stays
+  * round-deep-1 instead of re-deriving exponentially, and (b) frames
+  * consumed by several downstream branches compute once. MMR, PageRank
+  * and connected components pin nothing: each runs every round inside
+  * one task (`MmrSelect`, `PageRankIterate`, `ComponentLabels`).
   *
   * HOW a frame pins is a deployment decision, not a per-operator one,
   * so it lives here as one shared knob:

@@ -42,7 +42,7 @@ object ModelStore {
 
   /** load BPE merges in merge order — [[Bpe.encodeTokens]]-ready. */
   def loadBpeMerges(spark: SparkSession, dir: String): Seq[(String, String)] =
-    spark.read.parquet(dir)
+    graft.Tables.readParquet(spark, dir)
       .orderBy("rank")
       .select("left", "right")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -58,7 +58,7 @@ object ModelStore {
   /** load a unigram-LM vocabulary, sorted by piece ([[Unigram.fit]]'s
     * return convention) — [[Unigram.encodeTokens]]-ready. */
   def loadUnigramVocab(spark: SparkSession, dir: String): Seq[(String, Double)] =
-    spark.read.parquet(dir)
+    graft.Tables.readParquet(spark, dir)
       .orderBy("piece")
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
 
@@ -77,7 +77,7 @@ object ModelStore {
   /** load a WordPiece vocabulary in vocab order —
     * [[WordPiece.encodeTokens]]-ready. */
   def loadWordPieceVocab(spark: SparkSession, dir: String): Seq[String] =
-    spark.read.parquet(dir)
+    graft.Tables.readParquet(spark, dir)
       .orderBy("rank")
       .select("piece")
       .collect().map(_.getString(0)).toSeq
@@ -91,7 +91,7 @@ object ModelStore {
 
   /** load language-ID profiles — score/predict/margin-ready. */
   def loadLangProfiles(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    graft.Tables.readParquet(spark, dir)
 
   /** persist any vocabulary-sized model TABLE — IVF centroid tables,
     * [[KMeans.lloydProfile]] outputs, fitted threshold tables — under
@@ -105,7 +105,7 @@ object ModelStore {
     * order for downstream collects/broadcasts. */
   def loadModelTable(spark: SparkSession, dir: String,
                      orderCols: String*): DataFrame = {
-    val t = spark.read.parquet(dir)
+    val t = graft.Tables.readParquet(spark, dir)
     if (orderCols.isEmpty) t else t.orderBy(orderCols.map(col): _*)
   }
 
@@ -129,7 +129,7 @@ object ModelStore {
     * (doubles round-trip parquet untouched). */
   def loadPqCodebooks(spark: SparkSession,
                       dir: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(dir)
+    graft.Tables.readParquet(spark, dir)
       .orderBy("subspace", "code", "pos")
       .collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)

@@ -345,7 +345,7 @@ object Pipeline {
   private[graft] def v8IngestSurvivors(s: SparkSession,
                                        d: String): (DataFrame, Long) = {
     val st = v8State(s, d)
-    val keys = s.read.parquet(s"$st/keys")
+    val keys = Tables.readParquet(s, s"$st/keys")
     val nw = v7New(s, d)
     val diff = graft.ops.Materialize.pin(
       Dedup.snapshotDiff(keys,
@@ -363,14 +363,14 @@ object Pipeline {
         .select(col("doc_id"), col("ct")))
     val newArrays = graft.ops.Materialize.pin(
       Dedup.shingleHashArrays(gated, "doc_id", "ct"))
-    val seenArrays = s.read.parquet(s"$st/shingles")
+    val seenArrays = Tables.readParquet(s, s"$st/shingles")
       .join(goneIds, Seq("doc_id"), "left_anti")
     val dups = Dedup.minhashLshIncrementalArrays(
       newArrays, seenArrays, "doc_id", 0.8)
     val survivors = gated.join(
       dups.select(col("d1").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
-    val priorEnd = s.read.parquet(s"$st/manifest")
+    val priorEnd = Tables.readParquet(s, s"$st/manifest")
       .select("prior_end").collect()(0).getLong(0)
     (survivors, priorEnd)
   }
@@ -1048,8 +1048,8 @@ object Pipeline {
           FROM documents)
         ORDER BY doc_id""")),
 
-    // --- near-dup clustering: LSH pairs → connected components (iterative
-    // min-label propagation; label = component min id). The oracle
+    // --- near-dup clustering: LSH pairs → connected components (in-task
+    // union-find; label = component min id). The oracle
     // recomputes exact-Jaccard pairs and closes them transitively with a
     // recursive CTE — algorithm-independent agreement on every component.
     "q64_neardup_components" -> Q(
@@ -1165,7 +1165,7 @@ object Pipeline {
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("value")))
           .writeParquet(out, partitionBy = Seq("event_type"))
-        s.read.parquet(out)
+        Tables.readParquet(s, out)
           .filter(col("event_type") === "purchase")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
@@ -3369,11 +3369,11 @@ object Pipeline {
     // (Graph.pageRank — Brin & Page 1998; the link-centrality quality
     // prior of web-crawl curation, exercised here on the TPC-H bipartite
     // trade graph (suppliers have no out-edges, so the dangling-mass
-    // redistribution path is live every iteration). One iteration = one
-    // rank⋈edge equi-join + one dst-keyed hash aggregate; dangling mass
-    // is a 1-row broadcast; per-iteration localCheckpoint keeps lineage
-    // flat. Every sum runs the exact DECIMAL(38,18) register, so the
-    // oracle unrolls all 3 iterations as CTEs and matches bit-for-bit.)
+    // redistribution path is live every iteration). One aggregate
+    // collects the edge list and all 3 iterations run inside that task
+    // (no join, no pin). Every sum runs the exact DECIMAL(38,18)
+    // register, so the oracle unrolls all 3 iterations as CTEs and
+    // matches bit-for-bit.)
     "q170_pagerank" -> Q(
       (s, d) => {
         val edges = Tables.orders(s, d)
@@ -3403,8 +3403,7 @@ object Pipeline {
         // MATERIALIZED: DuckDB inlines multiply-referenced CTEs, so the
         // iteration chain would re-evaluate r_{t-1}'s whole pipeline once
         // per reference — combinatorial at sf1 (observed: 80 GB of temp
-        // spill). Spark's side localCheckpoints each iteration for the
-        // same reason.
+        // spill).
         s"""WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey AS src,
             l_suppkey + 1000000 AS dst
           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -3908,13 +3907,13 @@ object Pipeline {
     // convention: a registrable DOMAIN per doc via Urls.urlDomain on a
     // synthetic per-source URL (the oracle PREDICTS source||'.co.uk' —
     // stronger than replaying the strip chain, q106-style); a toy
-    // lang→domain citation graph ranked by 2 PageRank iterations
+    // lang→domain citation graph ranked by 2 in-task PageRank iterations
     // (q170's exact-decimal register); script-profile + readability
     // GATES (q174/q175 scan-stage replays); per-source WINSORIZED
     // readability as the robust quality signal (q179); a blended
     // score, the q141 bounded-heap top-20 shortlist, and an
     // MMR-DIVERSIFIED final 5 over the shortlist's embeddings (q177's
-    // unrolled greedy rounds). Every stage is an already-oracled
+    // in-task greedy rounds). Every stage is an already-oracled
     // operator; this row proves they interoperate.)
     "q186_pipeline_v4" -> Q(
       (s, d) => {
@@ -5985,11 +5984,11 @@ object Pipeline {
     // back to local disk to save one scan is the wrong trade (the
     // minhashLshIncrementalArrays scaladoc).)
     "q229_v8_state_keys" -> Q(
-      (s, d) => s.read.parquet(s"${v8State(s, d)}/keys").orderBy("doc_id"),
+      (s, d) => Tables.readParquet(s, s"${v8State(s, d)}/keys").orderBy("doc_id"),
       Some(s"""SELECT doc_id, k FROM ($v7OldSql) t ORDER BY doc_id""")),
 
     "q230_v8_state_clean" -> Q(
-      (s, d) => s.read.parquet(s"${v8State(s, d)}/clean").orderBy("doc_id"),
+      (s, d) => Tables.readParquet(s, s"${v8State(s, d)}/clean").orderBy("doc_id"),
       Some(s"""SELECT doc_id, ${v6CleanSql("text")} AS ct
         FROM ($v7OldTextSql) t ORDER BY doc_id""")),
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * §2.2 "Streaming": the reference has none; the 100 TB pipeline needs it).
   *
   * The transforms are written against plain DataFrames so the SAME code
-  * path serves batch and stream — `hourlyStats(spark.read.parquet(...))`
+  * path serves batch and stream — `hourlyStats(Tables.readParquet(spark, ...))`
   * and `hourlyStats(spark.readStream.parquet(...))` produce the same
   * logical plan, which Catalyst plans as micro-batch incremental
   * aggregation under `writeStream`.
@@ -195,7 +195,7 @@ object Events {
     * ([[withLateData]]). Returns the result table. */
   def runStreamToMemory(spark: SparkSession, sourceDir: String, name: String,
                         transform: DataFrame => DataFrame = hourlyStats): DataFrame = {
-    val schema = spark.read.parquet(sourceDir).schema
+    val schema = graft.Tables.readParquet(spark, sourceDir).schema
     val stream = spark.readStream.schema(schema).parquet(sourceDir)
     val q = transform(stream)
       .writeStream.outputMode(OutputMode.Complete)

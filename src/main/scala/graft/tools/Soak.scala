@@ -45,7 +45,7 @@ object Soak {
     // the rewrite fixed
     val reuse = sys.env.get("SPARK_GRAFT_SOAK_REUSE").contains("1") &&
       new java.io.File(s"$out/documents.parquet").exists() && {
-        val cols = spark.read.parquet(s"$out/documents.parquet").columns.toSet
+        val cols = graft.Tables.readParquet(spark, s"$out/documents.parquet").columns.toSet
         Set("doc_id", "text", "lang", "source", "n_chars").subsetOf(cols)
       }
     if (!reuse) {
@@ -62,7 +62,7 @@ object Soak {
       }.reduce(_ unionAll _)
       expanded.write.mode(SaveMode.Overwrite).parquet(s"$out/documents.parquet")
     }
-    val big = spark.read.parquet(s"$out/documents.parquet")
+    val big = graft.Tables.readParquet(spark, s"$out/documents.parquet")
     val nDocs = big.count()
 
     // Runs after every run's pin release. Broadcasts (tokenizer vocabs,
@@ -388,8 +388,8 @@ object Soak {
       "token_kl" -> (() =>
         graft.ops.Mixture.tokenKlDivergence(big, "source", "text").count()),
       // PageRank over a key-offset trade graph replicated by the docs
-      // fixture: nodes/edges scale linearly with copies; 3 iterations
-      // of join + aggregate + checkpoint
+      // fixture: nodes/edges scale linearly with copies; one collect
+      // aggregate, then 3 iterations inside one task
       "pagerank" -> (() =>
         graft.ops.Graph.pageRank(
           big.select((col("doc_id") % 50000).as("s"),

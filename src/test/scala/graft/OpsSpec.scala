@@ -702,16 +702,12 @@ class OpsSpec extends SparkSpec {
     assert(got.isNullAt(3))
   }
 
-  test("connected components: unconverged maxIter throws instead of splitting") {
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 1).collect()
-    }
-    assert(e.getMessage.contains("maxIter"))
-    // and with enough rounds the same graph resolves to one component
-    val ok = Dedup.connectedComponents(chain, maxIter = 10)
-      .select("component").distinct().count()
-    assert(ok == 1L)
+  test("connected components: a 50-node chain is one component labelled 1") {
+    // diameter 49: no round cap splits it
+    val chain = (1L until 50L).map(i => (i, i + 1)).toDF("d1", "d2").repartition(3)
+    val comps = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    assert(comps.map(_._1).sorted.toSeq == (1L to 50L))
+    assert(comps.forall(_._2 == 1L), comps.toSeq)
   }
 
   test("kmeans: empty init and non-long id fail fast") {
@@ -765,6 +761,23 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+    // string ids label by string order; a self-pair (x, x) is its own
+    // component; a NULL endpoint links nothing (y stays alone) and adds
+    // one (NULL, NULL) row. Rows as min-label propagation gave them, the
+    // same for 1 or 3 input partitions and 1 or 7 shuffle partitions
+    val sPairs = Seq[(String, String)](("b", "a"), ("c", "b"), ("x", "x"),
+      ("y", null), ("d", "e"), ("e", "d")).toDF("d1", "d2")
+    val sWant = Seq[(String, String)]((null, null), ("a", "a"), ("b", "a"),
+      ("c", "a"), ("d", "d"), ("e", "d"), ("x", "x"), ("y", "y"))
+    val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    for (parts <- Seq(1, 3); p <- Seq(1, 7)) {
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      try {
+        val got = Dedup.connectedComponents(sPairs.repartition(parts))
+          .orderBy("node").as[(String, String)].collect().toSeq
+        assert(got == sWant, s"$parts input, $p shuffle partitions")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", shuffleWidth)
+    }
     // end-to-end near-dup dedup: docs 0/1 identical, 2 near-dup of 0 →
     // one cluster keeps only doc 0; 3 and 4 untouched
     val kept = Dedup.dedupNearMinhash(docs, "doc_id", "text", 0.5)
@@ -2825,6 +2838,32 @@ class OpsSpec extends SparkSpec {
     assert(sPr.keySet == Set("a.com", "b.com", "c.com", "d.com"))
     assert(sPr("c.com") == pr(3L) && sPr("b.com") == pr(2L),
       "isomorphic graph, identical ranks")
+    // exact rows, as the per-iteration join-and-pin loop gave them: a
+    // self-loop (5→5), a multi-edge (1→2 twice), NULL endpoints (the
+    // 6→NULL and NULL→7 edges drop, so 6 and 7 are not nodes) and a
+    // dangling sink (3); 10 iterations and 1; the same rows for 1 or 3
+    // input partitions and 1 or 7 shuffle partitions
+    val odd = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), Some(3L)), (Some(4L), Some(2L)), (Some(4L), Some(3L)),
+      (Some(5L), Some(5L)), (Some(1L), Some(2L)), (Some(6L), None),
+      (None, Some(7L)), (Some(5L), Some(1L))).toDF("s", "t")
+    val want10 = Seq(1L -> 0.154251968447, 2L -> 0.257521472954,
+      3L -> 0.345287505723, 4L -> 0.08868708443, 5L -> 0.154251968447)
+    val want1 = Seq(1L -> 0.149, 2L -> 0.319, 3L -> 0.319, 4L -> 0.064,
+      5L -> 0.149)
+    def prRows(df: org.apache.spark.sql.DataFrame, iterations: Int) =
+      Graph.pageRank(df, "s", "t", iterations).orderBy("node")
+        .as[(Long, Double)].collect().toSeq
+    val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    for (parts <- Seq(1, 3); p <- Seq(1, 7)) {
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      try {
+        val in = odd.repartition(parts)
+        assert(prRows(in, 10) == want10, s"$parts input, $p shuffle partitions")
+        assert(prRows(in, 1) == want1, s"$parts input, $p shuffle partitions")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", shuffleWidth)
+    }
+    assert(prRows(Seq.empty[(Long, Long)].toDF("s", "t"), 4).isEmpty)
   }
 
   test("Materialize.Reliable: iterative ops survive the reliable-" +

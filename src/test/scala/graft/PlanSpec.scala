@@ -468,17 +468,13 @@ class PlanSpec extends SparkSpec {
       plan.take(400))
   }
 
-  test("q170 PageRank: every iteration is equi-join + hash aggregate — " +
-    "no cartesian beyond the 1-row dangling broadcast, no window") {
+  test("q170 PageRank: in-kernel iterations, no nested loop, no cartesian, no window") {
     val plan = SparkEntry.queries("q170_pagerank")(spark, sfSmoke)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), "rank joins must stay equi")
+    assert(!plan.contains("CartesianProduct"), "the edge join must stay equi")
     assert(!plan.contains("Window"), "no rank windows in PageRank")
-    // the dangling-mass scalar rides a broadcast nested loop (1-row side)
-    // — any OTHER BNLJ would be a scale bug, so count them: exactly one
-    // per surviving iteration stage is the crossJoin(broadcast(dang))
-    val bnlj = plan.linesIterator.count(_.contains("BroadcastNestedLoopJoin"))
-    assert(bnlj <= 1, s"unexpected non-scalar nested loops: $bnlj")
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(plan.contains("graft_pagerank"), plan)
   }
 
   test("q171 perceptual hashes plan the codegen kernels, not HOF folds") {
@@ -690,6 +686,34 @@ class PlanSpec extends SparkSpec {
     assert(keys == Seq(Seq("qid")), plan.treeString)
   }
 
+  test("PageRank and connected components: building launches no job and " +
+    "pins nothing; each plans one aggregate and no join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import spark.implicits._
+    Runtime.release(spark)
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 2L), (3L, 3L)).toDF("s", "t")
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("d1", "d2")
+    val (frames, jobs) = Runtime.JobLog.during(spark)(Seq(
+      graft.ops.Graph.pageRank(edges, "s", "t", iterations = 5),
+      graft.ops.Dedup.connectedComponents(pairs)))
+    assert(jobs.isEmpty, s"build jobs: ${jobs.map(_.desc)}")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "building pinned an RDD")
+    frames.foreach { df =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join => j }.isEmpty, plan.treeString)
+      assert(plan.collect { case a: Aggregate => a }.size == 1, plan.treeString)
+    }
+  }
+
+  test("q170, q229 and q230: a warm rebuild launches no job") {
+    val rows = Seq("q170_pagerank", "q229_v8_state_keys", "q230_v8_state_clean")
+    rows.foreach(q => SparkEntry.queries(q)(spark, sfSmoke))
+    val jobs = rows.map { q =>
+      q -> Runtime.JobLog.during(spark)(SparkEntry.queries(q)(spark, sfSmoke))._2.map(_.desc)
+    }.filter(_._2.nonEmpty)
+    assert(jobs.isEmpty, s"build jobs per row: $jobs")
+  }
+
   test("TPC-H rows and q147: rebuilding the frame launches no job " +
     "(Tables.load reuses the memoised schemas)") {
     val rows = SparkEntry.queries.keys.filter(_.contains("_tpch_")).toSeq.sorted :+
@@ -776,13 +800,13 @@ class PlanSpec extends SparkSpec {
       s"corpus text must never shuffle in the report: $shuffledText")
   }
 
-  test("q204 dup-cluster sizes: component iterations and the histogram " +
-    "are equi-joins + hash aggregates — no cartesian, no window") {
+  test("q204 dup-cluster sizes: in-kernel components, no cartesian, no window") {
     val plan = SparkEntry.queries("q204_dup_cluster_sizes")(spark, sfSmoke)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
-      "label propagation must stay an equi-join on node id")
+      "the LSH pair joins must stay equi-joins")
+    assert(plan.contains("graft_components"), plan)
     assert(!plan.contains("Window"), "the size histogram is two aggregates")
   }
 
