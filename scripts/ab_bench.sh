@@ -69,9 +69,12 @@ for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$m=ALL-UNNAMED"
 done
 
+# SPARK_DRIVER_MEM, else min(32g, half of physical memory) — build.sbt's rule
+HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {m = int($2 / 2048); print (m > 32768 ? 32768 : m) "m"}' /proc/meminfo)}
+
 run_one() {  # $1 = tree dir → prints the QBench median (seconds)
   ( cd "$1" && SPARK_GRAFT_SF_DIR="$SFDIR" \
-    java $ADD_OPENS "-Xmx${SPARK_DRIVER_MEM:-32g}" \
+    java $ADD_OPENS "-Xmx$HEAP" \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
       -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
       graft.tools.QBench "$QUERY" "$ITERS" 2>/dev/null ) \

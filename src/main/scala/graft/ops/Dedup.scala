@@ -76,7 +76,10 @@ object Dedup {
     * hashes dedupe once (benchmark is small), the corpus side is a
     * scan + explode, and the join is a semi-style equi-join on 8-byte
     * hashes — linear in corpus size, never all-pairs. Returns
-    * (id, n_shared) for flagged docs only. */
+    * (id, n_shared) for flagged docs only. Pruning the corpus side
+    * before that shuffle is left to Spark's runtime Bloom filter
+    * (`spark.sql.optimizer.runtime.bloomFilter.*`), which the
+    * optimizer can inject into selective joins over large scans. */
   def decontaminationReport(corpus: DataFrame, benchmark: DataFrame,
                             id: String, text: String,
                             n: Int = 8): DataFrame = {
@@ -84,59 +87,6 @@ object Dedup {
       .select(explode_outer(col("hs")).as("g")).distinct()
     val cg = ngramHashArrays(corpus, id, text, n)
       .select(col(id), explode_outer(col("hs")).as("g"))
-    cg.join(bg, Seq("g"), "left_semi")
-      .groupBy(col(id)).agg(count(lit(1)).as("n_shared"))
-  }
-
-  /** `decontaminationReport` with a Bloom pre-filter on the corpus
-    * side — the corpus-scale form. The plain report shuffles EVERY
-    * corpus n-gram hash into the semi join; at 100 TB that shuffle is
-    * the whole job, even though almost no gram matches a benchmark.
-    * Here the benchmark grams additionally build a Bloom filter
-    * (lazily, a `BloomFilterAggregate` in an uncorrelated scalar
-    * subquery — nothing collects at call time; same machinery as
-    * `Skew.bloomPrunedJoin`), and the corpus gram stream is probed with
-    * the codegen `BloomFilterMightContain` BEFORE the shuffle: only
-    * grams that might match (true leaks + ~fpp false positives) ever
-    * leave the scan stage. The exact semi join then discards the false
-    * positives, so the output is IDENTICAL to `decontaminationReport`
-    * — fpp trades shuffle volume, never correctness.
-    *
-    * `expectedGrams` sizes the filter for the benchmark's distinct
-    * gram count (~9.6 bits/item at fpp 0.01 → 10⁸ grams ≈ 120 MB,
-    * broadcastable; benchmarks are small by definition).
-    *
-    * When it pays: the pre-filter wins exactly when the corpus-gram
-    * hit rate is LOW (the realistic case — almost no training text
-    * overlaps a benchmark), because the saved shuffle dwarfs the
-    * probe. On the soak fixture, where every doc family overlaps the
-    * sampled "benchmark", measured cost was ~1.26× the exact path
-    * (SOAK_LOCAL.json decontam_bloom 1.71 s vs decontam_exact 1.36 s
-    * at 40×): high overlap means the bloom prunes little and the probe
-    * is pure overhead. Use the plain report when the corpus is known
-    * to be benchmark-derived; use this one for real corpora. */
-  def decontaminationReportBloom(corpus: DataFrame, benchmark: DataFrame,
-                                 id: String, text: String, n: Int = 8,
-                                 expectedGrams: Long = 1L << 22,
-                                 fpp: Double = 0.01): DataFrame = {
-    require(expectedGrams > 0 && fpp > 0 && fpp < 1,
-      "decontaminationReportBloom: need expectedGrams > 0, 0 < fpp < 1")
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, InternalBridge}
-    val bg = ngramHashArrays(benchmark, id, text, n)
-      .select(explode_outer(col("hs")).as("g")).distinct()
-    val numBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(expectedGrams, fpp)
-    Skew.ensureBloomConf(corpus.sparkSession, expectedGrams, numBits)
-    val build = new BloomFilterAggregate(ColumnBridge.expression(col("g")),
-      Literal(expectedGrams), Literal(numBits)).toAggregateExpression()
-    val bfFrame = bg.select(ColumnBridge.column(build).as("__graft_bf"))
-    val cg = ngramHashArrays(corpus, id, text, n)
-      .select(col(id), explode_outer(col("hs")).as("g"))
-      .filter(ColumnBridge.column(BloomFilterMightContain(
-        InternalBridge.scalarSubquery(bfFrame),
-        ColumnBridge.expression(col("g")))))
     cg.join(bg, Seq("g"), "left_semi")
       .groupBy(col(id)).agg(count(lit(1)).as("n_shared"))
   }
@@ -191,140 +141,6 @@ object Dedup {
                        id: String, key: String): DataFrame =
     exact(newBatch, id, key)
       .join(seen.select(col(key)).distinct(), Seq(key), "left_anti")
-
-  /** Lazily-built Bloom filter over xxhash64 of `c` — one-row frame
-    * holding the serialized filter, for [[bloomMight]] probes via an
-    * uncorrelated scalar subquery (the `Skew.bloomPrunedJoin`
-    * machinery: nothing collects at call time; the build runs as a
-    * stage of the consuming job and ships as the subquery's broadcast
-    * value). Hashing to 64 bits first makes the filter type-agnostic;
-    * the ~n²/2⁶⁵ hash-collision mass only ever ADDS false positives,
-    * which every caller discards with an exact confirm join. */
-  private def bloomOver(df: DataFrame, c: Column, expected: Long,
-                        fpp: Double): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val numBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(expected, fpp)
-    // Spark clamps BloomFilterAggregate args to session confs with
-    // Math.min — raise them or a big filter silently saturates
-    Skew.ensureBloomConf(df.sparkSession, expected, numBits)
-    val build = new BloomFilterAggregate(
-      ColumnBridge.expression(xxhash64(c)),
-      Literal(expected), Literal(numBits)).toAggregateExpression()
-    df.select(ColumnBridge.column(build).as("__graft_bf"))
-  }
-
-  /** might-contain probe against a [[bloomOver]] frame. NULL when the
-    * probe value is null OR the filter side aggregated zero rows
-    * (BloomFilterAggregate of an empty input is null) — callers must
-    * coalesce to the semantics they need. */
-  private def bloomMight(bf: DataFrame, c: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, InternalBridge}
-    ColumnBridge.column(BloomFilterMightContain(
-      InternalBridge.scalarSubquery(bf),
-      ColumnBridge.expression(xxhash64(c))))
-  }
-
-  /** [[exactIncremental]] with Bloom filters on BOTH sides of the
-    * seen-index anti join — the corpus-scale form, result-identical.
-    *
-    * The plain incremental dedup shuffles the whole batch AND the
-    * whole historical key index into the anti join every run; at
-    * 100 TB of history that shuffle IS the job, even though almost
-    * every new document is genuinely new. Here:
-    *
-    *  1. the batch dedups internally (min id per key, as [[exact]]);
-    *  2. a Bloom filter over the SEEN keys splits the batch in the
-    *     scan stage: definitely-unseen rows (no false negatives) pass
-    *     straight to the output without ever touching a join, and only
-    *     the might-be-seen candidates — true re-ingests plus ~fpp of
-    *     the batch — go on;
-    *  3. a second Bloom filter over the CANDIDATE keys prunes the seen
-    *     index in ITS scan stage, so history contributes only keys
-    *     that might match this batch;
-    *  4. an exact anti join over the two pruned sides discards the
-    *     false positives from both filters.
-    *
-    * Both filters are lazy `BloomFilterAggregate`s in scalar
-    * subqueries (no driver collect; the serialized filter broadcasts —
-    * ~9.6 bits/key at fpp 0.01, so 10⁹ seen keys ≈ 1.2 GB: size
-    * `expectedSeen` honestly and raise `fpp` if the index is truly
-    * enormous, correctness never changes). The session's
-    * runtime-bloom-filter capacity confs are raised automatically to
-    * fit the requested size (`Skew.ensureBloomConf`) — Spark's
-    * aggregate otherwise Math.min-clamps the build at 4M items / 8 MB
-    * SILENTLY and a saturated filter stops pruning. Null-key rows are dropped
-    * by the in-batch [[exact]] stage (its key semi join cannot match
-    * null) — identical to [[exactIncremental]]; the null routing
-    * below is a refactor guard, spec-pinned against the plain
-    * variant. When it pays: low re-ingest rates AND a historical
-    * index whose shuffle is network-bound — the 1000-executor case
-    * this exists for. At local[32], where a shuffle is a memcpy, the
-    * two filter builds cost more than they save (soak A/B at 200k
-    * docs, 3 iters: plain 1.26 s vs bloom 1.98 s, identical 99 720
-    * survivors — SOAK_LOCAL.json) — the pre-filter is bought for the
-    * cluster regime, exactly like [[decontaminationReportBloom]]'s
-    * measured trade. A batch that is mostly re-crawls probes without
-    * pruning; use [[exactIncremental]] there. */
-  def exactIncrementalBloom(newBatch: DataFrame, seen: DataFrame,
-                            id: String, key: String,
-                            expectedSeen: Long = 1L << 22,
-                            expectedBatch: Long = 1L << 20,
-                            fpp: Double = 0.01): DataFrame = {
-    require(expectedSeen > 0 && expectedBatch > 0 && fpp > 0 && fpp < 1,
-      "exactIncrementalBloom: need expected counts > 0, 0 < fpp < 1")
-    // pinned: consumed by the definite filter, the candidate filter,
-    // and (via candidates) the candidate-side Bloom build.
-    val uniq = Materialize.pin(exact(newBatch, id, key))
-    val seenKeys = seen.select(col(key))
-    val seenMight = bloomMight(bloomOver(seenKeys, col(key),
-      expectedSeen, fpp), col(key))
-    // empty seen ⇒ probe is null ⇒ coalesce(false): everything is new.
-    val definite = uniq.filter(col(key).isNull ||
-      !coalesce(seenMight, lit(false)))
-    val cand = uniq.filter(coalesce(seenMight, lit(false)))
-    val candMight = bloomMight(bloomOver(cand.select(col(key)), col(key),
-      expectedBatch, fpp), col(key))
-    // empty candidate set ⇒ null probe ⇒ prune ALL of seen (vacuous).
-    val seenPruned = seenKeys.filter(coalesce(candMight, lit(false)))
-      .distinct()
-    definite.unionByName(cand.join(seenPruned, Seq(key), "left_anti"))
-  }
-
-  /** ids of `batch` rows whose key appears in `seen` — the semi-join
-    * "already-ingested" membership list, with the
-    * [[exactIncrementalBloom]] double pre-filter: a seen-side Bloom
-    * drops definitely-unseen batch rows in the scan stage (they can't
-    * be members), a candidate-side Bloom prunes the seen index in ITS
-    * scan stage, and the exact semi join discards both filters' false
-    * positives. Result-identical to
-    * `batch ⋉ seen.select(key).distinct()` (null keys are members of
-    * nothing, on both paths). The streaming [[graft.streaming.DedupStream]]
-    * exact recipe uses this as its cross-batch drop list — the state
-    * table there grows for the life of the pipeline, which is exactly
-    * the huge-seen/low-hit-rate regime the pre-filter exists for.
-    * `batch` should be pinned by the caller if it feeds other
-    * consumers (the recipes pin it). */
-  def seenKeyIdsBloom(batch: DataFrame, seen: DataFrame,
-                      id: String, key: String,
-                      expectedSeen: Long, expectedBatch: Long = 0L,
-                      fpp: Double = 0.01): DataFrame = {
-    require(expectedSeen > 0 && fpp > 0 && fpp < 1,
-      "seenKeyIdsBloom: need expectedSeen > 0, 0 < fpp < 1")
-    val eb = if (expectedBatch > 0) expectedBatch else expectedSeen
-    val seenKeys = seen.select(col(key))
-    val seenMight = bloomMight(bloomOver(seenKeys, col(key),
-      expectedSeen, fpp), col(key))
-    val cand = batch.filter(coalesce(seenMight, lit(false)))
-    val candMight = bloomMight(bloomOver(cand.select(col(key)), col(key),
-      eb, fpp), col(key))
-    val seenPruned = seenKeys.filter(coalesce(candMight, lit(false)))
-      .distinct()
-    cand.join(seenPruned, Seq(key), "left_semi").select(col(id))
-  }
 
   /** exact n-gram Jaccard similarity join: all pairs with J >= threshold.
     * Returns (d1, d2, jac). Candidates only for docs sharing >= 1 shingle.
@@ -619,8 +435,7 @@ object Dedup {
     * Scale shape: the benchmark vocabulary is distinct 8-byte hashes of
     * a SMALL frame (eval sets are tiny by definition) and is broadcast,
     * so corpus windows are filtered in the scan stage — no corpus-wide
-    * shuffle of gram hashes (the [[decontaminationReportBloom]]
-    * motivation, achieved here exactly rather than approximately).
+    * shuffle of gram hashes.
     * Everything downstream (coverage explode, token reassembly) pays
     * only for documents that actually contain contaminated spans. */
   def removeContaminatedSpans(corpus: DataFrame, benchmark: DataFrame,

@@ -75,6 +75,7 @@ object Multimodal {
                            height: Option[Int], mean_luma: Option[Double],
                            luma_hist: Option[Seq[Long]])
   case class MediaPayload(doc_id: Long, payload: Array[Byte])
+  case class LumaGrid(doc_id: Long, pixels: Option[Seq[Double]])
 
   private val payloadEnc: Encoder[(Long, Array[Byte])] =
     Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
@@ -314,9 +315,6 @@ object Multimodal {
           MediaPayload(id, codec.resize(payload, w, h).orNull)
         }
       }(Encoders.product[MediaPayload]).toDF()
-
-  /** typed rows for [[decodeLumaGrid]]. */
-  private case class LumaGrid(doc_id: Long, pixels: Option[Seq[Double]])
 
   /** REAL decode → w×h downsampled luma grid as array<double> (the
     * perceptual-hash input): one decode + resize per payload, per

@@ -310,12 +310,12 @@ object Similarity {
     * within a cell. The eval side is small by nature (a benchmark
     * suite, not a corpus), so its assigned (cell, vector) rows
     * BROADCAST into the corpus scan — the corpus never shuffles for
-    * the probe, exactly the q138 Bloom-probe posture but in embedding
-    * space. A contaminated doc whose nearest eval twin landed in a
-    * different cell is the documented miss that buys the linear scan
-    * (raise nProbe-style recall by densifying centroids, not by
-    * widening the join). Returns the KEPT corpus rows (id, cell) —
-    * [[semanticDedup]]'s output convention. */
+    * the probe (as `Dedup.removeContaminatedSpans` broadcasts its
+    * benchmark n-gram vocabulary). A contaminated doc whose nearest
+    * eval twin landed in a different cell is the documented miss that
+    * buys the linear scan (raise nProbe-style recall by densifying
+    * centroids, not by widening the join). Returns the KEPT corpus
+    * rows (id, cell) — [[semanticDedup]]'s output convention. */
   def semanticDecontaminate(corpus: DataFrame, eval: DataFrame,
                             centroids: DataFrame, id: String, vec: String,
                             threshold: Double): DataFrame = {

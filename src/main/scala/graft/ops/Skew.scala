@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Manual skew tooling for equi-joins AQE can't fix (broadcast-disabled
@@ -17,80 +17,6 @@ import org.apache.spark.sql.functions._
 object Skew {
 
   private val Salt = "__graft_salt"
-
-  /** Session conf capping the serialized size a graft-built Bloom
-    * filter may reach (bytes; default 512 MB). The filter broadcasts
-    * to every executor AND lives on the driver while it merges — a
-    * 10¹⁰-key build at fpp 0.01 is ~12 GB, which dies in broadcast
-    * long after the caller stopped watching. Above the budget the
-    * builder REFUSES up front with the fix spelled out (raise `fpp`,
-    * or opt in by raising this conf). */
-  val MaxFilterBytesConf = "graft.bloom.maxFilterBytes"
-  val DefaultMaxFilterBytes: Long = 512L << 20
-
-  /** Raise the session's runtime-bloom-filter capacity confs to at
-    * least the requested build size. Spark's `BloomFilterAggregate`
-    * SILENTLY clamps both its arguments with
-    * `Math.min(requested, conf)` — defaults
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` = 4×10⁶ and
-    * `...maxNumBits` = 67 108 864 (8 MB) — so a filter sized for a
-    * 10⁸-key seen index would saturate at 8 MB and quietly stop
-    * pruning (correctness is unaffected — a saturated filter only
-    * passes everything — but the pre-filter the caller paid for
-    * vanishes). Every graft bloom builder calls this with its computed
-    * size; the confs are only ever raised, never lowered, and raising
-    * them has no effect on Spark's own injected runtime filters unless
-    * their stats-derived sizes actually exceed the old caps. Warn-logs
-    * on change so the session mutation is visible. NOTE the raise is
-    * session-global and PERMANENT (it outlives the build that asked
-    * for it) — deliberate, since a later identical build must not be
-    * re-clamped, but callers sharing a session should know.
-    *
-    * Also enforces the [[MaxFilterBytesConf]] serialized-size budget:
-    * refuses (IllegalArgumentException) before any job runs when the
-    * requested bits exceed it — a sizing mistake should fail at call
-    * time, not as an executor OOM mid-broadcast.
-    *
-    * Thread-safe: the check-then-set races under concurrent builds on
-    * one session (a smaller concurrent raise could overwrite a larger
-    * one, re-introducing the silent clamp), so both raises run inside
-    * one session-scoped lock. */
-  private[graft] def ensureBloomConf(spark: org.apache.spark.sql.SparkSession,
-                                     expectedItems: Long,
-                                     numBits: Long): Unit = {
-    def raise(key: String, needed: Long): Unit = {
-      // registered SQLConf entries resolve their defaults through get
-      val cur = spark.conf.get(key).toLong
-      if (cur < needed) {
-        org.slf4j.LoggerFactory.getLogger("graft.ops.Skew").warn(
-          s"raising $key $cur -> $needed (the bloom build would be " +
-            "silently clamped below the requested capacity otherwise)")
-        spark.conf.set(key, needed)
-      }
-    }
-    // budget read + check + raises all inside the session lock: the
-    // read participates in the same check-then-set the lock exists for
-    // (a concurrent budget raise must not be judged against a stale
-    // read). Parse failures name the conf instead of surfacing as a
-    // bare NumberFormatException — a malformed budget value must not
-    // cost the user the refusal message the budget exists to provide.
-    spark.synchronized {
-      val budget = spark.conf.getOption(MaxFilterBytesConf).map { v =>
-        try v.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$MaxFilterBytesConf must be a byte count (long), got '$v'")
-        }
-      }.getOrElse(DefaultMaxFilterBytes)
-      val bytes = numBits / 8
-      require(bytes <= budget,
-        s"bloom filter sized at $bytes serialized bytes ($numBits bits for " +
-          s"$expectedItems items) exceeds the $budget-byte budget — raise " +
-          s"fpp (bits scale with ln(1/fpp)), or opt in by setting " +
-          s"$MaxFilterBytesConf above $bytes")
-      raise("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", expectedItems)
-      raise("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", numBits)
-    }
-  }
 
   /** inner/left equi-join with salting. The left salt is derived from
     * the CONTENT of the whole left row (xxhash64 over every column), so
@@ -112,43 +38,5 @@ object Skew {
     val r = right.withColumn(Salt,
       explode(sequence(lit(0), lit(factor - 1))))
     l.join(r, keys :+ Salt, how).drop(Salt)
-  }
-
-  /** Bloom-pruned inner join: build a Bloom filter over the smaller
-    * side's (long) key, broadcast it, and filter the big side BEFORE
-    * the shuffle — the classic semi-join reduction for selective joins
-    * where both sides are too big to broadcast but few big-side rows
-    * actually match. False positives only cost shuffle volume (the
-    * inner join discards them), so the result is EXACTLY the plain
-    * join. `expectedItems`/`fpp` size the filter: ~9.6 bits per item
-    * at 1% fpp, so 10⁸ keys ≈ 120 MB — broadcastable where the rows
-    * are not. (AQE's runtime bloom pruning covers some of these
-    * shapes; this is the explicit handle.)
-    *
-    * The build is LAZY: the filter is a `BloomFilterAggregate` inside
-    * an uncorrelated scalar subquery, so it runs as a stage of the
-    * consuming job (nothing collects at call time) and the result ships
-    * to executors as the subquery's broadcast value. The probe is
-    * Spark's codegen `BloomFilterMightContain` — no per-row UDF. This
-    * is the same machinery as Spark's own InjectRuntimeFilter, held
-    * explicitly. Keys must be castable to long; a NULL big-side key
-    * never matches an inner join and is pruned. */
-  def bloomPrunedJoin(big: DataFrame, small: DataFrame, key: String,
-                      expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    require(expectedItems > 0 && fpp > 0 && fpp < 1)
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, InternalBridge}
-    val numBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(expectedItems, fpp)
-    ensureBloomConf(big.sparkSession, expectedItems, numBits)
-    val build = new BloomFilterAggregate(
-      ColumnBridge.expression(col(key).cast("long")),
-      Literal(expectedItems), Literal(numBits)).toAggregateExpression()
-    val bfFrame = small.select(ColumnBridge.column(build).as("__graft_bf"))
-    val probe = BloomFilterMightContain(
-      InternalBridge.scalarSubquery(bfFrame),
-      ColumnBridge.expression(col(key).cast("long")))
-    big.filter(ColumnBridge.column(probe)).join(small, Seq(key), "inner")
   }
 }

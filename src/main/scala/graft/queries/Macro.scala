@@ -1165,37 +1165,6 @@ object Macro {
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '2001-08-06'
         GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus"""), bench = true),
-
-    // --- Bloom-pruned fact-fact join (Skew.bloomPrunedJoin, the
-    // explicit runtime-filter handle): revenue of line items belonging
-    // to the top ~1% most expensive orders. Neither side broadcasts at
-    // corpus scale; the selective side builds a lazy Bloom filter
-    // (scalar-subquery stage, nothing collected) that prunes the fact
-    // scan BEFORE the shuffle, and the inner join discards the ~fpp
-    // false positives — so the oracle is the PLAIN join: hash-matching
-    // it proves the pruning is invisible in the result.
-    "q139_bloom_join" -> Q(
-      (s, d) => {
-        val big = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("okey"),
-            (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-              .as("rev"))
-        val small = Tables.orders(s, d)
-          .filter(col("o_totalprice") > 450000.0)
-          .select(col("o_orderkey").as("okey"), col("o_orderpriority"))
-        graft.ops.Skew.bloomPrunedJoin(big, small, "okey",
-            expectedItems = 1L << 16, fpp = 0.01)
-          .groupBy("o_orderpriority")
-          .agg(gf.dsumD(col("rev")).as("revenue"),
-            gf.countAll.as("n_items"))
-          .orderBy("o_orderpriority")
-      },
-      Some(s"""SELECT o_orderpriority,
-          ${dsum("l_extendedprice * (1 - l_discount)")} AS revenue,
-          COUNT(*) AS n_items
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE o_totalprice > 450000.0
-        GROUP BY o_orderpriority ORDER BY o_orderpriority"""), bench = true)
+        ORDER BY l_returnflag, l_linestatus"""), bench = true)
   )
 }

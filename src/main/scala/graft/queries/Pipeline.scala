@@ -2197,40 +2197,6 @@ object Pipeline {
         FROM ranked WHERE rn <= 20
         GROUP BY source ORDER BY source"""), bench = true),
 
-    // --- Bloom-prefiltered decontamination: same contract as q69 (the
-    // benchmark here is the doc_id % 20 == 7 slice) but the corpus
-    // n-gram stream is probed against a lazily-built benchmark Bloom
-    // filter BEFORE the semi-join shuffle — the corpus-scale plan. The
-    // oracle is the PLAIN overlap on n-gram strings: Bloom false
-    // positives must vanish in the exact verify, so hash-matching the
-    // exact answer is precisely what proves fpp traded shuffle volume,
-    // not correctness.
-    "q138_decontam_bloom" -> Q(
-      (s, d) => {
-        val all = docs(s, d)
-        Dedup.decontaminationReportBloom(
-          all.filter(col("doc_id") % 20 =!= 7),
-          all.filter(col("doc_id") % 20 === 7),
-          "doc_id", "text", n = 8, expectedGrams = 1L << 18)
-          .orderBy("doc_id")
-      },
-      Some {
-        val gram = (0 until 8).map(k => s"w[i+$k]").mkString("||' '||")
-        s"""WITH bench AS (SELECT string_split(text, ' ') AS w FROM documents
-            WHERE doc_id % 20 = 7),
-          corpus AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            WHERE doc_id % 20 <> 7),
-          bg AS (SELECT DISTINCT unnest(list_transform(
-              range(1, greatest(len(w) - 6, 1)), i -> $gram)) AS g
-            FROM bench WHERE len(w) >= 8),
-          cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-              range(1, greatest(len(w) - 6, 1)), i -> $gram))) AS g
-            FROM corpus WHERE len(w) >= 8)
-          SELECT doc_id, COUNT(*) AS n_shared
-          FROM cg SEMI JOIN bg USING (g)
-          GROUP BY doc_id ORDER BY doc_id"""
-      }, bench = true),
-
     // --- edit-distance fuzzy dedup ------------------------------------------
     // (Dedup.editDistancePairs — q-gram blocking with length filter,
     // never all-pairs; the oracle IS the naive all-pairs definition, so
@@ -3230,11 +3196,11 @@ object Pipeline {
 
     // --- semantic decontamination (embedding-space eval overlap) ------------
     // (Similarity.semanticDecontaminate — the embedding analog of
-    // q69/q138's n-gram decontamination: paraphrased eval leakage that
+    // q69's n-gram decontamination: paraphrased eval leakage that
     // exact n-gram overlap can't see. Both sides cell-assign around
     // broadcast centroids (q97's machinery); the small assigned eval
     // side BROADCASTS into the corpus probe, so the corpus never
-    // shuffles — the q138 Bloom posture in embedding space. The oracle
+    // shuffles. The oracle
     // replays assignment for both sides, the within-cell cosine probe,
     // and the anti-join.)
     "q166_semantic_decontam" -> Q(
@@ -4866,36 +4832,6 @@ object Pipeline {
         WHERE doc_id IN (SELECT doc_id FROM ek)
           AND doc_id NOT IN (SELECT node FROM dropn)
         ORDER BY doc_id""")),
-
-    // --- Bloom-prefiltered incremental exact dedup ---------------------------
-    // (r15: Dedup.exactIncrementalBloom — q84's standing-ingestion
-    // semantics through the corpus-scale plan: a lazy seen-side Bloom
-    // splits the batch in the scan stage (definitely-new rows never
-    // join), a candidate-side Bloom prunes the historical index in
-    // ITS scan stage, and the exact anti join only ever sees the
-    // might-match slivers of both sides. Result-identical to
-    // exactIncremental by construction (no false negatives; false
-    // positives die in the confirm join) — the oracle replays the
-    // PLAIN incremental rule, so any bloom-path defect (null routing,
-    // empty-filter coalescing, union column drift) breaks the hash.
-    // Filters deliberately undersized for the sf row counts
-    // (expected=1024 at sf0.01's ~6k docs) so the gate exercises the
-    // saturated-filter regime, not just the roomy one.)
-    "q217_dedup_incr_bloom" -> Q(
-      (s, d) => {
-        val all = docs(s, d)
-        val seen = all.filter(col("doc_id") % 4 === 1).select("text")
-        graft.ops.Dedup.exactIncrementalBloom(
-          all.select("doc_id", "text"), seen, "doc_id", "text",
-          expectedSeen = 1024, expectedBatch = 1024)
-          .select("doc_id").orderBy("doc_id")
-      },
-      Some("""SELECT doc_id FROM documents dn
-        WHERE doc_id = (SELECT min(d2.doc_id) FROM documents d2
-                        WHERE d2.text = dn.text)
-          AND NOT EXISTS (SELECT 1 FROM documents ds
-                          WHERE ds.doc_id % 4 = 1 AND ds.text = dn.text)
-        ORDER BY doc_id"""), bench = true),
 
     // --- per-group (per-domain) repeated-line boilerplate removal -----------
     // (r15: Dedup.removeRepeatedLinesPerGroup — the CCNet/RefinedWeb

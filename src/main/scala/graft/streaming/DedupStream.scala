@@ -232,28 +232,14 @@ object DedupStream {
     * fingerprint, canonical URL): min-id per key intra-batch
     * ([[Dedup.exact]]), anti-join against seen KEYS cross-batch —
     * the state table here is the (id, key) history and only the key
-    * column ever ships into the cross join.
-    *
-    * `expectedSeen` opts the cross-batch membership check into
-    * [[Dedup.seenKeyIdsBloom]]'s double Bloom pre-filter
-    * (result-identical; size it for the state table's lifetime key
-    * count). A standing pipeline's state grows without bound while
-    * each batch stays small — the huge-seen/low-hit-rate regime where
-    * the pre-filter pays; leave it None for short-lived or
-    * re-crawl-heavy streams (the [[Dedup.exactIncrementalBloom]]
-    * adjudication). */
+    * column ever ships into the cross join. */
   def exactBatch(batch: DataFrame, batchId: Long, id: String, key: String,
-                 stateDir: String, outDir: String,
-                 expectedSeen: Option[Long] = None,
-                 fpp: Double = 0.01): Unit =
+                 stateDir: String, outDir: String): Unit =
     runBatch(batch, batchId, id, Seq(id, key), stateDir, outDir)(b =>
       b.join(Dedup.exact(b, id, key), Seq(id, key), "left_anti")
         .select(col(id)))((b, seen) =>
-      expectedSeen match {
-        case Some(es) => Dedup.seenKeyIdsBloom(b, seen, id, key, es, fpp = fpp)
-        case None => b.join(seen.select(col(key)).distinct(), Seq(key),
-          "left_semi").select(col(id))
-      })
+      b.join(seen.select(col(key)).distinct(), Seq(key), "left_semi")
+        .select(col(id)))
 
   /** one micro-batch of the SemDeDup recipe over an embedding stream;
     * `centroids` is the static (cid, vec) cell table (the q97/q180

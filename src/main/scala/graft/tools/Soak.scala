@@ -220,24 +220,14 @@ object Soak {
           big.filter(col("doc_id") % 2 === 1),
           big.filter(col("doc_id") % 2 === 0),
           "doc_id", "text", 0.8, maxSeenBucket = Some(2 * copies)).count()),
-      // incremental EXACT dedup, plain vs Bloom-prefiltered: odd-id half
-      // ingests against the even-id seen texts. Replicated texts are
-      // unique per (copy, original), so the re-ingest rate is ~0 — the
-      // bloom variant's favorable regime (almost the whole batch passes
-      // scan-stage; the anti join sees only fpp slivers of both sides).
-      // The A/B pair records what the pre-filter buys at this scale.
+      // incremental EXACT dedup: odd-id half ingests against the even-id
+      // seen texts. Replicated texts are unique per (copy, original), so
+      // the re-ingest rate is ~0 and the anti join passes ~the whole batch
       "exact_incremental" -> (() =>
         graft.ops.Dedup.exactIncremental(
           big.filter(col("doc_id") % 2 === 1),
           big.filter(col("doc_id") % 2 === 0).select("text"),
           "doc_id", "text").count()),
-      "exact_incremental_bloom" -> (() =>
-        graft.ops.Dedup.exactIncrementalBloom(
-          big.filter(col("doc_id") % 2 === 1),
-          big.filter(col("doc_id") % 2 === 0).select("text"),
-          "doc_id", "text",
-          expectedSeen = nDocs / 2 + 1, expectedBatch = nDocs / 2 + 1)
-          .count()),
       // incremental SimHash: same boundary split; the replicated copies
       // are hamming-0 cliques, so every chunk bucket carries the full
       // clique pressure (the pigeonhole analog of the LSH mega-bucket)
@@ -297,18 +287,11 @@ object Soak {
           big.withColumn("ntok", size(split(col("text"), " ")))
             .withColumn("src", col("doc_id") % 20),
           "src", col("ntok").cast("double"), q = 0.5).count()),
-      // decontamination, exact vs Bloom-prefiltered: SAME output by
-      // construction; replicated copies make every benchmark gram
-      // corpus-frequent, so the exact variant shuffles all ~copies×
-      // corpus grams while the bloom variant prunes non-benchmark grams
-      // scan-side — the pair measures the shuffle saving at scale
+      // decontamination: replicated copies make every benchmark gram
+      // corpus-frequent, so the semi join shuffles all ~copies× corpus grams
       "decontam_exact" -> (() =>
         graft.ops.Dedup.decontaminationReport(
           big, bench, "doc_id", "text", n = 8).count()),
-      "decontam_bloom" -> (() =>
-        graft.ops.Dedup.decontaminationReportBloom(
-          big, bench, "doc_id", "text", n = 8,
-          expectedGrams = 1L << 20).count()),
       // surgical decontamination: replication makes every benchmark gram
       // hit in EVERY copy, so ~all benchmark-family docs pay the cut +
       // reassembly path while the broadcast vocabulary filter keeps

@@ -16,15 +16,6 @@ object InternalBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
-  /** Uncorrelated scalar subquery over a single-row/single-column frame.
-    * Lets graft embed a lazily-evaluated aggregate (e.g. a Bloom-filter
-    * build) inside another plan's expression tree — the same mechanism
-    * Spark's own InjectRuntimeFilter uses. The subquery executes as a
-    * stage of the consuming job; nothing is collected at call time. */
-  def scalarSubquery(df: DataFrame): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-      df.queryExecution.analyzed)
-
   /** Spark's own DIVIDE_BY_ZERO error (`QueryExecutionErrors` is
     * `private[sql]`), for kernels that follow `Divide`'s ANSI rule. */
   def divideByZeroError(): ArithmeticException =

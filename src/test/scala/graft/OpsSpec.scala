@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Multimodal, Similarity, Skew, TextAnalysis => TA}
+import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis => TA}
 
 /** dedup / similarity / text-analysis semantics on small controlled data. */
 class OpsSpec extends SparkSpec {
@@ -786,29 +786,7 @@ class OpsSpec extends SparkSpec {
     assert(kept.contains(3L) && kept.contains(4L))
   }
 
-  test("bloom-pruned join equals the plain join and prunes before the shuffle") {
-    val big = (1L to 20000L).map(i => (i, i * 2)).toDF("k", "payload")
-    val small = Seq((5L, "a"), (9999L, "b"), (20000L, "c"), (77L, "d"))
-      .toDF("k", "v")
-    val plain = big.join(small, Seq("k"), "inner")
-      .collect().map(_.toSeq).toSet
-    val pruned = graft.ops.Skew.bloomPrunedJoin(big, small, "k",
-      expectedItems = 10)
-    assert(pruned.collect().map(_.toSeq).toSet == plain && plain.size == 4)
-    // probe must be Spark's codegen BloomFilterMightContain (a lazy
-    // scalar-subquery build), not a per-row Scala UDF
-    val planStr = pruned.queryExecution.executedPlan.toString
-    assert(planStr.contains("might_contain"), planStr.take(2000))
-    assert(!planStr.contains("UDF"), "bloom probe must not be a UDF")
-    // the pre-join filter really prunes: survivors ≈ matches + fp margin
-    val bf = small.stat.bloomFilter("k", 10, 0.01)
-    val survivors = big.filter(
-      org.apache.spark.sql.functions.udf((k: java.lang.Long) =>
-        k != null && bf.mightContainLong(k)).apply($"k")).count()
-    assert(survivors < 500, s"bloom filter passed $survivors of 20000")
-  }
-
-  test("bloom decontamination equals the exact report; probe is codegen") {
+  test("decontamination report: exact (doc, n_shared) rows on planted 8-grams") {
     val mk = (i: Long, t: String) => (i, t)
     val corpus = Seq(
       mk(1, "the quick brown fox jumps over the lazy dog today ok"),
@@ -818,14 +796,13 @@ class OpsSpec extends SparkSpec {
     val bench = Seq(
       mk(100, "the quick brown fox jumps over the lazy dog today and more"))
       .toDF("doc_id", "text")
-    val exact = Dedup.decontaminationReport(corpus, bench, "doc_id", "text",
-      n = 8).collect().map(_.toSeq).toSet
-    val bloom = Dedup.decontaminationReportBloom(corpus, bench, "doc_id",
-      "text", n = 8, expectedGrams = 64)
-    assert(bloom.collect().map(_.toSeq).toSet == exact && exact.nonEmpty)
-    val planStr = bloom.queryExecution.executedPlan.toString
-    assert(planStr.contains("might_contain"), planStr.take(2000))
-    assert(!planStr.contains("UDF"), "bloom probe must not be a UDF")
+    // doc 1 shares the bench's first three 8-grams, doc 3 its first two;
+    // doc 2 shares none and doc 4 is shorter than one gram
+    val report = Dedup.decontaminationReport(corpus, bench, "doc_id", "text",
+      n = 8)
+    assert(report.columns.toSeq == Seq("doc_id", "n_shared"))
+    assert(report.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet ==
+      Set(1L -> 3L, 3L -> 2L))
   }
 
   test("incremental dedup: batch-unique AND unseen survive") {
@@ -2960,6 +2937,12 @@ class OpsSpec extends SparkSpec {
     val packed = Seq((1L, a), (2L, b), (3L, c), (4L, "junk".getBytes))
       .toDF("doc_id", "payload")
     val grids = Multimodal.decodeLumaGrid(packed, 9, 7)
+    // the typed decode's whole-stage codegen must compile: with fallback
+    // off, a Janino failure throws instead of running interpreted
+    val fallback = "spark.sql.codegen.fallback"
+    spark.conf.set(fallback, "false")
+    try assert(grids.collect().length == 4)
+    finally spark.conf.unset(fallback)
     val gmap = grids.collect().map(r => r.getLong(0) -> r).toMap
     assert(gmap(4L).isNullAt(1), "corrupt payload → null grid")
     assert(gmap(1L).getSeq[Double](1).length == 63)
@@ -3454,8 +3437,8 @@ class OpsSpec extends SparkSpec {
     assert(s2.getDouble(5) == 4.0, "p50 of {1,7} interpolates to 4")
   }
 
-  test("exactIncrementalBloom ≡ exactIncremental: dup keys in batch, " +
-    "seen overlap, null keys, empty seen, empty batch, tiny filters") {
+  test("exactIncremental edge cases: dup keys, seen overlap, null keys, " +
+    "empty sides") {
     import org.apache.spark.sql.DataFrame
     val batch = Seq(
       (1L, Option("aa")), (2L, Option("aa")),   // in-batch dup, unseen
@@ -3467,54 +3450,16 @@ class OpsSpec extends SparkSpec {
     ).toDF("id", "k")
     val seen = Seq("bb", "dd", "zz").toDF("k")
     def ids(df: DataFrame) = df.select("id").collect().map(_.getLong(0)).toSet
-    val plain = ids(Dedup.exactIncremental(batch, seen, "id", "k"))
-    assert(plain == Set(1L, 4L),
-      "exact()'s key semi join drops null-key rows — pinned so the bloom " +
-        "variant's agreement below is meaningful")
-    // identical result at generous AND at deliberately undersized
-    // filter capacities (undersizing only raises fpp → more confirm-join
-    // work, never a different answer)
-    for ((es, eb) <- Seq((1L << 20, 1L << 20), (2L, 2L), (1L, 1L))) {
-      val bloom = Dedup.exactIncrementalBloom(batch, seen, "id", "k",
-        expectedSeen = es, expectedBatch = eb, fpp = 0.5)
-      assert(ids(bloom) == plain, s"mismatch at expected=($es,$eb)")
-      assert(bloom.columns.toSeq == Seq("id", "k"))
-    }
+    val kept = Dedup.exactIncremental(batch, seen, "id", "k")
+    assert(ids(kept) == Set(1L, 4L))
+    // the anti join on the key puts the key column first
+    assert(kept.columns.toSeq == Seq("k", "id"))
     // empty seen index: everything new
-    val noSeen = Dedup.exactIncrementalBloom(batch,
-      seen.filter(lit(false)), "id", "k")
-    assert(ids(noSeen) == Set(1L, 3L, 4L, 7L))
+    assert(ids(Dedup.exactIncremental(batch, seen.filter(lit(false)),
+      "id", "k")) == Set(1L, 3L, 4L, 7L))
     // empty batch: empty out
-    assert(Dedup.exactIncrementalBloom(batch.filter(lit(false)), seen,
+    assert(Dedup.exactIncremental(batch.filter(lit(false)), seen,
       "id", "k").count() == 0)
-  }
-
-  test("bloom builders raise the session clamp confs: a capacity above " +
-    "Spark's silent Math.min caps survives the build") {
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val (items0, bits0) = (spark.conf.get(itemsKey), spark.conf.get(bitsKey))
-    try {
-      // plant caps far below the build size: without ensureBloomConf
-      // the aggregate clamps here SILENTLY and the filter saturates
-      spark.conf.set(itemsKey, 100L)
-      spark.conf.set(bitsKey, 1024L)
-      val batch = Seq((1L, "aa"), (2L, "bb"), (3L, "cc")).toDF("id", "k")
-      val seen = Seq("bb").toDF("k")
-      val got = Dedup.exactIncrementalBloom(batch, seen, "id", "k",
-        expectedSeen = 1L << 22, expectedBatch = 1L << 22)
-        .select("id").collect().map(_.getLong(0)).toSet
-      assert(got == Set(1L, 3L))
-      assert(spark.conf.get(itemsKey).toLong >= (1L << 22),
-        "maxNumItems must be raised to the requested capacity")
-      val needBits = org.apache.spark.util.sketch.BloomFilter
-        .optimalNumOfBits(1L << 22, 0.01)
-      assert(spark.conf.get(bitsKey).toLong >= needBits,
-        "maxNumBits must be raised to the requested capacity")
-    } finally {
-      spark.conf.set(itemsKey, items0)
-      spark.conf.set(bitsKey, bits0)
-    }
   }
 
   test("removeRepeatedLinesPerGroup: group-scoped boilerplate, cross-" +
@@ -3585,32 +3530,6 @@ class OpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(byFrac(2L) == "b",
       s"minFrac must use the distinct-doc denominator, got ${byFrac(2L)}")
-  }
-
-  test("ensureBloomConf: serialized-size budget refuses oversized " +
-    "builds up front, conf opt-in lifts it") {
-    import org.apache.spark.sql.functions.col
-    val big = Seq((1L, 10L), (2L, 20L)).toDF("id", "k")
-    val small = Seq(Tuple1(10L)).toDF("k")
-    // 10^10 items at fpp 0.01 ≈ 12 GB — must refuse at CALL time
-    val e = intercept[IllegalArgumentException] {
-      Skew.bloomPrunedJoin(big, small, "k", expectedItems = 10000000000L)
-    }
-    assert(e.getMessage.contains(Skew.MaxFilterBytesConf),
-      s"refusal must name the opt-in conf: ${e.getMessage}")
-    // a tiny explicit budget rejects even a modest build; raising the
-    // conf (the documented opt-in) lets the same build proceed
-    spark.conf.set(Skew.MaxFilterBytesConf, "1000")
-    try {
-      intercept[IllegalArgumentException] {
-        Skew.bloomPrunedJoin(big, small, "k", expectedItems = 1L << 20)
-      }
-      spark.conf.set(Skew.MaxFilterBytesConf, (512L << 20).toString)
-      val got = Skew.bloomPrunedJoin(big, small, "k",
-          expectedItems = 1L << 20)
-        .select(col("id")).collect().map(_.getLong(0)).toSet
-      assert(got == Set(1L))
-    } finally spark.conf.unset(Skew.MaxFilterBytesConf)
   }
 }
 

@@ -131,52 +131,6 @@ class PlanSpec extends SparkSpec {
       "Q22 orders date filter not pushed")
   }
 
-  test("q139 bloom join: codegen might_contain probe below the join") {
-    val plan = SparkEntry.queries("q139_bloom_join")(spark, sfSmoke)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("might_contain"),
-      "bloom probe must be the codegen BloomFilterMightContain")
-    assert(!plan.contains("UDF"), "bloom probe must not be a UDF")
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"), "no nested loops")
-  }
-
-  test("q217 incremental bloom dedup: every bloom probe is a codegen " +
-    "scan-stage filter — no shuffle beneath any probe, no UDF") {
-    import org.apache.spark.sql.execution.FilterExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    // AQE off for this plan: the shuffle-beneath-probe check must walk
-    // the POST-EnsureRequirements physical plan (sparkPlan predates it,
-    // so no ShuffleExchangeLike exists anywhere and the per-probe
-    // assertion would be vacuous), and with AQE on the executedPlan is
-    // an opaque AdaptiveSparkPlanExec wrapper collect() can't descend
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan =
-      try SparkEntry.queries("q217_dedup_incr_bloom")(spark, sfSmoke)
-        .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(plan.exists { case e: ShuffleExchangeLike => true; case _ => false },
-      "sanity: the post-EnsureRequirements plan must contain the " +
-        "confirm join's shuffles somewhere, or the probe check is vacuous")
-    val probes = plan.collect {
-      case f: FilterExec if f.condition.toString.contains("might_contain") => f
-    }
-    // definite-new split + candidate split on the batch side, seen-index
-    // prune on the history side
-    assert(probes.size >= 3,
-      s"expected the three bloom probe filters, found ${probes.size}")
-    probes.foreach { f =>
-      assert(f.collect { case e: ShuffleExchangeLike => e }.isEmpty,
-        "a bloom probe sits above a shuffle — the pre-filter must run " +
-          "in the scan stage, before any exchange:\n" + f.toString)
-    }
-    val s = plan.toString
-    assert(!s.contains("UDF"), "bloom probe must not be a UDF")
-    assert(s.contains("LeftAnti"), "confirm join must stay an anti join")
-    assert(!s.contains("BroadcastNestedLoopJoin") &&
-      !s.contains("CartesianProduct"), "no nested loops")
-  }
-
   test("removeRepeatedLinesPerGroup minFrac: the group-size join is " +
     "NOT hint-forced to broadcast (per-domain size tables are tens of " +
     "millions of rows at crawl scale — stats must decide)") {

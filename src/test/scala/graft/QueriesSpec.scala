@@ -113,7 +113,7 @@ class QueriesSpec extends SparkSpec {
     val committed = new ObjectMapper().readTree(new java.io.File("BENCH_LOCAL.json"))
       .get("queries").fieldNames.asScala.toSeq
     val battery = Bench.battery.map(_._1)
-    assert(committed.size == 142 && battery.size == 142)
+    assert(committed.size == 139 && battery.size == 139)
     assert(battery.toSet == committed.toSet)
   }
 

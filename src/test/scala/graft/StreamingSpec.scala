@@ -566,31 +566,6 @@ class StreamingSpec extends SparkSpec {
     assert(got == Set(1L, 3L, 5L, 7L), s"got $got")
   }
 
-  test("DedupStream exact recipe with the bloom pre-filter: survivors " +
-    "identical to the plain path, incl. undersized-filter saturation") {
-    import graft.streaming.DedupStream
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
-    val batches = Seq(
-      Seq((1L, "ka"), (2L, "ka"), (3L, "kb")),
-      Seq((4L, "ka"), (5L, "kc")),
-      Seq((6L, "kc"), (7L, "kd")))
-    val schema = batches.head.toDF("doc_id", "key").schema
-    // generous AND deliberately saturated (expected=1) capacities —
-    // a tighter filter only raises fpp, never changes the answer
-    for (es <- Seq(1024L, 1L)) {
-      val (state, out) = (tmp("exb_state"), tmp("exb_out"))
-      batches.zipWithIndex.foreach { case (b, i) =>
-        DedupStream.exactBatch(b.toDF("doc_id", "key"), i.toLong,
-          "doc_id", "key", state, out, expectedSeen = Some(es))
-      }
-      val got = DedupStream.readTable(spark, out, schema).get
-        .select("doc_id").as[Long].collect().toSet
-      assert(got == Set(1L, 3L, 5L, 7L),
-        s"bloom path diverged at expectedSeen=$es: $got")
-    }
-  }
-
   test("DedupStream simhash recipe: multi-batch survivors equal the " +
     "one-shot simhash dedup of the union") {
     import graft.streaming.DedupStream
