@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -28,17 +27,13 @@ import org.apache.spark.sql.types._
   * high word adds the value's sign extension so negative micros work.
   */
 case class Int128SumMicros(child: Expression, scale: Int = 6)
-    extends DeclarativeAggregate with UnaryLike[Expression] {
+    extends DeclarativeAggregate with UnaryLike[Expression] with ExpectsInputTypes {
 
   override def prettyName: String = "graft_dsum128"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_dsum128 needs a bigint (unscaled micros) input, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(LongType)
 
   private lazy val hi = AttributeReference("hi", LongType, nullable = false)()
   private lazy val lo = AttributeReference("lo", LongType, nullable = false)()
@@ -115,7 +110,6 @@ case class Int128MicrosToDouble(left: Expression, right: Expression,
 }
 
 object Int128MicrosToDouble {
-  /** shared by interpreted eval and generated code. */
   def toDouble(hi: Long, lo: Long, scale: Int): Double = {
     val bi = java.math.BigInteger.valueOf(hi).shiftLeft(64)
       .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))

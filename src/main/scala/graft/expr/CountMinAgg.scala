@@ -3,8 +3,7 @@ package graft.expr
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -35,7 +34,7 @@ case class CountMinAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+  with UnaryLike[Expression] with ExpectsInputTypes {
 
   require(depth >= 1 && depth <= 16, "count_min: depth must be in [1,16]")
   require(width >= 2, "count_min: width must be >= 2")
@@ -44,11 +43,7 @@ case class CountMinAgg(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_count_min needs string, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def createAggregationBuffer(): Array[Long] =
     new Array[Long](depth * width)

@@ -2,7 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SparkSessionExtensions hook: registers graft's custom Catalyst
   * expressions with the SQL function registry, so `spark.sql` users get
@@ -27,12 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 2,
           "graft_minhash_sig(hashes, numPerms) takes an array<bigint> and an int literal")
-        val n = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"numPerms must be an int literal, got $other")
-        }
-        MinHashSignature(args.head, n)
+        MinHashSignature(args.head, intLiteral("numPerms", args(1)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_dsum128"),
@@ -40,12 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.nonEmpty && args.length <= 2,
           "graft_dsum128(unscaledMicros[, scale]) sums bigint unscaled values exactly")
-        val scale = args.lift(1).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"scale must be an int literal, got $other")
-        }.getOrElse(6)
-        Int128SumMicros(args.head, scale)
+        Int128SumMicros(args.head, args.lift(1).fold(6)(intLiteral("scale", _)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_compression_ratio"),
@@ -62,12 +52,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 2,
           "graft_misra_gries(item, k) takes a string column and an int literal")
-        val k = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        MisraGriesAgg(args.head, k).toAggregateExpression()
+        MisraGriesAgg(args.head, intLiteral("k", args(1))).toAggregateExpression()
       }))
+  }
+
+  private def intLiteral(name: String, arg: Expression): Int = arg match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$name must be an int literal, got $other")
   }
 }

@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -49,7 +48,7 @@ case class MisraGriesAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.HashMap[UTF8String, JLong]]
-  with UnaryLike[Expression] {
+  with UnaryLike[Expression] with ExpectsInputTypes {
 
   require(k >= 2, "misra_gries: k must be >= 2")
 
@@ -59,11 +58,7 @@ case class MisraGriesAgg(
     StructField("cnt", LongType, nullable = false))), containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_misra_gries needs string, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def createAggregationBuffer(): java.util.HashMap[UTF8String, JLong] =
     new java.util.HashMap[UTF8String, JLong]()

@@ -4,12 +4,11 @@ import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, InternalBridge}
 import org.apache.spark.sql.types._
 
 /** Single-pass first+second vector moments for covariance / PCA over an
@@ -45,7 +44,8 @@ case class VectorMomentsAgg(
     child: Expression, dim: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression]
+  with ExpectsInputTypes {
 
   private val nSlots = 1 + dim + dim * (dim + 1) / 2
 
@@ -53,11 +53,8 @@ case class VectorMomentsAgg(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_vector_moments needs array<float|double>, got ${t.simpleString}")
-  }
+  override def inputTypes =
+    Seq(InternalBridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType)))
 
   private lazy val isFloat = child.dataType match {
     case ArrayType(FloatType, _) => true

@@ -1,11 +1,12 @@
 package graft.expr
 
+import java.text.Normalizer
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode canonical/compatibility normalization (NFC/NFD/NFKC/NFKD) as
@@ -14,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark ships no normalization builtin, and a Scala UDF would break
   * whole-stage codegen right at the top of every text-cleaning chain —
   * this stays inside the generated code (the JDK `java.text.Normalizer`
-  * call is inlined directly; it is the same ICU-derived implementation
-  * DuckDB's `nfc_normalize` follows, so the q153 oracle replays it).
+  * is the same ICU-derived implementation DuckDB's `nfc_normalize`
+  * follows, so the q153 oracle replays it).
   *
   * Fast path: `Normalizer.isNormalized` is a cheap quick-check scan
   * (ASCII and already-composed text — the overwhelming majority of a
@@ -23,45 +24,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * normalize-and-copy cost is paid only by rows that actually need it.
   */
 case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(Set("NFC", "NFD", "NFKC", "NFKD").contains(form),
     s"unknown normalization form: $form")
 
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_unicode_normalize"
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_unicode_normalize needs a string input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.valueOf(form))) {
-      input
-    } else {
-      UTF8String.fromString(
-        java.text.Normalizer.normalize(s, java.text.Normalizer.Form.valueOf(form)))
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    UnicodeNormalize.normalize(input.asInstanceOf[UTF8String], Normalizer.Form.valueOf(form))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val str = ctx.freshName("str")
-      s"""
-        java.lang.String $str = $a.toString();
-        if (java.text.Normalizer.isNormalized($str, java.text.Normalizer.Form.$form)) {
-          ${ev.value} = $a;
-        } else {
-          ${ev.value} = UTF8String.fromString(
-            java.text.Normalizer.normalize($str, java.text.Normalizer.Form.$form));
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.expr.UnicodeNormalize.normalize($a, java.text.Normalizer.Form.$form);")
 
   override protected def withNewChildInternal(newChild: Expression): UnicodeNormalize =
     copy(child = newChild)
+}
+
+object UnicodeNormalize {
+  /** `s` itself when already in `form`, else its normalized copy. */
+  def normalize(s: UTF8String, form: Normalizer.Form): UTF8String = {
+    val str = s.toString
+    if (Normalizer.isNormalized(str, form)) s
+    else UTF8String.fromString(Normalizer.normalize(str, form))
+  }
 }
 
 /** zlib compression ratio of a string's UTF-8 bytes — deflated size /
@@ -70,9 +59,8 @@ case class UnicodeNormalize(child: Expression, form: String)
   * (RefinedWeb/Dolma-style "gzip ratio"): looping or boilerplate-heavy
   * text compresses far below organic prose (~0.1 vs ~0.5-0.7), and
   * random/binary-ish junk refuses to compress (>0.9) — both tails get
-  * filtered. Runs inside whole-stage codegen (the Deflater call lives
-  * in a static helper); a UDF here would break the scan-stage quality
-  * chain on every row of a 100 TB corpus.
+  * filtered. Runs inside whole-stage codegen; a UDF here would break
+  * the scan-stage quality chain on every row of a 100 TB corpus.
   *
   * Level is pinned (6) for cross-run determinism on a given JVM; the
   * signal is a heuristic, thresholds should come from
@@ -80,44 +68,33 @@ case class UnicodeNormalize(child: Expression, form: String)
   * strings yield NULL (no raw bytes to ratio), matching the null-out
   * convention of the other quality signals. Cost: one deflate pass per
   * row — comparable to the hashing the dedup path already pays. */
-case class CompressionRatio(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+case class CompressionRatio(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_compression_ratio"
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_compression_ratio needs a string input, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
-    if (b.isEmpty) null else CompressionRatio.ratio(b)
-  }
+  override def nullSafeEval(input: Any): Any =
+    CompressionRatio.ratio(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val b = ctx.freshName("bytes")
-      s"""
-        byte[] $b = $a.getBytes();
-        if ($b.length == 0) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = graft.expr.CompressionRatio.ratio($b);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      Kernel.boxedOrNull(ctx, ev, dataType, s"graft.expr.CompressionRatio.ratio($a)"))
 
   override protected def withNewChildInternal(newChild: Expression): CompressionRatio =
     copy(child = newChild)
 }
 
 object CompressionRatio {
-  /** shared by interpreted eval and generated code. One Deflater per
-    * call (they are not thread-safe and Spark shares nothing across
-    * rows here); the output buffer is discarded — only the deflated
-    * LENGTH matters, so nothing row-sized survives the call. */
-  def ratio(bytes: Array[Byte]): Double = {
+  /** Deflated / raw size of the UTF-8 bytes, or null for the empty
+    * string. One Deflater per call (they are not thread-safe and Spark
+    * shares nothing across rows here); the output buffer is discarded —
+    * only the deflated LENGTH matters, so nothing row-sized survives the
+    * call. */
+  def ratio(s: UTF8String): java.lang.Double = {
+    val bytes = s.getBytes
+    if (bytes.isEmpty) return null
     val d = new java.util.zip.Deflater(6)
     try {
       d.setInput(bytes)

@@ -2,10 +2,9 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,7 +36,7 @@ object TextHash {
     * hash = foldLeft(42L)((h, w) => xxhash64Step(w, h)) over the window,
     * exactly `xxhash64(w[i], ..., w[i+n-1])`. Fewer than n tokens →
     * empty. `distinct` keeps first occurrences in order, matching
-    * `array_distinct`. Shared by interpreted eval and codegen. */
+    * `array_distinct`. */
   def ngramHashes(words: ArrayData, n: Int, distinct: Boolean): ArrayData = {
     val len = words.numElements()
     if (len < n) return new GenericArrayData(Array.emptyLongArray)
@@ -100,18 +99,14 @@ object TextHash {
   * shorter than 3 yield an empty result (the `when` guard's
   * `otherwise` branch), so the result is never NULL. */
 case class CharTrigramBucketHashes(child: Expression, buckets: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(buckets >= 1, "graft_char_trigram_buckets: buckets must be >= 1")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_char_trigram_buckets"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_char_trigram_buckets needs array<bigint>, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def eval(input: InternalRow): Any =
     CharTrigramBucketHashes.compute(child.eval(input).asInstanceOf[ArrayData], buckets)
@@ -133,7 +128,6 @@ object CharTrigramBucketHashes {
   private final val P1 = 2654435761L
   private final val P2 = 2246822519L
 
-  /** shared by interpreted eval and generated code. */
   def compute(cps: ArrayData, buckets: Int): ArrayData = {
     val len = if (cps == null) 0 else cps.numElements()
     if (len < 3) return new GenericArrayData(Array.emptyLongArray)
@@ -156,17 +150,13 @@ object CharTrigramBucketHashes {
   * optionally first-occurrence-distinct — the [[graft.ops.Dedup]]
   * shingle/window hot path. */
 case class NgramHashes(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, "graft_ngram_hashes: n must be >= 1")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_ngram_hashes"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_ngram_hashes needs array<string>, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     TextHash.ngramHashes(input.asInstanceOf[ArrayData], n, distinct)
@@ -182,7 +172,8 @@ case class NgramHashes(child: Expression, n: Int, distinct: Boolean)
 /** array<string> → array<struct<h12:long, h1:long>>: every adjacent
   * bigram's (pair hash, left-unigram hash) — the ccnet / bigram-LM
   * fit+score hot path ([[graft.ops.TextAnalysis]]). */
-case class BigramHashPairs(child: Expression) extends UnaryExpression {
+case class BigramHashPairs(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -191,11 +182,7 @@ case class BigramHashPairs(child: Expression) extends UnaryExpression {
     containsNull = false)
   override def prettyName: String = "graft_bigram_hash_pairs"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bigram_hash_pairs needs array<string>, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     TextHash.bigramHashPairs(input.asInstanceOf[ArrayData])

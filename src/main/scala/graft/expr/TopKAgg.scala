@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -38,7 +37,7 @@ case class TopKAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.PriorityQueue[(Double, Long)]]
-  with BinaryLike[Expression] {
+  with BinaryLike[Expression] with ExpectsInputTypes {
 
   require(k >= 1, "graft_top_k: k must be >= 1")
 
@@ -48,13 +47,7 @@ case class TopKAgg(
     StructField("id", LongType, nullable = false))), containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (DoubleType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (s, i) => TypeCheckResult.TypeCheckFailure(
-        s"graft_top_k needs (double, bigint), got " +
-          s"(${s.simpleString}, ${i.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
 
   /** head = WORST retained entry, so eviction is a peek/poll. */
   private def worstFirst = new java.util.Comparator[(Double, Long)] {

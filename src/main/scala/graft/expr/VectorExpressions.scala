@@ -1,12 +1,11 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, StringType}
 
 /** Codegen'd double-precision dot product over two array columns.
   *
@@ -23,21 +22,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * (same as the previous explicit per-element casts).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot needs array<double> inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   override def nullSafeEval(a: Any, b: Any): Any =
     DotProduct.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -72,53 +61,29 @@ object DotProduct {
   * hash family has the independence MinHash needs, deterministically.
   */
 case class MinHashSignature(child: Expression, numPerms: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_sig"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_sig needs array<bigint>, got ${t.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val sig = MinHashSignature.compute(
-      Array.tabulate(hs.numElements())(hs.getLong), numPerms)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.signature(input.asInstanceOf[ArrayData], numPerms)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val sig = ctx.freshName("sig"); val n = ctx.freshName("n")
-      val i = ctx.freshName("i"); val p = ctx.freshName("p")
-      val z = ctx.freshName("z"); val h = ctx.freshName("h")
-      s"""
-        int $n = $c.numElements();
-        long[] $sig = new long[$numPerms];
-        java.util.Arrays.fill($sig, Long.MAX_VALUE);
-        for (int $i = 0; $i < $n; $i++) {
-          long $h = $c.getLong($i);
-          for (int $p = 0; $p < $numPerms; $p++) {
-            long $z = $h + 0x9E3779B97F4A7C15L * ($p + 1);
-            $z = ($z ^ ($z >>> 30)) * 0xBF58476D1CE4E5B9L;
-            $z = ($z ^ ($z >>> 27)) * 0x94D049BB133111EBL;
-            $z = $z ^ ($z >>> 31);
-            if ($z < $sig[$p]) $sig[$p] = $z;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expr.MinHashSignature.signature($c, $numPerms);")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
     copy(child = newChild)
 }
 
 object MinHashSignature {
-  /** interpreted path — same arithmetic as the generated code. */
+  /** The kernel over one row: the hashes are copied once into a
+    * primitive array, so the hot loop makes no per-element call. */
+  def signature(hashes: ArrayData, numPerms: Int): GenericArrayData =
+    new GenericArrayData(compute(hashes.toLongArray(), numPerms))
+
   def compute(hashes: Array[Long], numPerms: Int): Array[Long] = {
     val sig = Array.fill(numPerms)(Long.MaxValue)
     var i = 0
@@ -147,17 +112,12 @@ object MinHashSignature {
   * build-sort-scan loop per document, exact string equality (no hash
   * collisions), inside whole-stage codegen. Returns 0 for docs shorter
   * than n tokens. */
-case class TopNgramCount(child: Expression, n: Int) extends UnaryExpression {
+case class TopNgramCount(child: Expression, n: Int)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_top_ngram_count"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_top_ngram_count needs array<string>, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     TopNgramCount.compute(input.asInstanceOf[ArrayData], n)
@@ -171,7 +131,6 @@ case class TopNgramCount(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object TopNgramCount {
-  /** shared by interpreted eval and generated code. */
   def compute(arr: ArrayData, n: Int): Long = {
     val L = arr.numElements()
     if (L < n) return 0L
@@ -208,46 +167,33 @@ object TopNgramCount {
   * multiply-by-reciprocal) keeps bit-parity with the DuckDB oracle's
   * `list_transform(v, x -> x / nrm)`. */
 case class VectorDivide(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_vec_div"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), DoubleType)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_vec_div needs (array<double>, double), got " +
-          s"${l.simpleString} / ${r.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val d = b.asInstanceOf[Double]
-    val n = x.numElements()
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) { out(i) = x.getDouble(i) / d; i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorDivide.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-        int $n = $a.numElements();
-        double[] $out = new double[$n];
-        for (int $i = 0; $i < $n; $i++) {
-          $out[$i] = $a.getDouble($i) / $b;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.VectorDivide.compute($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorDivide =
     copy(left = newLeft, right = newRight)
+}
+
+object VectorDivide {
+  /** Divides the once-copied primitive array in place: no per-element
+    * call, and no allocation beyond the copy. */
+  def compute(x: ArrayData, d: Double): GenericArrayData = {
+    val out = x.toDoubleArray()
+    var i = 0
+    while (i < out.length) { out(i) /= d; i += 1 }
+    new GenericArrayData(out)
+  }
 }
 
 /** int8 quantization kernel: round(arr[i] / scale) clamped to
@@ -256,52 +202,35 @@ case class VectorDivide(left: Expression, right: Expression)
   * scale. Symmetric (no zero-point): scale = maxAbs/127 keeps 0.0 → 0
   * exactly. Dequantization is [[VectorDequantInt8]]. */
 case class VectorQuantizeInt8(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.ByteType, containsNull = false)
+  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "graft_vec_quant_i8"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), DoubleType)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_vec_quant_i8 needs (array<double>, double), got " +
-          s"${l.simpleString} / ${r.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val s = b.asInstanceOf[Double]
-    val n = x.numElements()
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      val q = Math.round(x.getDouble(i) / s)
-      out(i) = Math.max(-127L, Math.min(127L, q)).toByte
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorQuantizeInt8.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out"); val q = ctx.freshName("q")
-      s"""
-        int $n = $a.numElements();
-        byte[] $out = new byte[$n];
-        for (int $i = 0; $i < $n; $i++) {
-          long $q = java.lang.Math.round($a.getDouble($i) / $b);
-          $out[$i] = (byte) java.lang.Math.max(-127L, java.lang.Math.min(127L, $q));
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.VectorQuantizeInt8.compute($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorQuantizeInt8 =
     copy(left = newLeft, right = newRight)
+}
+
+object VectorQuantizeInt8 {
+  def compute(x: ArrayData, scale: Double): GenericArrayData = {
+    val out = new Array[Byte](x.numElements())
+    var i = 0
+    while (i < out.length) {
+      val q = Math.round(x.getDouble(i) / scale)
+      out(i) = Math.max(-127L, Math.min(127L, q)).toByte
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /** integer dot product over two int8-quantized vectors — the direct
@@ -310,91 +239,61 @@ case class VectorQuantizeInt8(left: Expression, right: Expression)
   * Scoring quantized vectors directly reads 4× less data than
   * dequantize-then-dot and never materializes the double arrays. */
 case class DotProductInt8(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_dot_i8"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(ByteType), ArrayType(ByteType))
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(org.apache.spark.sql.types.ByteType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot_i8 needs array<tinyint> inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L; var i = 0
-    while (i < n) { s += x.getByte(i).toLong * y.getByte(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProductInt8.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        long $s = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += ((long) $a.getByte($i)) * $b.getByte($i);
-        }
-        ${ev.value} = $s;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.DotProductInt8.fold($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductInt8 =
     copy(left = newLeft, right = newRight)
 }
 
+object DotProductInt8 {
+  /** [[DotProduct.fold]] over int8 elements, accumulated in a long. */
+  def fold(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L; var i = 0
+    while (i < n) { s += x.getByte(i).toLong * y.getByte(i); i += 1 }
+    s
+  }
+}
+
 /** int8 dequantization: arr[i] * scale back to array<double>. */
 case class VectorDequantInt8(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_vec_dequant_i8"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(ByteType), DoubleType)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(org.apache.spark.sql.types.ByteType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_vec_dequant_i8 needs (array<tinyint>, double), got " +
-          s"${l.simpleString} / ${r.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val s = b.asInstanceOf[Double]
-    val n = x.numElements()
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) { out(i) = x.getByte(i) * s; i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorDequantInt8.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-        int $n = $a.numElements();
-        double[] $out = new double[$n];
-        for (int $i = 0; $i < $n; $i++) {
-          $out[$i] = $a.getByte($i) * $b;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.VectorDequantInt8.compute($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorDequantInt8 =
     copy(left = newLeft, right = newRight)
+}
+
+object VectorDequantInt8 {
+  def compute(x: ArrayData, scale: Double): GenericArrayData = {
+    val out = new Array[Double](x.numElements())
+    var i = 0
+    while (i < out.length) { out(i) = x.getByte(i) * scale; i += 1 }
+    new GenericArrayData(out)
+  }
 }
 
 /** SimHash over a document's word-hash array: bit b of the signature is
@@ -412,49 +311,25 @@ case class VectorDequantInt8(left: Expression, right: Expression)
   * `when(null === 1, 1).otherwise(-1)` null semantics.
   */
 case class SimHashSignature(child: Expression, bits: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash_sig needs array<bigint>, got ${t.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any =
     SimHashSignature.compute(input.asInstanceOf[ArrayData], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val b = ctx.freshName("b"); val h = ctx.freshName("h")
-      val votes = ctx.freshName("votes"); val sig = ctx.freshName("sig")
-      s"""
-        int $n = $c.numElements();
-        int[] $votes = new int[$bits];
-        for (int $i = 0; $i < $n; $i++) {
-          long $h = $c.isNullAt($i) ? 0L : $c.getLong($i);
-          for (int $b = 0; $b < $bits; $b++) {
-            if ((($h >> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-          }
-        }
-        long $sig = 0L;
-        for (int $b = 0; $b < $bits; $b++) {
-          if ($votes[$b] > 0) $sig |= (1L << $b);
-        }
-        ${ev.value} = $sig;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expr.SimHashSignature.compute($c, $bits);")
 
   override protected def withNewChildInternal(newChild: Expression): SimHashSignature =
     copy(child = newChild)
 }
 
 object SimHashSignature {
-  /** interpreted path — same arithmetic as the generated code. */
   def compute(hashes: ArrayData, bits: Int): Long = {
     val votes = new Array[Int](bits)
     val n = hashes.numElements()
@@ -492,47 +367,19 @@ object SimHashSignature {
   * intermediate is the same integer sequence the SQL oracle replays.
   * Null word elements (never produced by `split`) hash as the empty word.
   */
-case class PortableWordHashes(child: Expression) extends UnaryExpression {
+case class PortableWordHashes(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_portable_word_hashes"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_portable_word_hashes needs array<string>, got ${t.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[ArrayData]
-    val out = new Array[Long](words.numElements())
-    var i = 0
-    while (i < out.length) {
-      val w = if (words.isNullAt(i)) null else words.getUTF8String(i)
-      out(i) = PortableWordHashes.hashWord(
-        if (w == null) "" else w.toString)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    PortableWordHashes.compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out"); val s = ctx.freshName("s")
-      val cls = classOf[PortableWordHashes].getName
-      s"""
-        int $n = $c.numElements();
-        long[] $out = new long[$n];
-        for (int $i = 0; $i < $n; $i++) {
-          java.lang.String $s = $c.isNullAt($i)
-            ? "" : $c.getUTF8String($i).toString();
-          $out[$i] = $cls.hashWord($s);
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expr.PortableWordHashes.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): PortableWordHashes =
     copy(child = newChild)
@@ -543,7 +390,17 @@ object PortableWordHashes {
   private final val P1 = 2654435761L
   private final val P2 = 2246822519L
 
-  /** charpoly + mix for one word — callable from generated code. */
+  def compute(words: ArrayData): GenericArrayData = {
+    val out = new Array[Long](words.numElements())
+    var i = 0
+    while (i < out.length) {
+      out(i) = hashWord(if (words.isNullAt(i)) "" else words.getUTF8String(i).toString)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** charpoly + mix for one word. */
   def hashWord(s: String): Long = {
     var poly = 7L
     if (s.isEmpty) poly = (poly * 31) % M // split('','') = [''], ascii('') = 0
@@ -575,21 +432,17 @@ object PortableWordHashes {
   */
 case class SignSketch(child: Expression,
                       planes: Vector[Vector[Double]], rowsPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(planes.nonEmpty && planes.length % rowsPerBand == 0,
     s"planes (${planes.length}) must be a positive multiple of rowsPerBand=$rowsPerBand")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_sign_sketch"
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+
   @transient private lazy val planesArr: Array[Array[Double]] =
     planes.map(_.toArray).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_sign_sketch needs array<double>, got ${t.simpleString}")
-  }
 
   override def nullSafeEval(input: Any): Any =
     SignSketch.compute(input.asInstanceOf[ArrayData], planesArr, rowsPerBand)
@@ -606,9 +459,9 @@ case class SignSketch(child: Expression,
 }
 
 object SignSketch {
-  /** one pass over the vector's dots — callable from generated code. */
+  /** one pass over the vector's dots. */
   def compute(v: ArrayData, planes: Array[Array[Double]],
-              rowsPerBand: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+              rowsPerBand: Int): GenericArrayData = {
     val d = planes(0).length
     val bands = planes.length / rowsPerBand
     val words = new Array[Long](bands)
@@ -633,7 +486,7 @@ object SignSketch {
         b += 1
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(words)
+    new GenericArrayData(words)
   }
 }
 
@@ -659,7 +512,7 @@ object SignSketch {
   * (Lloyd cell drop) but every centroid must have the same length.
   */
 case class PqEncode(child: Expression, codebooks: Vector[Vector[Vector[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
     "graft_pq_encode: every subspace needs at least one centroid")
   require(codebooks.forall(_.forall(_.length == codebooks.head.head.length)),
@@ -667,6 +520,7 @@ case class PqEncode(child: Expression, codebooks: Vector[Vector[Vector[Double]]]
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   @transient private lazy val cbArr: Array[Array[Array[Double]]] =
     codebooks.map(_.map(_.toArray).toArray).toArray
@@ -675,12 +529,6 @@ case class PqEncode(child: Expression, codebooks: Vector[Vector[Vector[Double]]]
       var s = 0.0; c.foreach(x => s += x * x) // sequential — oracle parity
       s
     })
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_encode needs array<double>, got ${t.simpleString}")
-  }
 
   override def nullSafeEval(input: Any): Any =
     PqEncode.compute(input.asInstanceOf[ArrayData], cbArr, c2Arr)
@@ -706,9 +554,9 @@ object PqEncode {
     else if (a == b) false // covers -0.0 vs 0.0
     else !java.lang.Double.isNaN(a) && java.lang.Double.isNaN(b)
 
-  /** all m codes in one pass — callable from generated code. */
+  /** all m codes in one pass. */
   def compute(v: ArrayData, cb: Array[Array[Array[Double]]],
-              c2: Array[Array[Double]]): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+              c2: Array[Array[Double]]): GenericArrayData = {
     val m = cb.length
     val sub = cb(0)(0).length
     val n = v.numElements()
@@ -733,7 +581,7 @@ object PqEncode {
       out(s) = bestJ
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -747,119 +595,76 @@ object PqEncode {
   * loops per row inside whole-stage codegen. Arithmetic is bit-identical
   * to the oracle's `list_sum` formulation: sequential element-order
   * mean, `>` compare, exact long bit sum. Arrays shorter than `bits`
-  * yield null, as does any null slot among the first `bits` elements
-  * when the array type admits element nulls (the null scan is only
-  * emitted for containsNull inputs — cast-produced grids are
-  * non-null and keep the tight kernel). `bits` ≤ 63 keeps the
-  * signature non-negative in signed-64 engines. */
-case class AHash(child: Expression, bits: Int) extends UnaryExpression {
+  * yield null, as does any null slot among the first `bits` elements.
+  * `bits` ≤ 63 keeps the signature non-negative in signed-64 engines. */
+case class AHash(child: Expression, bits: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(bits >= 1 && bits <= 63, "graft_ahash: bits must be in [1, 63]")
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_ahash"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
-  private lazy val elemsNullable = child.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  }
+  override def nullSafeEval(input: Any): Any =
+    AHash.compute(input.asInstanceOf[ArrayData], bits)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_ahash needs array<double>, got ${t.simpleString}")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, px =>
+      Kernel.boxedOrNull(ctx, ev, dataType, s"graft.expr.AHash.compute($px, $bits)"))
 
-  private def anyNullSlot(px: ArrayData, n: Int): Boolean = {
-    var i = 0
-    while (i < n) { if (px.isNullAt(i)) return true; i += 1 }
-    false
-  }
+  override protected def withNewChildInternal(newChild: Expression): AHash =
+    copy(child = newChild)
+}
 
-  override def nullSafeEval(input: Any): Any = {
-    val px = input.asInstanceOf[ArrayData]
-    if (px.numElements() < bits) null
-    else if (elemsNullable && anyNullSlot(px, bits)) null
+object AHash {
+  /** the hash, or null for a short grid or a null pixel. */
+  def compute(px: ArrayData, bits: Int): java.lang.Long =
+    if (Kernel.shortOrNull(px, bits)) null
     else {
       var s = 0.0; var i = 0
       while (i < bits) { s += px.getDouble(i); i += 1 }
       val mean = s / bits
       var h = 0L; i = 0
       while (i < bits) {
-        if (px.getDouble(i) > mean) h += (1L << i); i += 1
+        if (px.getDouble(i) > mean) h += (1L << i)
+        i += 1
       }
       h
     }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, px => {
-      val s = ctx.freshName("s"); val m = ctx.freshName("m")
-      val h = ctx.freshName("h"); val i = ctx.freshName("i")
-      val nn = ctx.freshName("anyNull")
-      val nullScan = if (elemsNullable)
-        s"""if ($px.numElements() >= $bits) {
-          for (int $i = 0; $i < $bits && !$nn; $i++) { $nn = $px.isNullAt($i); }
-        }"""
-      else ""
-      s"""
-        boolean $nn = false;
-        $nullScan
-        if ($px.numElements() < $bits || $nn) {
-          ${ev.isNull} = true;
-        } else {
-          double $s = 0.0;
-          for (int $i = 0; $i < $bits; $i++) { $s += $px.getDouble($i); }
-          double $m = $s / $bits;
-          long $h = 0L;
-          for (int $i = 0; $i < $bits; $i++) {
-            if ($px.getDouble($i) > $m) $h += (1L << $i);
-          }
-          ${ev.value} = $h;
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): AHash =
-    copy(child = newChild)
 }
 
 /** Difference perceptual hash (dHash) over a w×h row-major luma grid:
   * bit r·(w−1)+c set iff pixel (r,c) < pixel (r,c+1). Pure integer/
   * compare arithmetic in one codegen loop; arrays shorter than w·h
-  * yield null, as does any null slot among the first w·h elements of
-  * a containsNull array (the [[AHash]] rule — the scan is skipped for
-  * non-null element types). (w−1)·h ≤ 63 — same sign-portability rule
+  * yield null, as does any null slot among the first w·h elements
+  * (the [[AHash]] rule). (w−1)·h ≤ 63 — same sign-portability rule
   * as [[AHash]]. */
-case class DHash(child: Expression, w: Int, h: Int) extends UnaryExpression {
+case class DHash(child: Expression, w: Int, h: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(w >= 2 && h >= 1 && (w - 1) * h <= 63,
     "graft_dhash: need w >= 2 and (w-1)*h <= 63")
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_dhash"
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
-  private lazy val elemsNullable = child.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  }
+  override def nullSafeEval(input: Any): Any =
+    DHash.compute(input.asInstanceOf[ArrayData], w, h)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_dhash needs array<double>, got ${t.simpleString}")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, px =>
+      Kernel.boxedOrNull(ctx, ev, dataType, s"graft.expr.DHash.compute($px, $w, $h)"))
 
-  private def anyNullSlot(px: ArrayData, n: Int): Boolean = {
-    var i = 0
-    while (i < n) { if (px.isNullAt(i)) return true; i += 1 }
-    false
-  }
+  override protected def withNewChildInternal(newChild: Expression): DHash =
+    copy(child = newChild)
+}
 
-  override def nullSafeEval(input: Any): Any = {
-    val px = input.asInstanceOf[ArrayData]
-    if (px.numElements() < w * h) null
-    else if (elemsNullable && anyNullSlot(px, w * h)) null
+object DHash {
+  /** the hash, or null for a short grid or a null pixel. */
+  def compute(px: ArrayData, w: Int, h: Int): java.lang.Long =
+    if (Kernel.shortOrNull(px, w * h)) null
     else {
       var hash = 0L; var r = 0
       while (r < h) {
@@ -873,37 +678,26 @@ case class DHash(child: Expression, w: Int, h: Int) extends UnaryExpression {
       }
       hash
     }
+}
+
+/** Helpers shared by the kernels and their generated code. */
+private[expr] object Kernel {
+  /** Generated code for a kernel call that returns a boxed value, or
+    * null for a NULL result. */
+  def boxedOrNull(ctx: CodegenContext, ev: ExprCode, dt: DataType, call: String): String = {
+    val r = ctx.freshName("r")
+    s"""${CodeGenerator.boxedType(dt)} $r = $call;
+       |${ev.isNull} = $r == null;
+       |if ($r != null) ${ev.value} = $r.${CodeGenerator.javaType(dt)}Value();""".stripMargin
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, px => {
-      val hash = ctx.freshName("hash"); val r = ctx.freshName("r")
-      val c = ctx.freshName("c"); val nn = ctx.freshName("anyNull")
-      val nullScan = if (elemsNullable)
-        s"""if ($px.numElements() >= ${w * h}) {
-          for (int $r = 0; $r < ${w * h} && !$nn; $r++) { $nn = $px.isNullAt($r); }
-        }"""
-      else ""
-      s"""
-        boolean $nn = false;
-        $nullScan
-        if ($px.numElements() < ${w * h} || $nn) {
-          ${ev.isNull} = true;
-        } else {
-          long $hash = 0L;
-          for (int $r = 0; $r < $h; $r++) {
-            for (int $c = 0; $c < ${w - 1}; $c++) {
-              if ($px.getDouble($r * $w + $c) < $px.getDouble($r * $w + $c + 1))
-                $hash += (1L << ($r * ${w - 1} + $c));
-            }
-          }
-          ${ev.value} = $hash;
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): DHash =
-    copy(child = newChild)
+  /** true when `a` has fewer than `n` elements or a null among its first n. */
+  def shortOrNull(a: ArrayData, n: Int): Boolean = {
+    if (a.numElements() < n) return true
+    var i = 0
+    while (i < n) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
 }
 
 object VectorExpressions {

@@ -1140,14 +1140,18 @@ object Dedup {
                           maxDist: Int, bits: Int = 63): DataFrame =
     simhashPairsImpl(df, id, sig, maxDist, bits)
 
-  private def simhashPairsImpl(df: DataFrame, id: String, sim: Column,
-                               maxDist: Int, bits: Int): DataFrame = {
+  /** (id, sh, chunk, ck): each document's simhash `sh` once per
+    * pigeonhole chunk — `sh` split into maxDist+1 bit ranges whose
+    * widths differ by at most one, so two signatures within hamming
+    * maxDist agree on at least one (chunk, ck). */
+  private def simhashChunked(df: DataFrame, id: String, sim: Column,
+                             maxDist: Int, bits: Int): DataFrame = {
     require(maxDist >= 0 && maxDist < bits, s"maxDist must be in [0, ${bits - 1}]")
     val numChunks = maxDist + 1
     val base = bits / numChunks; val rem = bits % numChunks
     val widths = Seq.tabulate(numChunks)(c => if (c < rem) base + 1 else base)
     val offsets = widths.scanLeft(0)(_ + _).init
-    // both sides of the chunk self-join would otherwise re-scan the
+    // both sides of the chunk join would otherwise re-scan the
     // corpus and recompute the signature (the exchanges don't unify —
     // the q44/q45 lesson); the materialized frame is (id, 8-byte sh),
     // KBs per million docs.
@@ -1159,9 +1163,13 @@ object Dedup {
     val chunkCols = offsets.zip(widths).map { case (off, w) =>
       shiftright(col("sh"), off).bitwiseAND((1L << w) - 1L)
     }
-    val chunked = withSim.select(col(id), col("sh"),
-      posexplode(array(chunkCols: _*)))
+    withSim.select(col(id), col("sh"), posexplode(array(chunkCols: _*)))
       .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ck")
+  }
+
+  private def simhashPairsImpl(df: DataFrame, id: String, sim: Column,
+                               maxDist: Int, bits: Int): DataFrame = {
+    val chunked = simhashChunked(df, id, sim, maxDist, bits)
     chunked.as("x").join(chunked.as("y"),
         col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck") &&
           col(s"x.$id") < col(s"y.$id"))
@@ -1197,20 +1205,7 @@ object Dedup {
   private def simhashIncImpl(newDf: DataFrame, seenDf: DataFrame,
                              id: String, sim: Column, maxDist: Int,
                              bits: Int): DataFrame = {
-    require(maxDist >= 0 && maxDist < bits, s"maxDist must be in [0, ${bits - 1}]")
-    val numChunks = maxDist + 1
-    val base = bits / numChunks; val rem = bits % numChunks
-    val widths = Seq.tabulate(numChunks)(c => if (c < rem) base + 1 else base)
-    val offsets = widths.scanLeft(0)(_ + _).init
-    val chunkCols = offsets.zip(widths).map { case (off, w) =>
-      shiftright(col("sh"), off).bitwiseAND((1L << w) - 1L)
-    }
-    def chunked(df: DataFrame) = {
-      val withSim0 = splitIn(df, id).select(col(id), sim.as("sh"))
-      val withSim = Materialize.pin(withSim0)
-      withSim.select(col(id), col("sh"), posexplode(array(chunkCols: _*)))
-        .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ck")
-    }
+    def chunked(df: DataFrame) = simhashChunked(df, id, sim, maxDist, bits)
     chunked(newDf).as("x").join(chunked(seenDf).as("y"),
         col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck"))
       .select(col(s"x.$id").as("d1"), col(s"y.$id").as("d2"),

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{AbstractDataType, DataType, StructType, TypeCollection}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** DataFrame-from-InternalRow bridge. `internalCreateDataFrame` is
@@ -25,4 +25,8 @@ object InternalBridge {
     * queued event (`listenerBus` is `private[spark]`), so a listener
     * read afterwards has seen every job that already ran. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** An `ExpectsInputTypes` entry that accepts any of `types`
+    * (`TypeCollection` is `private[sql]`). */
+  def anyOf(types: DataType*): AbstractDataType = TypeCollection(types: _*)
 }

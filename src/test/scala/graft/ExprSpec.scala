@@ -318,7 +318,7 @@ class ExprSpec extends SparkSpec {
       .toMap
     // exact differential vs the JDK deflater on the same bytes
     def direct(s: String): Double =
-      CompressionRatio.ratio(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      CompressionRatio.ratio(org.apache.spark.unsafe.types.UTF8String.fromString(s))
     assert(got(1L).contains(direct(prose)))
     assert(got(2L).contains(direct(degenerate)))
     assert(got(3L).contains(direct(incompressible)))
@@ -329,11 +329,6 @@ class ExprSpec extends SparkSpec {
     assert(got(2L).get < got(1L).get && got(1L).get < got(3L).get,
       s"degenerate ${got(2L)} < prose ${got(1L)} < incompressible ${got(3L)}")
     assert(got(2L).get < 0.2 && got(3L).get > 0.8)
-    // interpreted eval path agrees with the codegen path above
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val interp = CompressionRatio(Literal(
-      org.apache.spark.unsafe.types.UTF8String.fromString(prose))).eval(null)
-    assert(interp == direct(prose))
     // and the SQL registration resolves to the same kernel
     val viaSql = spark.sql(
       s"SELECT graft_compression_ratio('$degenerate') AS r").head.getDouble(0)
@@ -390,9 +385,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("charTrigramBuckets kernel matches the interpreted charpoly chain") {
-    import graft.expr.CharTrigramBucketHashes
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, LongType}
     val M = 2147483647L
     val rnd = new scala.util.Random(29)
     // code points across the plane incl. 0 and max BMP/astral values
@@ -415,15 +407,138 @@ class ExprSpec extends SparkSpec {
         ref.as("r")).collect()
     got.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2),
       s"id=${r.getLong(0)}"))
-    // the interpreted eval path agrees with the codegen path above
-    val byId = got.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    rows.foreach { case (id, cp) =>
-      val interp = CharTrigramBucketHashes(
-          Literal.create(cp.orNull, ArrayType(LongType)), 512).eval(null)
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toLongArray().toSeq
-      assert(interp == byId(id), s"interpreted id=$id")
+    assert(got.find(_.getLong(0) == 202L).get.getSeq[Long](1).isEmpty,
+      "NULL input must yield the empty array")
+  }
+
+  // --- codegen on ≡ codegen off, one adversarial frame -------------------
+
+  /** NULL rows, empty arrays, null elements, arrays shorter than every
+    * kernel's `bits`/`w·h`/`n`, empty, decomposed and non-ASCII strings,
+    * ±0.0/NaN/±Inf and the long extremes — read back from parquet, so
+    * both runs scan the same rows and nothing is constant-folded. */
+  private def adversarialFrame(dir: String) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType),
+      StructField("w", ArrayType(StringType)), StructField("h", ArrayType(LongType)),
+      StructField("v", ArrayType(DoubleType)), StructField("q", ArrayType(ByteType)),
+      StructField("x", DoubleType), StructField("hi", LongType), StructField("lo", LongType)))
+    val rnd = new scala.util.Random(31)
+    def vec(n: Int) = Seq.fill(n)(rnd.nextGaussian())
+    val vocab = Vector("a", "bb", "", "wörd", "日本語", "é", "the", "x" * 40)
+    val rows = Seq(
+      Row(0L, null, null, null, null, null, null, null, null),
+      Row(1L, "", Seq(), Seq(), Seq(), Seq(), 0.0, 0L, 0L),
+      Row(2L, "héllo wörld", Seq("a", null, "b", "a", null),
+        Seq(1L, null, 3L), Seq(1.0, null) ++ vec(18), Seq(1.toByte, null, (-3).toByte),
+        2.0, -1L, -1L),
+      Row(3L, "日本語のテキスト", Seq("solo"), Seq(42L), Seq(0.5, -0.25),
+        Seq(127.toByte), -2.0, 0L, Long.MinValue),
+      Row(4L, "e\u0301cole \ufb01ne A\u030a \ud834\udd1e", Seq("日本", "語", "日本", "語"),
+        Seq(Long.MinValue, Long.MaxValue, 0L, -1L), vec(17),
+        Seq(-128.toByte, 127.toByte, 0.toByte), 1e-6, Long.MaxValue, Long.MaxValue),
+      Row(5L, "spam ham " * 30, Seq("a", "a", "a", "a"), Seq(7L, 7L, 7L),
+        Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity) ++ Seq.fill(16)(1.0),
+        Seq(2.toByte, 2.toByte), 9.99999e11, 3L, 12345678L),
+      Row(6L, "plain ascii text", Seq.fill(9)(vocab(rnd.nextInt(vocab.length))),
+        Seq.fill(25)(rnd.nextLong()), vec(20),
+        Seq.fill(20)((rnd.nextInt(255) - 127).toByte), -9.99999e11, -2L, 5L)
+    ) ++ (7 until 12).map { i =>
+      Row(i.toLong, vocab.mkString(" ").take(i * 3),
+        Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(vocab.length))),
+        Seq.fill(rnd.nextInt(30))(rnd.nextLong()), vec(20),
+        Seq.fill(20)((rnd.nextInt(255) - 127).toByte), rnd.nextDouble() * 10 - 5,
+        rnd.nextLong() % 1000, rnd.nextLong())
     }
-    assert(byId(202L).isEmpty, "NULL input must yield the empty array")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("every expr/ kernel returns identical rows with codegen on and off") {
+    import graft.expr._
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    val dir = java.nio.file.Files.createTempDirectory("graft-kernels").toString
+    val df = adversarialFrame(dir)
+    val rnd = new scala.util.Random(37)
+    val planes = Vector.fill(4, 20)(rnd.nextGaussian())
+    val codebooks = Array.fill(2, 3, 10)(rnd.nextGaussian())
+    val V = VectorExpressions; val T = TextHashExpressions; val S = StringExpressions
+    val (w, h, v, q, x) = ($"w", $"h", $"v", $"q", $"x")
+    val kernels: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "DotProduct" -> V.dot(v, v),
+      "MinHashSignature" -> V.minhashSig(h, 8),
+      "TopNgramCount" -> V.topNgramCount(w, 2),
+      "VectorDivide" -> V.vecDiv(v, x),
+      "VectorQuantizeInt8" -> V.vecQuantizeInt8(v, x),
+      "DotProductInt8" -> V.dotInt8(q, q),
+      "VectorDequantInt8" -> V.vecDequantInt8(q, x),
+      "SimHashSignature16" -> V.simhashSig(h, 16),
+      "SimHashSignature64" -> V.simhashSig(h, 64),
+      "PortableWordHashes" -> V.portableWordHashes(w),
+      "SignSketch" -> V.signSketch(v, planes, 2),
+      "PqEncode" -> V.pqEncode(v, codebooks),
+      "AHash" -> V.aHash(v, 16),
+      "DHash" -> V.dHash(v, 5, 4),
+      "CharTrigramBucketHashes" -> T.charTrigramBuckets(h, 512),
+      "NgramHashesAll" -> T.ngramHashesAll(w, 3),
+      "NgramHashesDistinct" -> T.ngramHashesDistinct(w, 3),
+      "BigramHashPairs" -> T.bigramHashPairs(w),
+      "UnicodeNormalizeNFC" -> S.unicodeNormalize($"s", "NFC"),
+      "UnicodeNormalizeNFKC" -> S.unicodeNormalize($"s", "NFKC"),
+      "CompressionRatio" -> S.compressionRatio($"s"),
+      "Int128MicrosToDouble" -> column(
+        Int128MicrosToDouble(expression($"hi"), expression($"lo"), 6)))
+    def run(confs: (String, String)*): Map[String, Seq[String]] = {
+      val keys = confs.map(_._1)
+      val before = keys.map(k => k -> spark.conf.getOption(k))
+      confs.foreach { case (k, value) => spark.conf.set(k, value) }
+      try {
+        val rows = df.select($"id" +: kernels.map { case (n, c) => c.as(n) }: _*)
+          .collect().sortBy(_.getLong(0))
+        val sums = df.groupBy(($"id" % 3).as("g"))
+          .agg(AggregateExpressions.dsum128($"x").as("s")).collect().sortBy(_.getLong(0))
+        val total = df.agg(AggregateExpressions.dsum128($"x")).collect()
+        kernels.zipWithIndex.map { case ((n, _), i) =>
+          n -> rows.map(r => s"${r.getLong(0)}: ${r.get(i + 1)}").toSeq
+        }.toMap + ("Int128SumMicros" -> (sums ++ total).map(_.toString).toSeq)
+      } finally before.foreach {
+        case (k, Some(old)) => spark.conf.set(k, old)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    try {
+      val codegen = run("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false")
+      val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      assert(codegen("Int128SumMicros").size == 4)
+      val differ = codegen.keys.toSeq.sorted.filter(k => codegen(k) != interpreted(k))
+      assert(differ.isEmpty, differ.map { k =>
+        val (a, b) = codegen(k).zip(interpreted(k)).find(p => p._1 != p._2).get
+        s"$k: codegen $a, interpreted $b"
+      }.mkString("\n"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("graft_minhash_sig takes numPerms only as an int literal and " +
+    "array<bigint> hashes without implicit casts") {
+    val viaSql = spark.sql(
+      "SELECT graft_minhash_sig(array(1L, 2L, 3L), 4) AS s").head.getSeq[Long](0)
+    val viaColumn = spark.range(1).select(graft.expr.VectorExpressions.minhashSig(
+      array(lit(1L), lit(2L), lit(3L)), 4)).head.getSeq[Long](0)
+    assert(viaSql == viaColumn && viaSql.size == 4)
+    val e = intercept[Exception](spark.sql(
+      "SELECT graft_minhash_sig(array(1L, 2L), id) FROM range(2)").collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("numPerms must be an int literal")),
+      messages.mkString(" / "))
+    val typed = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      "SELECT graft_minhash_sig(array(1, 2), 4)").collect())
+    assert(typed.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", typed.getMessage)
   }
 }
