@@ -10,6 +10,15 @@
 #
 # Usage: scripts/ab_bench.sh <ref> <query> [pairs=3] [sfdir=/root/testdata/sf0.1] [iters=7]
 #
+# Both sides are built the same way: each is a `git archive` copy of
+# its commit (A = HEAD's committed tree, B = <ref>) extracted into its
+# own fresh directory under one temp directory, compiled there and run
+# from there. Neither side runs from the working checkout, so local
+# edits, build leftovers and the checkout's location cannot favour one
+# side; a run that started in a different checkout once moved a
+# benchmark metric by 11% with no code change. Commit the change before
+# measuring it. The temp directory is removed on exit.
+#
 # Each side of each pair is a FRESH-SESSION graft.tools.QBench run
 # (median of `iters`, per-iteration wall/GC/steal attribution inside).
 # Pair order alternates A-B, B-A, A-B, ... so slow host drift cannot
@@ -36,28 +45,18 @@ ITERS="${5:-7}"
 cd "$(dirname "$0")/.."
 A_SHA=$(git rev-parse --short HEAD)
 B_SHA=$(git rev-parse --short "$REF")
-WT="/tmp/ab_worktree_${B_SHA}"
-if [ ! -d "$WT" ]; then
-  git worktree add --detach "$WT" "$B_SHA" >/dev/null
-else
-  # Reused worktree: force it back to a pristine B_SHA checkout — a
-  # dirty or manually-edited leftover from a prior experiment would
-  # otherwise silently benchmark modified code while the JSONL records
-  # it as B_SHA. reset --hard FIRST (it recovers dirty state no matter
-  # where HEAD points, and under `set -e` a conflicting-dirty-tree
-  # checkout failure would otherwise kill the script with its stderr
-  # suppressed — the very state this branch exists to recover from);
-  # the detach afterwards may no-op if HEAD already sits elsewhere,
-  # which the reset has already pinned to B_SHA's content.
-  git -C "$WT" reset --hard "$B_SHA" >/dev/null
-  git -C "$WT" checkout --detach "$B_SHA" >/dev/null
-  # keep build output (sbt recompiles anything stale from the reset
-  # sources) so reuse still saves the cold build
-  git -C "$WT" clean -fdx -e target -e project/target >/dev/null
-fi
-echo "== ab_bench: building A=HEAD($A_SHA) and B=$REF($B_SHA) =="
-sbt -batch compile >/tmp/ab_build_a.log 2>&1 || { tail -20 /tmp/ab_build_a.log; exit 1; }
-(cd "$WT" && sbt -batch compile >/tmp/ab_build_b.log 2>&1) || { tail -20 /tmp/ab_build_b.log; exit 1; }
+TMP=$(mktemp -d "${TMPDIR:-/tmp}/ab_bench.XXXXXX")
+trap 'rm -rf "$TMP"' EXIT
+for side in a b; do
+  sha=$A_SHA; [ "$side" = b ] && sha=$B_SHA
+  mkdir -p "$TMP/$side"
+  git archive "$sha" | tar -x -C "$TMP/$side"
+done
+echo "== ab_bench: building A=HEAD($A_SHA) and B=$REF($B_SHA) under $TMP =="
+for side in a b; do
+  (cd "$TMP/$side" && sbt -batch compile >"$TMP/build_$side.log" 2>&1) ||
+    { tail -20 "$TMP/build_$side.log"; exit 1; }
+done
 
 # Same JDK-17 module opens the build forks with (QBench makes an
 # in-process SparkSession; spark-submit would inject these itself).
@@ -86,9 +85,9 @@ S0=$(steal); T0=$(date +%s)
 A_RUNS=(); B_RUNS=()
 for p in $(seq 1 "$PAIRS"); do
   if [ $((p % 2)) -eq 1 ]; then
-    a=$(run_one .);     b=$(run_one "$WT")
+    a=$(run_one "$TMP/a"); b=$(run_one "$TMP/b")
   else
-    b=$(run_one "$WT"); a=$(run_one .)
+    b=$(run_one "$TMP/b"); a=$(run_one "$TMP/a")
   fi
   A_RUNS+=("$a"); B_RUNS+=("$b")
   echo "pair $p: A($A_SHA)=$a  B($B_SHA)=$b"

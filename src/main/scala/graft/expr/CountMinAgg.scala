@@ -3,10 +3,9 @@ package graft.expr
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -68,7 +67,7 @@ case class CountMinAgg(
   }
 
   override def eval(buf: Array[Long]): Any =
-    new GenericArrayData(buf.map(Long.box).asInstanceOf[Array[Any]])
+    UnsafeArrayData.fromPrimitiveArray(buf)
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(8 * buf.length)

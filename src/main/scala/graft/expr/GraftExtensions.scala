@@ -4,16 +4,21 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SparkSessionExtensions hook: registers graft's custom Catalyst
-  * expressions with the SQL function registry, so `spark.sql` users get
-  * them too (the Column API path via [[VectorExpressions]] needs no
-  * registration).
+/** SparkSessionExtensions hook. It does two things:
+  *  - registers graft's custom Catalyst expressions with the SQL
+  *    function registry, so `spark.sql` users get them too (the Column
+  *    API path via [[VectorExpressions]] needs no registration);
+  *  - injects [[SmallFinalSort]] as an adaptive query-stage preparation
+  *    rule: a global sort over input that AQE coalesces to one partition
+  *    runs in that one task, without the range exchange and its
+  *    sampling job.
   *
   * Enabled by `spark.sql.extensions=graft.expr.GraftExtensions`, which
   * [[graft.Runtime.session]] sets.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(SmallFinalSort)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{ColumnBridge, InternalBridge}
 import org.apache.spark.sql.types._
 
@@ -99,7 +99,7 @@ case class VectorMomentsAgg(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+  override def eval(buf: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(buf)
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(nSlots * 8)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,7 +39,7 @@ object TextHash {
     * `array_distinct`. */
   def ngramHashes(words: ArrayData, n: Int, distinct: Boolean): ArrayData = {
     val len = words.numElements()
-    if (len < n) return new GenericArrayData(Array.emptyLongArray)
+    if (len < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val m = len - n + 1
     val out = new Array[Long](m)
     var i = 0
@@ -54,7 +54,7 @@ object TextHash {
       out(i) = h
       i += 1
     }
-    if (!distinct) new GenericArrayData(out)
+    if (!distinct) UnsafeArrayData.fromPrimitiveArray(out)
     else {
       val seen = new java.util.HashSet[java.lang.Long](m * 2)
       val kept = new Array[Long](m)
@@ -64,7 +64,7 @@ object TextHash {
         if (seen.add(out(i))) { kept(o) = out(i); o += 1 }
         i += 1
       }
-      new GenericArrayData(java.util.Arrays.copyOf(kept, o))
+      UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(kept, o))
     }
   }
 
@@ -130,7 +130,7 @@ object CharTrigramBucketHashes {
 
   def compute(cps: ArrayData, buckets: Int): ArrayData = {
     val len = if (cps == null) 0 else cps.numElements()
-    if (len < 3) return new GenericArrayData(Array.emptyLongArray)
+    if (len < 3) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val m = len - 2
     val out = new Array[Long](m)
     var i = 0
@@ -142,7 +142,7 @@ object CharTrigramBucketHashes {
       out(i) = ((mix % buckets) + buckets) % buckets
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 

@@ -6,10 +6,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Per-group top-k as a MERGEABLE bounded-state aggregate — the scale
   * alternative to the rank-window formulation. A row_number window must
@@ -30,97 +30,136 @@ import org.apache.spark.sql.types._
   * greatest — same as Spark's DESC sort placing NaN first). Rows with a
   * null score or id are skipped (SQL aggregate convention).
   *
-  * Output: array<struct<score double, id long>> best-first.
+  * Payload: an optional third child whose value rides each retained
+  * entry (a shortlist that carries its vectors needs no join back to
+  * the table it was scored from). It is evaluated and copied only when
+  * the entry enters the heap, never orders anything, and may be NULL.
+  *
+  * Output: array<struct<score double, id long>> best-first, with a
+  * third `payload` field when a payload is given.
   */
 case class TopKAgg(
-    left: Expression, right: Expression, k: Int,
+    score: Expression, id: Expression, k: Int,
+    payload: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.PriorityQueue[(Double, Long)]]
-  with BinaryLike[Expression] with ExpectsInputTypes {
+  extends TypedImperativeAggregate[java.util.PriorityQueue[TopKAgg.Entry]]
+  with ExpectsInputTypes {
+  import TopKAgg.Entry
 
   require(k >= 1, "graft_top_k: k must be >= 1")
 
   override def prettyName: String = "graft_top_k"
+  override def children: Seq[Expression] = Seq(score, id) ++ payload
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType, nullable = false),
-    StructField("id", LongType, nullable = false))), containsNull = false)
+    StructField("id", LongType, nullable = false)) ++
+    payload.map(p => StructField("payload", p.dataType, p.nullable))),
+    containsNull = false)
   override def nullable: Boolean = false
 
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
+  override def inputTypes: Seq[DataType] =
+    Seq(DoubleType, LongType) ++ payload.map(_.dataType)
+
+  @transient private lazy val payloadExpr: Expression = payload.orNull
+  @transient private lazy val payloadRow: UnsafeProjection =
+    UnsafeProjection.create(Array(payloadExpr.dataType))
 
   /** head = WORST retained entry, so eviction is a peek/poll. */
-  private def worstFirst = new java.util.Comparator[(Double, Long)] {
-    override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val c = java.lang.Double.compare(a._1, b._1)
-      if (c != 0) c else java.lang.Long.compare(b._2, a._2)
+  private def worstFirst = new java.util.Comparator[Entry] {
+    override def compare(a: Entry, b: Entry): Int = {
+      val c = java.lang.Double.compare(a.score, b.score)
+      if (c != 0) c else java.lang.Long.compare(b.id, a.id)
     }
   }
 
-  override def createAggregationBuffer(): java.util.PriorityQueue[(Double, Long)] =
-    new java.util.PriorityQueue[(Double, Long)](k, worstFirst)
+  override def createAggregationBuffer(): java.util.PriorityQueue[Entry] =
+    new java.util.PriorityQueue[Entry](k, worstFirst)
 
-  /** true when (s, i) beats the queue's worst entry. */
-  private def beats(q: java.util.PriorityQueue[(Double, Long)],
-                    s: Double, i: Long): Boolean = {
-    val w = q.peek()
-    val c = java.lang.Double.compare(s, w._1)
-    c > 0 || (c == 0 && i < w._2)
+  /** true when (s, i) would be retained: the heap has room, or (s, i)
+    * beats its worst entry. */
+  private def admits(q: java.util.PriorityQueue[Entry], s: Double, i: Long): Boolean =
+    q.size < k || {
+      val w = q.peek()
+      val c = java.lang.Double.compare(s, w.score)
+      c > 0 || (c == 0 && i < w.id)
+    }
+
+  private def insert(q: java.util.PriorityQueue[Entry], e: Entry): Unit = {
+    if (q.size >= k) q.poll()
+    q.offer(e)
   }
 
-  private def insert(q: java.util.PriorityQueue[(Double, Long)],
-                     s: Double, i: Long): Unit =
-    if (q.size < k) q.offer((s, i))
-    else if (beats(q, s, i)) { q.poll(); q.offer((s, i)) }
-
-  override def update(q: java.util.PriorityQueue[(Double, Long)],
-                      input: InternalRow): java.util.PriorityQueue[(Double, Long)] = {
-    val s = left.eval(input)
-    val i = right.eval(input)
-    if (s != null && i != null)
-      insert(q, s.asInstanceOf[Double], i.asInstanceOf[Long])
+  override def update(q: java.util.PriorityQueue[Entry],
+                      input: InternalRow): java.util.PriorityQueue[Entry] = {
+    val s = score.eval(input)
+    val i = id.eval(input)
+    if (s != null && i != null) {
+      val sv = s.asInstanceOf[Double]
+      val iv = i.asInstanceOf[Long]
+      if (admits(q, sv, iv)) insert(q, new Entry(sv, iv,
+        if (payloadExpr == null) null else InternalRow.copyValue(payloadExpr.eval(input))))
+    }
     q
   }
 
-  override def merge(a: java.util.PriorityQueue[(Double, Long)],
-                     b: java.util.PriorityQueue[(Double, Long)]): java.util.PriorityQueue[(Double, Long)] = {
+  override def merge(a: java.util.PriorityQueue[Entry],
+                     b: java.util.PriorityQueue[Entry]): java.util.PriorityQueue[Entry] = {
     val it = b.iterator()
     while (it.hasNext) {
       val e = it.next()
-      insert(a, e._1, e._2)
+      if (admits(a, e.score, e.id)) insert(a, e)
     }
     a
   }
 
-  override def eval(q: java.util.PriorityQueue[(Double, Long)]): Any = {
-    val entries = new Array[(Double, Long)](q.size)
-    var i = 0
-    val it = q.iterator()
-    while (it.hasNext) { entries(i) = it.next(); i += 1 }
+  override def eval(q: java.util.PriorityQueue[Entry]): Any = {
+    val entries = q.toArray(new Array[Entry](q.size))
     // best-first: exactly the reverse of worstFirst
     java.util.Arrays.sort(entries, worstFirst.reversed())
-    new GenericArrayData(entries.map { case (s, id) =>
-      InternalRow(s, id)
+    new GenericArrayData(entries.map { e =>
+      if (payloadExpr == null) InternalRow(e.score, e.id)
+      else InternalRow(e.score, e.id, e.payload)
     }.asInstanceOf[Array[Any]])
   }
 
-  override def serialize(q: java.util.PriorityQueue[(Double, Long)]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + q.size * 16)
-    bb.putInt(q.size)
-    val it = q.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      bb.putDouble(e._1); bb.putLong(e._2)
+  /** n, then per entry: score, id and — with a payload — the payload as
+    * a length-prefixed one-field UnsafeRow. */
+  override def serialize(q: java.util.PriorityQueue[Entry]): Array[Byte] = {
+    val entries = q.toArray(new Array[Entry](q.size))
+    val payloads = if (payloadExpr == null) null else entries.map(e =>
+      payloadRow(InternalRow(e.payload)).copy().getBytes)
+    val size = 4 + entries.length * 16 +
+      (if (payloads == null) 0 else payloads.map(4 + _.length).sum)
+    val bb = ByteBuffer.allocate(size)
+    bb.putInt(entries.length)
+    var i = 0
+    while (i < entries.length) {
+      bb.putDouble(entries(i).score); bb.putLong(entries(i).id)
+      if (payloads != null) { bb.putInt(payloads(i).length); bb.put(payloads(i)) }
+      i += 1
     }
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[(Double, Long)] = {
+  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[Entry] = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt
     val out = createAggregationBuffer()
     var i = 0
-    while (i < n) { out.offer((bb.getDouble, bb.getLong)); i += 1 }
+    while (i < n) {
+      val s = bb.getDouble
+      val id = bb.getLong
+      val p = if (payloadExpr == null) null else {
+        val len = bb.getInt
+        val row = new UnsafeRow(1)
+        row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + bb.position(), len)
+        bb.position(bb.position() + len)
+        if (row.isNullAt(0)) null else InternalRow.copyValue(row.get(0, payloadExpr.dataType))
+      }
+      out.offer(new Entry(s, id, p))
+      i += 1
+    }
     out
   }
 
@@ -129,8 +168,13 @@ case class TopKAgg(
   override def withNewInputAggBufferOffset(newOffset: Int): TopKAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopKAgg =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): TopKAgg =
+    copy(score = newChildren(0), id = newChildren(1), payload = newChildren.lift(2))
+}
+
+object TopKAgg {
+  /** One retained entry; `payload` is null without a payload child. */
+  final class Entry(val score: Double, val id: Long, val payload: Any)
 }
 
 object TopK {
@@ -141,4 +185,12 @@ object TopK {
     ColumnBridge.column(
       TopKAgg(ColumnBridge.expression(score.cast("double")),
         ColumnBridge.expression(id.cast("long")), k).toAggregateExpression())
+
+  /** [[topK]] whose entries also carry `payload`'s value:
+    * array<struct<score double, id bigint, payload>>. */
+  def topK(score: Column, id: Column, k: Int, payload: Column): Column =
+    ColumnBridge.column(
+      TopKAgg(ColumnBridge.expression(score.cast("double")),
+        ColumnBridge.expression(id.cast("long")), k,
+        Some(ColumnBridge.expression(payload))).toAggregateExpression())
 }

@@ -1,9 +1,9 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, StringType}
 
@@ -81,8 +81,8 @@ case class MinHashSignature(child: Expression, numPerms: Int)
 object MinHashSignature {
   /** The kernel over one row: the hashes are copied once into a
     * primitive array, so the hot loop makes no per-element call. */
-  def signature(hashes: ArrayData, numPerms: Int): GenericArrayData =
-    new GenericArrayData(compute(hashes.toLongArray(), numPerms))
+  def signature(hashes: ArrayData, numPerms: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(compute(hashes.toLongArray(), numPerms))
 
   def compute(hashes: Array[Long], numPerms: Int): Array[Long] = {
     val sig = Array.fill(numPerms)(Long.MaxValue)
@@ -186,13 +186,13 @@ case class VectorDivide(left: Expression, right: Expression)
 }
 
 object VectorDivide {
-  /** Divides the once-copied primitive array in place: no per-element
-    * call, and no allocation beyond the copy. */
-  def compute(x: ArrayData, d: Double): GenericArrayData = {
+  /** Divides the once-copied primitive array in place (no per-element
+    * call), then copies it unboxed into the result. */
+  def compute(x: ArrayData, d: Double): ArrayData = {
     val out = x.toDoubleArray()
     var i = 0
     while (i < out.length) { out(i) /= d; i += 1 }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
@@ -221,7 +221,7 @@ case class VectorQuantizeInt8(left: Expression, right: Expression)
 }
 
 object VectorQuantizeInt8 {
-  def compute(x: ArrayData, scale: Double): GenericArrayData = {
+  def compute(x: ArrayData, scale: Double): ArrayData = {
     val out = new Array[Byte](x.numElements())
     var i = 0
     while (i < out.length) {
@@ -229,7 +229,7 @@ object VectorQuantizeInt8 {
       out(i) = Math.max(-127L, Math.min(127L, q)).toByte
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
@@ -288,11 +288,11 @@ case class VectorDequantInt8(left: Expression, right: Expression)
 }
 
 object VectorDequantInt8 {
-  def compute(x: ArrayData, scale: Double): GenericArrayData = {
+  def compute(x: ArrayData, scale: Double): ArrayData = {
     val out = new Array[Double](x.numElements())
     var i = 0
     while (i < out.length) { out(i) = x.getByte(i) * scale; i += 1 }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
@@ -390,14 +390,14 @@ object PortableWordHashes {
   private final val P1 = 2654435761L
   private final val P2 = 2246822519L
 
-  def compute(words: ArrayData): GenericArrayData = {
+  def compute(words: ArrayData): ArrayData = {
     val out = new Array[Long](words.numElements())
     var i = 0
     while (i < out.length) {
       out(i) = hashWord(if (words.isNullAt(i)) "" else words.getUTF8String(i).toString)
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** charpoly + mix for one word. */
@@ -461,7 +461,7 @@ case class SignSketch(child: Expression,
 object SignSketch {
   /** one pass over the vector's dots. */
   def compute(v: ArrayData, planes: Array[Array[Double]],
-              rowsPerBand: Int): GenericArrayData = {
+              rowsPerBand: Int): ArrayData = {
     val d = planes(0).length
     val bands = planes.length / rowsPerBand
     val words = new Array[Long](bands)
@@ -486,7 +486,7 @@ object SignSketch {
         b += 1
       }
     }
-    new GenericArrayData(words)
+    UnsafeArrayData.fromPrimitiveArray(words)
   }
 }
 
@@ -556,7 +556,7 @@ object PqEncode {
 
   /** all m codes in one pass. */
   def compute(v: ArrayData, cb: Array[Array[Array[Double]]],
-              c2: Array[Array[Double]]): GenericArrayData = {
+              c2: Array[Array[Double]]): ArrayData = {
     val m = cb.length
     val sub = cb(0)(0).length
     val n = v.numElements()
@@ -581,7 +581,7 @@ object PqEncode {
       out(s) = bestJ
       s += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 

@@ -51,12 +51,18 @@ object Similarity {
     * broadcast); corpus streams once into the per-qid bounded heap —
     * no rank window, so no per-anchor corpus sort. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, id: String,
-                     vec: String, k: Int): DataFrame = {
+                     vec: String, k: Int): DataFrame =
+    heapTopK(scoredPairs(queries, corpus, id, vec), k, skipTop = 0)
+
+  /** Every (query, other corpus row) pair as (qid, nid, cos, nv), the
+    * broadcast-query scoring of [[bruteForceTopK]] and [[mmrRerank]]. */
+  private def scoredPairs(queries: DataFrame, corpus: DataFrame, id: String,
+                          vec: String): DataFrame = {
     val q = queries.select(col(id).as("qid"), col(vec).as("qv"))
     val c = corpus.select(col(id).as("nid"), col(vec).as("nv"))
-    val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), cosine(col("qv"), col("nv")).as("cos"))
-    heapTopK(scored, k, skipTop = 0)
+    c.join(broadcast(q), col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"), cosine(col("qv"), col("nv")).as("cos"),
+        col("nv"))
   }
 
   /** Hard-negative mining for contrastive training (the public
@@ -393,6 +399,33 @@ object Similarity {
         col(vec).cast("array<double>"))).as("__cands"))
       .select(col("__q"), inline(graft.expr.Mmr.select(col("__cands"), k, lambda)))
       .select(col("__q").as(qid), col("rank"), col("__c").as(id),
+        round(col("__score"), 6).as("score"))
+  }
+
+  /** Retrieve-then-diversify in one aggregate: [[bruteForceTopK]]'s
+    * top-`shortlist` cosine neighbors of each query row, re-ranked by
+    * [[mmrDiversify]]'s k greedy MMR rounds. The bounded heap keeps each
+    * retained neighbor's corpus vector as its payload
+    * ([[graft.expr.TopKAgg]]), so [[graft.expr.MmrSelect]] reads the
+    * shortlist straight from the heap in the same projection: no join
+    * back to `corpus` for the vectors and no second group-by to collect
+    * them. Same picks as `mmrDiversify` over the joined shortlist.
+    * Neighbor ids are longs (the heap's id type). Returns
+    * (qid, rank, nid, score), score rounded 6 dp. */
+  def mmrRerank(queries: DataFrame, corpus: DataFrame, id: String,
+                vec: String, shortlist: Int, k: Int,
+                lambda: Double = 0.7): DataFrame = {
+    require(shortlist >= 1, "mmrRerank: shortlist must be >= 1")
+    require(k >= 1, "mmrRerank: k must be >= 1")
+    require(lambda >= 0.0 && lambda <= 1.0,
+      "mmrRerank: lambda must be in [0, 1]")
+    val cands = transform(col("__tk"),
+      e => struct(e("id"), e("score"), e("payload")))
+    scoredPairs(queries, corpus, id, vec).groupBy(col("qid"))
+      .agg(graft.expr.TopK.topK(col("cos"), col("nid"), shortlist,
+        col("nv").cast("array<double>")).as("__tk"))
+      .select(col("qid"), inline(graft.expr.Mmr.select(cands, k, lambda)))
+      .select(col("qid"), col("rank"), col("__c").as("nid"),
         round(col("__score"), 6).as("score"))
   }
 

@@ -3571,23 +3571,20 @@ object Pipeline {
         FROM ex GROUP BY 1, 2 ORDER BY doc_id, chunk_ix"""), bench = true),
 
     // --- MMR diversified re-ranking (retrieval-family completion) -----------
-    // (Similarity.mmrDiversify — Carbonell & Goldstein 1998: greedy
+    // (Similarity.mmrRerank — Carbonell & Goldstein 1998: greedy
     // λ·rel − (1−λ)·max-sim-to-selected over the q47 brute-force
-    // top-20 shortlist. The shortlist is collected per qid and all 5
-    // rounds run in one task (graft.expr.MmrSelect): ties go to the
-    // smaller id, no join, no pin, no rank window. The oracle unrolls
+    // top-20 shortlist. The shortlist heap carries each neighbor's
+    // vector and all 5 rounds run in the same task
+    // (graft.expr.MmrSelect): ties go to the smaller id, no join, no
+    // pin, no rank window. The oracle unrolls
     // all 5 greedy rounds as CTEs; λ and (1−λ) interpolate as Scala
     // doubles (shortest-round-trip repr) so both engines score with
     // identical IEEE constants — the argmax sequence must match exactly.)
     "q177_mmr_rerank" -> Q(
       (s, d) => {
         val e = emb(s, d)
-        val short = Similarity.bruteForceTopK(
-          e.filter(col("vec_id") === 7), e, "vec_id", "embedding", k = 20)
-        val cands = short.select(col("qid"), col("nid"), col("cos"))
-          .join(e.select(col("vec_id").as("nid"), col("embedding")), Seq("nid"))
-        Similarity.mmrDiversify(cands, "qid", "nid", "cos", "embedding",
-          k = 5, lambda = 0.7).orderBy("rank")
+        Similarity.mmrRerank(e.filter(col("vec_id") === 7), e, "vec_id",
+          "embedding", shortlist = 20, k = 5, lambda = 0.7).orderBy("rank")
       },
       Some {
         val lam = 0.7.toString; val oneMinus = (1.0 - 0.7).toString

@@ -9,8 +9,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * each named registry query, under the same session config as
   * [[graft.Bench]] — the audit artifact for plan-shape claims (Exchange
   * count, join strategy, PushedFilters/ReadSchema, codegen spans). The
-  * dump is the pre-execution plan (`AdaptiveSparkPlan isFinalPlan=false`);
-  * AQE-final shapes are attributed separately when a claim depends on them.
+  * dump holds the pre-execution plan (`AdaptiveSparkPlan
+  * isFinalPlan=false`), then the plan AQE settled on after running the
+  * query once (`isFinalPlan=true`): adaptive rules such as
+  * [[graft.expr.SmallFinalSort]] only show in the second.
   */
 object Plan {
   def main(args: Array[String]): Unit = {
@@ -21,7 +23,10 @@ object Plan {
     val spark = Runtime.session(Runtime.cpus)
     args.drop(1).foreach { name =>
       val df = Runtime.query(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      def explain = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val before = explain
+      df.queryExecution.executedPlan.execute().foreach(_ => ())
+      val txt = s"== Before execution ==\n$before\n== After execution ==\n$explain"
       java.nio.file.Files.writeString(outDir.resolve(name + ".txt"), txt)
       // checkpoint hygiene (some queries pin frames while BUILDING the plan)
       Runtime.release(spark)

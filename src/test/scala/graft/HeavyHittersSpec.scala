@@ -99,6 +99,49 @@ class HeavyHittersSpec extends SparkSpec {
     assert(got == Set(("a", 1, 1L, 5.0), ("a", 2, 3L, 4.0)))
   }
 
+  test("top-k payload: the (score, id) list equals the payload-free one, " +
+    "each entry carries its own row's value, and merges keep it") {
+    import graft.expr.TopK.topK
+    val df = (0L until 600L).map { i =>
+      (s"g${i % 5}", i, ((i * 2654435761L) % 31L).toDouble, Seq(i.toDouble, -0.5 * i))
+    }.toDF("g", "id", "s", "vec")
+    // one map partition, then seven: partial heaps serialize, shuffle
+    // and merge
+    for (in <- Seq(df.coalesce(1), df.repartition(7))) {
+      val plain = in.groupBy("g").agg(topK(col("s"), col("id"), 6).as("tk"))
+        .as[(String, Seq[(Double, Long)])].collect().toMap
+      val carried = in.groupBy("g").agg(topK(col("s"), col("id"), 6, col("vec")).as("tk"))
+      val pairs = carried.select(col("g"),
+          transform(col("tk"), e => struct(e("score"), e("id"))))
+        .as[(String, Seq[(Double, Long)])].collect().toMap
+      assert(pairs == plain && plain.size == 5)
+      val payloads = carried.select(explode(col("tk")).as("e"))
+        .select(col("e.id"), col("e.payload")).as[(Long, Seq[Double])].collect()
+      assert(payloads.length == 30)
+      payloads.foreach { case (id, v) => assert(v == Seq(id.toDouble, -0.5 * id), s"id $id") }
+    }
+  }
+
+  test("top-k payload: a NULL payload survives; the payload-free type and " +
+    "rows are unchanged") {
+    import graft.expr.TopK.topK
+    import org.apache.spark.sql.types._
+    val df = Seq(("a", 1L, 5.0, None), ("a", 2L, 4.0, Some("x")),
+      ("a", 3L, 1.0, Some("y")), ("b", 4L, 2.0, None)).toDF("g", "id", "s", "p")
+      .repartition(3)
+    val got = df.groupBy("g").agg(topK(col("s"), col("id"), 2, col("p")).as("tk"))
+      .select(col("g"), explode(col("tk")).as("e"))
+      .select(col("g"), col("e.id"), col("e.payload")).as[(String, Long, Option[String])]
+      .collect().toSet
+    assert(got == Set(("a", 1L, None), ("a", 2L, Some("x")), ("b", 4L, None)))
+    val plain = df.groupBy("g").agg(topK(col("s"), col("id"), 2).as("tk")).orderBy("g")
+    assert(plain.schema("tk").dataType == ArrayType(StructType(Seq(
+      StructField("score", DoubleType, nullable = false),
+      StructField("id", LongType, nullable = false))), containsNull = false))
+    assert(plain.as[(String, Seq[(Double, Long)])].collect().toSeq == Seq(
+      ("a", Seq((5.0, 1L), (4.0, 2L))), ("b", Seq((2.0, 4L)))))
+  }
+
   import graft.api.functions.{cmsSketch, cmsEstimate, cmsMerge}
 
   test("count-min: JVM hash matches the Column-side portable word hash") {

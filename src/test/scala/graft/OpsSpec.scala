@@ -3167,6 +3167,31 @@ class OpsSpec extends SparkSpec {
     assert(d2.toSeq == Seq((2L, 0, 1L, 1L, "Short.")))
   }
 
+  test("mmrRerank equals bruteForceTopK joined back to its vectors and " +
+    "fed to mmrDiversify, with tied scores and several queries") {
+    // 60 rows of 3-d float vectors; every direction appears several
+    // times, so cosine ties are common and break on the smaller id
+    val corpus = (0L until 60L).map { i =>
+      (i, Seq((i % 4).toFloat, ((i * 7) % 5).toFloat, 1.0f))
+    }.toDF("id", "v").repartition(5)
+    val queries = corpus.filter($"id".isin(3L, 10L, 41L))
+    val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    for (p <- Seq(1, 7)) {
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      try {
+        val short = Similarity.bruteForceTopK(queries, corpus, "id", "v", k = 12)
+          .join(corpus.select($"id".as("nid"), $"v"), Seq("nid"))
+        val want = Similarity.mmrDiversify(short, "qid", "nid", "cos", "v",
+            k = 4, lambda = 0.6).orderBy("qid", "rank")
+          .as[(Long, Int, Long, Double)].collect().toSeq
+        val got = Similarity.mmrRerank(queries, corpus, "id", "v",
+            shortlist = 12, k = 4, lambda = 0.6).orderBy("qid", "rank")
+          .as[(Long, Int, Long, Double)].collect().toSeq
+        assert(want.size == 12 && got == want, s"$p shuffle partitions")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", shuffleWidth)
+    }
+  }
+
   test("mmrDiversify: relevance-max first, then a diverse pick over a " +
     "near-duplicate; per-query independence") {
     // query direction (1,0,0): a is most relevant, b a near-dup of a,

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
 
 /** Plan-shape invariants for every registry query — the 100 TB posture
   * checks that sf0.001 row counts can't see:
@@ -907,5 +912,104 @@ class PlanSpec extends SparkSpec {
       s"v8 survivors plan scans documents parquet ($docScans×):\n$p")
     assert(p.contains("graft_v8_state_"),
       s"expected the persisted state tables in the survivors plan:\n$p")
+  }
+
+  // --- small final sorts (graft.expr.SmallFinalSort) ----------------------
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The exchanges of `df`'s final adaptive plan; run `df` first. */
+  private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
+    Aqe.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  private def rangeExchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
+    exchanges(df).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** A grouped aggregate with NULL keys, ordered by ascending and
+    * descending keys with both NULL placements; the group keys make the
+    * order total. */
+  private def sortedAgg(): DataFrame = {
+    import spark.implicits._
+    (0 until 400).map { i =>
+      (if (i % 11 == 0) None else Some(i % 7), if (i % 13 == 0) None else Some(s"s${i % 5}"),
+        i.toLong)
+    }.toDF("a", "b", "v")
+      .groupBy("a", "b").agg(sum("v").as("s"), count(lit(1)).as("n"))
+      .orderBy(col("a").asc_nulls_last, col("b").desc_nulls_first)
+  }
+
+  private val noCoalescing = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+
+  test("small final sort: the sort runs in the result task with the same " +
+    "rows at 1, 4 and 7 shuffle partitions; no range exchange, no sampling job") {
+    val want = withConf(noCoalescing) {
+      val df = sortedAgg()
+      val (rows, jobs) = Runtime.JobLog.during(spark)(df.collect().toSeq)
+      assert(rangeExchanges(df).nonEmpty, "coalescing off keeps the range exchange")
+      // the aggregate's map job, the range sampling job, the range map
+      // job and the result job
+      assert(jobs.size == 4, jobs)
+      rows
+    }
+    assert(want.size > 30 && want.exists(_.isNullAt(0)) && want.exists(_.isNullAt(1)))
+    for (p <- Seq(1, 4, 7)) withConf("spark.sql.shuffle.partitions" -> p.toString) {
+      val df = sortedAgg()
+      val (rows, jobs) = Runtime.JobLog.during(spark)(df.collect().toSeq)
+      assert(rows == want, s"shuffle.partitions=$p")
+      assert(rangeExchanges(df).isEmpty, s"p=$p: ${df.queryExecution.executedPlan}")
+      assert(jobs.size == 2, s"p=$p: the aggregate's map job and the result job: $jobs")
+    }
+  }
+
+  test("small final sort: the range exchange stays when coalescing would " +
+    "keep several partitions, over repartition(n, key), and for a user " +
+    "repartitionByRange") {
+    val want = withConf(noCoalescing)(sortedAgg().collect().toSeq)
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      val df = sortedAgg()
+      assert(df.collect().toSeq == want)
+      assert(rangeExchanges(df).size == 1, df.queryExecution.executedPlan)
+    }
+    import spark.implicits._
+    val base = (0 until 300).map(i => (i % 17, i.toLong)).toDF("k", "v")
+    def overRepartition = base.repartition(5, col("k"))
+      .select(col("k"), (col("v") * 3).as("w")).orderBy(col("k"), col("w"))
+    val wantRe = withConf(noCoalescing)(overRepartition.collect().toSeq)
+    val re = overRepartition
+    assert(re.collect().toSeq == wantRe)
+    assert(rangeExchanges(re).size == 1, re.queryExecution.executedPlan)
+    assert(exchanges(re).exists(e => e.outputPartitioning match {
+      case h: HashPartitioning => h.numPartitions == 5
+      case _ => false
+    }), re.queryExecution.executedPlan)
+    def byRange = base.groupBy("k").agg(sum("v").as("s"))
+      .repartitionByRange(3, col("k")).orderBy("k")
+    val wantRange = withConf(noCoalescing)(byRange.collect().toSeq)
+    val range = byRange
+    assert(range.collect().toSeq == wantRange)
+    assert(rangeExchanges(range).map(_.outputPartitioning.numPartitions) == Seq(3),
+      range.queryExecution.executedPlan)
+  }
+
+  test("q177 executes in at most 3 jobs; q134 and q147 final plans have " +
+    "no range exchange") {
+    val q177 = SparkEntry.queries("q177_mmr_rerank")(spark, sfSmoke)
+    val (_, jobs) = Runtime.JobLog.during(spark)(Runtime.noop(q177))
+    assert(jobs.size <= 3, jobs)
+    for (q <- Seq("q134_tpch_q12", "q147_grouping_sets")) {
+      val df = SparkEntry.queries(q)(spark, sfSmoke)
+      df.collect()
+      assert(rangeExchanges(df).isEmpty, s"$q: ${df.queryExecution.executedPlan}")
+    }
   }
 }
