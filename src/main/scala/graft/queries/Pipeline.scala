@@ -468,18 +468,8 @@ object Pipeline {
     "q44_ngram_jaccard" -> Q(
       (s, d) => Dedup.ngramJaccard(docs(s, d), "doc_id", "text", 0.2)
         .orderBy("d1", "d2"),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
-        FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-        ORDER BY d1, d2"""), bench = true),
+      Some(s"""WITH ${Sql.shinglePairs("jac >= 0.2")}
+        SELECT d1, d2, jac FROM pairs ORDER BY d1, d2"""), bench = true),
 
     // --- MinHash + LSH near-dup (verified: oracle = exact Jaccard >= 0.8) --------
     // r14 band: fresh-session QBench, 7 iters, sf0.1 — 1.55 s
@@ -493,18 +483,8 @@ object Pipeline {
     "q45_minhash_lsh" -> Q(
       (s, d) => Dedup.minhashLsh(docs(s, d), "doc_id", "text", 0.8)
         .orderBy("d1", "d2"),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
-        FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-        ORDER BY d1, d2"""), bench = true),
+      Some(s"""WITH ${Sql.shinglePairs("jac >= 0.8")}
+        SELECT d1, d2, jac FROM pairs ORDER BY d1, d2"""), bench = true),
 
     // --- incremental MinHash+LSH: new batch (odd ids) vs seen corpus
     // (even ids) — candidates form only ACROSS the ingest boundary
@@ -520,20 +500,9 @@ object Pipeline {
           all.filter(col("doc_id") % 2 === 0),
           "doc_id", "text", 0.8).orderBy("d1", "d2")
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s
-            AND a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 GROUP BY 1, 2)
-        SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
-        FROM inter JOIN sizes sa ON d1 = sa.doc_id
-          JOIN sizes sb ON d2 = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-        ORDER BY d1, d2"""), bench = true),
+      Some(s"""WITH ${Sql.shinglePairs("jac >= 0.8",
+          on = "a.doc_id % 2 = 1 AND b.doc_id % 2 = 0")}
+        SELECT d1, d2, jac FROM pairs ORDER BY d1, d2"""), bench = true),
 
     // --- skew-capped dedup variants: the paths a 100×-scale corpus should
     // run. q44b drops shingles with document frequency > 5 before the
@@ -545,20 +514,8 @@ object Pipeline {
     "q44b_ngram_jaccard_capped" -> Q(
       (s, d) => Dedup.ngramJaccard(docs(s, d), "doc_id", "text", 0.2,
         dfCap = Some(5)).orderBy("d1", "d2"),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        keep AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) <= 5),
-        sh AS (SELECT sh0.doc_id, sh0.s FROM sh0 SEMI JOIN keep USING (s)),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
-        FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-        ORDER BY d1, d2""")),
+      Some(s"""WITH ${Sql.shinglePairs("jac >= 0.2", dfCap = 5)}
+        SELECT d1, d2, jac FROM pairs ORDER BY d1, d2""")),
 
     // q45b: LSH with the mega-bucket guard active (band buckets holding
     // more than 4 docs are skipped — a bucket that big is a near-identical
@@ -571,18 +528,8 @@ object Pipeline {
     "q45b_minhash_lsh_capped" -> Q(
       (s, d) => Dedup.minhashLsh(docs(s, d), "doc_id", "text", 0.8,
         maxBucket = Some(4)).orderBy("d1", "d2"),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        SELECT d1, d2, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jac
-        FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-        ORDER BY d1, d2""")),
+      Some(s"""WITH ${Sql.shinglePairs("jac >= 0.8")}
+        SELECT d1, d2, jac FROM pairs ORDER BY d1, d2""")),
 
     // --- SimHash near-dup: the PORTABLE 31-bit variant, fully oracle-backed
     // (the 64-bit xxhash64 simhashPairs stays the production path and keeps
@@ -1056,25 +1003,9 @@ object Pipeline {
       (s, d) => Dedup.connectedComponents(
           Dedup.minhashLsh(docs(s, d), "doc_id", "text", 0.8))
         .orderBy("node"),
-      Some("""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS w
-            FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        pairs AS (SELECT d1, d2 FROM inter
-          JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-          WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-        edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-          UNION SELECT d2, d1 FROM pairs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach AS (SELECT node, node AS r FROM nodes
-          UNION SELECT e.a AS node, reach.r FROM edges e JOIN reach ON e.b = reach.node)
-        SELECT node, MIN(r) AS component FROM reach GROUP BY node
-        ORDER BY node""")),
+      Some(s"""WITH RECURSIVE ${Sql.shinglePairs("jac >= 0.8")},
+        ${Sql.components("pairs")}
+        SELECT node, component FROM comp ORDER BY node""")),
 
     // --- funnel analysis: view → click → purchase in strict time order
     // per user (greedy first-occurrence chain — exact for existence).
@@ -1543,21 +1474,11 @@ object Pipeline {
             WHERE s1.sr >= thr.t),
           s3 AS (SELECT * FROM s2 dn WHERE NOT EXISTS (SELECT 1 FROM s2 d2
             WHERE d2.text = dn.text AND d2.doc_id < dn.doc_id)),
-          t2 AS (SELECT doc_id,
-              CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-            FROM s3 WHERE len(string_split(text, ' ')) > 0),
-          c AS (SELECT doc_id, ntok,
-              CAST(SUM(ntok) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-                AS BIGINT) AS cb FROM t2),
-          e AS (SELECT doc_id, ntok, cb,
-              unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-                AS pack_id FROM c)
-          SELECT CAST(pack_id AS BIGINT) AS pack_id, COUNT(*) AS n_frags,
-            CAST(SUM(least((pack_id + 1) * 1000, cb + ntok)
-              - greatest(pack_id * 1000, cb)) AS BIGINT) AS n_toks,
+          pm AS ${Sql.packs("s3", "len(string_split(text, ' '))")}
+          SELECT pack_id, COUNT(*) AS n_frags,
+            CAST(SUM(tok_end - tok_start) AS BIGINT) AS n_toks,
             MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-          FROM e GROUP BY pack_id ORDER BY pack_id"""
+          FROM pm GROUP BY pack_id ORDER BY pack_id"""
       }, bench = true),
 
     // --- corpus-fit bigram LM quality scoring --------------------------------
@@ -1663,30 +1584,11 @@ object Pipeline {
           (0 until 8).map(i => get(codes, lit(i)).as(s"c$i")): _*)
           .orderBy("vec_id")
       },
-      Some {
-        def sq(s: Int) = {
-          val off = s * 8
-          s"""a$s AS (SELECT e.vec_id, c.cid,
-              list_sum(list_transform(range(1, 9),
-                i -> CAST(c.embedding[$off + i] AS DOUBLE)
-                  * CAST(c.embedding[$off + i] AS DOUBLE)))
-              - 2 * list_sum(list_transform(range(1, 9),
-                i -> CAST(e.embedding[$off + i] AS DOUBLE)
-                  * CAST(c.embedding[$off + i] AS DOUBLE))) AS d
-            FROM e CROSS JOIN cent c),
-          b$s AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-              row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-            FROM a$s) WHERE rn = 1)"""
-        }
-        s"""WITH cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1
-              AS cid, embedding FROM embeddings WHERE vec_id % 100 = 0),
-          e AS (SELECT vec_id, embedding FROM embeddings),
-          ${(0 until 8).map(sq).mkString(",\n")}
+      Some(s"""WITH ${Sql.pqCodes}
           SELECT e.vec_id,
             ${(0 until 8).map(i => s"CAST(b$i.cid AS INTEGER) AS c$i").mkString(", ")}
           FROM e ${(0 until 8).map(i => s"JOIN b$i ON e.vec_id = b$i.vec_id").mkString(" ")}
-          ORDER BY e.vec_id"""
-      }, bench = true),
+          ORDER BY e.vec_id"""), bench = true),
 
     // --- PQ two-stage search: ADC shortlist → exact re-rank ------------------
     // (Embeddings.pqTopKRerank — the codes-only ADC scan shortlists
@@ -1713,41 +1615,10 @@ object Pipeline {
           .orderBy("qid", "rank")
       },
       Some {
-        def sq(s: Int) = {
-          val off = s * 8
-          s"""a$s AS (SELECT e.vec_id, c.cid,
-              list_sum(list_transform(range(1, 9),
-                i -> CAST(c.embedding[$off + i] AS DOUBLE)
-                  * CAST(c.embedding[$off + i] AS DOUBLE)))
-              - 2 * list_sum(list_transform(range(1, 9),
-                i -> CAST(e.embedding[$off + i] AS DOUBLE)
-                  * CAST(c.embedding[$off + i] AS DOUBLE))) AS d
-            FROM e CROSS JOIN cent c),
-          b$s AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-              row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-            FROM a$s) WHERE rn = 1)"""
-        }
-        def lut(s: Int) = {
-          val off = s * 8
-          s"""list_sum(list_transform(range(1, 9),
-            i -> (CAST(q.qv[$off + i] AS DOUBLE)
-                - CAST(c$s.embedding[$off + i] AS DOUBLE))
-              * (CAST(q.qv[$off + i] AS DOUBLE)
-                - CAST(c$s.embedding[$off + i] AS DOUBLE))))"""
-        }
-        s"""WITH cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1
-              AS cid, embedding FROM embeddings WHERE vec_id % 100 = 0),
-          e AS (SELECT vec_id, embedding FROM embeddings),
+        s"""WITH ${Sql.pqCodes},
           q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
             WHERE vec_id < 3),
-          ${(0 until 8).map(sq).mkString(",\n")},
-          sd AS (SELECT q.qid, e.vec_id,
-              ${(0 until 8).map(lut).mkString(" + ")} AS adist
-            FROM e ${(0 until 8).map(i =>
-              s"JOIN b$i ON e.vec_id = b$i.vec_id").mkString(" ")}
-              ${(0 until 8).map(i =>
-              s"JOIN cent c$i ON c$i.cid = b$i.cid").mkString(" ")}
-              CROSS JOIN q),
+          ${Sql.pqAdc("CROSS JOIN q")},
           short AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
               row_number() OVER (PARTITION BY qid ORDER BY adist, vec_id)
                 AS rn FROM sd) WHERE rn <= 20),
@@ -1794,42 +1665,17 @@ object Pipeline {
           .orderBy("qid", "rank")
       },
       Some {
-        def sq(s: Int) = {
-          val off = s * 8
-          s"""a$s AS (SELECT e.vec_id, c.cid,
-              list_sum(list_transform(range(1, 9),
-                i -> CAST(c.embedding[$off + i] AS DOUBLE)
-                  * CAST(c.embedding[$off + i] AS DOUBLE)))
-              - 2 * list_sum(list_transform(range(1, 9),
-                i -> CAST(e.embedding[$off + i] AS DOUBLE)
-                  * CAST(c.embedding[$off + i] AS DOUBLE))) AS d
-            FROM e CROSS JOIN cent c),
-          b$s AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-              row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-            FROM a$s) WHERE rn = 1)"""
-        }
-        def lut(s: Int) = {
-          val off = s * 8
-          s"""list_sum(list_transform(range(1, 9),
-            i -> (CAST(q.qv[$off + i] AS DOUBLE)
-                - CAST(c$s.embedding[$off + i] AS DOUBLE))
-              * (CAST(q.qv[$off + i] AS DOUBLE)
-                - CAST(c$s.embedding[$off + i] AS DOUBLE))))"""
-        }
         def coarseDist(v: String) =
           s"""list_sum(list_transform(range(1, 65),
             i -> CAST(g.embedding[i] AS DOUBLE)
               * CAST(g.embedding[i] AS DOUBLE)))
           - 2 * list_sum(list_transform(range(1, 65),
             i -> CAST($v[i] AS DOUBLE) * CAST(g.embedding[i] AS DOUBLE)))"""
-        s"""WITH cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1
-              AS cid, embedding FROM embeddings WHERE vec_id % 100 = 0),
+        s"""WITH ${Sql.pqCodes},
           grs AS (SELECT row_number() OVER (ORDER BY vec_id) - 1
               AS ccid, embedding FROM embeddings WHERE vec_id % 100 = 0),
-          e AS (SELECT vec_id, embedding FROM embeddings),
           q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
             WHERE vec_id < 3),
-          ${(0 until 8).map(sq).mkString(",\n")},
           cellassign AS (SELECT vec_id, ccid AS cell FROM (
             SELECT e.vec_id, g.ccid, row_number() OVER (
                 PARTITION BY e.vec_id
@@ -1839,15 +1685,9 @@ object Pipeline {
             SELECT q.qid, g.ccid, row_number() OVER (PARTITION BY q.qid
                 ORDER BY ${coarseDist("q.qv")}, g.ccid) AS rn
             FROM q CROSS JOIN grs g) WHERE rn <= 2),
-          sd AS (SELECT q.qid, e.vec_id,
-              ${(0 until 8).map(lut).mkString(" + ")} AS adist
-            FROM e ${(0 until 8).map(i =>
-              s"JOIN b$i ON e.vec_id = b$i.vec_id").mkString(" ")}
-              ${(0 until 8).map(i =>
-              s"JOIN cent c$i ON c$i.cid = b$i.cid").mkString(" ")}
-              JOIN cellassign ca ON ca.vec_id = e.vec_id
+          ${Sql.pqAdc("""JOIN cellassign ca ON ca.vec_id = e.vec_id
               JOIN probes p ON p.ccid = ca.cell
-              JOIN q ON q.qid = p.qid),
+              JOIN q ON q.qid = p.qid""")},
           ranked AS (SELECT qid, vec_id, adist,
               row_number() OVER (PARTITION BY qid ORDER BY adist, vec_id)
                 AS rank FROM sd)
@@ -1867,20 +1707,10 @@ object Pipeline {
       (s, d) => graft.ops.Packing
         .packDocuments(docs(s, d), "doc_id", "text", maxLen = 1000)
         .orderBy("doc_id", "pack_id"),
-      Some("""WITH t AS (SELECT doc_id,
-            CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-          FROM documents WHERE len(string_split(text, ' ')) > 0),
-        c AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb FROM t),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c)
-        SELECT doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-          CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-          CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT) AS tok_end
-        FROM e ORDER BY doc_id, pack_id"""), bench = true),
+      Some(s"""WITH pm AS ${Sql.packs("documents",
+          "len(string_split(text, ' '))")}
+        SELECT doc_id, pack_id, tok_start, tok_end FROM pm
+        ORDER BY doc_id, pack_id"""), bench = true),
 
     // --- repeated-line boilerplate removal (Falcon/CCNet filter) -------------
     // (Dedup.removeRepeatedLines — planted multi-line VALUES docs: the
@@ -2056,21 +1886,12 @@ object Pipeline {
       (s, d) => graft.ops.Packing
         .packTexts(docs(s, d), "doc_id", "text", maxLen = 1000)
         .orderBy("pack_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w,
-            CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-          FROM documents WHERE len(string_split(text, ' ')) > 0),
-        c AS (SELECT doc_id, w, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb FROM t),
-        e AS (SELECT doc_id, w, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c),
+      Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
+          FROM documents),
         f AS (SELECT pack_id, doc_id,
-            array_to_string(w[CAST(greatest(pack_id * 1000, cb) - cb + 1 AS BIGINT):
-              CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)], ' ')
-              AS frag FROM e),
-        g AS (SELECT CAST(pack_id AS BIGINT) AS pack_id,
+            array_to_string(w[tok_start + 1:tok_end], ' ') AS frag
+          FROM ${Sql.packs("t", "len(w)")}),
+        g AS (SELECT pack_id,
             string_agg(frag, ' ' ORDER BY doc_id) AS pack_text
           FROM f GROUP BY pack_id)
         SELECT pack_id,
@@ -2121,24 +1942,7 @@ object Pipeline {
         graft.ops.Bpe.encodedTokenCount(corpus, "doc_id", "text", merges)
           .orderBy("doc_id")
       },
-      Some("""WITH wds AS (SELECT doc_id, w FROM (SELECT doc_id,
-            unnest(string_split(text, ' ')) AS w FROM documents)
-          WHERE w <> ''),
-        wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM wds GROUP BY w),
-        s AS (SELECT w, c, list_append(string_split(w, ''), '</w>') AS syms
-          FROM wc),
-        p AS (SELECT c, unnest(list_transform(range(1, len(syms)),
-            i -> {'p1': syms[i], 'p2': syms[i + 1]})) AS pr FROM s),
-        top1 AS (SELECT pr.p1 AS p1, pr.p2 AS p2 FROM p GROUP BY 1, 2
-          HAVING SUM(c) >= 2 ORDER BY SUM(c) DESC, p1, p2 LIMIT 1),
-        enc AS (SELECT s.w, CAST(len(syms) - COALESCE(
-            len(array_to_string(syms, chr(1))) -
-            len(replace(array_to_string(syms, chr(1)),
-              t.p1 || chr(1) || t.p2, t.p1 || t.p2)), 0) AS INTEGER) AS nt
-          FROM s LEFT JOIN top1 t ON 1 = 1)
-        SELECT wds.doc_id, CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
-        FROM wds JOIN enc ON wds.w = enc.w
-        GROUP BY wds.doc_id ORDER BY wds.doc_id"""), bench = true),
+      Some(bpe1TokenCountSql), bench = true),
 
     // --- incremental SimHash near-dup (standing ingestion) -------------------
     // (Dedup.simhashPairsIncrementalPortable — candidate pairs form
@@ -3162,9 +2966,7 @@ object Pipeline {
             CAST(${Sql.mix("doc_id")} AS DOUBLE) AS pri
           FROM documents WHERE source IN ('src0', 'src1', 'src2')),
         c AS (SELECT source, doc_id, ntok,
-            CAST(SUM(ntok) OVER (PARTITION BY source ORDER BY pri, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb
+            ${Sql.tokenOffset("pri, doc_id", partition = "source")} AS cb
           FROM n)
         SELECT source, doc_id, ntok AS n_tokens, cb AS tokens_before FROM c
         WHERE cb < CASE source WHEN 'src0' THEN 20000
@@ -4159,24 +3961,8 @@ object Pipeline {
           col("n_chars"), threshold = 0.8)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id"),
-      Some("""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS w
-            FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        pairs AS (SELECT d1, d2 FROM inter
-          JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-          WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-        edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-          UNION SELECT d2, d1 FROM pairs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach AS (SELECT node, node AS r FROM nodes
-          UNION SELECT e.a AS node, reach.r FROM edges e JOIN reach ON e.b = reach.node),
-        comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
+      Some(s"""WITH RECURSIVE ${Sql.shinglePairs("jac >= 0.8")},
+        ${Sql.components("pairs")},
         q AS (SELECT c.node, c.component, d.n_chars FROM comp c
           JOIN documents d ON c.node = d.doc_id),
         best AS (SELECT component, MAX(n_chars) AS bq FROM q GROUP BY 1),
@@ -4548,18 +4334,8 @@ object Pipeline {
     "q202_ngram_containment" -> Q(
       (s, d) => Dedup.ngramContainment(docs(s, d), "doc_id", "text", 0.6)
         .orderBy("d1", "d2"),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        SELECT d1, d2, CAST(i AS DOUBLE) / least(sa.n, sb.n) AS cont
-        FROM inter JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-        WHERE CAST(i AS DOUBLE) / least(sa.n, sb.n) >= 0.6
-        ORDER BY d1, d2"""), bench = true),
+      Some(s"""WITH ${Sql.shinglePairs("cont >= 0.6")}
+        SELECT d1, d2, cont FROM pairs ORDER BY d1, d2"""), bench = true),
 
     // --- containment dedup (drop the contained smaller doc) -----------------
     // (Dedup.dedupContained — per pair with cont >= 0.8 drop the doc
@@ -4570,18 +4346,7 @@ object Pipeline {
       (s, d) => Dedup.dedupContained(docs(s, d), "doc_id", "text", 0.8)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id"),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        pairs AS (SELECT d1, d2, sa.n AS na, sb.n AS nb
-          FROM inter JOIN sizes sa ON d1 = sa.doc_id
-          JOIN sizes sb ON d2 = sb.doc_id
-          WHERE CAST(i AS DOUBLE) / least(sa.n, sb.n) >= 0.8),
+      Some(s"""WITH ${Sql.shinglePairs("cont >= 0.8")},
         victims AS (SELECT DISTINCT CASE WHEN na < nb THEN d1
             WHEN nb < na THEN d2 ELSE greatest(d1, d2) END AS doc_id
           FROM pairs)
@@ -4599,24 +4364,8 @@ object Pipeline {
       (s, d) => Dedup.dupClusterSizes(
           Dedup.minhashLsh(docs(s, d), "doc_id", "text", 0.8))
         .orderBy("size"),
-      Some("""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS w
-            FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        pairs AS (SELECT d1, d2 FROM inter
-          JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-          WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-        edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-          UNION SELECT d2, d1 FROM pairs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach AS (SELECT node, node AS r FROM nodes
-          UNION SELECT e.a AS node, reach.r FROM edges e JOIN reach ON e.b = reach.node),
-        comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
+      Some(s"""WITH RECURSIVE ${Sql.shinglePairs("jac >= 0.8")},
+        ${Sql.components("pairs")},
         cs AS (SELECT component, COUNT(*) AS size FROM comp GROUP BY 1)
         SELECT size, COUNT(*) AS n_clusters FROM cs
         GROUP BY size ORDER BY size"""), bench = true),
@@ -4686,24 +4435,7 @@ object Pipeline {
         graft.ops.ByteBpe.encodedTokenCount(corpus, "doc_id", "text", merges)
           .orderBy("doc_id")
       },
-      Some("""WITH wds AS (SELECT doc_id, w FROM (SELECT doc_id,
-            unnest(string_split(text, ' ')) AS w FROM documents)
-          WHERE w <> ''),
-        wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM wds GROUP BY w),
-        s AS (SELECT w, c, list_append(string_split(w, ''), '</w>') AS syms
-          FROM wc),
-        p AS (SELECT c, unnest(list_transform(range(1, len(syms)),
-            i -> {'p1': syms[i], 'p2': syms[i + 1]})) AS pr FROM s),
-        top1 AS (SELECT pr.p1 AS p1, pr.p2 AS p2 FROM p GROUP BY 1, 2
-          HAVING SUM(c) >= 2 ORDER BY SUM(c) DESC, p1, p2 LIMIT 1),
-        enc AS (SELECT s.w, CAST(len(syms) - COALESCE(
-            len(array_to_string(syms, chr(1))) -
-            len(replace(array_to_string(syms, chr(1)),
-              t.p1 || chr(1) || t.p2, t.p1 || t.p2)), 0) AS INTEGER) AS nt
-          FROM s LEFT JOIN top1 t ON 1 = 1)
-        SELECT wds.doc_id, CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
-        FROM wds JOIN enc ON wds.w = enc.w
-        GROUP BY wds.doc_id ORDER BY wds.doc_id"""), bench = true),
+      Some(bpe1TokenCountSql), bench = true),
 
     // --- byte-level BPE, end-to-end lossless round trip ----------------------
     // (fit 20 byte merges → relational encode → decodeTokens' exact
@@ -4802,28 +4534,12 @@ object Pipeline {
           threshold = 0.8, exactFirst = true)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id"),
-      Some("""WITH RECURSIVE ek AS (SELECT MIN(doc_id) AS doc_id
+      Some(s"""WITH RECURSIVE ek AS (SELECT MIN(doc_id) AS doc_id
             FROM documents GROUP BY text),
         base AS (SELECT d.doc_id, d.text FROM documents d
           JOIN ek ON d.doc_id = ek.doc_id),
-        toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM base),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM toks WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        pairs AS (SELECT d1, d2 FROM inter
-          JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-          WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-        edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-          UNION SELECT d2, d1 FROM pairs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach AS (SELECT node, node AS r FROM nodes
-          UNION SELECT e.a AS node, reach.r FROM edges e
-            JOIN reach ON e.b = reach.node),
-        comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
+        ${Sql.shinglePairs("jac >= 0.8", a = "base")},
+        ${Sql.components("pairs")},
         dropn AS (SELECT node FROM comp WHERE node <> component)
         SELECT doc_id, source, n_chars FROM documents
         WHERE doc_id IN (SELECT doc_id FROM ek)
@@ -5068,19 +4784,8 @@ object Pipeline {
             (SELECT unnest(string_split(text, ' ')) AS w FROM documents
              WHERE source IN ('src0','src1','src2','src3'))
           WHERE w <> '' GROUP BY w),
-        fs AS (SELECT w, c, list_append(string_split(w, ''), '</w>') AS syms
-          FROM fwc),
-        pp AS (SELECT c, unnest(list_transform(range(1, len(syms)),
-            i -> {'p1': syms[i], 'p2': syms[i + 1]})) AS pr FROM fs),
-        top1 AS (SELECT pr.p1 AS p1, pr.p2 AS p2 FROM pp GROUP BY 1, 2
-          HAVING SUM(c) >= 2 ORDER BY SUM(c) DESC, p1, p2 LIMIT 1),
-        sw AS (SELECT w, list_append(string_split(w, ''), '</w>') AS syms
-          FROM (SELECT DISTINCT wds.w FROM wds JOIN kept USING (doc_id))),
-        enc AS (SELECT sw.w, CAST(len(syms) - COALESCE(
-            len(array_to_string(syms, chr(1))) -
-            len(replace(array_to_string(syms, chr(1)),
-              t.p1 || chr(1) || t.p2, t.p1 || t.p2)), 0) AS INTEGER) AS nt
-          FROM sw LEFT JOIN top1 t ON 1 = 1),
+        ${Sql.bpeMerge1("fwc",
+          "(SELECT DISTINCT wds.w FROM wds JOIN kept USING (doc_id))")},
         tok AS (SELECT wds.doc_id,
             CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
           FROM wds JOIN kept USING (doc_id) JOIN enc ON wds.w = enc.w
@@ -5172,21 +4877,8 @@ object Pipeline {
               sum(col("nw")), 9).as("fertility"))
           .orderBy("lang")
       },
-      Some("""WITH wds AS (SELECT doc_id, w FROM (SELECT doc_id,
-            unnest(string_split(text, ' ')) AS w FROM documents)
-          WHERE w <> ''),
-        wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM wds GROUP BY w),
-        s AS (SELECT w, c, list_append(string_split(w, ''), '</w>') AS syms
-          FROM wc),
-        p AS (SELECT c, unnest(list_transform(range(1, len(syms)),
-            i -> {'p1': syms[i], 'p2': syms[i + 1]})) AS pr FROM s),
-        top1 AS (SELECT pr.p1 AS p1, pr.p2 AS p2 FROM p GROUP BY 1, 2
-          HAVING SUM(c) >= 2 ORDER BY SUM(c) DESC, p1, p2 LIMIT 1),
-        enc AS (SELECT s.w, CAST(len(syms) - COALESCE(
-            len(array_to_string(syms, chr(1))) -
-            len(replace(array_to_string(syms, chr(1)),
-              t.p1 || chr(1) || t.p2, t.p1 || t.p2)), 0) AS INTEGER) AS nt
-          FROM s LEFT JOIN top1 t ON 1 = 1),
+      Some(s"""WITH $bpeWordsSql,
+        ${Sql.bpeMerge1("wc", "wc")},
         perdoc AS (SELECT wds.doc_id,
             CAST(COUNT(*) AS BIGINT) AS nw,
             CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
@@ -5273,27 +4965,14 @@ object Pipeline {
         .select(col("doc_id"), col("source"),
           TA.compressionRatio(col("text")).as("cratio"))
         .orderBy("doc_id"),
-      Some("""WITH m AS (SELECT * FROM
-          read_parquet('__GRAFT_OUT__/q220_compress_ratios/*.parquet')),
-        base AS (
+      Some(Sql.ratioMembership("q220_compress_ratios", """base AS (
           SELECT doc_id, source, length(text) = 0 AS is_empty
           FROM documents
           UNION ALL
           SELECT CAST(v.doc_id AS BIGINT), v.source, v.is_empty
           FROM (VALUES (-1, '__planted', FALSE), (-2, '__planted', TRUE),
                        (-3, '__planted', FALSE))
-            AS v(doc_id, source, is_empty))
-        SELECT b.doc_id, b.source,
-          CASE WHEN g.cnt IS NULL THEN -888.0
-               WHEN g.cnt <> 1 THEN -777.0
-               WHEN b.is_empty THEN CAST(NULL AS DOUBLE)
-               WHEN g.cratio IS NULL THEN -999.0
-               ELSE g.cratio END AS cratio
-        FROM base b LEFT JOIN
-          (SELECT doc_id, source, MIN(cratio) AS cratio, COUNT(*) AS cnt
-           FROM m GROUP BY 1, 2) g
-          ON b.doc_id = g.doc_id AND b.source IS NOT DISTINCT FROM g.source
-        ORDER BY b.doc_id""")),
+            AS v(doc_id, source, is_empty))"""))),
 
     // --- compression-ratio corpus report (gated composition) -----------------
     // (r16: recomputes the ratios INDEPENDENTLY of q220 (a second plan
@@ -5366,23 +5045,10 @@ object Pipeline {
         .select(col("doc_id"), col("source"),
           TA.compressionRatio(v6Clean(col("text"))).as("cratio"))
         .orderBy("doc_id"),
-      Some(s"""WITH m AS (SELECT * FROM
-          read_parquet('__GRAFT_OUT__/q222_v6_ratios/*.parquet')),
-        corpus AS ($v6CorpusSql),
+      Some(Sql.ratioMembership("q222_v6_ratios", s"""corpus AS ($v6CorpusSql),
         base AS (SELECT doc_id, source,
             length(${v6CleanSql("text")}) = 0 AS is_empty
-          FROM corpus)
-        SELECT b.doc_id, b.source,
-          CASE WHEN g.cnt IS NULL THEN -888.0
-               WHEN g.cnt <> 1 THEN -777.0
-               WHEN b.is_empty THEN CAST(NULL AS DOUBLE)
-               WHEN g.cratio IS NULL THEN -999.0
-               ELSE g.cratio END AS cratio
-        FROM base b LEFT JOIN
-          (SELECT doc_id, source, MIN(cratio) AS cratio, COUNT(*) AS cnt
-           FROM m GROUP BY 1, 2) g
-          ON b.doc_id = g.doc_id AND b.source IS NOT DISTINCT FROM g.source
-        ORDER BY b.doc_id""")),
+          FROM corpus)"""))),
 
     "q223_pipeline_v6" -> Q(
       (s, d) => {
@@ -5417,21 +5083,9 @@ object Pipeline {
           FROM tok GROUP BY source),
         kept AS (SELECT tok.doc_id, ct
           FROM tok JOIN thr ON tok.source = thr.source WHERE nt >= t),
-        t2 AS (SELECT doc_id,
-            CAST(len(string_split(ct, ' ')) AS BIGINT) AS ntok
-          FROM kept WHERE len(string_split(ct, ' ')) > 0),
-        c2 AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb FROM t2),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c2)
-        SELECT doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-          CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-          CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
-            AS tok_end
-        FROM e ORDER BY doc_id, pack_id"""), bench = true),
+        pm AS ${Sql.packs("kept", "len(string_split(ct, ' '))")}
+        SELECT doc_id, pack_id, tok_start, tok_end FROM pm
+        ORDER BY doc_id, pack_id"""), bench = true),
 
     // --- corpus-prep v7: the incremental-ingest composition -------------------
     // (r18, VERDICT item 5: the standing 100-TB operating mode end to
@@ -5477,25 +5131,12 @@ object Pipeline {
           TA.compressionRatio(v6Clean(col("text"))).as("cratio"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH m AS (SELECT * FROM
-          read_parquet('__GRAFT_OUT__/q224_v7_delta_ratios/*.parquet')),
-        v7new AS ($v7NewSql),
+      Some(Sql.ratioMembership("q224_v7_delta_ratios", s"""v7new AS ($v7NewSql),
         v7old AS ($v7OldSql),
         delta AS ($v7DeltaSql),
         base AS (SELECT doc_id, source,
             length(${v6CleanSql("text")}) = 0 AS is_empty
-          FROM delta)
-        SELECT b.doc_id, b.source,
-          CASE WHEN g.cnt IS NULL THEN -888.0
-               WHEN g.cnt <> 1 THEN -777.0
-               WHEN b.is_empty THEN CAST(NULL AS DOUBLE)
-               WHEN g.cratio IS NULL THEN -999.0
-               ELSE g.cratio END AS cratio
-        FROM base b LEFT JOIN
-          (SELECT doc_id, source, MIN(cratio) AS cratio, COUNT(*) AS cnt
-           FROM m GROUP BY 1, 2) g
-          ON b.doc_id = g.doc_id AND b.source IS NOT DISTINCT FROM g.source
-        ORDER BY b.doc_id""")),
+          FROM delta)"""))),
 
     "q225_pipeline_v7" -> Q(
       (s, d) => {
@@ -5555,44 +5196,18 @@ object Pipeline {
             AND c.source IS NOT DISTINCT FROM m.source
           WHERE m.cratio IS NOT NULL AND m.cratio >= 0.35),
         sclean AS (SELECT doc_id, ${v6CleanSql("text")} AS ct FROM seen),
-        gt AS (SELECT doc_id, string_split(ct, ' ') AS w FROM gated),
-        st AS (SELECT doc_id, string_split(ct, ' ') AS w FROM sclean),
-        gsh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM gt WHERE len(w) >= 3),
-        ssh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM st WHERE len(w) >= 3),
-        gsz AS (SELECT doc_id, COUNT(*) AS n FROM gsh GROUP BY doc_id),
-        ssz AS (SELECT doc_id, COUNT(*) AS n FROM ssh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM gsh a JOIN ssh b ON a.s = b.s GROUP BY 1, 2),
-        dups AS (SELECT DISTINCT d1 FROM inter
-          JOIN gsz ON inter.d1 = gsz.doc_id
-          JOIN ssz ON inter.d2 = ssz.doc_id
-          WHERE CAST(i AS DOUBLE) / (gsz.n + ssz.n - i) >= 0.8),
+        ${Sql.shinglePairs("jac >= 0.8", a = "gated", b = "sclean",
+          text = "ct", on = "TRUE")},
+        dups AS (SELECT DISTINCT d1 FROM pairs),
         surv AS (SELECT g.doc_id, g.ct FROM gated g
           ANTI JOIN dups ON g.doc_id = dups.d1),
         v7oldt AS ($v7OldTextSql),
         t0 AS (SELECT COALESCE(SUM(len(string_split(ct, ' '))), 0) AS toff
           FROM (SELECT ${v6CleanSql("text")} AS ct FROM v7oldt)),
-        t2 AS (SELECT doc_id,
-            CAST(len(string_split(ct, ' ')) AS BIGINT) AS ntok
-          FROM surv WHERE len(string_split(ct, ' ')) > 0),
-        c2 AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              + (SELECT toff FROM t0) AS BIGINT) AS cb FROM t2),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c2)
-        SELECT doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-          CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-          CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
-            AS tok_end
-        FROM e ORDER BY doc_id, pack_id"""), bench = true),
+        pm AS ${Sql.packs("surv", "len(string_split(ct, ' '))",
+          start = "(SELECT toff FROM t0)")}
+        SELECT doc_id, pack_id, tok_start, tok_end FROM pm
+        ORDER BY doc_id, pack_id"""), bench = true),
 
     // --- v7 tombstones: the delete-side half of incremental ingest ----------
     // (q225 handles the ADD side (added/changed docs pack-append);
@@ -5638,21 +5253,9 @@ object Pipeline {
             ON o.doc_id = n.doc_id
           WHERE n.doc_id IS NULL OR n.k <> md5(o.text)),
         oc AS (SELECT doc_id, ${v6CleanSql("text")} AS ct FROM v7oldt),
-        t2 AS (SELECT doc_id,
-            CAST(len(string_split(ct, ' ')) AS BIGINT) AS ntok
-          FROM oc WHERE len(string_split(ct, ' ')) > 0),
-        c2 AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb FROM t2),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c2)
-        SELECT e.doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-          CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-          CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
-            AS tok_end
-        FROM e SEMI JOIN gone USING (doc_id)
+        pm AS ${Sql.packs("oc", "len(string_split(ct, ' '))")}
+        SELECT doc_id, pack_id, tok_start, tok_end
+        FROM pm SEMI JOIN gone USING (doc_id)
         ORDER BY doc_id, pack_id""")),
 
     // --- v7 pack compaction: the tombstone CONSUMER ------------------------
@@ -5712,22 +5315,9 @@ object Pipeline {
             ON o.doc_id = n.doc_id
           WHERE n.doc_id IS NULL OR n.k <> md5(o.text)),
         oc AS (SELECT doc_id, ${v6CleanSql("text")} AS ct FROM v7oldt),
-        t2 AS (SELECT doc_id,
-            CAST(len(string_split(ct, ' ')) AS BIGINT) AS ntok
-          FROM oc WHERE len(string_split(ct, ' ')) > 0),
-        c2 AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb FROM t2),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c2),
-        pm AS (SELECT e.doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-            CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-            CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
-              AS tok_end
-          FROM e),
-        mk AS (SELECT pm.*, (g.doc_id IS NOT NULL) AS is_dead
+        pm AS ${Sql.packs("oc", "len(string_split(ct, ' '))")},
+        mk AS (SELECT pm.doc_id, pm.pack_id, pm.tok_start, pm.tok_end,
+            (g.doc_id IS NOT NULL) AS is_dead
           FROM pm LEFT JOIN gone g USING (doc_id)),
         ps AS (SELECT pack_id, SUM(tok_end - tok_start) AS tot,
             SUM(CASE WHEN is_dead THEN 0 ELSE tok_end - tok_start END)
@@ -5740,23 +5330,12 @@ object Pipeline {
         t0 AS (SELECT COALESCE(SUM(len(string_split(ct, ' '))), 0) AS tot
           FROM oc),
         frag AS (SELECT mk.doc_id, mk.pack_id AS opack,
-            mk.tok_start AS base,
-            CAST(mk.tok_end - mk.tok_start AS BIGINT) AS ntok
+            mk.tok_start AS base, mk.tok_end - mk.tok_start AS flen
           FROM mk JOIN kp USING (pack_id) WHERE NOT keep AND NOT is_dead),
-        fc AS (SELECT doc_id, base, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id, opack
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              + ((SELECT tot FROM t0) + 999) // 1000 * 1000
-              AS BIGINT) AS cb FROM frag),
-        fe AS (SELECT doc_id, base, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM fc),
-        rw AS (SELECT doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-            CAST(base + greatest(pack_id * 1000, cb) - cb AS BIGINT)
-              AS tok_start,
-            CAST(base + least((pack_id + 1) * 1000, cb + ntok) - cb
-              AS BIGINT) AS tok_end,
-            true AS live, 'rewritten' AS status
+        fe AS ${Sql.packs("frag", "flen", order = "doc_id, opack",
+          start = "((SELECT tot FROM t0) + 999) // 1000 * 1000")},
+        rw AS (SELECT doc_id, pack_id, base + tok_start AS tok_start,
+            base + tok_end AS tok_end, true AS live, 'rewritten' AS status
           FROM fe)
         SELECT doc_id, pack_id, tok_start, tok_end, live, status
         FROM (SELECT * FROM kept UNION ALL SELECT * FROM rw)
@@ -5829,22 +5408,9 @@ object Pipeline {
         removal AS (SELECT doc_id FROM v7oldt
           WHERE doc_id % 13 IN (4, 7) OR doc_id = -4),
         oc AS (SELECT doc_id, ${v6CleanSql("text")} AS ct FROM v7oldt),
-        t2 AS (SELECT doc_id,
-            CAST(len(string_split(ct, ' ')) AS BIGINT) AS ntok
-          FROM oc WHERE len(string_split(ct, ' ')) > 0),
-        c2 AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              AS BIGINT) AS cb FROM t2),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c2),
-        pm AS (SELECT e.doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-            CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-            CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
-              AS tok_end
-          FROM e),
-        mk AS (SELECT pm.*, (g.doc_id IS NOT NULL) AS is_dead
+        pm AS ${Sql.packs("oc", "len(string_split(ct, ' '))")},
+        mk AS (SELECT pm.doc_id, pm.pack_id, pm.tok_start, pm.tok_end,
+            (g.doc_id IS NOT NULL) AS is_dead
           FROM pm LEFT JOIN removal g USING (doc_id)),
         ps AS (SELECT pack_id, SUM(tok_end - tok_start) AS tot,
             SUM(CASE WHEN is_dead THEN 0 ELSE tok_end - tok_start END)
@@ -5861,23 +5427,14 @@ object Pipeline {
         t0 AS (SELECT COALESCE(SUM(len(string_split(ct, ' '))), 0) AS tot
           FROM oc),
         frag AS (SELECT mk.doc_id, mk.pack_id AS opack,
-            CAST(mk.tok_end - mk.tok_start AS BIGINT) AS ntok
+            mk.tok_end - mk.tok_start AS flen
           FROM mk JOIN kp USING (pack_id) WHERE NOT keep AND NOT is_dead),
-        fc AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id, opack
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              + ((SELECT tot FROM t0) + 999) // 1000 * 1000
-              AS BIGINT) AS cb FROM frag),
-        fe AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM fc),
-        nmanifest AS (SELECT CAST(pack_id AS BIGINT) AS pack_id,
-            'new' AS status,
+        fe AS ${Sql.packs("frag", "flen", order = "doc_id, opack",
+          start = "((SELECT tot FROM t0) + 999) // 1000 * 1000")},
+        nmanifest AS (SELECT pack_id, 'new' AS status,
             CAST(COUNT(*) AS BIGINT) AS n_rows_live,
-            CAST(SUM(least((pack_id + 1) * 1000, cb + ntok)
-              - greatest(pack_id * 1000, cb)) AS BIGINT) AS n_toks_live,
-            CAST(SUM(least((pack_id + 1) * 1000, cb + ntok)
-              - greatest(pack_id * 1000, cb)) AS BIGINT) AS n_toks_total
+            CAST(SUM(tok_end - tok_start) AS BIGINT) AS n_toks_live,
+            CAST(SUM(tok_end - tok_start) AS BIGINT) AS n_toks_total
           FROM fe GROUP BY 1),
         rmanifest AS (SELECT pm.pack_id, 'retired' AS status,
             CAST(0 AS BIGINT) AS n_rows_live,
@@ -5954,43 +5511,17 @@ object Pipeline {
           WHERE m.cratio IS NOT NULL AND m.cratio >= 0.35),
         sstate AS (SELECT s.doc_id, s.ct FROM sclean0 s
           ANTI JOIN gone USING (doc_id)),
-        gt AS (SELECT doc_id, string_split(ct, ' ') AS w FROM gated),
-        st AS (SELECT doc_id, string_split(ct, ' ') AS w FROM sstate),
-        gsh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM gt WHERE len(w) >= 3),
-        ssh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(w) - 1, 1)),
-            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-          FROM st WHERE len(w) >= 3),
-        gsz AS (SELECT doc_id, COUNT(*) AS n FROM gsh GROUP BY doc_id),
-        ssz AS (SELECT doc_id, COUNT(*) AS n FROM ssh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-          FROM gsh a JOIN ssh b ON a.s = b.s GROUP BY 1, 2),
-        dups AS (SELECT DISTINCT d1 FROM inter
-          JOIN gsz ON inter.d1 = gsz.doc_id
-          JOIN ssz ON inter.d2 = ssz.doc_id
-          WHERE CAST(i AS DOUBLE) / (gsz.n + ssz.n - i) >= 0.8),
+        ${Sql.shinglePairs("jac >= 0.8", a = "gated", b = "sstate",
+          text = "ct", on = "TRUE")},
+        dups AS (SELECT DISTINCT d1 FROM pairs),
         surv AS (SELECT g.doc_id, g.ct FROM gated g
           ANTI JOIN dups ON g.doc_id = dups.d1),
         t0 AS (SELECT COALESCE(SUM(len(string_split(ct, ' '))), 0) AS toff
           FROM sclean0),
-        t2 AS (SELECT doc_id,
-            CAST(len(string_split(ct, ' ')) AS BIGINT) AS ntok
-          FROM surv WHERE len(string_split(ct, ' ')) > 0),
-        c2 AS (SELECT doc_id, ntok,
-            CAST(SUM(ntok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok
-              + (SELECT toff FROM t0) AS BIGINT) AS cb FROM t2),
-        e AS (SELECT doc_id, ntok, cb,
-            unnest(generate_series(cb // 1000, (cb + ntok - 1) // 1000))
-              AS pack_id FROM c2)
-        SELECT doc_id, CAST(pack_id AS BIGINT) AS pack_id,
-          CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
-          CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
-            AS tok_end
-        FROM e ORDER BY doc_id, pack_id"""), bench = true)
+        pm AS ${Sql.packs("surv", "len(string_split(ct, ' '))",
+          start = "(SELECT toff FROM t0)")}
+        SELECT doc_id, pack_id, tok_start, tok_end FROM pm
+        ORDER BY doc_id, pack_id"""), bench = true)
   )
 
   /** DuckDB replay of [[graft.ops.TextAnalysis.bm25TopK]] (shared by
@@ -6030,4 +5561,21 @@ object Pipeline {
     val suffix: String =
       " Café  x’s “q” – y… ​z Å\tb  c"
   }
+
+  /** The documents' nonempty words `wds(doc_id, w)` and their counts
+    * `wc(w, c)`: the BPE fit corpus of q119, q207 and q213. */
+  private def bpeWordsSql: String =
+    """wds AS (SELECT doc_id, w FROM (SELECT doc_id,
+            unnest(string_split(text, ' ')) AS w FROM documents)
+          WHERE w <> ''),
+        wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM wds GROUP BY w)"""
+
+  /** Per-doc token count after one BPE merge (q119's char path, q207's
+    * byte path: they coincide on ASCII text). */
+  private def bpe1TokenCountSql: String =
+    s"""WITH $bpeWordsSql,
+        ${Sql.bpeMerge1("wc", "wc")}
+        SELECT wds.doc_id, CAST(SUM(enc.nt) AS BIGINT) AS n_bpe_tokens
+        FROM wds JOIN enc ON wds.w = enc.w
+        GROUP BY wds.doc_id ORDER BY wds.doc_id"""
 }
