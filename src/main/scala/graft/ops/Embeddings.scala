@@ -351,17 +351,7 @@ object Embeddings {
     val assigned = corpus.withColumn("__cell",
       get(VectorExpressions.pqEncode(col(vec), Array(coarse)), lit(0)))
     val perQuery = queries.map { case (qid, q) =>
-      // probe order: same distance formula and fold order as the
-      // kernel's assignment (c² fold, then element-order dot)
-      val probed = coarse.zipWithIndex.map { case (c, j) =>
-        var c2 = 0.0
-        c.foreach(x => c2 += x * x)
-        var dot = 0.0
-        var i = 0
-        val lim = math.min(c.length, q.length)
-        while (i < lim) { dot += q(i) * c(i); i += 1 }
-        (c2 - 2.0 * dot, j)
-      }.sortBy { case (d, j) => (d, j) }.take(nProbe).map(_._2)
+      val probed = probeOrder(q, coarse).take(nProbe)
       assigned.filter(col("__cell").isin(probed: _*))
         .select(lit(qid).as("qid"), col(id),
           adistCol(adcLut(q, codebooks), col(codes)).as("adist"))

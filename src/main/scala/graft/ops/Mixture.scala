@@ -512,39 +512,11 @@ object Mixture {
         nTokens.cast("long").as("__ntok"), pri.cast("double").as("__pri"))
       .filter(col(id).isNotNull && col("__pri").isNotNull &&
         col("__ntok").isNotNull && col("__ntok") >= 0)
-    val ranged = Materialize.pinGate(narrow
-      .repartitionByRange(col("__grp"), col("__pri"), col(id))
-      .sortWithinPartitions(col("__grp"), col("__pri"), col(id))
-      .withColumn("__pid", spark_partition_id()))
-    // bounded: contiguous ranges → ≤ #partitions + #groups − 1 cells
-    val subs = ranged.groupBy(col("__pid"), col("__grp"))
-      .agg(sum(col("__ntok")).as("__ps"))
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    val offs = subs.groupBy(_._2).toSeq.flatMap { case (g, cells) =>
-      var acc = 0L
-      cells.sortBy(_._1).map { case (p, _, s) =>
-        val off = acc; acc += s; (p, g, off)
-      }
-    }
-    val spark = df.sparkSession
-    val offsDf =
-      if (offs.isEmpty)
-        spark.createDataFrame(Seq((0, "", 0L))).toDF("__pid", "__grp", "__goff")
-          .limit(0)
-      else spark.createDataFrame(offs.toIndexedSeq)
-        .toDF("__pid", "__grp", "__goff")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid"), col("__grp"))
-      .orderBy(col("__pri"), col(id))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val budgetExpr = budgets.foldLeft(lit(0L)) { case (acc, (k, b)) =>
       when(col("__grp") === k, lit(b)).otherwise(acc)
     }
-    ranged.join(broadcast(offsDf), Seq("__pid", "__grp"))
-      .withColumn("__cb",
-        sum(col("__ntok")).over(w) - col("__ntok") + col("__goff"))
+    Packing.runningOffset(narrow, groups = Seq("__grp"),
+        order = Seq("__pri", id), start = 0L)
       .filter(col("__cb") < budgetExpr)
       .select(col("__grp").as(group), col(id),
         col("__ntok").as("n_tokens"), col("__cb").as("tokens_before"))

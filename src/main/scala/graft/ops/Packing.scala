@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sequence packing for LLM training-data preparation: lay every
   * document's tokens end-to-end in a deterministic global order (by a
@@ -60,32 +61,59 @@ object Packing {
     require(maxLen >= 1, "packConcat: maxLen must be >= 1")
     require(startOffset >= 0, "packConcat: startOffset must be >= 0")
     val L = lit(maxLen)
-    val ranged = Materialize.pinGate(
-      df.select(col(id), nTokens.cast("long").as("ntok"))
-        .filter(col("ntok") > 0)
-        .repartitionByRange(col(id))
-        .sortWithinPartitions(id)
-        .withColumn("pid", spark_partition_id()))
-    // tiny: one row per partition after map-side combine
-    val partSums = ranged.groupBy("pid").agg(sum(col("ntok")).as("psum"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = startOffset
-    val offsets = partSums.map { case (p, s) =>
-      val off = acc; acc += s; (p, off)
-    }
-    val offsetsDf = df.sparkSession.createDataFrame(offsets.toIndexedSeq)
-      .toDF("pid", "poff")
-    val w = Window.partitionBy("pid").orderBy(id)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = ranged.join(broadcast(offsetsDf), Seq("pid"))
-      .withColumn("cb", sum(col("ntok")).over(w) - col("ntok") + col("poff"))
-    cum.select(col(id), col("ntok"), col("cb"),
-        explode(sequence(floor(col("cb") / L),
-          floor((col("cb") + col("ntok") - 1) / L))).as("pack_id"))
+    val cum = runningOffset(
+      df.select(col(id), nTokens.cast("long").as("__ntok"))
+        .filter(col("__ntok") > 0),
+      groups = Nil, order = Seq(id), start = startOffset)
+    cum.select(col(id), col("__ntok"), col("__cb"),
+        explode(sequence(floor(col("__cb") / L),
+          floor((col("__cb") + col("__ntok") - 1) / L))).as("pack_id"))
       .select(col(id), col("pack_id"),
-        (greatest(col("pack_id") * L, col("cb")) - col("cb")).as("tok_start"),
-        (least((col("pack_id") + 1) * L, col("cb") + col("ntok")) - col("cb"))
-          .as("tok_end"))
+        (greatest(col("pack_id") * L, col("__cb")) - col("__cb"))
+          .as("tok_start"),
+        (least((col("pack_id") + 1) * L, col("__cb") + col("__ntok")) -
+          col("__cb")).as("tok_end"))
+  }
+
+  /** The distributed prefix sum behind [[packConcat]] and
+    * Mixture.tokenBudgetSelect: adds `__cb` to each row of `narrow`,
+    * the sum of its `__ntok` (long) column over every row before it in
+    * `order`, within its `groups` cell, plus `start`. `narrow` should
+    * carry only keys and counts: it is range-partitioned by
+    * (`groups`, `order`) and pinned, its per-(partition, group)
+    * subtotals (≤ #partitions + #groups − 1 cells, by contiguity) are
+    * prefix-summed on the driver and broadcast back, and the running
+    * sum is a window over one (partition, group) cell. `order` must be
+    * a strict total order within a group. */
+  private[ops] def runningOffset(narrow: DataFrame, groups: Seq[String],
+                                 order: Seq[String],
+                                 start: Long): DataFrame = {
+    val key = (groups ++ order).map(col)
+    val ranged = Materialize.pinGate(narrow
+      .repartitionByRange(key: _*)
+      .sortWithinPartitions(key: _*)
+      .withColumn("__pid", spark_partition_id()))
+    val cell = "__pid" +: groups
+    val subs = ranged.groupBy(cell.map(col): _*)
+      .agg(sum(col("__ntok"))).collect()
+    val offsets = subs.groupBy(r => groups.indices.map(i => r.get(i + 1)))
+      .values.toSeq.flatMap { cells =>
+        var acc = start
+        cells.sortBy(_.getInt(0)).map { r =>
+          val off = acc; acc += r.getLong(cell.length)
+          Row.fromSeq(r.toSeq.init :+ off)
+        }
+      }
+    val schema = StructType(cell.map(ranged.schema(_)) :+
+      StructField("__off", LongType))
+    val offsetsDf = narrow.sparkSession.createDataFrame(
+      java.util.Arrays.asList(offsets: _*), schema)
+    val w = Window.partitionBy(cell.map(col): _*).orderBy(order.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ranged.join(broadcast(offsetsDf), cell)
+      .withColumn("__cb",
+        sum(col("__ntok")).over(w) - col("__ntok") + col("__off"))
+      .drop("__pid", "__off")
   }
 
   /** packConcat over whitespace-token counts of a text column. */

@@ -331,15 +331,6 @@ object TextAnalysis {
         (col("__bs") - coalesce(col("__ss"), col("__bs"))).as("margin"))
   }
 
-  /** word n-grams as an array column (space-joined). */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val w = tokens(text)
-    when(size(w) >= n,
-      transform(sequence(lit(0), size(w) - n),
-        i => concat_ws(" ", (0 until n).map(k => get(w, i + k)): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** fraction of tokens covered by the single most frequent word
     * n-gram — the Gopher-style repetition signal (high on looping /
     * boilerplate text). Scan-stage via the codegen'd

@@ -102,13 +102,31 @@ object Pipeline {
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
   private def ev(s: SparkSession, d: String) = Tables.events(s, d)
 
-  /** q220/q221's corpus: the real documents plus three planted rows
-    * pinning every compressionRatio branch — a looping doc (deflate
-    * collapses it far below any threshold), an empty doc (NULL
-    * ratio), and LCG character soup (near-incompressible). The soup
-    * comes from a FIXED linear congruential generator, so it is
-    * byte-identical in every plan instantiation (determinism is what
-    * q221's cross-plan gate rests on). */
+  /** The real documents plus three planted rows pinning every
+    * compressionRatio and v6 gate branch: a looping doc (deflate
+    * collapses it far below any threshold), an empty doc (NULL ratio;
+    * v6's clean of pure markup is '' as well), and `soup`, near-
+    * incompressible character soup. Each soup comes from a FIXED linear
+    * congruential generator, so it is byte-identical in every plan
+    * instantiation (determinism is what the q221 and q223 cross-plan
+    * gates rest on). The compute split sits below the zlib/clean
+    * kernels the rows stack on this corpus (identity on real
+    * layouts). */
+  private def plantedCorpus(s: SparkSession, d: String,
+                            soup: String): DataFrame = {
+    import s.implicits._
+    val planted = Seq(
+      (-1L, "__planted", Seq.fill(120)("loop the loop").mkString(" ")),
+      (-2L, "__planted", ""),
+      (-3L, "__planted", soup)
+    ).toDF("doc_id", "source", "text")
+    Tables.splitForCompute(
+      docs(s, d).select(col("doc_id"), col("source"), col("text")),
+      col("doc_id"))
+      .unionByName(planted)
+  }
+
+  /** q220/q221's soup: printable ASCII. */
   private lazy val lcgSoup: String = {
     val sb = new StringBuilder
     var x = 123456789L
@@ -118,29 +136,9 @@ object Pipeline {
     }
     sb.toString
   }
-  private def compressCorpus(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = Seq(
-      (-1L, "__planted", Seq.fill(120)("loop the loop").mkString(" ")),
-      (-2L, "__planted", ""),
-      (-3L, "__planted", lcgSoup)
-    ).toDF("doc_id", "source", "text")
-    // compute split below the zlib/clean kernels q220/q221 stack on
-    // this corpus (the v6Corpus convention; identity on real layouts)
-    Tables.splitForCompute(
-      docs(s, d).select(col("doc_id"), col("source"), col("text")),
-      col("doc_id"))
-      .unionByName(planted)
-  }
-
-  /** q222/q223's corpus: documents plus three plants pinning every
-    * v6 gate branch — a looping doc (dies at the cratio floor), an
-    * empty doc (clean of pure markup → '' → NULL ratio → dropped),
-    * and LCG ALPHANUMERIC soup (near-incompressible, survives the
-    * floor and flows into quantile/packing). The soup alphabet is
-    * [a-zA-Z0-9 ] — see the q222 registry comment for why q220's
-    * full-printable soup is NOT reused here. Same fixed-LCG
-    * determinism contract as [[lcgSoup]]. */
+  /** q222/q223's soup: [a-zA-Z0-9 ] (it survives the cratio floor and
+    * flows into quantile/packing) — see the q222 registry comment for
+    * why q220's printable soup is NOT reused here. */
   private lazy val v6Soup: String = lcgAlnumSoup(987654321L)
   private val v6Pre = "<p class=\"x\">"
   private val v6Post = "</p><script>drop()</script>"
@@ -149,18 +147,6 @@ object Pipeline {
     TA.normalizeText(TA.stripHtml(concat(lit(v6Pre), text, lit(v6Post))))
   private def v6CleanSql(e: String): String =
     TA.normalizeTextSql(TA.stripHtmlSql(s"'$v6Pre' || $e || '$v6Post'"))
-  private def v6Corpus(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = Seq(
-      (-1L, "__planted", Seq.fill(120)("loop the loop").mkString(" ")),
-      (-2L, "__planted", ""),
-      (-3L, "__planted", v6Soup)
-    ).toDF("doc_id", "source", "text")
-    Tables.splitForCompute(
-      docs(s, d).select(col("doc_id"), col("source"), col("text")),
-      col("doc_id"))
-      .unionByName(planted)
-  }
   /** The same corpus as a DuckDB subquery (plant texts inlined —
     * loop via repeat(), soup as a quote-free literal). */
   private def v6CorpusSql: String =
@@ -4961,7 +4947,7 @@ object Pipeline {
     // replay + the ExprSpec zlib differential. All three directions +
     // the value/NULL seeds are proven red by scripts/gate_drill.py.)
     "q220_compress_ratios" -> Q(
-      (s, d) => compressCorpus(s, d)
+      (s, d) => plantedCorpus(s, d, lcgSoup)
         .select(col("doc_id"), col("source"),
           TA.compressionRatio(col("text")).as("cratio"))
         .orderBy("doc_id"),
@@ -4985,7 +4971,7 @@ object Pipeline {
     // bit-exactly on the same doubles. min/max are order-independent,
     // so no decimal-sum machinery is needed.)
     "q221_compress_report" -> Q(
-      (s, d) => compressCorpus(s, d)
+      (s, d) => plantedCorpus(s, d, lcgSoup)
         .select(col("source"), TA.compressionRatio(col("text")).as("cratio"))
         .groupBy("source").agg(
           count(lit(1)).as("n_docs"),
@@ -5041,7 +5027,7 @@ object Pipeline {
     // back; packing is the q101 distributed prefix sum over the
     // NARROW (id, ntok) frame — text never shuffles anywhere.)
     "q222_v6_ratios" -> Q(
-      (s, d) => v6Corpus(s, d)
+      (s, d) => plantedCorpus(s, d, v6Soup)
         .select(col("doc_id"), col("source"),
           TA.compressionRatio(v6Clean(col("text"))).as("cratio"))
         .orderBy("doc_id"),
@@ -5052,7 +5038,7 @@ object Pipeline {
 
     "q223_pipeline_v6" -> Q(
       (s, d) => {
-        val cleaned = v6Corpus(s, d).select(col("doc_id"), col("source"),
+        val cleaned = plantedCorpus(s, d, v6Soup).select(col("doc_id"), col("source"),
           v6Clean(col("text")).as("ct"))
         val gated = cleaned
           .withColumn("cratio", TA.compressionRatio(col("ct")))

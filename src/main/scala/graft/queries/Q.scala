@@ -58,20 +58,20 @@ object Sql {
           + $start AS BIGINT)"""
   }
 
-  /** Packing.packConcat as a subquery: every row of `rel` with
-    * `ntok` = `tokens` > 0 gets its stream offset `cb` ([[tokenOffset]]
-    * over `order`, from `start`) and one row per `maxLen`-token pack its
-    * tokens touch: `pack_id` and the row-relative span
-    * [`tok_start`, `tok_end`). `rel`'s own columns ride along; it must
-    * not have `ntok` or `cb` columns. */
+  /** Packing.packConcat with the registry's maxLen = 1000, as a
+    * subquery: every row of `rel` with `ntok` = `tokens` > 0 gets its
+    * stream offset `cb` ([[tokenOffset]] over `order`, from `start`)
+    * and one row per 1000-token pack its tokens touch: `pack_id` and
+    * the row-relative span [`tok_start`, `tok_end`). `rel`'s own
+    * columns ride along; it must not have `ntok` or `cb` columns. */
   def packs(rel: String, tokens: String, order: String = "doc_id",
-            start: String = "0", maxLen: Int = 1000): String =
+            start: String = "0"): String =
     s"""(SELECT *,
-          CAST(greatest(pack_id * $maxLen, cb) - cb AS BIGINT) AS tok_start,
-          CAST(least((pack_id + 1) * $maxLen, cb + ntok) - cb AS BIGINT)
+          CAST(greatest(pack_id * 1000, cb) - cb AS BIGINT) AS tok_start,
+          CAST(least((pack_id + 1) * 1000, cb + ntok) - cb AS BIGINT)
             AS tok_end
-        FROM (SELECT *, unnest(generate_series(cb // $maxLen,
-            (cb + ntok - 1) // $maxLen)) AS pack_id
+        FROM (SELECT *, unnest(generate_series(cb // 1000,
+            (cb + ntok - 1) // 1000)) AS pack_id
           FROM (SELECT *, ${tokenOffset(order, start = start)} AS cb
             FROM (SELECT *, CAST($tokens AS BIGINT) AS ntok FROM $rel
               WHERE $tokens > 0))))"""
@@ -116,10 +116,10 @@ object Sql {
         WHERE $keep)"""
   }
 
-  /** Connected components of the undirected edge list `edges(d1, d2)`
-    * (a relation name): `comp(node, component)`, labelled by the
-    * component's least id, by recursive closure — the caller's WITH must
-    * be RECURSIVE. */
+  /** Connected components of the undirected edge list `edgeList(d1,
+    * d2)`: `comp(node, component)`, each node labelled by its
+    * component's least id through the recursive closure `reach` over
+    * `edges` and `nodes` — the caller's WITH must be RECURSIVE. */
   def components(edgeList: String): String =
     s"""edges AS (SELECT d1 AS a, d2 AS b FROM $edgeList
           UNION SELECT d2, d1 FROM $edgeList),

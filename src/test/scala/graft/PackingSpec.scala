@@ -123,4 +123,42 @@ class PackingSpec extends SparkSpec {
     assert(a == b)
     assert(a == expected(docs, 100))
   }
+
+  test("the shared running sum: packConcat and tokenBudgetSelect rows " +
+    "are the same at 1 and 7 shuffle partitions (the range width)") {
+    val docs = (0L until 300L).map(i => (i, 1L + i % 23))
+    // three groups, ties in priority broken by id; budgets stop g0 and
+    // g1 mid-group, g2 is taken whole
+    val grouped =
+      docs.map { case (i, n) => (i, s"g${i % 3}", n, (i % 5).toDouble) }
+    val budgets = Map("g0" -> 600L, "g1" -> 1000L, "g2" -> 1000000L)
+    val want = grouped.groupBy(_._2).toSeq.flatMap { case (g, rows) =>
+      val ordered = rows.sortBy(r => (r._4, r._1))
+      ordered.zip(ordered.map(_._3).scanLeft(0L)(_ + _)).collect {
+        case ((i, _, n, _), cb) if cb < budgets(g) => (g, i, n, cb)
+      }
+    }.sorted
+    assert(want.map(_._1).distinct.size == 3 && want.size < docs.size)
+    val conf = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = conf.map(spark.conf.get)
+    try {
+      // no coalescing, so the range exchange really is 1 or 7 wide
+      spark.conf.set(conf(1), "false")
+      for (p <- Seq(1, 7)) {
+        spark.conf.set(conf(0), p.toString)
+        val packs = Packing.packConcat(docs.toDF("id", "ntok"), "id",
+            col("ntok"), maxLen = 64, startOffset = 10)
+          .orderBy("id", "pack_id").as[(Long, Long, Long, Long)]
+          .collect().toSeq
+        assert(packs == expected((-1L, 10L) +: docs, 64).filter(_._1 >= 0),
+          s"packConcat, $p shuffle partitions")
+        val sel = graft.ops.Mixture.tokenBudgetSelect(
+            grouped.toDF("id", "g", "nt", "pri"), "id", "g", col("nt"),
+            budgets, priority = Some(col("pri")))
+          .as[(String, Long, Long, Long)].collect().toSeq.sorted
+        assert(sel == want, s"tokenBudgetSelect, $p shuffle partitions")
+      }
+    } finally conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }
