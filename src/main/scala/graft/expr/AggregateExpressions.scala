@@ -1,9 +1,11 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -117,12 +119,102 @@ object Int128MicrosToDouble {
   }
 }
 
+/** `UnscaledValue(Cast(x, decimal(18, s)))` — the per-row input of every
+  * exact sum — without a BigDecimal per row when `x` is a double. Spark
+  * builds a `BigDecimal` for each double→decimal cast; [[UnscaledMicros.fast]]
+  * decides most rows in floating point, and the rows it cannot decide
+  * (near a rounding tie, non-finite, outside precision 18) evaluate the
+  * unchanged cast child, so NaN→NULL, ANSI overflow errors and legacy
+  * NULLs stay Spark's own. Any other child shape (float, integer or
+  * decimal input) is just the child. */
+case class UnscaledMicros(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "graft_unscaled_micros"
+
+  /** the double input and the scale, when the fast path applies */
+  private lazy val doubleInput: Option[(Expression, Int)] = child match {
+    case UnscaledValue(Cast(x, d: DecimalType, _, _))
+        if d.precision == 18 && x.dataType == DoubleType && x.deterministic =>
+      Some((x, d.scale))
+    case _ => None
+  }
+
+  override def eval(input: InternalRow): Any = doubleInput match {
+    case Some((x, s)) =>
+      val v = x.eval(input)
+      if (v == null) null
+      else {
+        val m = UnscaledMicros.fast(v.asInstanceOf[Double], s)
+        if (m != UnscaledMicros.Undecided) m else child.eval(input)
+      }
+    case None => child.eval(input)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    doubleInput match {
+      case Some((x, s)) =>
+        val xv = x.genCode(ctx)
+        val exact = child.genCode(ctx)
+        ev.copy(code = code"""
+          |${xv.code}
+          |boolean ${ev.isNull} = ${xv.isNull};
+          |long ${ev.value} = -1L;
+          |if (!${ev.isNull}) {
+          |  ${ev.value} = graft.expr.UnscaledMicros.fast(${xv.value}, $s);
+          |  if (${ev.value} == ${UnscaledMicros.Undecided}L) {
+          |    ${exact.code}
+          |    ${ev.isNull} = ${exact.isNull};
+          |    ${ev.value} = ${exact.value};
+          |  }
+          |}""".stripMargin)
+      case None => child.genCode(ctx)
+    }
+
+  override protected def withNewChildInternal(newChild: Expression): UnscaledMicros =
+    copy(child = newChild)
+}
+
+object UnscaledMicros {
+  /** [[fast]]'s answer when only the exact decimal path can decide. */
+  final val Undecided = Long.MinValue
+
+  private val pow10 = Array.tabulate(19)(i => math.pow(10, i)) // exact to 10^22
+
+  /** v rounded HALF_UP to `scale` digits as an unscaled long — exactly
+    * `JBigDecimal.valueOf(v).setScale(scale, HALF_UP)`, the rounding of
+    * Spark's double→decimal cast — or [[Undecided]] for NaN, ±Inf and
+    * every value within a proven error bound of a rounding tie.
+    *
+    * Bound: `Double.toString(a)` (the decimal the cast rounds) is within
+    * ½ ulp of `a` and the product `a·10^s` rounds once more, so `x` is
+    * within 2⁻⁵²·x of the decimal's scaled value; `x + 0.5` rounds by at
+    * most 2⁻⁵³·(x + 0.5). Together < 3.4e-16·(x + 1) (a subnormal `a`
+    * adds under 1e-305), and `err` is over 10× that. A `shifted` further
+    * than `err` from an integer floors to the decimal's HALF_UP rounding,
+    * taken on the magnitude because HALF_UP rounds away from zero. From
+    * x ≈ 1.25e14 on `err` ≥ ½ and nothing is decided, so a decided value
+    * stays far inside precision 18. */
+  def fast(v: Double, scale: Int): Long = {
+    val x = Math.abs(v) * pow10(scale)
+    if (!(x < 1e15)) return Undecided // NaN, ±Inf, and past the bound's reach
+    val shifted = x + 0.5
+    val err = (x + 1) * 4e-15
+    if (Math.abs(shifted - Math.rint(shifted)) <= err) Undecided
+    else {
+      val r = Math.floor(shifted).toLong
+      if (v < 0) -r else r
+    }
+  }
+}
+
 object AggregateExpressions {
   /** exact order-independent sum of a double column as double — the
-    * drop-in fast path for `functions.dsumD`: per-row rounding via the
-    * same `cast(c as decimal(18,6))`, accumulation in a codegen'd
-    * 128-bit register instead of a BigDecimal-backed decimal(28,6)
-    * buffer. Identical values, ~3× faster on aggregation-bound queries. */
+    * engine's `functions.dsumD`: each row rounded to decimal(18,6) as
+    * by `cast(c as decimal(18,6))` (through [[UnscaledMicros]]), the
+    * unscaled longs summed in a codegen'd 128-bit register instead of a
+    * BigDecimal-backed decimal(28,6) buffer. Identical values. */
   def dsum128(c: Column): Column = dsumScaled(c, 6)
 
   /** same 128-bit exact sum over `cast(c as decimal(18, scale))` for
@@ -132,7 +224,8 @@ object AggregateExpressions {
   def dsumScaled(c: Column, scale: Int): Column =
     ColumnBridge.column(
       Int128SumMicros(
-        UnscaledValue(ColumnBridge.expression(c.cast(s"decimal(18,$scale)"))),
+        UnscaledMicros(
+          UnscaledValue(ColumnBridge.expression(c.cast(s"decimal(18,$scale)")))),
         scale)
         .toAggregateExpression())
 }

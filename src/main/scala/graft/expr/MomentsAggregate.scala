@@ -38,7 +38,8 @@ import org.apache.spark.sql.types._
   * Rounding matches Spark's own double→decimal cast exactly
   * (`JBigDecimal.valueOf`, i.e. the shortest-decimal representation,
   * HALF_UP) — the same equivalence `functions.dsum` already relies on
-  * for its DuckDB parity.
+  * for its DuckDB parity — and an element the ANSI cast rejects (NaN,
+  * ±Inf, outside decimal(18,6)) fails the aggregation.
   */
 case class VectorMomentsAgg(
     child: Expression, dim: Int,
@@ -123,30 +124,20 @@ case class VectorMomentsAgg(
 
 object MomentsAggregate {
   /** v rounded to decimal(18,6) micros, HALF_UP on the shortest-decimal
-    * representation — EXACTLY `JBigDecimal.valueOf(v).setScale(6,
-    * HALF_UP)`, but ~50× faster on the hot path: the double product
-    * v·1e6 carries ≤ ~2 ulp of error, so whenever it sits further than
-    * a generous error bound from a .5 rounding boundary, plain
-    * floor(x+0.5) provably agrees with the decimal path and no
-    * BigDecimal is built. Only near-boundary values (measure: ~1 in
-    * 10⁷ on real data) take the exact slow path. HALF_UP rounds away
-    * from zero for negatives, so the fast path mirrors |v|. */
+    * representation: [[UnscaledMicros.fast]], and the exact BigDecimal
+    * path for the values it leaves undecided. Fails like Spark's ANSI
+    * cast: NaN and ±Inf throw `NumberFormatException`, a value outside
+    * decimal(18,6) throws `ArithmeticException`. */
   def micros(v: Double): Long = {
-    val neg = v < 0
-    val a = if (neg) -v else v
-    val x = a * 1e6
-    if (x >= 9.2e18) // would overflow long — let BigDecimal throw cleanly
-      return microsExact(v)
-    val shifted = x + 0.5
-    val r = Math.floor(shifted)
-    val err = x * 1e-13 + 1e-13 // ≫ true error (~2 ulp ≈ x·4.4e-16)
-    if (Math.abs(shifted - Math.rint(shifted)) <= err) microsExact(v)
-    else if (neg) -r.toLong else r.toLong
+    val m = UnscaledMicros.fast(v, 6)
+    if (m != UnscaledMicros.Undecided) m
+    else {
+      val d = JBigDecimal.valueOf(v).setScale(6, RoundingMode.HALF_UP)
+      if (d.precision > 18)
+        throw new ArithmeticException(s"$v does not fit decimal(18,6)")
+      d.unscaledValue().longValueExact()
+    }
   }
-
-  private def microsExact(v: Double): Long =
-    JBigDecimal.valueOf(v).setScale(6, RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
 
   /** the packed moments buffer as a Column (array<bigint> of
     * 1 + d + d(d+1)/2 slots — count, per-dim micro-sums, upper-triangle

@@ -413,6 +413,14 @@ class ExprSpec extends SparkSpec {
 
   // --- codegen on ≡ codegen off, one adversarial frame -------------------
 
+  /** one double per adversarialFrame row: HALF_UP ties at the 7th and
+    * 5th decimal, ±0.0, the smallest subnormal, NaN, ±Inf, and values
+    * either side of decimal(18,6)'s and decimal(18,4)'s precision edge. */
+  private val edgeDoubles: Seq[Option[Double]] = Seq(None, Some(0.0000005),
+    Some(-1.2345675), Some(-0.0), Some(java.lang.Double.MIN_VALUE), Some(2.00005),
+    Some(Double.NaN), Some(Double.PositiveInfinity), Some(Double.NegativeInfinity),
+    Some(999999999999.9999), Some(-1.0e12), Some(99999999999999.99))
+
   /** NULL rows, empty arrays, null elements, arrays shorter than every
     * kernel's `bits`/`w·h`/`n`, empty, decomposed and non-ASCII strings,
     * ±0.0/NaN/±Inf and the long extremes — read back from parquet, so
@@ -424,7 +432,8 @@ class ExprSpec extends SparkSpec {
       StructField("id", LongType), StructField("s", StringType),
       StructField("w", ArrayType(StringType)), StructField("h", ArrayType(LongType)),
       StructField("v", ArrayType(DoubleType)), StructField("q", ArrayType(ByteType)),
-      StructField("x", DoubleType), StructField("hi", LongType), StructField("lo", LongType)))
+      StructField("x", DoubleType), StructField("hi", LongType), StructField("lo", LongType),
+      StructField("e", DoubleType)))
     val rnd = new scala.util.Random(31)
     def vec(n: Int) = Seq.fill(n)(rnd.nextGaussian())
     val vocab = Vector("a", "bb", "", "wörd", "日本語", "é", "the", "x" * 40)
@@ -452,13 +461,17 @@ class ExprSpec extends SparkSpec {
         Seq.fill(20)((rnd.nextInt(255) - 127).toByte), rnd.nextDouble() * 10 - 5,
         rnd.nextLong() % 1000, rnd.nextLong())
     }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val withE = rows.zip(edgeDoubles).map { case (r, e) =>
+      Row.fromSeq(r.toSeq :+ e.map(Double.box).orNull) }
+    spark.createDataFrame(java.util.Arrays.asList(withE: _*), schema)
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
 
   test("every expr/ kernel returns identical rows with codegen on and off") {
     import graft.expr._
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, UnscaledValue}
+    import org.apache.spark.sql.types.DecimalType
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     val dir = java.nio.file.Files.createTempDirectory("graft-kernels").toString
     val df = adversarialFrame(dir)
@@ -467,6 +480,9 @@ class ExprSpec extends SparkSpec {
     val codebooks = Array.fill(2, 3, 10)(rnd.nextGaussian())
     val V = VectorExpressions; val T = TextHashExpressions; val S = StringExpressions
     val (w, h, v, q, x) = ($"w", $"h", $"v", $"q", $"x")
+    // legacy cast: out-of-range and non-finite rows read NULL, not an error
+    def unscaledMicros(scale: Int) = column(UnscaledMicros(UnscaledValue(Cast(
+      expression($"e"), DecimalType(18, scale), None, EvalMode.LEGACY))))
     val kernels: Seq[(String, org.apache.spark.sql.Column)] = Seq(
       "DotProduct" -> V.dot(v, v),
       "MinHashSignature" -> V.minhashSig(h, 8),
@@ -490,7 +506,9 @@ class ExprSpec extends SparkSpec {
       "UnicodeNormalizeNFKC" -> S.unicodeNormalize($"s", "NFKC"),
       "CompressionRatio" -> S.compressionRatio($"s"),
       "Int128MicrosToDouble" -> column(
-        Int128MicrosToDouble(expression($"hi"), expression($"lo"), 6)))
+        Int128MicrosToDouble(expression($"hi"), expression($"lo"), 6)),
+      "UnscaledMicros6" -> unscaledMicros(6),
+      "UnscaledMicros4" -> unscaledMicros(4))
     def run(confs: (String, String)*): Map[String, Seq[String]] = {
       val keys = confs.map(_._1)
       val before = keys.map(k => k -> spark.conf.getOption(k))
@@ -522,6 +540,67 @@ class ExprSpec extends SparkSpec {
         s"$k: codegen $a, interpreted $b"
       }.mkString("\n"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("dsumD equals its cast formulation on edge doubles, ANSI on and off: " +
+    "rows, NULLs and error class") {
+    import org.apache.spark.sql.catalyst.expressions.UnscaledValue
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    val rnd = new scala.util.Random(41)
+    def tie() = new java.math.BigDecimal(java.math.BigInteger.valueOf(
+      (rnd.nextLong() % 10000000000L) * 10 + 5), 7).doubleValue
+    val more = Seq.fill(600)(rnd.nextInt(3) match {
+      case 0 => tie()
+      case 1 => val t = tie(); t + (rnd.nextInt(65) - 32) * Math.ulp(t)
+      case _ => (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(20) - 8)
+    })
+    val all = (edgeDoubles ++ more.map(Some(_))).zipWithIndex
+      .map { case (e, i) => (i.toLong, e) }.toDF("k", "e").repartition(4)
+    // finite and inside decimal(18,6) (Spark orders NaN above +Inf)
+    val fitting = all.filter($"e".isNull || abs($"e") < 999999999999.9999995)
+    def condition(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+      }.getOrElse(e.toString)
+    def outcome(df: org.apache.spark.sql.DataFrame, ansi: Boolean, parent: Boolean) = {
+      val before = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try {
+        // the Cast takes its eval mode from the conf when it is built
+        val agg = if (parent) column(graft.expr.Int128SumMicros(UnscaledValue(
+          expression($"e".cast("decimal(18,6)")))).toAggregateExpression())
+          else gf.dsumD($"e")
+        // each edge row its own group (a NULL input gives a NULL sum)
+        val g = when($"k" < edgeDoubles.size, $"k").otherwise($"k" % 3 - 3)
+        Right((df.groupBy(g).agg(agg).collect() ++ df.agg(agg).collect())
+          .map(_.toString).sorted.toSeq)
+      } catch { case e: Exception => Left(condition(e)) }
+      finally spark.conf.set("spark.sql.ansi.enabled", before)
+    }
+    for ((name, df) <- Seq("all" -> all, "fitting" -> fitting); ansi <- Seq(true, false)) {
+      val got = outcome(df, ansi, parent = false)
+      assert(got == outcome(df, ansi, parent = true), s"$name, ansi=$ansi")
+      if (ansi && name == "all")
+        assert(got.left.exists(_.startsWith("NUMERIC_VALUE_OUT_OF_RANGE")), got)
+      else assert(got.exists(_.exists(_.contains("null"))), got)
+    }
+  }
+
+  private def momentsError(bad: Double): Seq[Throwable] = {
+    val df = Seq(Seq(0.5, 0.25), Seq(bad, 1.0)).toDF("v")
+    val e = intercept[Exception](
+      df.agg(graft.expr.MomentsAggregate.vectorMoments($"v", 2)).collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+  }
+
+  test("vectorMoments fails on a NaN element instead of counting it as zero") {
+    val chain = momentsError(Double.NaN)
+    assert(chain.exists(_.isInstanceOf[NumberFormatException]), chain.mkString(" / "))
+  }
+
+  test("vectorMoments fails on an element outside decimal(18,6)") {
+    val chain = momentsError(1.5e12)
+    assert(chain.exists(_.isInstanceOf[ArithmeticException]), chain.mkString(" / "))
   }
 
   test("graft_minhash_sig takes numPerms only as an int literal and " +

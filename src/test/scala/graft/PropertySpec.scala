@@ -97,25 +97,66 @@ class PropertySpec extends SparkSpec {
 
   // ---- portable mixer: one bulk frame, reference arithmetic --------------
   test("micros fast path agrees with the BigDecimal reference everywhere") {
-    def ref(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
+    // Spark's ANSI cast to decimal(18,6): HALF_UP, and a value needing
+    // more than 18 digits (|v| ≥ 1e12 after rounding) is an error
+    def ref(v: Double): Long = {
+      val d = java.math.BigDecimal.valueOf(v)
         .setScale(6, java.math.RoundingMode.HALF_UP)
-        .unscaledValue().longValueExact()
+      if (d.precision > 18) throw new ArithmeticException(s"$v")
+      d.unscaledValue().longValueExact()
+    }
+    def same(v: Double) = scala.util.Try(graft.expr.MomentsAggregate.micros(v))
+      .toEither.left.map(_.getClass) ==
+      scala.util.Try(ref(v)).toEither.left.map(_.getClass)
     // adversarial: exact .5-micro boundaries, tiny, negative, large
     for (v <- Seq(0.0, -0.0, 1.5e-7, -1.5e-7, 0.0000005, -0.0000005,
         0.0000015, 1.0, -1.0, 123.4567895, -123.4567895, 1e-9, 7e11,
-        0.1 + 0.2, math.Pi, -math.E * 1e6))
-      assert(graft.expr.MomentsAggregate.micros(v) == ref(v), s"v=$v")
+        0.1 + 0.2, math.Pi, -math.E * 1e6, 1e12, -1e12, 999999999999.9999))
+      assert(same(v), s"v=$v")
     val gen = Gen.chooseNum(-1e12, 1e12)
-    checkProp(Prop.forAllNoShrink(gen) { v =>
-      graft.expr.MomentsAggregate.micros(v) == ref(v)
-    }, cases = 2000)
+    checkProp(Prop.forAllNoShrink(gen)(same), cases = 2000)
     // products of floats — the aggregate's actual input distribution
     val fg = Gen.chooseNum(-100f, 100f)
     checkProp(Prop.forAllNoShrink(Gen.zip(fg, fg)) { case (a, b) =>
-      val v = a.toDouble * b.toDouble
-      graft.expr.MomentsAggregate.micros(v) == ref(v)
+      same(a.toDouble * b.toDouble)
     }, cases = 2000)
+  }
+
+  test("UnscaledMicros.fast decides 10M seeded doubles per scale exactly as BigDecimal HALF_UP") {
+    import graft.expr.UnscaledMicros.{Undecided, fast}
+    import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
+    val rnd = new scala.util.Random(43)
+    val n = 10000000
+    for (s <- Seq(4, 6)) {
+      // a decimal HALF_UP tie at the (s+1)th digit, as the nearest double
+      def tie() = new JBigDecimal(
+        BigInteger.valueOf((rnd.nextLong() % 100000000000L) * 10 + 5), s + 1).doubleValue
+      var decided = 0
+      var i = 0
+      while (i < n) {
+        val v = i % 5 match {
+          case 0 => (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(26) - 9)
+          case 1 => tie()
+          case 2 => // within 64 ulps of a tie: both sides of the error bound
+            val t = tie(); t + (rnd.nextInt(129) - 64) * Math.ulp(t)
+          case 3 => // 2-dp price times a 2-dp factor, the TPC-H shape
+            rnd.nextInt(100000000) / 100.0 * (1 - rnd.nextInt(11) / 100.0)
+          case _ => java.lang.Double.longBitsToDouble(rnd.nextLong())
+        }
+        val m = fast(v, s)
+        if (m != Undecided) {
+          decided += 1
+          val want = JBigDecimal.valueOf(v).setScale(s, RoundingMode.HALF_UP)
+            .unscaledValue().longValueExact()
+          if (m != want) fail(s"fast($v, $s) = $m, want $want")
+        }
+        i += 1
+      }
+      assert(decided > n / 4, s"scale $s: only $decided of $n values decided")
+    }
+    for (v <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+        1e12, -1e12); s <- Seq(4, 6))
+      assert(fast(v, s) == Undecided, s"fast($v, $s)")
   }
 
   test("portableMix stays in [0, 2^31-1) and matches the documented arithmetic") {
