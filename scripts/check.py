@@ -5,25 +5,31 @@ against the DuckDB oracle (exact values, schema-ish, row order).
 
 Usage: python3 scripts/check.py [sfDir] [outDir] [--skip-verify] [only_query...]
 
-Exits 0 iff every compared oracle query is OK, 1 otherwise.
+Builds and runs Verify in the checkout this script lives in (so a
+`git archive` copy verifies itself) and writes the sbt log to
+<outDir>/verify_log.txt. Exits 0 iff every compared oracle query is OK,
+1 otherwise.
 """
 import sys, os, json, glob
 import duckdb
 import pandas as pd
 import numpy as np
 
-sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+sf = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01")
+out = os.path.abspath(sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out")
 args = sys.argv[3:]
 skip_verify = "--skip-verify" in args
 only = [a for a in args if not a.startswith("--")]
 
 if not skip_verify:
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    os.makedirs(out, exist_ok=True)
+    log = os.path.join(out, "verify_log.txt")
     rc = os.system(
-        f'cd /root/repo && timeout 3600 sbt "runMain graft.Verify {sf} {out}" '
-        f'> /tmp/verify_log.txt 2>&1')
+        f'cd "{checkout}" && timeout 3600 sbt "runMain graft.Verify {sf} {out}" '
+        f'> "{log}" 2>&1')
     if rc != 0:
-        print(open('/tmp/verify_log.txt').read()[-4000:])
+        print(open(log).read()[-4000:])
         sys.exit(f"verify run failed rc={rc}")
 
 con = duckdb.connect()

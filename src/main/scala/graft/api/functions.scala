@@ -196,9 +196,10 @@ object functions {
   // per group before overflow — safe at 100 TB.
   def dsum(c: Column): Column = F.sum(c.cast("decimal(18,6)"))
   /** exact sum as double — same per-row decimal(18,6) rounding as
-    * [[dsum]], accumulated in graft's codegen'd 128-bit register
-    * instead of Spark's BigDecimal-backed decimal(28,6) sum buffer
-    * (bit-identical results, ~3× faster on agg-bound queries; see
+    * [[dsum]] (a double row without a BigDecimal, see
+    * [[graft.expr.UnscaledMicros]]), accumulated in graft's codegen'd
+    * 128-bit register instead of Spark's BigDecimal-backed
+    * decimal(28,6) sum buffer; bit-identical results (see
     * [[graft.expr.Int128SumMicros]]). */
   def dsumD(c: Column): Column = graft.expr.AggregateExpressions.dsum128(c)
   def davg(c: Column): Column =
