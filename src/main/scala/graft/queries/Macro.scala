@@ -1135,10 +1135,7 @@ object Macro {
         val one = lit(1).cast("decimal(3,2)")
         val discPrice = pD * (one - col("l_discount").cast("decimal(3,2)"))
         val charge = discPrice * (one + col("l_tax").cast("decimal(3,2)"))
-        // compute split (r19): eight exact-decimal aggregates ride the
-        // scan stage; on the single-file local layout that was one task.
-        graft.Tables.splitForCompute(Tables.lineitem(s, d),
-            col("l_orderkey"), col("l_linenumber"))
+        Tables.lineitem(s, d)
         .filter(col("l_shipdate") <= lit("2001-08-06").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(

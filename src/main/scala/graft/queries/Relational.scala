@@ -492,11 +492,7 @@ object Relational {
         val sxy = dsumc(x * y)
         // round: the compare is exact and engines may fuse a*b-c (FMA)
         // differently, shifting the last ulp of a multiply-subtract chain
-        // compute split (r19): five exact-decimal moment sums ride the
-        // scan stage; one task on the single-file local layout otherwise
-        graft.Tables.splitForCompute(li(s, d),
-            col("l_orderkey"), col("l_linenumber"))
-          .groupBy("l_returnflag").agg(
+        li(s, d).groupBy("l_returnflag").agg(
           round((sxx - sx * sx / n) / (n - 1), 8).as("var_qty"),
           round(sqrt((sxx - sx * sx / n) / (n - 1)), 10).as("stddev_qty"),
           round((sxy - sx * sy / n) /
